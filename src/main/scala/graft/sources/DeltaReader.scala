@@ -1,16 +1,19 @@
 package graft.sources
 
 import java.io.File
+import java.lang.ref.SoftReference
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.TimeUnit
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate => CatalystPredicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -45,7 +48,12 @@ final case class DvSpec(
   *
   * Scale notes: the JSON tail of the log is tiny by protocol design (the
   * checkpoint absorbs history), so driver-side replay of the tail is the
-  * standard approach; the checkpoint parquet is read through Spark. Data
+  * standard approach. The checkpoint is read through Spark once per file
+  * identity (path, length, nanosecond mtime, file key) and prune map;
+  * later replays of the same checkpoint reuse its decoded state from
+  * [[checkpointCache]] — at most a small constant number of entries,
+  * each O(#files) like the snapshot itself and softly referenced, so the
+  * heap can reclaim it under pressure — and replay only the JSON tail. Data
   * reading is a plain multi-file vectorized parquet scan, so column
   * pruning and predicate pushdown are inherited; partition values are
   * attached via a broadcast join on `_metadata.file_path` (one tiny dim
@@ -54,6 +62,57 @@ final case class DvSpec(
 object DeltaReader {
 
   private val mapper = new ObjectMapper()
+
+  // ------------------------------------------------------ checkpoint cache
+
+  /** A checkpoint's replayed state: its protocol and metaData actions in
+    * file order, and the adds `admitted` under the replay's prune map in
+    * replay order (V2 sidecar adds included). */
+  private final case class CheckpointState(protocols: Seq[JsonNode],
+      metaData: Seq[JsonNode], adds: Vector[AddFile])
+
+  /** A checkpoint file's identity short of its bytes: absolute path,
+    * length, nanosecond mtime and the filesystem's file key (device +
+    * inode on Unix, null where there is none). Checkpoints are immutable
+    * by protocol; a file rewritten in place changes its mtime, and one
+    * replaced by rename changes its file key. */
+  private final case class FileIdentity(path: String, length: Long,
+      mtimeNanos: Long, fileKey: Any)
+
+  private def fileIdentity(f: File): FileIdentity = {
+    val a = Files.readAttributes(f.toPath, classOf[BasicFileAttributes])
+    FileIdentity(f.getAbsolutePath, a.size(),
+      a.lastModifiedTime().to(TimeUnit.NANOSECONDS), a.fileKey())
+  }
+
+  private type CheckpointKey = (Seq[FileIdentity], Map[String, Set[String]])
+
+  private val MaxCachedCheckpoints = 8
+
+  /** Decoded checkpoint states, keyed by the identity of every file of
+    * the checkpoint plus the replay's prune map (the admitted adds depend
+    * on it). V2 sidecars need no identity of their own: the top file
+    * names them. An access-ordered LRU of at most [[MaxCachedCheckpoints]]
+    * entries whose values are soft references, so a 10⁶-add state is
+    * reclaimable under heap pressure; a reclaimed entry is a miss. Guard
+    * with `checkpointCache.synchronized` — two replays that miss at once
+    * both decode, and the later put wins with an equal state. */
+  private val checkpointCache =
+    new java.util.LinkedHashMap[CheckpointKey,
+      SoftReference[CheckpointState]](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[CheckpointKey,
+          SoftReference[CheckpointState]]): Boolean =
+        size() > MaxCachedCheckpoints
+    }
+
+  private def cachedCheckpoint(key: CheckpointKey): Option[CheckpointState] =
+    checkpointCache.synchronized {
+      Option(checkpointCache.get(key)).flatMap { ref =>
+        val state = Option(ref.get())
+        if (state.isEmpty) checkpointCache.remove(key)
+        state
+      }
+    }
 
   final case class AddFile(
       path: String,
@@ -250,13 +309,15 @@ object DeltaReader {
       } else live.remove(path) // newest action wins even when pruned out
     }
 
-    // 1. checkpoint state (parquet with add/remove/metaData columns).
-    // Typed Row collection: project just the action struct and JSON-encode
-    // it executor-side with to_json (the nested partitionValues /
-    // configuration shapes vary by writer — map vs inferred struct — so
-    // the polymorphic decode goes through one compact JSON string per
-    // action instead of a whole-row toJSON round-trip).
-    cpVersion.foreach { v =>
+    /** The checkpoint miss path: read checkpoint `names` through Spark,
+      * applying every action to the replay state; returns the protocol
+      * and metaData actions it applied. Typed Row collection: project
+      * just the action struct and JSON-encode it executor-side with
+      * to_json (the nested partitionValues / configuration shapes vary
+      * by writer — map vs inferred struct — so the polymorphic decode
+      * goes through one compact JSON string per action instead of a
+      * whole-row toJSON round-trip). */
+    def decodeCheckpoint(names: Seq[String]): (Seq[JsonNode], Seq[JsonNode]) = {
       // checkpoint-side add replay, shared by the checkpoint file itself
       // and any V2 sidecar files. Checkpoint-side pruning (the
       // past-10⁶-files path): the prune predicate runs inside the
@@ -294,7 +355,6 @@ object DeltaReader {
             }
         }
 
-      val names = checkpoints(v)
       val cpPaths = names.map(n => new File(logDir, n).getAbsolutePath)
       // Both checkpoint layouts load as a DataFrame and share ALL the
       // replay logic below — which forces the protocol → metaData →
@@ -311,25 +371,30 @@ object DeltaReader {
       val cp =
         if (names.forall(_.endsWith(".json"))) spark.read.json(cpPaths: _*)
         else spark.read.option("mergeSchema", "true").parquet(cpPaths: _*)
-      val sidecarNames = mutable.ArrayBuffer[String]()
-      if (cp.columns.contains("protocol"))
-        cp.where(col("protocol").isNotNull)
-          .select(to_json(col("protocol")))
-          .collect().foreach { r =>
-            applyProtocol(mapper.readTree(r.getString(0)))
-          }
-      if (cp.columns.contains("metaData"))
-        cp.where(col("metaData").isNotNull)
-          .select(to_json(col("metaData")))
-          .collect().foreach { r =>
-            applyMeta(mapper.readTree(r.getString(0)))
-          }
+      // protocol, metaData and V2 sidecar pointers are metadata-sized:
+      // ONE collect fetches all three (to_json of an absent action is
+      // null). Protocol and metaData are applied before any add is
+      // admitted, because the prune filter's physNames come from
+      // metaData.
+      val actionCols =
+        Seq("protocol", "metaData", "sidecar").filter(cp.columns.contains)
+      val actions =
+        if (actionCols.isEmpty) Array.empty[Row]
+        else cp.where(actionCols.map(c => col(c).isNotNull).reduce(_ || _))
+          .select(actionCols.map(c => to_json(col(c))): _*).collect()
+      def decoded(c: String): Seq[JsonNode] = {
+        val i = actionCols.indexOf(c)
+        if (i < 0) Nil
+        else actions.toSeq.collect {
+          case r if !r.isNullAt(i) => mapper.readTree(r.getString(i))
+        }
+      }
+      val protocols = decoded("protocol")
+      val metaData = decoded("metaData")
+      protocols.foreach(applyProtocol)
+      metaData.foreach(applyMeta)
       replayAdds(cp)
-      if (cp.columns.contains("sidecar"))
-        sidecarNames ++= cp.where(col("sidecar").isNotNull)
-          .select(to_json(col("sidecar")))
-          .collect().toSeq
-          .map(r => mapper.readTree(r.getString(0)).get("path").asText())
+      val sidecarNames = decoded("sidecar").map(_.get("path").asText())
       // V2 checkpoint sidecars: the checkpoint's `sidecar` actions name
       // parquet files under `_delta_log/_sidecars/` holding the file
       // actions (the spec allows inline OR sidecar storage — both are
@@ -340,12 +405,36 @@ object DeltaReader {
       // its executor-side pruning) parallelizes across them, the same
       // economics as the multi-part path.
       if (sidecarNames.nonEmpty) {
-        val sidecarPaths = sidecarNames.toSeq.map { p =>
+        val sidecarPaths = sidecarNames.map { p =>
           if (p.startsWith("/") || p.contains("://")) p
           else new File(new File(logDir, "_sidecars"), p).getAbsolutePath
         }
         replayAdds(spark.read.option("mergeSchema", "true")
           .parquet(sidecarPaths: _*))
+      }
+      (protocols, metaData)
+    }
+
+    // 1. checkpoint state (parquet with add/remove/metaData columns),
+    // decoded once per checkpoint file identity and prune map (see
+    // [[checkpointCache]]). A hit re-applies the cached protocol — the
+    // reader-feature gate runs again — and metaData, then restores the
+    // admitted adds in their replay order; only a miss reads through
+    // Spark.
+    cpVersion.foreach { v =>
+      val names = checkpoints(v)
+      val key = (names.map(n => fileIdentity(new File(logDir, n))), prune)
+      cachedCheckpoint(key) match {
+        case Some(cached) =>
+          cached.protocols.foreach(applyProtocol)
+          cached.metaData.foreach(applyMeta)
+          cached.adds.foreach(a => live(a.path) = a)
+        case None =>
+          val (protocols, metaData) = decodeCheckpoint(names)
+          checkpointCache.synchronized {
+            checkpointCache.put(key, new SoftReference(
+              CheckpointState(protocols, metaData, live.values.toVector)))
+          }
       }
     }
 

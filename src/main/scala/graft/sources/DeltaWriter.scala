@@ -1204,14 +1204,9 @@ object DeltaWriter {
         case None => DeltaReader.DvDescriptor("i", Z85.encode(pad4(bytes)),
           0, bytes.length, rows.length.toLong)
       }
-      val pvJ = a.partitionValues.map {
-        case (k, Some(v)) => s"${jstr(k)}:${jstr(v)}"
-        case (k, None) => s"${jstr(k)}:null"
-      }.mkString("{", ",", "}")
-      val statsPart = a.stats.map(s => s""","stats":${jstr(s)}""").getOrElse("")
-      s"""{"add":{"path":"${a.path}","partitionValues":$pvJ,""" +
-        s""""size":${a.size},"modificationTime":0,""" +
-        s""""dataChange":true$statsPart,"deletionVector":${dvJson(dv)}}}"""
+      // the re-add keeps stats and tags (an `optimized=zorder` file
+      // stays recognized by incremental z-order after a DV delete)
+      addJson(a.copy(deletionVector = Some(dv)), dataChange = true)
     }
     Some(DvMark(table, snap, tagged, version, protoLine, removes, adds))
   }

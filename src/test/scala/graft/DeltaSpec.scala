@@ -1,7 +1,12 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, Path, StandardCopyOption}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{DeletionVectors, DeltaReader, Fixtures, Z85}
+import graft.sources.{DeletionVectors, DeltaReader, DeltaWriter, Fixtures, Z85}
 
 /** Delta reader semantics, including the reference's only test vectors —
   * the DV selection cases in
@@ -445,5 +450,119 @@ ${meta(kF)}
     assert(plan.contains("ExternalRDD"),
       "DV decode should enter the plan as a parallelized (executor) dataset")
     assert(df.count() == 3000)
+  }
+
+  // ------------------------------------------------ checkpoint state cache
+
+  /** `body`'s result and the Spark jobs it launched from this thread.
+    * Jobs are tagged with a fresh job group and counted by a listener; a
+    * sentinel job in the same group fences the count, because the
+    * listener bus delivers events in order. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobcount-${java.util.UUID.randomUUID()}"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            group == e.properties.getProperty("spark.jobGroup.id"))
+          started.add(e.properties.getProperty("spark.job.description"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val out =
+        try body
+        finally {
+          sc.setJobDescription("sentinel")
+          sc.parallelize(Seq(1), 1).count()
+          sc.clearJobGroup()
+        }
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!started.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.contains("sentinel"), "sentinel job start never arrived")
+      (out, started.size - 1)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A fresh checkpointed table: z-ordered files (tags), a deletion-vector
+    * delete, a checkpoint, then two appends in the JSON tail. */
+  private def checkpointedTable(): String = {
+    val dir = new File(Files.createTempDirectory("graft_cpcache").toFile, "t")
+      .getAbsolutePath
+    val nation = Tables.t(spark, d, "nation")
+    DeltaWriter.overwrite(nation, dir)
+    DeltaWriter.optimizeZOrder(spark, dir, Seq("n_nationkey", "n_regionkey"), 2)
+    DeltaWriter.deleteWithVectors(spark, dir, col("n_nationkey") % 3 === 0)
+    DeltaWriter.checkpoint(spark, dir)
+    DeltaWriter.append(nation.filter(col("n_nationkey") < 5), dir)
+    DeltaWriter.append(nation.filter(col("n_nationkey") >= 20), dir)
+    dir
+  }
+
+  private def copyTree(from: String): String = {
+    val src = Path.of(from)
+    val dst = Files.createTempDirectory("graft_cpcopy").resolve("t")
+    val walk = Files.walk(src)
+    try walk.forEach(p => Files.copy(p, dst.resolve(src.relativize(p))))
+    finally walk.close()
+    dst.toString
+  }
+
+  test("checkpoint cache: a repeat snapshot is exact and launches no Spark job") {
+    val dir = checkpointedTable()
+    // (the writer's own post-checkpoint replays may already have cached it)
+    val first = DeltaReader.snapshot(spark, dir)
+    assert(first.files.exists(_.deletionVector.nonEmpty))
+    assert(first.files.exists(_.tags.nonEmpty))
+    assert(first.files.forall(_.stats.nonEmpty))
+    val (second, hitJobs) = withJobCount(DeltaReader.snapshot(spark, dir))
+    assert(hitJobs == 0)
+    // files (DVs, stats, tags), version, schema, configuration: all of it
+    assert(second == first)
+    // a byte-for-byte copy at a new path has a new identity: a cold
+    // decode, which must agree with the cached state
+    val copy = copyTree(dir)
+    val (fromCopy, copyJobs) = withJobCount(DeltaReader.snapshot(spark, copy))
+    assert(copyJobs > 0, "a copy at a new path must decode its checkpoint")
+    assert(fromCopy == first)
+  }
+
+  test("checkpoint cache: a checkpoint rewritten in place is re-read") {
+    val dir = checkpointedTable()
+    val other = checkpointedTable()
+    val cp = "_delta_log/" + f"${2L}%020d.checkpoint.parquet"
+    assert(new File(dir, cp).isFile && new File(other, cp).isFile)
+    val cpFiles = DeltaReader.snapshotAt(spark, dir, 2L).files.map(_.path).toSet
+    val before = DeltaReader.snapshot(spark, dir)
+    val tail = before.files.map(_.path).toSet -- cpFiles
+    val original = Files.readAllBytes(new File(dir, cp).toPath)
+    // same version, different contents (other file names): overwrite the
+    // bytes of the existing file, keeping its inode
+    Files.write(new File(dir, cp).toPath,
+      Files.readAllBytes(new File(other, cp).toPath))
+    val after = DeltaReader.snapshot(spark, dir)
+    val otherCp = DeltaReader.snapshotAt(spark, other, 2L).files.map(_.path)
+    assert((after.files.map(_.path).toSet & cpFiles).isEmpty)
+    assert(after.files.map(_.path).toSet == otherCp.toSet ++ tail)
+    // and back by rename-replace, the way DeltaWriter.checkpoint publishes
+    val staged = new File(dir, "cp.tmp").toPath
+    Files.write(staged, original)
+    Files.move(staged, new File(dir, cp).toPath,
+      StandardCopyOption.REPLACE_EXISTING)
+    assert(DeltaReader.snapshot(spark, dir) == before)
+  }
+
+  test("checkpoint cache: concurrent snapshots of one table agree") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // a copy nobody has replayed yet: both threads start on a miss
+    val dir = copyTree(checkpointedTable())
+    val both = Await.result(Future.sequence(Seq.fill(2)(
+      Future(DeltaReader.snapshot(spark, dir)))), 5.minutes)
+    assert(both(0) == both(1))
+    assert(DeltaReader.snapshot(spark, dir) == both(0))
   }
 }

@@ -275,12 +275,9 @@ class DeltaStatsSpec extends AnyFunSuite {
       .filter(col("n_regionkey") === 2).count())
   }
 
-  test("checkpoint-side partition pruning: driver collects only matching adds") {
-    // The past-10⁶-files path (SCALE.md "Scans"): 10k adds live ONLY in a
-    // checkpoint parquet, partitioned p = i % 100. loadWhere must filter
-    // the checkpoint adds as a DataFrame (executor-side) so the driver's
-    // snapshot — and the long-lived FileIndex built from it — holds just
-    // the admitted partition's file entries, not all 10k.
+  /** 10k adds that live ONLY in a checkpoint parquet, partitioned
+    * p = i % 100, plus a JSON tail with one add in p=7 and one in p=8. */
+  private def tenKCheckpointTable(): java.io.File = {
     val dir = java.nio.file.Files.createTempDirectory("graft_cpprune").toFile
     val logDir = new java.io.File(dir, "_delta_log"); logDir.mkdirs()
     val schemaJson = new StructType()
@@ -307,7 +304,16 @@ class DeltaStatsSpec extends AnyFunSuite {
         "\n" +
         s"""{"add":{"path":"p=8/extra.parquet","partitionValues":{"p":"8"},"size":100,"modificationTime":0,"dataChange":true}}""")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    dir
+  }
 
+  test("checkpoint-side partition pruning: driver collects only matching adds") {
+    // The past-10⁶-files path (SCALE.md "Scans"): 10k adds live ONLY in a
+    // checkpoint parquet, partitioned p = i % 100. loadWhere must filter
+    // the checkpoint adds as a DataFrame (executor-side) so the driver's
+    // snapshot — and the long-lived FileIndex built from it — holds just
+    // the admitted partition's file entries, not all 10k.
+    val dir = tenKCheckpointTable()
     val snap = DeltaReader.snapshotAt(spark, dir.getAbsolutePath,
       Long.MaxValue, Map("p" -> Set("7")))
     assert(snap.files.size == 101) // 100 checkpoint adds + 1 tail add
@@ -330,6 +336,29 @@ class DeltaStatsSpec extends AnyFunSuite {
     val none = DeltaReader.loadWhere(spark, dir.getAbsolutePath,
       Map("p" -> Set("no_such_partition")))
     assert(none.columns.toSeq == Seq("k", "p") && none.count() == 0)
+  }
+
+  test("checkpoint cache keys on the prune map: either order keeps 101 of 10002") {
+    def pruned(dir: java.io.File): Int = {
+      val df = DeltaReader.loadWhere(spark, dir.getAbsolutePath,
+        Map("p" -> Set("7")))
+      df.queryExecution.analyzed.collectFirst {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+      }.get.asInstanceOf[DeltaSnapshotFileIndex].inputFiles.length
+    }
+    def unpruned(dir: java.io.File): Int =
+      DeltaReader.snapshot(spark, dir.getAbsolutePath).files.size
+    // unpruned replay first, then the pruned one (each fixture is new, so
+    // its checkpoint starts cold) ...
+    val a = tenKCheckpointTable()
+    assert(unpruned(a) == 10002)
+    assert(pruned(a) == 101)
+    assert(unpruned(a) == 10002)
+    // ... and the reverse order
+    val b = tenKCheckpointTable()
+    assert(pruned(b) == 101)
+    assert(unpruned(b) == 10002)
+    assert(pruned(b) == 101)
   }
 
   test("checkpoint prune keeps adds whose partitionValues lack the key (map shape)") {
