@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** CLI mirroring the reference's three subcommands
   * (/root/reference/crates/cli/src/cli.rs:44-90):
@@ -27,7 +28,7 @@ object Cli {
   def main(args: Array[String]): Unit =
     try run(args.toList)
     catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"error: ${e.getMessage}")
         sys.exit(1)
     }

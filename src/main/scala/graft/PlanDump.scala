@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import scala.util.control.NonFatal
 
 /** Dev harness (not part of the shipped surface, like [[Scratch]]):
   * print one named query's formatted physical plan — the source of the
@@ -32,7 +33,7 @@ object PlanDump {
       val plan =
         try SparkEntry.queries(name)(spark, sfDir)
           .queryExecution.explainString(FormattedMode)
-        catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
+        catch { case NonFatal(e) => s"PLAN FAILED: ${e.getMessage}" }
       outDir match {
         case Some(dir) =>
           val p = java.nio.file.Paths.get(dir, s"$name$suffix.txt")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Table registry over the driver-generated parquet corpus
   * (/root/testdata/sf* — see TESTDATA.md / FIXTURES.md).
@@ -121,7 +122,7 @@ object Tables {
         .fromPath(p, conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRecordCount finally r.close()
-    } catch { case _: Throwable =>
+    } catch { case NonFatal(_) =>
       t(spark, dir, name).count()
     }
 }

@@ -27,11 +27,14 @@ import org.apache.spark.sql.functions._
   *    Costs one extra metadata-sized count job per round on top of the
   *    identical per-round shape. See SCALE.md §"CC convergence".
   *
-  * Per-round lineage handling: each round references the previous
-  * labels twice, so the logical tree doubles per round —
-  * `localCheckpoint` TRUNCATES it (measured in q89: 1.1s → 10.5s per
-  * round by round 4 with cache alone, ~0.1s flat with checkpoint). On a
-  * cluster this would be a reliable checkpoint instead of a local one.
+  * Per-round lineage handling: [[minLabelRounds]] folds each node's own
+  * label in as a self-loop edge, so a round references the previous
+  * labels ONCE, the logical tree grows linearly, and the whole
+  * fixed-round fold runs as one query with no checkpoint. Only
+  * [[fixpoint]] still `localCheckpoint`s: its two-join round references
+  * the previous labels twice (the tree would double per round) and its
+  * change count needs the round's result materialized anyway. On a
+  * cluster those would be reliable checkpoints instead of local ones.
   */
 object ConnectedComponents {
 

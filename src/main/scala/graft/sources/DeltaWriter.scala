@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.StatsParquetFormat.{FileStatsText, statWritable}
+
 /** The Delta Lake WRITER — the committing half of [[DeltaReader]] (the
   * reference only reads Delta; writing makes the table-format story
   * round-trip: an ingest pipeline can land curated output as a Delta
@@ -41,16 +43,19 @@ import org.apache.spark.sql.types._
   *    schema demands it (TimestampNTZ), mirroring
   *    `DeltaReader.applyProtocol`'s supported set.
   *
-  * Per-file statistics are computed in ONE distributed pass: the
-  * freshly moved files are re-read with `_metadata.file_path` and
-  * aggregated per file (numRecords, min/max cast to string, nullCount)
-  * — a single map-side-combined aggregate over data that is still hot
-  * in the page cache, never a per-file driver loop, so the shape holds
-  * at thousands of files per commit. Min/max are emitted as Spark's own
-  * cast-to-string forms, which round-trip through `Cast(string → dt)`
-  * in the session zone — exactly how [[DeltaStats.mayMatch]] interprets
-  * them on the read side; types outside the round-trip-proven set carry
-  * no min/max (readers keep such files conservatively).
+  * Per-file statistics (numRecords, min/max cast to string, nullCount)
+  * are collected by the write tasks themselves: data files stage
+  * through [[StatsParquetFormat]], whose per-file writer wrapper
+  * records them while writing and leaves them in a stats sidecar the
+  * move loop reads — no second query reads the new files back, and the
+  * driver handles one small record per file. Only [[convertToDelta]],
+  * whose files this writer did not produce, aggregates stats over the
+  * files in one distributed `_metadata.file_path` pass. Min/max are
+  * emitted as Spark's own cast-to-string forms, which round-trip
+  * through `Cast(string → dt)` in the session zone — exactly how
+  * [[DeltaStats.mayMatch]] interprets them on the read side; types
+  * outside the round-trip-proven set carry no min/max (readers keep
+  * such files conservatively).
   */
 object DeltaWriter {
 
@@ -694,15 +699,19 @@ object DeltaWriter {
     *  1. touched files = a key-only left-semi join of the tagged target
     *     scan against the source's distinct keys, collected DISTINCT —
     *     file-count-sized metadata, never row data (and the scan is
-    *     column-pruned to the key columns + file path);
+    *     column-pruned to the key columns + file path). On a change-
+    *     feed table the semi-join keeps whole rows instead and is
+    *     pinned once: the same matched rows yield the touched files and
+    *     the feed's pre-images, so the touched files are not scanned a
+    *     second time for the feed;
     *  2. survivors = rows of ONLY the touched files (broadcast
     *     semi-join on the file id) anti-joined against the source keys
     *     — untouched files are never read or rewritten, which is what
     *     keeps a 10-row merge into a 10⁹-row table proportional to the
     *     overlap, not the table;
-    *  3. survivors ∪ source are staged as new files (fresh one-pass
-    *     stats) and published with removes of the touched files —
-    *     readers see pre- or post-merge, never a mix.
+    *  3. survivors ∪ source are staged as new files (stats collected
+    *     by the write tasks) and published with removes of the touched
+    *     files — readers see pre- or post-merge, never a mix.
     *
     * Sources with duplicate key tuples are refused (the multiple-match
     * ambiguity Delta's own MERGE rejects). Mapped tables work in BOTH
@@ -729,92 +738,96 @@ object DeltaWriter {
     val tagged = DeltaReader.loadAt(spark, tablePath, Long.MaxValue,
       tagSourceFile = true)
     val srcKeys = source.select(keys.map(col): _*).distinct()
-    val touched = tagged.select(keys.map(col) :+ col("__source_file"): _*)
-      .join(srcKeys, keys, "left_semi")
-      .select("__source_file").distinct()
-      .collect().map(_.getString(0)).toSet
-    val root = table.getAbsolutePath
-    def absPath(rel: String): String =
-      DeltaReader.resolved(root, DeltaReader.decodePath(rel))
-    val removedAdds = snap.files.filter(a =>
-      touched.exists(t => new java.net.URI(t).getPath == absPath(a.path)))
-    require(removedAdds.length == touched.size,
-      s"internal: ${touched.size} touched files resolved to " +
-        s"${removedAdds.length} add actions")
-
-    val survivors =
-      if (touched.isEmpty) source.limit(0)
-      else tagged
-        .join(broadcast(touched.toSeq.toDF("__source_file")),
-          Seq("__source_file"), "left_semi")
-        .drop("__source_file", "__row_index")
-        .join(srcKeys, keys, "left_anti")
     val fields = snap.schema.fieldNames.toIndexedSeq
-    val srcNorm = source.select(fields.map(col): _*)
-    val out = survivors.unionByName(srcNorm)
-    val adds = stageLogical(out, snap, table, version)
     // exact CDF images ([[stageCdcFiles]]) when the table declares a
-    // consumer ([[cdfEnabled]]): replaced target rows =
-    // update_preimage (bounded by the touched files), their source
-    // versions = update_postimage, unmatched source rows = insert —
-    // the feed never ships touched-file survivor churn
-    val cdcLines = if (!cdfEnabled(snap)) Nil else {
-      val touchedRows =
-        if (touched.isEmpty) tagged.limit(0)
-        else tagged.join(broadcast(touched.toSeq.toDF("__source_file")),
-          Seq("__source_file"), "left_semi")
-      val pre = touchedRows
-        .join(srcKeys, keys, "left_semi")
-        .drop("__source_file", "__row_index")
-        .select(fields.map(col): _*)
-      val matchedKeys = pre.select(keys.map(col): _*).distinct()
-      // DUPLICATE-KEY TARGETS: replace-all semantics turn N matching
-      // target rows into ONE source row, but matchedKeys is
-      // key-distinct — a naive feed would pair N `update_preimage`
-      // rows with a single `update_postimage`, breaking the 1:1
-      // pre/post pairing CDF consumers assume. So exactly one
-      // pre-image per key keeps the update spelling and the surplus
-      // N−1 emit as `delete` (which is what replace-all did to them);
-      // the signed net is identical either way, the pairing contract
-      // holds. Which duplicate becomes THE pre-image is arbitrary
-      // (they share the key; replace-all destroys them all alike) —
-      // row_number over the key cols picks one without imposing a
-      // spurious total order.
-      val keyW = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col): _*).orderBy(keys.map(col): _*)
-      // localCheckpoint PINS one evaluation of the tie-broken ranking:
-      // the rn===1 and rn>1 branches below would otherwise re-evaluate
-      // the window independently (only the exchange is reused), and
-      // with duplicates tied under the key-only ordering the two
-      // re-evaluations could DISAGREE on which row is "the" pre-image
-      // — one duplicate appearing in the feed twice and its sibling
-      // never, corrupting downstream folds. EAGER, so the blocks exist
-      // before either branch runs (a lazy cache would leave the two
-      // branches racing to compute the same partition); lost blocks
-      // fail the job rather than recompute (deterministic-or-fail, the
-      // q89 CC discipline). Matched-rows-sized; released EXPLICITLY
-      // below once the cdc files are staged (r21 — a long-lived session
-      // running many merges otherwise accumulates checkpointed RDD
-      // blocks until ContextCleaner GC).
-      val preTagged = pre.withColumn("__rn", row_number().over(keyW))
-        .localCheckpoint()
-      try stageCdcFiles(
-        preTagged.filter(col("__rn") === 1).drop("__rn")
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(preTagged.filter(col("__rn") > 1).drop("__rn")
-            .withColumn("_change_type", lit("delete")))
-          .unionByName(srcNorm.join(matchedKeys, keys, "left_semi")
-            .withColumn("_change_type", lit("update_postimage")))
-          .unionByName(srcNorm.join(matchedKeys, keys, "left_anti")
-            .withColumn("_change_type", lit("insert"))),
-        table, version, snap)
-      finally preTagged.unpersist()
-    }
-    val removes = removedAdds.map(a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-        s"""${System.currentTimeMillis()},"dataChange":true}}""")
-    publishOptimistic(table, version, cdcLines ++ removes ++ adds,
-      operation = "MERGE")
+    // consumer ([[cdfEnabled]]): the matched target rows (tagged ⋉ source
+    // keys) are then BOTH the touched-file discovery input and the
+    // update pre-images, so they are computed ONCE — with their source
+    // file and duplicate-key rank — and pinned.
+    //
+    // DUPLICATE-KEY TARGETS: replace-all semantics turn N matching
+    // target rows into ONE source row, so exactly one pre-image per key
+    // keeps the update spelling and the surplus N−1 emit as `delete`
+    // (which is what replace-all did to them); the signed net is
+    // identical either way, and the 1:1 pre/post pairing CDF consumers
+    // assume holds. Which duplicate becomes THE pre-image is arbitrary
+    // (they share the key; replace-all destroys them all alike) —
+    // row_number over the key cols picks one without imposing a
+    // spurious total order.
+    //
+    // localCheckpoint PINS one evaluation of that tie-broken ranking:
+    // the rn===1 and rn>1 branches below would otherwise re-evaluate
+    // the window independently, and with duplicates tied under the
+    // key-only ordering the two re-evaluations could DISAGREE on which
+    // row is "the" pre-image — one duplicate appearing in the feed
+    // twice and its sibling never, corrupting downstream folds. EAGER,
+    // so the blocks exist before any branch runs; lost blocks fail the
+    // job rather than recompute (deterministic-or-fail, the q89 CC
+    // discipline). Matched-rows-sized; released EXPLICITLY once the cdc
+    // files are staged (a long-lived session running many merges
+    // otherwise accumulates checkpointed RDD blocks until ContextCleaner
+    // GC).
+    val matched =
+      if (!cdfEnabled(snap)) None
+      else {
+        val keyW = org.apache.spark.sql.expressions.Window
+          .partitionBy(keys.map(col): _*).orderBy(keys.map(col): _*)
+        Some(tagged.join(srcKeys, keys, "left_semi")
+          .select((fields :+ "__source_file").map(col): _*)
+          .withColumn("__rn", row_number().over(keyW))
+          .localCheckpoint())
+      }
+    try {
+      val touched = matched
+        .getOrElse(tagged.select(keys.map(col) :+ col("__source_file"): _*)
+          .join(srcKeys, keys, "left_semi"))
+        .select("__source_file").distinct()
+        .collect().map(_.getString(0)).toSet
+      val root = table.getAbsolutePath
+      def absPath(rel: String): String =
+        DeltaReader.resolved(root, DeltaReader.decodePath(rel))
+      val removedAdds = snap.files.filter(a =>
+        touched.exists(t => new java.net.URI(t).getPath == absPath(a.path)))
+      require(removedAdds.length == touched.size,
+        s"internal: ${touched.size} touched files resolved to " +
+          s"${removedAdds.length} add actions")
+
+      val survivors =
+        if (touched.isEmpty) source.limit(0)
+        else tagged
+          .join(broadcast(touched.toSeq.toDF("__source_file")),
+            Seq("__source_file"), "left_semi")
+          .drop("__source_file", "__row_index")
+          .join(srcKeys, keys, "left_anti")
+      val srcNorm = source.select(fields.map(col): _*)
+      val out = survivors.unionByName(srcNorm)
+      val adds = stageLogical(out, snap, table, version)
+      // replaced target rows = update_preimage (or delete, for duplicate
+      // surplus), their source versions = update_postimage, unmatched
+      // source rows = insert — told apart by ONE left-outer join of the
+      // source with the matched keys; the feed never ships touched-file
+      // survivor churn
+      val cdcLines = matched.fold(Seq.empty[String]) { m =>
+        val pre = m.drop("__source_file")
+        val matchedKeys = m.filter(col("__rn") === 1)
+          .select(keys.map(col) :+ lit(true).as("__matched"): _*)
+        stageCdcFiles(
+          pre.filter(col("__rn") === 1).drop("__rn")
+            .withColumn("_change_type", lit("update_preimage"))
+            .unionByName(pre.filter(col("__rn") > 1).drop("__rn")
+              .withColumn("_change_type", lit("delete")))
+            .unionByName(srcNorm.join(matchedKeys, keys, "left_outer")
+              .select(fields.map(col) :+
+                when(col("__matched"), lit("update_postimage"))
+                  .otherwise(lit("insert")).as("_change_type"): _*)),
+          table, version, snap)
+      }
+      val removes = removedAdds.map(a =>
+        s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
+          s"""${System.currentTimeMillis()},"dataChange":true}}""")
+      publishOptimistic(table, version, cdcLines ++ removes ++ adds,
+        operation = "MERGE")
+    } finally matched.foreach(_.unpersist())
   }
 
   /** SCD TYPE-2 APPLY — the versioned-dimension maintenance every
@@ -2508,8 +2521,10 @@ object DeltaWriter {
     * surface (DML, time travel, OPTIMIZE, constraints, streaming)
     * without rewriting 100 TB of data. Version 0 references every
     * parquet file under the root at its existing (possibly
-    * hive-partitioned) path, with per-file stats computed by the same
-    * ONE distributed pass staged writes use, so skip-pruning works
+    * hive-partitioned) path, with per-file stats computed by ONE
+    * distributed aggregate over the files ([[aggregateStats]] — they
+    * were not written by graft, so no write task recorded them; the
+    * text is the same staged writes produce), so skip-pruning works
     * from the first post-convert scan. Partition columns and their
     * types come from Spark's own partition discovery over the
     * directory layout; a layout where files disagree on partitioning
@@ -2548,7 +2563,8 @@ object DeltaWriter {
     val partSet = partCols.toSet
     val dataFields =
       full.schema.fields.filterNot(f => partSet(f.name)).toIndexedSeq
-    val adds = composeAddActions(spark, table, rels, dataFields,
+    val adds = composeAddActions(table, rels,
+      aggregateStats(spark, table, rels, dataFields), dataFields,
       Map.empty, dataChange = true, deleteEmpties = false)
     publish(table, 0L, header(full, partCols, 0L) ++ adds, "CONVERT")
     0L
@@ -2799,10 +2815,13 @@ object DeltaWriter {
       }
   }
 
-  /** Stage `df`'s data files, move them into the table root, compute
-    * per-file stats in one distributed pass, and return the composed
-    * `add` action lines (nothing is committed yet — the caller owns the
-    * log line set and the publish). */
+  /** Stage `df`'s data files, move them into the table root and return
+    * the composed `add` action lines (nothing is committed yet — the
+    * caller owns the log line set and the publish). The write goes
+    * through [[StatsParquetFormat]], so each file's stats are a
+    * by-product of the write task that produced it: the move loop reads
+    * them from the file's stats sidecar and deletes it, and no second
+    * Spark query reads the new files back. */
   private def stageDataFiles(df: DataFrame, table: File, version: Long,
       partitionBy: Seq[String],
       tags: Map[String, String] = Map.empty,
@@ -2823,22 +2842,25 @@ object DeltaWriter {
     val needsFieldIds =
       df.schema.fields.exists(_.metadata.contains("parquet.field.id"))
     FieldIdWriteGuard.withFlag(spark, needsFieldIds) {
-      val w0 = df.write.mode(SaveMode.Overwrite)
+      val w0 = df.write.format(classOf[StatsParquetFormat].getName)
+        .mode(SaveMode.Overwrite)
       (if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0)
-        .parquet(staging.getAbsolutePath)
+        .save(staging.getAbsolutePath)
     }
     val moved = collectParquet(staging).map { f =>
       val rel = staging.toPath.relativize(f.toPath).toString
+      val stats = StatsParquetFormat.takeSidecar(f)
       val dest = new File(table, rel)
       dest.getParentFile.mkdirs()
       Files.move(f.toPath, dest.toPath) // throws on collision, never clobbers
-      rel
+      rel -> stats
     }
     delete(staging)
     val partSet = partitionBy.toSet
     val dataFields = df.schema.fields.filterNot(f => partSet.contains(f.name))
-    composeAddActions(spark, table, moved, dataFields.toIndexedSeq, tags,
-      dataChange, deleteEmpties = true)
+    composeAddActions(table, moved.map(_._1),
+      moved.map { case (rel, st) => relKey(rel) -> st }.toMap,
+      dataFields.toIndexedSeq, tags, dataChange, deleteEmpties = true)
   }
 
   /** Recursive file listing shared by [[copyInto]]'s landing-dir scan
@@ -3050,61 +3072,79 @@ object DeltaWriter {
     snap.configuration.get("delta.enableChangeDataFeed")
       .exists(_.trim.equalsIgnoreCase("true"))
 
-  /** Per-file stats (ONE distributed pass) + the composed `add` action
-    * lines for `rels` (table-relative parquet paths, already in place
-    * under `table`). Shared by the staged-write path and
-    * [[convertToDelta]] — the latter must not delete a user's
-    * zero-row files, only skip referencing them. */
-  private def composeAddActions(spark: org.apache.spark.sql.SparkSession,
+  /** Per-file stats of parquet files graft did NOT write, in ONE
+    * distributed pass over `rels` (table-relative paths) — the
+    * [[convertToDelta]] path; staged writes collect theirs in the write
+    * tasks ([[StatsParquetFormat]]). Keyed like [[composeAddActions]]
+    * expects; a file holding zero rows is absent (every real row
+    * carries its `_metadata.file_path`). */
+  private def aggregateStats(spark: org.apache.spark.sql.SparkSession,
       table: File, rels: Seq[String],
+      dataFields: Seq[org.apache.spark.sql.types.StructField])
+      : Map[String, FileStatsText] = {
+    val statFields = dataFields.filter(f => statWritable(f.dataType))
+    val src = spark.read
+      .schema(StructType(dataFields)) // pinned: no inference pass
+      .parquet(rels.map(r => new File(table, r).getAbsolutePath): _*)
+      .select(col("_metadata.file_path").as("__path") +:
+        dataFields.toIndexedSeq.map(f => col(f.name)): _*)
+    val aggs: Seq[org.apache.spark.sql.Column] =
+      Seq(count(lit(1)).as("__n")) ++
+        statFields.flatMap(f => Seq(
+          min(col(f.name)).cast("string").as(s"__min_${f.name}"),
+          max(col(f.name)).cast("string").as(s"__max_${f.name}"))) ++
+        dataFields.map(f =>
+          sum(when(col(f.name).isNull, 1L).otherwise(0L))
+            .as(s"__null_${f.name}"))
+    src.groupBy(col("__path")).agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .map { r =>
+        val abs = java.nio.file.Paths.get(
+          new java.net.URI(r.getString(0)).getPath)
+        def texts(prefix: String): Map[String, String] =
+          statFields.flatMap(f =>
+            Option(r.getAs[String](s"$prefix${f.name}")).map(f.name -> _))
+            .toMap
+        relKey(table.toPath.toAbsolutePath.relativize(abs).toString) ->
+          FileStatsText(r.getAs[Long]("__n"),
+            dataFields.map(f => f.name -> r.getAs[Long](s"__null_${f.name}"))
+              .toMap,
+            texts("__min_"), texts("__max_"))
+      }
+      .toMap
+  }
+
+  /** Table-relative path with `/` separators: the stats key. Keyed by
+    * TABLE-RELATIVE path, not file name: a partitioned staged write
+    * emits the SAME part-file name into every hive dir it touches, and
+    * name-keyed stats would collide — every same-named file would carry
+    * ONE dir's min/max, and a reader pruning on those bounds could
+    * wrongly skip live rows. */
+  private def relKey(rel: String): String =
+    rel.replace(File.separatorChar, '/')
+
+  /** The composed `add` action lines for `rels` (table-relative parquet
+    * paths, already in place under `table`) from their per-file `stats`
+    * (keyed by [[relKey]]). Shared by the staged-write path and
+    * [[convertToDelta]] — the latter must not delete a user's zero-row
+    * files, only skip referencing them. */
+  private def composeAddActions(table: File, rels: Seq[String],
+      stats: Map[String, FileStatsText],
       dataFields: Seq[org.apache.spark.sql.types.StructField],
       tags: Map[String, String], dataChange: Boolean,
       deleteEmpties: Boolean): Seq[String] = {
-    val moved = rels // table-relative paths, already in their final place
     val statFields = dataFields.filter(f => statWritable(f.dataType))
-    val byName = if (moved.isEmpty) Map.empty[String, org.apache.spark.sql.Row]
-    else {
-      val src = spark.read
-        .schema(StructType(dataFields)) // pinned: no inference pass
-        .parquet(moved.map(r => new File(table, r).getAbsolutePath): _*)
-        .select(col("_metadata.file_path").as("__path") +:
-          dataFields.toIndexedSeq.map(f => col(f.name)): _*)
-      val aggs: Seq[org.apache.spark.sql.Column] =
-        Seq(count(lit(1)).as("__n")) ++
-          statFields.flatMap(f => Seq(
-            min(col(f.name)).cast("string").as(s"__min_${f.name}"),
-            max(col(f.name)).cast("string").as(s"__max_${f.name}"))) ++
-          dataFields.map(f =>
-            sum(when(col(f.name).isNull, 1L).otherwise(0L))
-              .as(s"__null_${f.name}"))
-      src.groupBy(col("__path")).agg(aggs.head, aggs.tail: _*)
-        .collect()
-        .map { r =>
-          // key by TABLE-RELATIVE path, not file name: a partitioned
-          // staged write emits the SAME part-file name into every hive
-          // dir it touches, and name-keyed stats would collide — every
-          // same-named file would carry ONE dir's min/max, and a reader
-          // pruning on those bounds could wrongly skip live rows
-          val abs = java.nio.file.Paths.get(
-            new java.net.URI(r.getString(0)).getPath)
-          table.toPath.toAbsolutePath.relativize(abs).toString
-            .replace(File.separatorChar, '/') -> r
-        }
-        .toMap
-    }
-
-    // ---- compose the commit. A staged file ABSENT from the stats
-    // aggregate holds zero rows (every real row carries its
-    // _metadata.file_path) — Spark's writer emits one eagerly per task
+    // ---- compose the commit. A zero-row file (absent from `stats` or
+    // counting no records) is dropped — Spark's writer emits one eagerly
     // even when the task's partition filtered empty, which the
     // copy-on-write verbs (merge/delete survivors) routinely produce.
     // A zero-row add is pure log+scan overhead: delete the file, skip
     // the action.
-    def relKey(rel: String): String =
-      rel.replace(File.separatorChar, '/')
-    val adds = moved.filter { rel =>
+    def hasRows(rel: String): Boolean =
+      stats.get(relKey(rel)).exists(_.numRecords > 0L)
+    rels.filter { rel =>
       val f = new File(table, rel)
-      val keep = byName.contains(relKey(rel))
+      val keep = hasRows(rel)
       if (!keep && deleteEmpties) {
         f.delete()
         var p = f.getParentFile
@@ -3114,7 +3154,7 @@ object DeltaWriter {
       keep
     }.map { rel =>
       val f = new File(table, rel)
-      val segs = rel.replace(File.separatorChar, '/').split('/')
+      val segs = relKey(rel).split('/')
       val pv = segs.dropRight(1).map { seg =>
         val i = seg.indexOf('=')
         require(i > 0, s"unparseable partition dir '$seg' under $rel")
@@ -3123,21 +3163,16 @@ object DeltaWriter {
         seg.take(i) ->
           (if (raw == "__HIVE_DEFAULT_PARTITION__") None else Some(raw))
       }
-      val r = byName(relKey(rel))
-      val minsJ = statFields.flatMap { sf =>
-        Option(r.getAs[String](s"__min_${sf.name}"))
-          .map(v => s"${jstr(sf.name)}:${jsonVal(sf.dataType, v)}")
-      }
-      val maxsJ = statFields.flatMap { sf =>
-        Option(r.getAs[String](s"__max_${sf.name}"))
-          .map(v => s"${jstr(sf.name)}:${jsonVal(sf.dataType, v)}")
-      }
+      val st = stats(relKey(rel))
+      def bounds(of: Map[String, String]): String = statFields.flatMap { sf =>
+        of.get(sf.name).map(v => s"${jstr(sf.name)}:${jsonVal(sf.dataType, v)}")
+      }.mkString(",")
       val nullsJ = dataFields.map(sf =>
-        s"${jstr(sf.name)}:${r.getAs[Long](s"__null_${sf.name}")}")
-      val stats =
-        s"""{"numRecords":${r.getAs[Long]("__n")},""" +
-          s""""minValues":{${minsJ.mkString(",")}},""" +
-          s""""maxValues":{${maxsJ.mkString(",")}},""" +
+        s"${jstr(sf.name)}:${st.nullCount(sf.name)}")
+      val statsJ =
+        s"""{"numRecords":${st.numRecords},""" +
+          s""""minValues":{${bounds(st.minValues)}},""" +
+          s""""maxValues":{${bounds(st.maxValues)}},""" +
           s""""nullCount":{${nullsJ.mkString(",")}}}"""
       val pvJ = pv.map {
         case (k, Some(v)) => s"${jstr(k)}:${jstr(v)}"
@@ -3149,9 +3184,8 @@ object DeltaWriter {
           s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")}"""
       s"""{"add":{"path":"${segs.mkString("/")}","partitionValues":$pvJ,""" +
         s""""size":${f.length()},"modificationTime":${f.lastModified()},""" +
-        s""""dataChange":$dataChange,"stats":${jstr(stats)}$tagsPart}}"""
+        s""""dataChange":$dataChange,"stats":${jstr(statsJ)}$tagsPart}}"""
     }
-    adds
   }
 
   /** Version-0 protocol + metaData lines (empty for later versions). */
@@ -3348,21 +3382,6 @@ object DeltaWriter {
       }
     }
     v // unreachable
-  }
-
-  /** Types whose Spark cast-to-string form PROVABLY round-trips through
-    * `Cast(string → dt)` under the session zone — the writer-side
-    * counterpart of [[DeltaStats]]'s reader whitelist, minus the ANSI
-    * intervals (their string forms are castable only under ANSI parse
-    * rules we have not vetted — files simply carry no min/max for such
-    * columns and readers keep them conservatively). */
-  private def statWritable(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType |
-         FloatType | DoubleType | BooleanType |
-         DateType | TimestampType | TimestampNTZType => true
-    case _: DecimalType => true
-    case st: StringType => st == StringType // binary collation only
-    case _ => false
   }
 
   private def hasNtz(dt: DataType): Boolean = dt match {

@@ -565,4 +565,19 @@ ${meta(kF)}
     assert(both(0) == both(1))
     assert(DeltaReader.snapshot(spark, dir) == both(0))
   }
+
+  test("append of a 3-row local frame launches exactly one Spark job") {
+    val spark = this.spark
+    import spark.implicits._
+    val dir = new File(Files.createTempDirectory("graft_appendjobs").toFile, "t")
+      .getAbsolutePath
+    DeltaWriter.append(Seq((1, "a"), (2, "b")).toDF("k", "v"), dir)
+    // the write job itself: its tasks collect the per-file stats, so no
+    // second query reads the new file back
+    val (_, jobs) = withJobCount(DeltaWriter.append(
+      Seq((3, "c"), (4, "d"), (5, "e")).toDF("k", "v"), dir))
+    assert(jobs == 1)
+    assert(DeltaReader.snapshot(spark, dir).files.forall(_.stats.nonEmpty))
+    assert(DeltaReader.load(spark, dir).count() == 5L)
+  }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.{col, max, min}
+import org.apache.spark.sql.functions.{col, lit, max, min}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -425,5 +425,151 @@ class DeltaStatsSpec extends AnyFunSuite {
     val all = DeltaReader.snapshotAt(spark, dir.getAbsolutePath,
       Long.MaxValue, Map("c" -> Set("x")))
     assert(all.files.size == 4)
+  }
+
+  // ---- write-side stats: collected in the write tasks, byte-identical
+  // to the aggregate pass convertToDelta runs over files graft did not
+  // write
+
+  private val fixtureSchema = new StructType()
+    .add("p", StringType)
+    .add("b", ByteType).add("s", ShortType).add("i", IntegerType)
+    .add("l", LongType)
+    .add("f", FloatType).add("d", DoubleType).add("z", DoubleType)
+    .add("bo", BooleanType)
+    .add("dt", DateType).add("ts", TimestampType)
+    .add("tn", TimestampNTZType)
+    .add("dec", DecimalType(12, 4))
+    .add("str", StringType).add("sparse", StringType)
+    .add("allnull", StringType)
+    .add("arr", ArrayType(IntegerType))
+
+  /** Rows `from until to` of a fixture that puts every stats edge into
+    * the files: NaN, ±Inf, a column of only −0.0 and 0.0 (min and max
+    * are ties, so the first value seen must win), non-ASCII, tab, quote
+    * and backslash text, a null-heavy and an all-null string, an
+    * array. */
+  private def statsFixture(from: Int, to: Int) = {
+    import org.apache.spark.sql.Row
+    val floats = Seq(Double.NaN, -0.0, 0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1.5, -2.25)
+    val texts = Seq("naïve", "日本語", "tab\there", "quote\"d",
+      "back\\slash", "", "Zürich", "a\u0001b")
+    val rows = (from until to).map { n =>
+      val fl = floats(n % floats.size)
+      Row(Seq("a", "b", "c")(n % 3),
+        if (n % 11 == 0) null else (n % 256 - 128).toByte,
+        (n * 37 % 2000 - 1000).toShort,
+        if (n % 7 == 0) null else n * 7919 - 150000,
+        n.toLong * 1000000007L - (1L << 40),
+        fl.toFloat, if (n % 13 == 5) null else fl * 3,
+        if ((n / 3 + n / 7) % 2 == 0) -0.0 else 0.0,
+        if (n % 5 == 0) null else n % 2 == 0,
+        java.sql.Date.valueOf(java.time.LocalDate.of(1970, 1, 1)
+          .plusDays(n * 173L - 9000L)),
+        new java.sql.Timestamp(1700000000000L + n * 3600123L - 86400000L),
+        java.time.LocalDateTime.of(2020, 2, 29, 23, 59, 59, 123456000)
+          .plusMinutes(n * 61L),
+        new java.math.BigDecimal(BigInt(n * 98765L - 1234567L).bigInteger, 4),
+        texts(n % texts.size),
+        if (n % 9 == 0) s"sparse-$n" else null,
+        null,
+        if (n % 4 == 0) null else Seq(n, -n))
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      fixtureSchema)
+  }
+
+  private def addStats(dir: String): Map[String, String] =
+    DeltaReader.snapshot(spark, dir).files
+      .map(a => a.path -> a.stats.get).toMap
+
+  private def tableTree(dir: String): Seq[java.nio.file.Path] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+    finally walk.close()
+  }
+
+  test("write-task stats equal the aggregate pass's, byte for byte, plain and column-mapped") {
+    val zoneKey = SQLConf.SESSION_LOCAL_TIMEZONE.key
+    val savedZone = spark.conf.get(zoneKey)
+    spark.conf.set(zoneKey, "America/Los_Angeles")
+    try Seq("none", "name", "id").foreach { mode =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_wstats_$mode")
+        .resolve("t").toString
+      if (mode != "none")
+        DeltaWriter.append(statsFixture(100, 110), dir, Seq("p"),
+          columnMapping = mode)
+      DeltaWriter.overwrite(statsFixture(0, 60), dir, Seq("p"))
+      DeltaWriter.append(statsFixture(60, 100), dir, Seq("p"))
+      val written = addStats(dir)
+      assert(written.size >= 6)
+      // the reference: the aggregate pass over a byte copy of the data
+      // tree (its files, also the ones the overwrite removed)
+      val src = java.nio.file.Paths.get(dir)
+      val copy = java.nio.file.Files.createTempDirectory("graft_wstats_ref")
+        .resolve("t")
+      tableTree(dir).filterNot(p => src.relativize(p).toString
+          .startsWith("_delta_log"))
+        .foreach(p => java.nio.file.Files.copy(p, copy.resolve(src.relativize(p))))
+      DeltaWriter.convertToDelta(spark, copy.toString)
+      val reference = addStats(copy.toString)
+      written.foreach { case (path, stats) =>
+        assert(reference.get(path).contains(stats), s"$mode: $path")
+      }
+      // the edge cases did reach the stats
+      val parsed = written.values.map(DeltaStats.parse(_).get)
+      val phys = DeltaReader.snapshot(spark, dir).physicalNames
+      def c(n: String) = phys.getOrElse(n, n)
+      assert(parsed.forall(st => !st.minValues.contains(c("arr")) &&
+        st.nullCount.contains(c("arr"))))
+      assert(parsed.forall(st => !st.minValues.contains(c("allnull")) &&
+        st.numRecords.contains(st.nullCount(c("allnull")))))
+      assert(parsed.exists(_.maxValues(c("d")).asText == "NaN"))
+      assert(parsed.exists(_.minValues(c("f")).asText == "-Infinity"))
+      assert(parsed.exists(_.maxValues(c("str")).asText == "日本語"))
+      assert(parsed.map(_.minValues(c("z")).asText).toSet == Set("-0.0", "0.0"))
+    } finally spark.conf.set(zoneKey, savedZone)
+  }
+
+  test("zero-row staged files yield no add and are deleted") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_zerorow")
+      .resolve("t").toString
+    // four tasks: task 0 (ids 0–24) filters empty but still writes a
+    // file, tasks 1–2 write none, task 3 keeps 90–99
+    DeltaWriter.overwrite(spark.range(0, 100, 1, 4).toDF().filter(col("id") >= 90),
+      dir)
+    val adds = DeltaReader.snapshot(spark, dir).files
+    assert(adds.size == 1)
+    assert(DeltaStats.parse(adds.head.stats.get).get.numRecords.contains(10L))
+    assert(tableTree(dir).count(_.toString.endsWith(".parquet")) == 1)
+  }
+
+  test("no stats sidecar or staging dir survives any data-writing verb") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_nosidecar")
+      .resolve("t").toString
+    def frame(lo: Int, hi: Int) = (lo until hi)
+      .map(n => (n, s"v$n", n * 7 % 17, Seq("x", "y")(n % 2)))
+      .toDF("k", "v", "w", "p")
+    def leftovers(): Seq[String] = tableTree(dir).map(_.getFileName.toString)
+      .filter(n => n.endsWith(".stats") || n.startsWith(".stage"))
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "overwrite" -> (() => DeltaWriter.overwrite(frame(0, 40), dir, Seq("p"),
+        properties = Map("delta.enableChangeDataFeed" -> "true"))),
+      "append" -> (() => DeltaWriter.append(frame(40, 60), dir, Seq("p"))),
+      "merge" -> (() => DeltaWriter.merge(frame(50, 70), dir, Seq("k"))),
+      "update" -> (() => DeltaWriter.update(spark, dir, col("k") < 10,
+        Map("v" -> lit("u")))),
+      "compact" -> (() => DeltaWriter.compact(spark, dir)),
+      "optimizeZOrder" -> (() => DeltaWriter.optimizeZOrder(spark, dir,
+        Seq("k", "w"), 2)),
+      "replacePartitions" -> (() => DeltaWriter.replacePartitions(
+        frame(0, 10).filter(col("p") === "x"), dir, Map("p" -> Set("x")))))
+    verbs.foreach { case (name, run) =>
+      run()
+      assert(leftovers().isEmpty, s"after $name")
+    }
+    assert(DeltaReader.load(spark, dir).count() == 40L)
   }
 }
