@@ -201,25 +201,9 @@ final class AdtContext(val spark: SparkSession) {
   private def analyze(inner: String): DataFrame = {
     val qe = sql(inner).queryExecution
     qe.toRdd.foreach(_ => ()) // full execution, zero driver materialization
-    val sb = new StringBuilder
-    def render(p: SparkPlan, depth: Int): Unit = {
-      val ms = p.metrics.toSeq.sortBy(_._1)
-        .map { case (k, m) => s"$k=${m.value}" }.mkString(", ")
-      sb.append("  " * depth).append(p.nodeName)
-      if (ms.nonEmpty) sb.append(", metrics=[").append(ms).append("]")
-      sb.append("\n")
-      p match {
-        // unwrap the adaptive / stage / reuse shells so the metric tree
-        // reads as the plan that actually ran
-        case a: AdaptiveSparkPlanExec => render(a.executedPlan, depth + 1)
-        case s: QueryStageExec => render(s.plan, depth + 1)
-        case r: ReusedExchangeExec => render(r.child, depth + 1)
-        case _ => p.children.foreach(render(_, depth + 1))
-      }
-    }
-    render(qe.executedPlan, 0)
     import spark.implicits._
-    Seq(("Plan with Metrics", sb.result())).toDF("plan_type", "plan")
+    Seq(("Plan with Metrics", AdtContext.planWithMetrics(qe.executedPlan)))
+      .toDF("plan_type", "plan")
   }
 }
 
@@ -260,29 +244,84 @@ object AdtContext {
     * other read: field-id matching only engages for read schemas that
     * carry `parquet.field.id` metadata, which only id-mapped delta
     * loads produce (spec-pinned in DeltaSpec "fieldId read conf").
-    * Every session entry point ([[build]], Verify, Bench, Scratch,
-    * PlanDump, the shared test session) routes through this. */
+    * Every session graft builds comes from [[session]], which routes
+    * through this; perfbench builds its own session through it too. */
   def engineConfs(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.parquet.fieldId.read.enabled", "true")
 
-  /** Session defaults matching SURVEY §4.3's config-parity table. */
-  def build(master: String = "local[*]"): AdtContext = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = engineConfs(SparkSession.builder()
+  /** The one engine session factory (SURVEY §4.3's config-parity
+    * table): [[build]], Bench, Verify, Scratch, PlanDump and the shared
+    * test session all start their session here, so their confs cannot
+    * drift apart. `SPARK_GRAFT_CPUS` sizes it and `SPARK_GRAFT_MASTER`
+    * overrides the `local[cpus]` master. */
+  def session(
+      cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      : SparkSession =
+    engineConfs(SparkSession.builder())
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       .appName("adtspark")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // r21: cached-plan AQE coalescing (see Bench.scala for the
-      // measured rationale; respects the same advisory sizing as
-      // uncached exchanges — scale-correct at any SF)
+      // Let AQE re-coalesce exchanges INSIDE cached plans. Spark
+      // defaults this off to preserve a cached frame's output
+      // partitioning for downstream exchange reuse, but this engine's
+      // caches are small signature/assignment frames whose consumers
+      // re-derive requirements anyway; with it off every
+      // consumer stage of a cached frame runs shuffle.partitions tasks
+      // regardless of size (measured: q42 711 -> 29-39 tasks, summed
+      // executor CPU 17 s -> ~2 s at sf0.1). Scale-correct, not a local
+      // tune: it makes cached-plan partitioning respect the same AQE
+      // advisory sizing every uncached exchange already follows.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+        "true")
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
       .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.ui.enabled", "false"))
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  /** A library session on the factory's defaults. */
+  def build(): AdtContext = {
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
     new AdtContext(spark)
+  }
+
+  /** The executed plan as an indented operator tree, one node per line
+    * with its runtime SQL metrics — the body of `EXPLAIN ANALYZE` and
+    * of Scratch's per-query plan. The adaptive / stage / reuse shells
+    * are unwrapped so the tree reads as the plan that actually ran. */
+  private[graft] def planWithMetrics(plan: SparkPlan): String = {
+    val sb = new StringBuilder
+    def render(p: SparkPlan, depth: Int): Unit = {
+      val ms = p.metrics.toSeq.sortBy(_._1)
+        .map { case (k, m) => s"$k=${m.value}" }.mkString(", ")
+      sb.append("  " * depth).append(p.nodeName)
+      if (ms.nonEmpty) sb.append(", metrics=[").append(ms).append("]")
+      sb.append("\n")
+      p match {
+        case a: AdaptiveSparkPlanExec => render(a.executedPlan, depth + 1)
+        case s: QueryStageExec => render(s.plan, depth + 1)
+        case r: ReusedExchangeExec => render(r.child, depth + 1)
+        case _ => p.children.foreach(render(_, depth + 1))
+      }
+    }
+    render(plan, 0)
+    sb.result()
+  }
+
+  /** Between queries: drop every cached frame, then unpersist every RDD
+    * still persisted — clearCache misses localCheckpoint blocks (q89's
+    * lineage truncation), which would otherwise pile up for the rest of
+    * the JVM. Returns `id:storageLevel` of each swept RDD that was NOT
+    * a (materialized, hence checkpointed) localCheckpoint truncation:
+    * a cache a query leaked past clearCache. */
+  private[graft] def sweepCaches(spark: SparkSession): Seq[String] = {
+    spark.catalog.clearCache()
+    val persisted = spark.sparkContext.getPersistentRDDs.values.toSeq
+    val leaked = persisted.filterNot(_.isCheckpointed)
+      .map(r => s"${r.id}:${r.getStorageLevel}")
+    persisted.foreach(_.unpersist(false))
+    leaked
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.Fixtures
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
@@ -18,29 +17,7 @@ import graft.sources.Fixtures
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = AdtContext.engineConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // r21 (guide §2.2/§2.4): let AQE re-coalesce exchanges INSIDE
-      // cached plans. Spark defaults this off to preserve a cached
-      // frame's output partitioning for downstream exchange reuse, but
-      // this engine's caches are small signature/assignment frames whose
-      // consumers re-derive requirements anyway; with it off every
-      // consumer stage of a cached frame runs shuffle.partitions tasks
-      // regardless of size (measured: q42 711 -> 29-39 tasks, summed
-      // executor CPU 17 s -> ~2 s at sf0.1). Scale-correct, not a local
-      // tune: it makes cached-plan partitioning respect the same AQE
-      // advisory sizing every uncached exchange already follows.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = AdtContext.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     // fixtures + JIT warmup, untimed
@@ -64,13 +41,6 @@ object Bench {
       .format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
 
-    // dev knob (driver never sets it): run only queries matching one of
-    // the comma-separated prefixes, e.g. SPARK_GRAFT_ONLY=q4,q89
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    val picked = only match {
-      case Some(ps) => SparkEntry.queries.filter(kv => ps.exists(kv._1.startsWith))
-      case None     => SparkEntry.queries
-    }
     // EVERY query runs min-of-2 by default (r18): single-shot timings on
     // this shared box have jittered ±30-60% on plain untouched queries
     // two rounds running (r17's +10.7% "regression" cost the judge a
@@ -82,8 +52,7 @@ object Bench {
     // true cold single shot).
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt)
       .getOrElse(2).max(1)
-    def repsFor(name: String): Int = reps
-    val results = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       def runOnce(): (Boolean, Double) = {
         val t0 = System.nanoTime()
         val ok =
@@ -97,18 +66,14 @@ object Bench {
         val t = (System.nanoTime() - t0) / 1e9
         // queries may cache intermediates (dedup signatures etc.); drop
         // them so per-query timings are independent and memory doesn't
-        // accumulate across the full run. clearCache misses localCheckpoint
-        // blocks (q89's lineage truncation) — sweep those explicitly, or
-        // they pile up for the rest of the JVM. The GC nudge counters the
+        // accumulate across the full run. The GC nudge counters the
         // end-of-run degradation seen in long driver sessions (late
         // alphabetical queries showed 2-20x noise two rounds running).
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(false))
+        AdtContext.sweepCaches(spark)
         System.gc()
         (ok, t)
       }
-      val timings = (1 to repsFor(name)).map(_ => runOnce())
+      val timings = (1 to reps).map(_ => runOnce())
       // a failed rep's fast abort must never win the min; only if every
       // rep failed does the failure time stand (keeps rc/total sane)
       val good = timings.filter(_._1).map(_._2)

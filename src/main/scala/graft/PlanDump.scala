@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import scala.util.control.NonFatal
 
@@ -16,15 +15,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanDump <queryName[,name2,..]> [sfDir] [outDir] [suffix]")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = AdtContext.engineConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = AdtContext.session()
     spark.sparkContext.setLogLevel("ERROR")
     val names = args(0).split(',').toSeq
     val outDir = if (args.length > 2) Some(args(2)) else None
@@ -45,7 +36,7 @@ object PlanDump {
           println(plan)
       }
       // per-query caches must not leak into the next dump
-      spark.catalog.clearCache()
+      AdtContext.sweepCaches(spark)
     }
     spark.stop()
   }

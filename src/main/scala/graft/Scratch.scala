@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -21,19 +17,7 @@ object Scratch {
       .split(',').toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = AdtContext.engineConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = AdtContext.session()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
@@ -55,10 +39,8 @@ object Scratch {
         }
       }
     })
-    // SPARK_GRAFT_SCRATCH_PLAN=1: after the LAST rep of each query,
-    // print the executed (post-AQE) plan with runtime metrics — the
-    // no-UI replacement for the SQL tab (guide §7.2).
-    val wantPlan = sys.env.get("SPARK_GRAFT_SCRATCH_PLAN").contains("1")
+    // after the LAST rep of each query, print the executed (post-AQE)
+    // plan with runtime metrics — the no-UI replacement for the SQL tab
     val lastQe = new java.util.concurrent.atomic.AtomicReference[
       org.apache.spark.sql.execution.QueryExecution]()
     spark.listenerManager.register(
@@ -70,27 +52,6 @@ object Scratch {
             qe: org.apache.spark.sql.execution.QueryExecution,
             exception: Exception): Unit = ()
       })
-    def render(p: SparkPlan, depth: Int, sb: StringBuilder): Unit = {
-      val keep = Set("numOutputRows", "time in aggregation build total",
-        "shuffle bytes written", "time to build hash map total",
-        "duration", "number of output rows", "sort time", "spill size",
-        "time in aggregation build", "shuffle write time", "records read")
-      val ms = p.metrics.toSeq.filter(kv => keep(kv._2.name.getOrElse(kv._1))
-          || kv._1 == "numOutputRows" || kv._1.contains("Time")
-          || kv._1 == "aggTime" || kv._1 == "sortTime" || kv._1 == "collectTime"
-          || kv._1 == "buildTime" || kv._1 == "shuffleWriteTime")
-        .sortBy(_._1)
-        .map { case (k, m) => s"$k=${m.value}" }.mkString(", ")
-      sb.append("  " * depth).append(p.nodeName)
-      if (ms.nonEmpty) sb.append(" [").append(ms).append("]")
-      sb.append("\n")
-      p match {
-        case a: AdaptiveSparkPlanExec => render(a.executedPlan, depth + 1, sb)
-        case s2: QueryStageExec => render(s2.plan, depth + 1, sb)
-        case r: ReusedExchangeExec => render(r.child, depth + 1, sb)
-        case _ => p.children.foreach(render(_, depth + 1, sb))
-      }
-    }
     // warmup on q1 to absorb codegen start-up
     SparkEntry.queries("q1_agg")(spark, sfDir).write
       .format("noop").mode("overwrite").save()
@@ -108,13 +69,9 @@ object Scratch {
           f"jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} " +
           f"execRun=${execMs.get / 1000.0}%.2f s " +
           f"cpu=${cpuNs.get / 1e9}%.2f s gc=${gcMs.get / 1000.0}%.2f s")
-        if (wantPlan && i == reps && lastQe.get != null) {
-          val sb = new StringBuilder
-          render(lastQe.get.executedPlan, 0, sb)
-          println(sb.result())
-        }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        if (i == reps && lastQe.get != null)
+          println(AdtContext.planWithMetrics(lastQe.get.executedPlan))
+        AdtContext.sweepCaches(spark)
       }
     }
     spark.stop()

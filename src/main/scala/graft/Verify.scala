@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,18 +13,7 @@ object Verify {
     val keep: String => Boolean =
       if (args.length == 3) (n: String) => n.startsWith(args(2))
       else (_: String) => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = AdtContext.engineConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same cached-plan AQE posture as Bench/AdtContext.build (r21) so
-      // the correctness gate exercises the exact engine conf the bench
-      // and library run with
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = AdtContext.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
@@ -36,25 +24,20 @@ object Verify {
       }
       // queries may cache intermediates; drop them between queries so the
       // full run doesn't accumulate executor storage memory.
-      spark.catalog.clearCache()
-      // storage-hygiene signal, checked BEFORE the sweep so it can fire:
-      // after clearCache released every Dataset.cache entry, the only
-      // persisted blocks a query may leave behind are its (materialized,
-      // hence isCheckpointed) localCheckpoint lineage truncations — swept
-      // below. Anything else is a cache leak that would accumulate in a
-      // long-lived session. Deliberately a WARNING, not an abort: a
-      // transient query failure can strand a half-persisted RDD, and
-      // killing the run here would zero every remaining query's
-      // correctness row (the parquet dumps + oracle_sql.json must be
-      // produced regardless). PlanAuditSpec pins the known leak class
-      // (q110 no-cache) structurally.
-      val leaked = spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed)
+      // Storage-hygiene signal: after clearCache released every
+      // Dataset.cache entry, the only persisted blocks a query may leave
+      // behind are its localCheckpoint lineage truncations. Anything else
+      // is a cache leak that would accumulate in a long-lived session.
+      // Deliberately a WARNING, not an abort: a transient query failure
+      // can strand a half-persisted RDD, and killing the run here would
+      // zero every remaining query's correctness row (the parquet dumps
+      // + oracle_sql.json must be produced regardless). PlanAuditSpec
+      // pins the known leak class (q110 no-cache) structurally.
+      val leaked = AdtContext.sweepCaches(spark)
       if (leaked.nonEmpty)
         System.err.println(
           s"[verify] WARNING: $name leaked cached RDDs past clearCache: " +
-            leaked.map(r => s"${r.id}:${r.getStorageLevel}").mkString(", "))
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+            leaked.mkString(", "))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

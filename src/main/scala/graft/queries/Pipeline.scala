@@ -102,16 +102,16 @@ object Pipeline {
         ctx AS (
           SELECT w1, CAST(count(*) AS BIGINT) AS n FROM big GROUP BY w1)"""
 
-  /** Materialize q145/q192's BM25 token stream ONCE as a cached temp
-    * view `pipe_bm25_tok` (r22 — guide §5, the q81/q135/q137 finding):
-    * the r21 REPARTITION(h)-hint reuse did NOT survive column pruning
-    * at runtime — `dl` (doc_id only) and `g` (bare count) specialize
-    * their copies of the tok subtree, so the gram explode + md5 pass
-    * executed up to 3× per query. The cache pins one execution and one
-    * h-clustered layout; callers route through
-    * [[bm25M]]. */
+  /** q145/q192's BM25 token stream `(doc_id, h)`, materialized ONCE as
+    * a cached frame: a REPARTITION(h)-hint reuse does NOT survive column
+    * pruning at runtime — `dl` (doc_id only) and `g` (bare count)
+    * specialize their copies of the tok subtree, so the gram explode +
+    * md5 pass would execute up to 3× per query. The cache pins one
+    * execution and one h-clustered layout; the caller passes the frame
+    * to [[bm25M]] and the harness's cache sweep owns the unpersist. */
   private[graft] def bm25Tok(
-      s: org.apache.spark.sql.SparkSession, d: String): Unit = {
+      s: org.apache.spark.sql.SparkSession, d: String)
+      : org.apache.spark.sql.DataFrame = {
     graft.functions.Md5Long.register(s)
     Tables.sql(s, d, """
         WITH tok0 AS (
@@ -120,7 +120,7 @@ object Pipeline {
           FROM (SELECT doc_id, split(text, ' ') AS ws FROM documents) t0
           WHERE size(ws) >= 3)
         SELECT /*+ REPARTITION(h) */ doc_id, h FROM tok0""")
-      .cache().createOrReplaceTempView("pipe_bm25_tok")
+      .cache()
   }
 
   /** q145/q192's shared BM25 match frame `m(q_id, d_id, score_ppm)` —
@@ -128,21 +128,20 @@ object Pipeline {
     * rational idf kept as a cross-multiplied integer — see q145's
     * derivation comment), corpus-derived broadcast query set.
     *
-    * r22: DataFrame ops over the cached [[bm25Tok]] view instead of the
-    * old CTE chain — a view referenced from inside a WITH never hits
-    * the CacheManager (verified this round: substitution fires for
-    * direct/subquery references, NEVER through a CTERelation), so the
-    * CTE spelling re-ran tokenize+md5 once per pruning-specialized
-    * consumer. Direct references substitute: tok executes once
-    * (cached), tf once (cached — read by the df aggregate, the query
-    * set and the match join). Same relations, same join predicates,
-    * same integer arithmetic as the oracle's CTE mirror. */
+    * DataFrame ops over the cached [[bm25Tok]] frame `tok`, not a CTE
+    * chain — a cached relation referenced from inside a WITH never hits
+    * the CacheManager (substitution fires for direct/subquery
+    * references, NEVER through a CTERelation), so a CTE spelling re-ran
+    * tokenize+md5 once per pruning-specialized consumer. Direct
+    * references substitute: tok executes once (cached), tf once
+    * (cached — read by the df aggregate, the query set and the match
+    * join). Same relations, same join predicates, same integer
+    * arithmetic as the oracle's CTE mirror. */
   private[graft] def bm25M(
-      s: org.apache.spark.sql.SparkSession, d: String)
+      s: org.apache.spark.sql.SparkSession, d: String,
+      tok: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    bm25Tok(s, d)
-    val tok = s.table("pipe_bm25_tok")
     val tf = tok.groupBy($"doc_id", $"h")
       .agg(count(lit(1)).as("tf")).cache()
     val dfT = tf.groupBy($"h").agg(count(lit(1)).as("df"))
@@ -204,17 +203,18 @@ object Pipeline {
     * rank). */
   private[graft] val CurriculumStages = 5
 
-  /** Materialize the hashed-feature token stream ONCE as a cached temp
-    * view `pipe_feat_tok` (r22 — same pruning-broken-reuse finding as
+  /** The hashed-feature token stream `(doc_id, b)`, materialized ONCE
+    * as a cached frame (the same pruning-broken-reuse finding as
     * [[bm25Tok]]: DSIR's rb/tb/g consumers specialize their copies of
     * the tok subtree, so tokenize + md5 ran up to 5× per query).
     * Reuses [[HashedFeatureCtes]]' spelling (the unused `c` CTE prunes
-    * away); callers route through [[dsirWeights]]. */
+    * away); the caller passes the frame to [[dsirWeights]]. */
   private[graft] def featureTok(
-      s: org.apache.spark.sql.SparkSession, d: String): Unit = {
+      s: org.apache.spark.sql.SparkSession, d: String)
+      : org.apache.spark.sql.DataFrame = {
     graft.functions.Md5Long.register(s)
     Tables.sql(s, d, s"WITH $HashedFeatureCtes SELECT doc_id, b FROM tok")
-      .cache().createOrReplaceTempView("pipe_feat_tok")
+      .cache()
   }
 
   /** q146's DSIR weight table `w(b, wppm, rr, tt)` — the Laplace-
@@ -222,18 +222,17 @@ object Pipeline {
     * corpus/target totals riding along for the export's Laplace floor.
     * Shared by the batch query and [[dsirWeightArray]].
     *
-    * r22: DataFrame ops over the cached [[featureTok]] view (the same
-    * CTE-blocks-cache-substitution finding as [[bm25M]]) — tokenize +
-    * md5 runs once; rr/tt fold into ONE aggregate over the cached
-    * frame (the old g CTE ran two more scalar-subquery passes).
+    * DataFrame ops over the cached [[featureTok]] frame `tok` (the
+    * same CTE-blocks-cache-substitution finding as [[bm25M]]) —
+    * tokenize + md5 runs once; rr/tt fold into ONE aggregate over the
+    * cached frame (a g CTE would run two more scalar-subquery passes).
     * tgt = count(documents) DIV 10 comes from the parquet footer —
     * identical value, no job. Same arithmetic as the oracle mirror. */
   private[graft] def dsirWeights(
-      s: org.apache.spark.sql.SparkSession, d: String)
+      s: org.apache.spark.sql.SparkSession, d: String,
+      tok: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    featureTok(s, d)
-    val tok = s.table("pipe_feat_tok")
     val tgt = Tables.rowCount(s, d, "documents") / 10
     val rb = tok.groupBy($"b").agg(count(lit(1)).as("r"))
     val tb = tok.filter($"doc_id" < tgt)
@@ -263,7 +262,7 @@ object Pipeline {
     // (rr/tt ride the weight frame), so the export costs a single
     // training-chain evaluation, not a second corpus scan for the one
     // scalar
-    val rows = dsirWeights(s, d).selectExpr("b", "wppm",
+    val rows = dsirWeights(s, d, featureTok(s, d)).selectExpr("b", "wppm",
       "1000000L * (rr + 4096) DIV (tt + 4096) AS dw").collect()
     require(rows.nonEmpty, "DSIR training produced no weight rows")
     val arr = Array.fill(4096)(rows(0).getLong(2))
@@ -1111,7 +1110,7 @@ object Pipeline {
     Q("q145_bm25_topk",
       (s, d) => {
         import s.implicits._
-        bm25M(s, d)
+        bm25M(s, d, bm25Tok(s, d))
           .withColumn("rank", row_number().over(
             Window.partitionBy($"q_id").orderBy($"score_ppm".desc, $"d_id")))
           .filter($"rank" <= 5)
@@ -1167,7 +1166,7 @@ object Pipeline {
             (sqrt(expr(s"dot_i64($a, $a)").cast("double")) *
               sqrt(expr(s"dot_i64($b, $b)").cast("double")))
         // lexical leg: shared BM25 chain, ranked per query
-        val lex = bm25M(s, d)
+        val lex = bm25M(s, d, bm25Tok(s, d))
           .withColumn("rank", row_number().over(
             Window.partitionBy($"q_id").orderBy($"score_ppm".desc, $"d_id")))
           .select($"q_id", $"d_id", $"rank")
@@ -1436,9 +1435,9 @@ object Pipeline {
     Q("q146_dsir_weights",
       (s, d) => {
         import s.implicits._
-        val w = dsirWeights(s, d).select($"b", $"wppm")
-        val c = s.table("pipe_feat_tok")
-          .groupBy($"doc_id", $"b").agg(count(lit(1)).as("c"))
+        val tok = featureTok(s, d)
+        val w = dsirWeights(s, d, tok).select($"b", $"wppm")
+        val c = tok.groupBy($"doc_id", $"b").agg(count(lit(1)).as("c"))
         c.join(broadcast(w), Seq("b"))
           .groupBy($"doc_id")
           .agg(sum($"c").as("n_feat"), sum($"c" * $"wppm").as("score_ppm"))

@@ -5,13 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (JVM-wide; forked by sbt). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = AdtContext.engineConfs(SparkSession.builder())
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = AdtContext.session(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
