@@ -126,7 +126,7 @@ object Pipeline {
   /** q145/q192's shared BM25 match frame `m(q_id, d_id, score_ppm)` —
     * hashed word-3-gram terms, exact-integer BM25 (k1=1.2, b=0.75,
     * rational idf kept as a cross-multiplied integer — see q145's
-    * derivation comment), corpus-derived broadcast query set.
+    * derivation comment), corpus-derived query set.
     *
     * DataFrame ops over the cached [[bm25Tok]] frame `tok`, not a CTE
     * chain — a cached relation referenced from inside a WITH never hits
@@ -150,10 +150,12 @@ object Pipeline {
     val g = tok.agg(count(lit(1)).as("tt")).select(lit(n).as("n"), $"tt")
     val qCut = math.max(3L, n / 1000L) // = greatest(3, count(documents) DIV 1000)
     val qt = tf.filter($"doc_id" < qCut).select($"doc_id".as("q_id"), $"h")
-    qt.join(broadcast(dfT), Seq("h"))
+    // dfT (one row per distinct term) and dl (one per document) are
+    // corpus-sized: AQE picks their joins; only the 1-row g is pinned
+    qt.join(dfT, Seq("h"))
       .join(tf.select($"doc_id".as("d_id"), $"h", $"tf"), Seq("h"))
       .filter($"d_id" =!= $"q_id")
-      .join(broadcast(dl.withColumnRenamed("doc_id", "d_id")), Seq("d_id"))
+      .join(dl.withColumnRenamed("doc_id", "d_id"), Seq("d_id"))
       .crossJoin(broadcast(g))
       .filter($"df" * 2 <= $"n")
       .groupBy($"q_id", $"d_id")

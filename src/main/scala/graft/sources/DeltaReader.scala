@@ -22,16 +22,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Serializable task payload for executor-side deletion-vector decode:
-  * one row per DV'd data file; flatMapped into (file_path, row_index)
-  * pairs ON EXECUTORS so the driver never materializes a bitmap. */
-final case class DvSpec(
-    file: String, // `_metadata.file_path`-formatted absolute path
-    storageType: String,
-    pathOrInlineDv: String,
-    offset: Int,
-    sizeInBytes: Int,
-    tableRoot: String)
+import graft.functions.DvDeleted
 
 /** Minimal Delta Lake reader — no delta-spark dependency.
   *
@@ -41,10 +32,10 @@ final case class DvSpec(
   * checkpoint; schema from the snapshot's metaData action (Delta's
   * schemaString IS Spark's StructType JSON); file list + partition values
   * from surviving `add` actions (deltatable.rs:431-489); deletion vectors
-  * become a row-index anti-filter (deltatable.rs:495-577 maps them to
-  * parquet row-group/row selections — Spark's `_metadata.row_index`
-  * expresses the same semantics declaratively and lets the vectorized
-  * reader run unchanged).
+  * become a row-index filter inside the scan (deltatable.rs:495-577 maps
+  * them to parquet row-group/row selections — [[DvDeleted]] over
+  * `_metadata.file_path`/`row_index` expresses the same semantics and
+  * lets the vectorized reader run unchanged).
   *
   * Scale notes: the JSON tail of the log is tiny by protocol design (the
   * checkpoint absorbs history), so driver-side replay of the tail is the
@@ -486,13 +477,14 @@ object DeltaReader {
     * the old per-tuple union was O(#distinct tuples)
     * (deltatable.rs:454-469 prunes inside the kernel the same way).
     *
-    * Deletion vectors: DV descriptors (a few hundred bytes per file) are
-    * parallelized to EXECUTORS, decoded there into (file, row_index)
-    * pairs, and anti-joined against the scan on the `_metadata` row
-    * address. No bitmap is ever materialized on the driver, so a 100 TB
-    * table with billions of deleted rows costs the driver only the
-    * descriptor list; the join strategy is left to Catalyst/AQE (broadcast
-    * when small, shuffle when not). */
+    * Deletion vectors: the scan is filtered by one [[DvDeleted]]
+    * predicate on the `_metadata` row address. Only the DV descriptors
+    * (a few hundred bytes per DV'd file) travel, once per stage in the
+    * task binary; each task decodes the bitmaps of the files it reads.
+    * No bitmap is decoded on the driver and no (file, row) pair is ever
+    * joined, shuffled, broadcast or collected, so a 100 TB table with
+    * billions of deleted rows costs the driver only the descriptor list
+    * and the plan no exchange. */
   def load(spark: SparkSession, tablePath: String): DataFrame =
     loadAt(spark, tablePath, Long.MaxValue)
 
@@ -659,7 +651,6 @@ object DeltaReader {
       StructField(phys(n), f.dataType, f.nullable)
     })
     val root = new File(tablePath).getAbsolutePath
-    val hasDv = snap.files.exists(_.deletionVector.nonEmpty)
 
     // Partitioned AND unpartitioned tables share the snapshot-backed
     // FileIndex scan: one scan node, static partition pruning through
@@ -675,44 +666,21 @@ object DeltaReader {
         Map.empty[String, String])(spark))
     }
 
-    val assembled =
-      if (!hasDv) base
-      else {
-        // `_metadata` row addresses are only materialized when some file
-        // actually carries a DV.
-        val df = base
-          .withColumn("__file", col("_metadata.file_path"))
-          .withColumn("__row", col("_metadata.row_index"))
-        val specs = snap.files.flatMap { a =>
-          a.deletionVector.map { dv =>
-            // the join key must match `_metadata.file_path` EXACTLY —
-            // Spark emits "file:/abs/path" with RFC-encoded specials
-            // (a partition dir like `k=A B` reads as `k=A%20B`), which
-            // File.toURI reproduces; a decoded spelling would silently
-            // skip the file's vector and resurrect its dead rows
-            // (caught by the partitioned deleteWithVectors spec).
-            val uri = new File(resolved(root, decodePath(a.path)))
-              .toURI.toString
-            DvSpec(uri, dv.storageType,
-              dv.pathOrInlineDv, dv.offset, dv.sizeInBytes, root)
-          }
-        }
-        import spark.implicits._
-        val sc = spark.sparkContext
-        val deleted = spark
-          .createDataset(sc.parallelize(specs,
-            math.max(1, math.min(specs.size, sc.defaultParallelism))))
-          .flatMap { sp =>
-            DeletionVectors
-              .deletedRows(DvDescriptor(sp.storageType, sp.pathOrInlineDv,
-                sp.offset, sp.sizeInBytes, -1L), sp.tableRoot)
-              .map(r => (sp.file, r))
-          }
-          .toDF("__file", "__row")
-        df.join(deleted, Seq("__file", "__row"), "left_anti")
-          .withColumnRenamed("__file", "__source_file")
-          .withColumnRenamed("__row", "__row_index")
-      }
+    // Deletion vectors filter the scan itself: one predicate over the
+    // `_metadata` row address, carrying only the descriptors. Its keys
+    // must match `_metadata.file_path` EXACTLY — Spark emits
+    // "file:/abs/path" with RFC-encoded specials (a partition dir like
+    // `k=A B` reads as `k=A%20B`), which File.toURI reproduces; a decoded
+    // spelling would silently skip the file's vector and resurrect its
+    // dead rows (caught by the partitioned deleteWithVectors spec).
+    val vectors = snap.files.flatMap { a =>
+      a.deletionVector.map(dv =>
+        new File(resolved(root, decodePath(a.path))).toURI.toString -> dv)
+    }.toMap
+    val live =
+      if (vectors.isEmpty) base
+      else base.filter(!DvDeleted.dvDeleted(col("_metadata.file_path"),
+        col("_metadata.row_index"), vectors, root))
 
     // `tagSourceFile` (copy-on-write / deletion-vector verbs:
     // DeltaWriter.merge/delete/update/deleteWithVectors) appends the
@@ -724,10 +692,9 @@ object DeltaReader {
       fileFields.map(f => col(scanName(f.name)).as(f.name)) ++
         snap.partitionColumns.map(n => col(phys(n)).as(n)) ++
         (if (!tagSourceFile) Nil
-         else if (hasDv) Seq(col("__source_file"), col("__row_index"))
          else Seq(col("_metadata.file_path").as("__source_file"),
            col("_metadata.row_index").as("__row_index")))
-    assembled.select(outCols: _*)
+    live.select(outCols: _*)
   }
 
   /** Delta paths are URL-encoded relative paths. */
@@ -1060,8 +1027,9 @@ object DeltaReader {
     * window reaching behind [[DeltaWriter.vacuum]]'s horizon fails at
     * scan time rather than fabricating rows, and a window whose JSON
     * commits were log-cleaned is refused up front. Driver cost: the
-    * window's action lines only; DV bitmaps decode on EXECUTORS (the
-    * same no-driver-bitmap posture as [[load]]). Scans group per
+    * window's action lines only; DV bitmaps decode in the tasks that
+    * read their files, through the same [[DvDeleted]] scan predicate as
+    * [[load]]. Scans group per
     * (version, change, partition tuple) with per-file branches only
     * where a DV row-diff is needed — metadata-sized for any sane
     * window. [[graft.operators.IncrementalAgg]] consumes this feed
@@ -1210,17 +1178,6 @@ object DeltaReader {
           case None => lit(null).cast(dt)
         })
       }
-    // DV row sets decode on executors (driver never holds a bitmap)
-    def dvRows(dv: DvDescriptor): DataFrame = {
-      import spark.implicits._
-      spark.createDataset(spark.sparkContext.parallelize(
-          Seq(DvSpec("", dv.storageType, dv.pathOrInlineDv,
-            dv.offset, dv.sizeInBytes, root)), 1))
-        .flatMap(sp => DeletionVectors.deletedRows(
-          DvDescriptor(sp.storageType, sp.pathOrInlineDv, sp.offset,
-            sp.sizeInBytes, -1L), sp.tableRoot))
-        .toDF("__row")
-    }
     val (plain, dvDiff) =
       emits.partition(e => e.mustIn.isEmpty && e.mustNotIn.isEmpty)
     val plainParts = plain.groupBy(e =>
@@ -1233,15 +1190,17 @@ object DeltaReader {
           .withColumn("_commit_version", lit(v))
       }
     val dvParts = dvDiff.toSeq.map { e =>
-      // single-file scan: the physical row index alone addresses rows
-      val base = spark.read.schema(dataSchema)
-        .parquet(resolved(root, e.file.path))
-        .withColumn("__row", col("_metadata.row_index"))
-      val inOk = e.mustIn.fold(base)(dv =>
-        base.join(dvRows(dv), Seq("__row"), "left_semi"))
-      val notOk = e.mustNotIn.fold(inOk)(dv =>
-        inOk.join(dvRows(dv), Seq("__row"), "left_anti"))
-      withPv(toLogical(notOk.drop("__row")), e.file.partitionValues)
+      // single-file scan: rows in `mustIn`'s vector and not in
+      // `mustNotIn`'s, by the same scan predicate as [[loadAt]]
+      val file = resolved(root, e.file.path)
+      val uri = new File(file).toURI.toString
+      def in(dv: DvDescriptor): Column = DvDeleted.dvDeleted(
+        col("_metadata.file_path"), col("_metadata.row_index"),
+        Map(uri -> dv), root)
+      val keep = (e.mustIn.map(in) ++ e.mustNotIn.map(dv => !in(dv)))
+        .reduce(_ && _)
+      val rows = spark.read.schema(dataSchema).parquet(file).filter(keep)
+      withPv(toLogical(rows), e.file.partitionValues)
         .withColumn("_change_type", lit(e.change))
         .withColumn("_commit_version", lit(e.version))
     }

@@ -437,9 +437,11 @@ ${meta(kF)}
   }
 
   test("large-cardinality DV decodes on executors, not the driver") {
-    // 5000 deleted rows of 8000: the deleted-rows side must come from a
-    // parallelized dataset (executor flatMap decode), never a driver-built
-    // local relation — at 100 TB the bitmap can hold billions of rows.
+    // 5000 deleted rows of 8000: the vector must reach the scan as a
+    // descriptor inside the row-index predicate, decoded by the task
+    // that reads the file — never a driver-built local relation of dead
+    // rows, nor a dataset of them to join against (at 100 TB the bitmap
+    // can hold billions of rows).
     val deleted = (1000L until 6000L)
     val dir = dvTable("big", 8000, deleted,
       DeletionVectors.serializeRoaringArrayRuns)
@@ -447,9 +449,92 @@ ${meta(kF)}
     val plan = df.queryExecution.optimizedPlan.toString
     assert(!plan.contains("LocalRelation"),
       "DV rows must not be materialized into a driver-side LocalRelation")
-    assert(plan.contains("ExternalRDD"),
-      "DV decode should enter the plan as a parallelized (executor) dataset")
+    assert(!plan.contains("ExternalRDD") && !plan.contains("Join"),
+      "DV rows must not enter the plan as a dataset joined to the scan")
+    assert(plan.contains("Filter NOT dv_deleted("),
+      "the vector should filter the scan by file and row index")
     assert(df.count() == 3000)
+  }
+
+  private val aqe =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** The executed plan's node names after a collect, AQE stages included. */
+  private def executedNodes(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    df.collect()
+    aqe.collect(df.queryExecution.executedPlan) { case n => n.nodeName }
+  }
+
+  test("partitioned DV read over URI-encoded partition dirs equals copy-on-write delete, no join") {
+    // `k=A B` is the directory Spark reports as `k=A%20B` in
+    // `_metadata.file_path`: the vectors must be keyed on that spelling
+    // or the `A B` partition's dead rows come back
+    val dir = new File(Files.createTempDirectory("graft_dvpart").toFile, "t")
+      .getAbsolutePath
+    import spark.implicits._
+    val rows = (0 until 300).map(i => (i.toLong, if (i % 2 == 0) "A B" else "plain"))
+    DeltaWriter.append(rows.toDF("v", "k").repartition(2), dir, Seq("k"))
+    val cow = copyTree(dir)
+    val dead = col("v") % 3 === 0
+    DeltaWriter.deleteWithVectors(spark, dir, dead)
+    DeltaWriter.delete(spark, cow, dead)
+    val snap = DeltaReader.snapshot(spark, dir)
+    assert(snap.files.exists(a => a.deletionVector.nonEmpty &&
+      a.partitionValues.get("k").flatten.contains("A B")))
+    assert(DeltaReader.snapshot(spark, cow).files
+      .forall(_.deletionVector.isEmpty))
+
+    val df = DeltaReader.load(spark, dir)
+    val nodes = executedNodes(df)
+    assert(!nodes.exists(n => n.contains("Join") || n.contains("Exchange")),
+      s"the vectors added a join or exchange: ${nodes.mkString(", ")}")
+    def sorted(d: org.apache.spark.sql.DataFrame) =
+      d.select("v", "k").collect().map(r => (r.getLong(0), r.getString(1)))
+        .sorted.toSeq
+    val got = sorted(df)
+    assert(got == sorted(DeltaReader.load(spark, cow)))
+    assert(got == rows.filter(_._1 % 3 != 0).sorted)
+  }
+
+  test("a DV'd file spanning several row groups and splits keeps file-global row indexes") {
+    val dir = new File(Files.createTempDirectory("graft_dvsplit").toFile, "t")
+      .getAbsolutePath
+    import spark.implicits._
+    val n = 40000
+    val data = (0 until n).map(i => (i.toLong, s"row-$i")).toDF("v", "s")
+    // small row groups: one file, many groups
+    SparkTestSession.withConfs(Seq("parquet.block.size" -> "16384")) {
+      DeltaWriter.append(data.repartition(1).sortWithinPartitions("v"), dir)
+    }
+    val files = DeltaReader.snapshot(spark, dir).files
+    assert(files.size == 1)
+    val file = new org.apache.hadoop.fs.Path(new File(dir,
+      java.net.URLDecoder.decode(files.head.path, "UTF-8")).toURI)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
+        spark.sparkContext.hadoopConfiguration))
+    val groups = try reader.getRowGroups.size finally reader.close()
+    assert(groups >= 4, s"expected several row groups, got $groups")
+
+    // dead rows in every row group, including the last ones
+    val dead = col("v") % 7 === 0 || col("v").between(n - 500, n - 1)
+    DeltaWriter.deleteWithVectors(spark, dir, dead)
+    assert(DeltaReader.snapshot(spark, dir).files.head.deletionVector.nonEmpty)
+    val want = (0 until n).map(_.toLong)
+      .filter(v => v % 7 != 0 && v < n - 500)
+    val split = math.max(4096L, files.head.size / 4)
+    SparkTestSession.withConfs(Seq(
+        "spark.sql.files.maxPartitionBytes" -> split.toString,
+        "spark.sql.files.openCostInBytes" -> "0")) {
+      val df = DeltaReader.load(spark, dir)
+      val scans = aqe.collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+      assert(scans.size == 1)
+      assert(scans.head.inputRDD.getNumPartitions >= 2,
+        "the file should be read in several splits")
+      assert(df.select("v").collect().map(_.getLong(0)).sorted.toSeq == want)
+    }
   }
 
   // ------------------------------------------------ checkpoint state cache

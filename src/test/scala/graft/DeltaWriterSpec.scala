@@ -1671,6 +1671,32 @@ class DeltaWriterSpec extends AnyFunSuite {
     assert(e.getMessage.contains("log cleanup"))
   }
 
+  test("loadChangeFeed: a grown DV emits only the newly-dead rows, a shrunk one only the newly-alive") {
+    val path = tmpTable("nation_cdf_dv_diff")
+    val nation = Tables.t(spark, d, "nation")
+      .select(col("n_nationkey"), col("n_name"))
+    DeltaWriter.append(nation.repartition(1), path) // v0: one file
+    DeltaWriter.deleteWithVectors(spark, path, col("n_nationkey") === 6) // v1
+    // v2: the same file's vector grows from {6} to {3, 6, 9}
+    DeltaWriter.deleteWithVectors(spark, path,
+      col("n_nationkey").isin(3, 9))
+    val files = DeltaReader.snapshot(spark, path).files
+    assert(files.size == 1 &&
+      files.head.deletionVector.exists(_.cardinality == 3L))
+    def events(from: Long, to: Long): Seq[(Long, String, Long)] =
+      DeltaReader.loadChangeFeed(spark, path, from, to).collect()
+        .map(r => (r.getAs[Number]("n_nationkey").longValue,
+          r.getAs[String]("_change_type"), r.getAs[Long]("_commit_version")))
+        .sorted.toSeq
+    assert(events(1L, 2L) == Seq((3L, "delete", 2L), (9L, "delete", 2L)))
+    // v3: RESTORE to v1 shrinks the vector back to {6} — both vectors
+    // are present, and only the rows in the old one and not the new
+    // one come back
+    DeltaWriter.restore(spark, path, 1L)
+    assert(events(2L, 3L) == Seq((3L, "insert", 3L), (9L, "insert", 3L)))
+    assert(DeltaReader.load(spark, path).count() == nation.count() - 1)
+  }
+
   test("version-0 commit carries protocol + metaData the reader honors") {
     val path = tmpTable("nation_proto")
     val nation = Tables.t(spark, d, "nation")
