@@ -123,13 +123,13 @@ final class AdtContext(val spark: SparkSession) {
       val (createdMs, modifiedMs) =
         if (hist.nonEmpty) (hist.minBy(_._1)._2, hist.maxBy(_._1)._2)
         else {
-          val cps = Option(new java.io.File(t.location, "_delta_log")
-              .listFiles()).getOrElse(Array.empty[java.io.File])
-            .filter(_.getName.contains(".checkpoint."))
-          require(cps.nonEmpty,
+          val logDir = new java.io.File(t.location, "_delta_log")
+          val log = graft.sources.DeltaActions.listLog(logDir)
+          val cp = log.newestCheckpoint().getOrElse(throw new IllegalArgumentException(
             s"${t.location} has neither JSON commits nor a checkpoint — " +
-              "not a replayable delta log")
-          val m = cps.map(_.lastModified()).max
+              "not a replayable delta log"))
+          val m = log.checkpoints(cp)
+            .map(n => new java.io.File(logDir, n).lastModified()).max
           (m, m)
         }
       import spark.implicits._

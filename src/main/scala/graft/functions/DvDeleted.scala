@@ -7,7 +7,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.DeletionVectors
-import graft.sources.DeltaReader.DvDescriptor
+import graft.sources.DeltaActions.DvDescriptor
 
 /** Native Catalyst predicate: is row `rowIndex` of data file `filePath`
   * marked deleted by that file's Delta deletion vector?

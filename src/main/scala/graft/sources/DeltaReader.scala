@@ -3,17 +3,14 @@ package graft.sources
 import java.io.File
 import java.lang.ref.SoftReference
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.BasicFileAttributes
 import java.util.concurrent.TimeUnit
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate => CatalystPredicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -23,17 +20,26 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.DvDeleted
+import graft.sources.DeltaActions.{Action, AddCDCFile, AddFile, CommitInfo, DvDescriptor, Protocol, RemoveFile, Sidecar, Txn, isLayoutOnly}
 
 /** Minimal Delta Lake reader — no delta-spark dependency.
   *
   * Re-derives the behavior of the reference's kernel-based provider
   * (/root/reference/crates/providers/src/deltatable.rs:85-384): snapshot =
-  * log replay of the `_delta_log` JSON commits on top of the latest parquet
-  * checkpoint; schema from the snapshot's metaData action (Delta's
-  * schemaString IS Spark's StructType JSON); file list + partition values
-  * from surviving `add` actions (deltatable.rs:431-489); deletion vectors
-  * become a row-index filter inside the scan (deltatable.rs:495-577 maps
-  * them to parquet row-group/row selections — [[DvDeleted]] over
+  * log replay of the `_delta_log` JSON commits on top of the latest
+  * checkpoint, over the typed actions of [[DeltaActions]] (the one module
+  * that parses the log). Live files are keyed on (path, deletion-vector
+  * unique id), as the protocol keys them, and within one commit removes
+  * apply before adds whatever the line order. A remove that names no
+  * vector and matches no vector-less entry retires the path's vectored
+  * one — the shape of logs this engine wrote before removes carried the
+  * retired add's vector. The snapshot carries the
+  * typed protocol, metaData and txn ledger it replayed; schema comes from
+  * the metaData (Delta's schemaString IS Spark's StructType JSON); file
+  * list + partition values from surviving `add` actions
+  * (deltatable.rs:431-489); deletion vectors become a row-index filter
+  * inside the scan (deltatable.rs:495-577 maps them to parquet
+  * row-group/row selections — [[DvDeleted]] over
   * `_metadata.file_path`/`row_index` expresses the same semantics and
   * lets the vectorized reader run unchanged).
   *
@@ -52,15 +58,14 @@ import graft.functions.DvDeleted
   */
 object DeltaReader {
 
-  private val mapper = new ObjectMapper()
-
   // ------------------------------------------------------ checkpoint cache
 
-  /** A checkpoint's replayed state: its protocol and metaData actions in
-    * file order, and the adds `admitted` under the replay's prune map in
-    * replay order (V2 sidecar adds included). */
-  private final case class CheckpointState(protocols: Seq[JsonNode],
-      metaData: Seq[JsonNode], adds: Vector[AddFile])
+  /** A checkpoint's decoded state: its protocol, metaData and txn
+    * actions, and the adds `admitted` under the decode's prune map (V2
+    * sidecar adds included). */
+  private final case class CheckpointState(protocol: Option[Protocol],
+      metadata: Option[DeltaActions.Metadata], txns: Seq[Txn],
+      adds: Vector[AddFile])
 
   /** A checkpoint file's identity short of its bytes: absolute path,
     * length, nanosecond mtime and the filesystem's file key (device +
@@ -81,7 +86,7 @@ object DeltaReader {
   private val MaxCachedCheckpoints = 8
 
   /** Decoded checkpoint states, keyed by the identity of every file of
-    * the checkpoint plus the replay's prune map (the admitted adds depend
+    * the checkpoint plus the decode's prune map (the admitted adds depend
     * on it). V2 sidecars need no identity of their own: the top file
     * names them. An access-ordered LRU of at most [[MaxCachedCheckpoints]]
     * entries whose values are soft references, so a 10⁶-add state is
@@ -96,64 +101,161 @@ object DeltaReader {
         size() > MaxCachedCheckpoints
     }
 
-  private def cachedCheckpoint(key: CheckpointKey): Option[CheckpointState] =
-    checkpointCache.synchronized {
+  private def checkpointState(spark: SparkSession, logDir: File,
+      names: Seq[String], prune: Map[String, Set[String]]): CheckpointState = {
+    val key = (names.map(n => fileIdentity(new File(logDir, n))), prune)
+    val hit = checkpointCache.synchronized {
       Option(checkpointCache.get(key)).flatMap { ref =>
         val state = Option(ref.get())
         if (state.isEmpty) checkpointCache.remove(key)
         state
       }
     }
+    hit.getOrElse {
+      val state = decodeCheckpoint(spark, logDir, names, prune)
+      checkpointCache.synchronized {
+        checkpointCache.put(key, new SoftReference(state))
+      }
+      state
+    }
+  }
 
-  final case class AddFile(
-      path: String,
-      size: Long, // from the add action — file sizes without filesystem stats
-      partitionValues: Map[String, Option[String]],
-      deletionVector: Option[DvDescriptor],
-      /** per-file statistics JSON (`numRecords`/`minValues`/`maxValues`/
-        * `nullCount`) as written by the committing engine; powers
-        * file-level data skipping in [[DeltaSnapshotFileIndex]]. */
-      stats: Option[String] = None,
-      /** the add action's `tags` map (spec-optional file annotations —
-        * e.g. `optimized=zorder`, which [[DeltaWriter]]'s incremental
-        * z-order uses to recognize its own outputs). */
-      tags: Map[String, String] = Map.empty)
+  /** The checkpoint miss path: read checkpoint `names` through Spark.
+    * Every action is collected as one compact `to_json` string per row
+    * and decoded by [[DeltaActions.parse]] (the nested partitionValues /
+    * configuration shapes vary by writer — map vs inferred struct — and
+    * the JSON form erases the difference).
+    *
+    * Both checkpoint layouts load as a DataFrame and share the decode —
+    * which forces the protocol → metaData → adds ordering regardless of
+    * row order inside the file (the spec does not order checkpoint
+    * actions; metaData must be known before adds are admitted, because
+    * the prune keys map through its physical names), and keeps inline
+    * adds flowing through the executor-side prune scan even for a
+    * JSON-layout V2 checkpoint with 10⁶ inline actions. mergeSchema
+    * (parquet): multi-part checkpoint parts may carry disjoint action
+    * columns; without the union schema Spark infers from ONE part's
+    * footer and the other action columns silently vanish. */
+  private def decodeCheckpoint(spark: SparkSession, logDir: File,
+      names: Seq[String], prune: Map[String, Set[String]]): CheckpointState = {
+    val cp = {
+      val paths = names.map(n => new File(logDir, n).getAbsolutePath)
+      if (names.forall(_.endsWith(".json"))) spark.read.json(paths: _*)
+      else spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
+    // protocol, metaData, txn and V2 sidecar pointers are metadata-sized:
+    // ONE collect fetches all of them
+    val small = {
+      val cols = Seq("protocol", "metaData", "txn", "sidecar")
+        .filter(cp.columns.contains)
+      if (cols.isEmpty) Nil
+      else cp.where(cols.map(c => col(c).isNotNull).reduce(_ || _))
+        .select(cols.map(c => to_json(struct(col(c)))): _*).collect()
+        .toSeq.flatMap(r => cols.indices.filterNot(r.isNullAt)
+          .flatMap(i => DeltaActions.parse(r.getString(i))))
+    }
+    val metadata = small.collect { case m: DeltaActions.Metadata => m }.lastOption
+    val physNames = metadata.fold(Map.empty[String, String])(_.physicalNames)
+    val adds = Vector.newBuilder[AddFile]
+    // Checkpoint-side pruning (the past-10⁶-files path): the prune
+    // predicate runs inside the parquet scan, so only surviving adds are
+    // ever serialized to the driver. The DF filter keeps a SUPERSET of
+    // `admitted`'s keep-set — an add whose partitionValues lack the prune
+    // key (or carry null) passes through, exactly like the JSON-tail
+    // path — and `admitted` re-applies the precise predicate on parse.
+    // Writers store partitionValues as a map<string,string> (spec) or an
+    // inferred struct — both shapes filter; anything else keeps all.
+    def replayAdds(src: DataFrame): Unit =
+      if (src.columns.contains("add")) {
+        val pruned = prune.foldLeft(src.where(col("add").isNotNull)) {
+          case (df, (c, vs)) =>
+            val key = physNames.getOrElse(c, c)
+            val access = df.schema("add").dataType match {
+              case s: StructType => s.find(_.name == "partitionValues")
+                .map(_.dataType).flatMap {
+                  case _: MapType =>
+                    Some(element_at(col("add.partitionValues"), lit(key)))
+                  case pv: StructType if pv.fieldNames.contains(key) =>
+                    Some(col(s"add.partitionValues.`$key`").cast("string"))
+                  case _ => None
+                }
+              case _ => None
+            }
+            access.map(a => df.where(a.isNull || a.isin(vs.toSeq: _*)))
+              .getOrElse(df)
+        }
+        pruned.select(to_json(struct(col("add")))).collect().foreach { r =>
+          DeltaActions.parse(r.getString(0)).foreach {
+            case a: AddFile if admitted(prune, physNames, a) => adds += a
+            case _ =>
+          }
+        }
+      }
+    replayAdds(cp)
+    // V2 checkpoint sidecars: the checkpoint's `sidecar` actions name
+    // parquet files under `_delta_log/_sidecars/` holding the file
+    // actions (sidecar `remove`s are expired-tombstone bookkeeping,
+    // ignored like classic checkpoint removes). All sidecar files are
+    // read in ONE multi-file scan, so the add replay (and its
+    // executor-side pruning) parallelizes across them.
+    val sidecars = small.collect { case s: Sidecar =>
+      if (s.path.startsWith("/") || s.path.contains("://")) s.path
+      else new File(new File(logDir, "_sidecars"), s.path).getAbsolutePath
+    }
+    if (sidecars.nonEmpty)
+      replayAdds(spark.read.option("mergeSchema", "true").parquet(sidecars: _*))
+    CheckpointState(small.collect { case p: Protocol => p }.lastOption,
+      metadata, small.collect { case t: Txn => t }, adds.result())
+  }
 
-  final case class DvDescriptor(
-      storageType: String, // "i" inline | "p" absolute path | "u" relative
-      pathOrInlineDv: String,
-      offset: Int,
-      sizeInBytes: Int,
-      cardinality: Long)
+  /** Prune admission shared by the checkpoint decode and the JSON-tail
+    * replay — the two MUST agree: column absent → keep (conservative);
+    * null value → drop; otherwise membership test. Keys map through the
+    * physical names because partitionValues carry them under column
+    * mapping. */
+  private def admitted(prune: Map[String, Set[String]],
+      physNames: Map[String, String], a: AddFile): Boolean =
+    prune.forall { case (c, vs) =>
+      a.partitionValues.get(physNames.getOrElse(c, c))
+        .forall(_.exists(vs.contains))
+    }
 
+  /** A replayed table version: the typed protocol (spec defaults 1/2
+    * when the log carries none) and metaData, the live files, and the
+    * txn ledger entries the replay applied (newest per appId). */
   final case class Snapshot(
-      schema: StructType, // logical names (what queries see)
-      partitionColumns: Seq[String], // logical names
+      protocol: Protocol,
+      metadata: DeltaActions.Metadata,
       files: Seq[AddFile],
       version: Long,
-      /** logical → physical column name, non-empty only under column
-        * mapping (parquet files + partition value keys use the physical
-        * names). */
-      physicalNames: Map[String, String] = Map.empty,
-      /** logical → parquet field id, non-empty only under
-        * `delta.columnMapping.mode = id` (the scan matches parquet
-        * columns by field id, not name). */
-      fieldIds: Map[String, Long] = Map.empty,
-      /** the metaData action's `configuration` map (table properties —
-        * column-mapping mode, `delta.constraints.*` CHECK constraints,
-        * …) as of this snapshot. */
-      configuration: Map[String, String] = Map.empty,
-      /** the last protocol action's version floors (spec defaults 1/2
-        * when the log carries no protocol line) — DESCRIBE DETAIL's
-        * protocol columns. */
-      minReaderVersion: Int = 1,
-      minWriterVersion: Int = 2)
+      txns: Map[String, Txn] = Map.empty) {
+    def schema: StructType = metadata.schema // logical names
+    def partitionColumns: Seq[String] = metadata.partitionColumns
+    /** logical → physical column name, non-empty only under column
+      * mapping (parquet files + partition value keys use the physical
+      * names). */
+    def physicalNames: Map[String, String] = metadata.physicalNames
+    /** logical → parquet field id, non-empty only under
+      * `delta.columnMapping.mode = id`. */
+    def fieldIds: Map[String, Long] = metadata.fieldIds
+    /** table properties — column-mapping mode, `delta.constraints.*`
+      * CHECK constraints, … */
+    def configuration: Map[String, String] = metadata.configuration
+    def minReaderVersion: Int = protocol.minReaderVersion
+    def minWriterVersion: Int = protocol.minWriterVersion
+  }
 
   // ---------------------------------------------------------------- replay
 
   /** Replay the delta log into the latest snapshot. */
   def snapshot(spark: SparkSession, tablePath: String): Snapshot =
     snapshotAt(spark, tablePath, Long.MaxValue)
+
+  /** Reader features this replay implements. v2Checkpoint: UUID-named
+    * checkpoints are listed by [[DeltaActions.listLog]] and their
+    * sidecar file actions replayed. */
+  private val SupportedReaderFeatures =
+    Set("deletionVectors", "columnMapping", "timestampNtz", "v2Checkpoint")
 
   /** Replay up to and including `maxVersion` (time travel; the reference
     * always reads latest — kernel snapshots support the same bound).
@@ -171,296 +273,129 @@ object DeltaReader {
       prune: Map[String, Set[String]] = Map.empty): Snapshot = {
     val logDir = new File(tablePath, "_delta_log")
     require(logDir.isDirectory, s"not a delta table (no _delta_log): $tablePath")
-
-    val entries = logDir.listFiles().toSeq.map(_.getName)
-    val jsonVersions = entries
-      .collect { case n if n.matches("\\d{20}\\.json") => n.take(20).toLong }
-      .sorted
-    val checkpoints: Map[Long, Seq[String]] = checkpointsOf(entries)
-    val checkpointVersions = checkpoints.keys.toSeq.sorted
-
-    val usableJson = jsonVersions.filter(_ <= maxVersion)
+    val log = DeltaActions.listLog(logDir)
+    val usableJson = log.commits.filter(_ <= maxVersion)
+    val cpVersion = log.newestCheckpoint(maxVersion)
     require(maxVersion == Long.MaxValue || usableJson.nonEmpty ||
-      checkpointVersions.exists(_ <= maxVersion),
+      cpVersion.nonEmpty,
       s"no log entries at or before version $maxVersion at $tablePath — " +
-        s"the earliest replayable version is ${(jsonVersions ++
-          checkpointVersions).minOption.getOrElse(0L)}; history below it " +
+        s"the earliest replayable version is ${(log.commits ++
+          log.checkpoints.keys).minOption.getOrElse(0L)}; history below it " +
         "was removed by log-retention cleanup (DeltaWriter.cleanupLogs / " +
         "delta.logRetentionDuration) or never existed")
-    val cpVersion = checkpointVersions.filter(_ <= maxVersion).lastOption
-    val live = mutable.LinkedHashMap[String, AddFile]()
-    var schema: Option[StructType] = None
-    var partCols: Seq[String] = Seq.empty
-    var physNames: Map[String, String] = Map.empty
-    var fldIds: Map[String, Long] = Map.empty
-    var config: Map[String, String] = Map.empty
+    val live = mutable.LinkedHashMap[(String, Option[String]), AddFile]()
+    // path → key of its live entry that carries a vector. Logs this
+    // engine wrote before removes carried the retired add's vector
+    // retire a DV'd file by path alone; such a remove — which a
+    // spec-conforming log never holds, as no vector-less entry of the
+    // path is live — retires the vectored entry
+    val vectored = mutable.HashMap[String, (String, Option[String])]()
+    def put(a: AddFile): Unit = {
+      live(a.key) = a
+      if (a.deletionVector.nonEmpty) vectored(a.path) = a.key
+    }
+    def retire(r: RemoveFile): Unit =
+      if (live.remove(r.key).isEmpty && r.deletionVector.isEmpty)
+        vectored.remove(r.path).foreach(live.remove)
+    val txns = mutable.LinkedHashMap[String, Txn]()
+    var protocol: Option[Protocol] = None
+    var metadata: Option[DeltaActions.Metadata] = None
 
     // Protocol gate (the delta spec's reader contract): a table whose
     // protocol demands a reader version or reader FEATURE this replay
     // does not implement must be REJECTED, not silently misread.
-    // v2Checkpoint is SUPPORTED (r14): UUID-named checkpoints are
-    // discovered above and their sidecar file actions replayed below —
-    // the feature whose omission previously forced a clean reject.
-    val SupportedReaderFeatures =
-      Set("deletionVectors", "columnMapping", "timestampNtz", "v2Checkpoint")
-    var protocolSeen = false
-    var minReaderSeen = 1
-    var minWriterSeen = 2
-    def applyProtocol(node: JsonNode): Unit = {
-      protocolSeen = true
-      val minReader =
-        Option(node.get("minReaderVersion")).map(_.asInt()).getOrElse(1)
-      minReaderSeen = minReader
-      minWriterSeen =
-        Option(node.get("minWriterVersion")).map(_.asInt()).getOrElse(2)
-      require(minReader <= 3,
-        s"delta minReaderVersion $minReader is not supported by this reader")
-      val feats = Option(node.get("readerFeatures")).toSeq
-        .flatMap(_.elements().asScala).map(_.asText()).toSet
-      val unsupported = feats -- SupportedReaderFeatures
+    def applyProtocol(p: Protocol): Unit = {
+      require(p.minReaderVersion <= 3,
+        s"delta minReaderVersion ${p.minReaderVersion} is not supported by this reader")
+      val unsupported = p.readerFeatures.getOrElse(Nil).toSet -- SupportedReaderFeatures
       require(unsupported.isEmpty,
         "delta reader features not supported by this reader: " +
           unsupported.toSeq.sorted.mkString(", "))
+      protocol = Some(p)
     }
-
-    def applyMeta(node: JsonNode): Unit = {
-      val mode = Option(node.get("configuration"))
-        .flatMap(c => Option(c.get("delta.columnMapping.mode")))
-        .map(_.asText()).getOrElse("none")
-      // `name` mapping: the parquet files (and partitionValues keys)
-      // carry the stable physical names from each field's metadata.
-      // `id` mapping: the scan must match parquet columns by FIELD ID —
-      // expressed through Spark's native parquet field-id resolution.
+    // `name` mapping: the parquet files (and partitionValues keys) carry
+    // the stable physical names from each field's metadata. `id`
+    // mapping: the scan matches parquet columns by FIELD ID — Spark's
+    // native parquet field-id resolution.
+    def applyMeta(m: DeltaActions.Metadata): Unit = {
+      val mode = m.columnMappingMode
       require(mode == "none" || mode == "name" || mode == "id",
         s"column mapping mode '$mode' is not supported by this reader")
-      val st = DataType.fromJson(node.get("schemaString").asText())
-        .asInstanceOf[StructType]
-      schema = Some(st)
-      physNames =
-        if (mode == "none") Map.empty
-        else st.fields.map { f =>
-          f.name -> (
-            if (f.metadata.contains("delta.columnMapping.physicalName"))
-              f.metadata.getString("delta.columnMapping.physicalName")
-            else f.name)
-        }.toMap
-      fldIds =
-        if (mode != "id") Map.empty
-        else st.fields.collect {
-          case f if f.metadata.contains("delta.columnMapping.id") =>
-            f.name -> f.metadata.getLong("delta.columnMapping.id")
-        }.toMap
-      partCols = Option(node.get("partitionColumns")).toSeq
-        .flatMap(_.elements().asScala).map(_.asText())
-      config = Option(node.get("configuration")).map { c =>
-        c.properties().asScala
-          .map(e => e.getKey -> e.getValue.asText()).toMap
-      }.getOrElse(Map.empty)
+      m.schema // decode now: a malformed schemaString fails the replay
+      metadata = Some(m)
     }
+    def physNames = metadata.fold(Map.empty[String, String])(_.physicalNames)
 
-    def parseDv(node: JsonNode): Option[DvDescriptor] =
-      Option(node.get("deletionVector")).map { dv =>
-        DvDescriptor(
-          dv.get("storageType").asText(),
-          dv.get("pathOrInlineDv").asText(),
-          Option(dv.get("offset")).map(_.asInt()).getOrElse(0),
-          dv.get("sizeInBytes").asInt(),
-          dv.get("cardinality").asLong())
-      }
-
-    // prune admission shared by the checkpoint-DataFrame filter and the
-    // JSON-tail parse — the two MUST agree: column absent → keep
-    // (conservative); null value → drop; otherwise membership test.
-    // Keys map through physNames because partitionValues carry physical
-    // names under column mapping (metaData always precedes adds in a
-    // spec-conforming log, so physNames is populated by add time).
-    def admitted(pv: Map[String, Option[String]]): Boolean =
-      prune.forall { case (c, vs) =>
-        pv.get(physNames.getOrElse(c, c)).forall(_.exists(vs.contains))
-      }
-
-    def applyAdd(node: JsonNode): Unit = {
-      val path = node.get("path").asText()
-      val pv = Option(node.get("partitionValues")).map { m =>
-        m.properties().asScala.map { e =>
-          e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText()))
-        }.toMap
-      }.getOrElse(Map.empty[String, Option[String]])
-      if (admitted(pv)) {
-        val size = Option(node.get("size")).map(_.asLong()).getOrElse(0L)
-        // `stats` is a JSON-encoded STRING inside the add action
-        val stats = Option(node.get("stats")).filterNot(_.isNull)
-          .map(_.asText()).filter(_.nonEmpty)
-        val tags = Option(node.get("tags")).filterNot(_.isNull).map { t =>
-          t.properties().asScala
-            .filterNot(_.getValue.isNull)
-            .map(e => e.getKey -> e.getValue.asText()).toMap
-        }.getOrElse(Map.empty[String, String])
-        live(path) = AddFile(path, size, pv, parseDv(node), stats, tags)
-      } else live.remove(path) // newest action wins even when pruned out
-    }
-
-    /** The checkpoint miss path: read checkpoint `names` through Spark,
-      * applying every action to the replay state; returns the protocol
-      * and metaData actions it applied. Typed Row collection: project
-      * just the action struct and JSON-encode it executor-side with
-      * to_json (the nested partitionValues / configuration shapes vary
-      * by writer — map vs inferred struct — so the polymorphic decode
-      * goes through one compact JSON string per action instead of a
-      * whole-row toJSON round-trip). */
-    def decodeCheckpoint(names: Seq[String]): (Seq[JsonNode], Seq[JsonNode]) = {
-      // checkpoint-side add replay, shared by the checkpoint file itself
-      // and any V2 sidecar files. Checkpoint-side pruning (the
-      // past-10⁶-files path): the prune predicate runs inside the
-      // parquet scan, so only surviving adds are ever serialized to the
-      // driver. The DF filter keeps a SUPERSET of `admitted`'s keep-set
-      // — an add whose partitionValues lack the prune key (or carry
-      // null) passes through, exactly like the JSON-tail path — and
-      // `admitted` re-applies the precise predicate when each surviving
-      // add is parsed, so over-keeping here costs driver memory only,
-      // never correctness. Writers store partitionValues as a
-      // map<string,string> (spec) or an inferred struct — both shapes
-      // filter; anything else falls back to keep-all.
-      def replayAdds(src: DataFrame): Unit =
-        if (src.columns.contains("add")) {
-          val adds = src.where(col("add").isNotNull)
-          val pruned = prune.foldLeft(adds) { case (df, (c, vs)) =>
-            val key = physNames.getOrElse(c, c)
-            val access = df.schema("add").dataType match {
-              case s: StructType => s.find(_.name == "partitionValues")
-                .map(_.dataType).flatMap {
-                  case _: MapType =>
-                    Some(element_at(col("add.partitionValues"), lit(key)))
-                  case pv: StructType if pv.fieldNames.contains(key) =>
-                    Some(col(s"add.partitionValues.`$key`").cast("string"))
-                  case _ => None
-                }
-              case _ => None
-            }
-            access.map(a => df.where(a.isNull || a.isin(vs.toSeq: _*)))
-              .getOrElse(df)
-          }
-          pruned.select(to_json(col("add")))
-            .collect().foreach { r =>
-              applyAdd(mapper.readTree(r.getString(0)))
-            }
-        }
-
-      val cpPaths = names.map(n => new File(logDir, n).getAbsolutePath)
-      // Both checkpoint layouts load as a DataFrame and share ALL the
-      // replay logic below — which forces the protocol → metaData →
-      // adds ordering regardless of row/line order inside the file
-      // (the delta spec does not order checkpoint actions; metaData
-      // must be applied before adds so `admitted` sees physNames), and
-      // keeps inline adds flowing through the executor-side prune scan
-      // even for a JSON-layout V2 checkpoint with 10⁶ inline actions.
-      // mergeSchema (parquet): multi-part checkpoint parts may carry
-      // disjoint action columns (one part all adds, another the
-      // metaData); without the union schema, Spark infers from ONE
-      // part's footer and the other action columns silently vanish
-      // from the replay.
-      val cp =
-        if (names.forall(_.endsWith(".json"))) spark.read.json(cpPaths: _*)
-        else spark.read.option("mergeSchema", "true").parquet(cpPaths: _*)
-      // protocol, metaData and V2 sidecar pointers are metadata-sized:
-      // ONE collect fetches all three (to_json of an absent action is
-      // null). Protocol and metaData are applied before any add is
-      // admitted, because the prune filter's physNames come from
-      // metaData.
-      val actionCols =
-        Seq("protocol", "metaData", "sidecar").filter(cp.columns.contains)
-      val actions =
-        if (actionCols.isEmpty) Array.empty[Row]
-        else cp.where(actionCols.map(c => col(c).isNotNull).reduce(_ || _))
-          .select(actionCols.map(c => to_json(col(c))): _*).collect()
-      def decoded(c: String): Seq[JsonNode] = {
-        val i = actionCols.indexOf(c)
-        if (i < 0) Nil
-        else actions.toSeq.collect {
-          case r if !r.isNullAt(i) => mapper.readTree(r.getString(i))
-        }
-      }
-      val protocols = decoded("protocol")
-      val metaData = decoded("metaData")
-      protocols.foreach(applyProtocol)
-      metaData.foreach(applyMeta)
-      replayAdds(cp)
-      val sidecarNames = decoded("sidecar").map(_.get("path").asText())
-      // V2 checkpoint sidecars: the checkpoint's `sidecar` actions name
-      // parquet files under `_delta_log/_sidecars/` holding the file
-      // actions (the spec allows inline OR sidecar storage — both are
-      // replayed; sidecar `remove`s are expired-tombstone bookkeeping,
-      // ignored exactly like classic checkpoint removes). The sidecar
-      // name list is metadata-sized on the driver; all sidecar files
-      // are read in ONE multi-file parquet scan so the add replay (and
-      // its executor-side pruning) parallelizes across them, the same
-      // economics as the multi-part path.
-      if (sidecarNames.nonEmpty) {
-        val sidecarPaths = sidecarNames.map { p =>
-          if (p.startsWith("/") || p.contains("://")) p
-          else new File(new File(logDir, "_sidecars"), p).getAbsolutePath
-        }
-        replayAdds(spark.read.option("mergeSchema", "true")
-          .parquet(sidecarPaths: _*))
-      }
-      (protocols, metaData)
-    }
-
-    // 1. checkpoint state (parquet with add/remove/metaData columns),
-    // decoded once per checkpoint file identity and prune map (see
-    // [[checkpointCache]]). A hit re-applies the cached protocol — the
-    // reader-feature gate runs again — and metaData, then restores the
-    // admitted adds in their replay order; only a miss reads through
-    // Spark.
+    // 1. checkpoint state, decoded once per checkpoint file identity and
+    // prune map (see [[checkpointCache]]); the reader-feature gate runs
+    // on every replay, cached or not
     cpVersion.foreach { v =>
-      val names = checkpoints(v)
-      val key = (names.map(n => fileIdentity(new File(logDir, n))), prune)
-      cachedCheckpoint(key) match {
-        case Some(cached) =>
-          cached.protocols.foreach(applyProtocol)
-          cached.metaData.foreach(applyMeta)
-          cached.adds.foreach(a => live(a.path) = a)
-        case None =>
-          val (protocols, metaData) = decodeCheckpoint(names)
-          checkpointCache.synchronized {
-            checkpointCache.put(key, new SoftReference(
-              CheckpointState(protocols, metaData, live.values.toVector)))
-          }
-      }
+      val cp = checkpointState(spark, logDir, log.checkpoints(v), prune)
+      cp.protocol.foreach(applyProtocol)
+      cp.metadata.foreach(applyMeta)
+      cp.txns.foreach(t => txns(t.appId) = t)
+      cp.adds.foreach(put)
     }
 
-    // 2. JSON commits after the checkpoint, in version order
-    val tail = usableJson.filter(v => cpVersion.forall(_ < v))
-    tail.foreach { v =>
-      val f = new File(logDir, f"$v%020d.json")
-      Files.readAllLines(f.toPath, StandardCharsets.UTF_8).asScala
-        .filter(_.nonEmpty).foreach { line =>
-          val node = mapper.readTree(line)
-          if (node.has("protocol")) applyProtocol(node.get("protocol"))
-          if (node.has("metaData")) applyMeta(node.get("metaData"))
-          if (node.has("add")) applyAdd(node.get("add"))
-          if (node.has("remove")) live.remove(node.get("remove").get("path").asText())
-        }
+    // 2. JSON commits after the checkpoint, in version order. Within a
+    // commit: protocol and metaData first (admission maps prune keys
+    // through the new physical names), then removes, then adds — the
+    // commit's net effect does not depend on its line order
+    usableJson.filter(v => cpVersion.forall(_ < v)).foreach { v =>
+      val actions = DeltaActions.readCommit(logDir, v)
+      actions.foreach {
+        case p: Protocol => applyProtocol(p)
+        case m: DeltaActions.Metadata => applyMeta(m)
+        case t: Txn => txns(t.appId) = t
+        case _ =>
+      }
+      actions.foreach { case r: RemoveFile => retire(r); case _ => }
+      actions.foreach {
+        case a: AddFile =>
+          if (admitted(prune, physNames, a)) put(a)
+          else live.remove(a.key) // newest action wins even when pruned out
+        case _ =>
+      }
     }
 
     // a spec-conforming checkpoint always restates the protocol; a replay
     // that used a checkpoint but saw none anywhere ran UNGATED — surface
     // it rather than silently trusting a contra-spec log
-    if (cpVersion.isDefined && !protocolSeen)
+    if (cpVersion.isDefined && protocol.isEmpty)
       System.err.println(
         s"[delta] WARNING: no protocol action across checkpoint + JSON " +
           s"tail of $tablePath — reader-feature gate could not run")
 
-    val finalSchema = schema.getOrElse(
-      throw new IllegalStateException(s"no metaData action in log: $tablePath"))
     // version: newest JSON commit, or the checkpoint's own version when
     // log cleanup removed every JSON commit it covers (reporting 0
     // there would make version-keyed consumers — CDC windows, the
     // incremental-maintenance no-op return — silently restart)
-    Snapshot(finalSchema, partCols,
+    Snapshot(protocol.getOrElse(Protocol()),
+      metadata.getOrElse(throw new IllegalStateException(
+        s"no metaData action in log: $tablePath")),
       live.values.toSeq,
-      (cpVersion.toSeq ++ usableJson).maxOption.getOrElse(0L), physNames,
-      fldIds, config, minReaderSeen, minWriterSeen)
+      (cpVersion.toSeq ++ usableJson).maxOption.getOrElse(0L),
+      txns.toMap)
+  }
+
+  /** The exactly-once producer ledger: appId → its newest `txn` action
+    * (with `lastUpdated`, which checkpoint retention reads). Durable
+    * across log cleanup: every retained JSON commit plus the newest
+    * complete checkpoint, which carries the ledger forward. Empty for a
+    * table that does not exist yet. */
+  def txns(spark: SparkSession, tablePath: String): Map[String, Txn] = {
+    val logDir = new File(tablePath, "_delta_log")
+    val log = DeltaActions.listLog(logDir)
+    if (log.isEmpty) Map.empty
+    else {
+      val cp = log.newestCheckpoint()
+      // commits at or below the checkpoint: older than what it carries,
+      // except for entries its retention already expired
+      val covered = log.commits.filter(v => cp.exists(v <= _))
+        .flatMap(DeltaActions.readCommit(logDir, _))
+        .collect { case t: Txn => t.appId -> t }
+      covered.toMap ++ snapshot(spark, tablePath).txns
+    }
   }
 
   // ------------------------------------------------------------- dataframe
@@ -561,44 +496,27 @@ object DeltaReader {
       : Seq[(Long, Long, String, Long, Long, Option[Long])] = {
     val logDir = new File(tablePath, "_delta_log")
     require(logDir.isDirectory, s"not a delta table (no _delta_log): $tablePath")
-    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
-    val raw = Option(logDir.listFiles()).getOrElse(Array.empty[File])
-      .filter(_.getName.matches("\\d{20}\\.json"))
-      .map { f =>
-        val v = f.getName.take(20).toLong
-        var ci: Option[(Option[Long], String)] = None
+    val raw = DeltaActions.listLog(logDir).commits.map { v =>
+      DeltaActions.commitActions(logDir, v) { actions =>
+        var ci: Option[CommitInfo] = None
         var adds = 0L; var removes = 0L
         var rows = 0L; var statted = false
-        val declared = scala.io.Source.fromFile(f, "UTF-8")
-        try {
-          val lines = declared.getLines()
-          var done = false
-          while (lines.hasNext && !done) {
-            val line = lines.next()
-            if (ci.isEmpty && line.contains("\"commitInfo\""))
-              Option(jackson.readTree(line).get("commitInfo")).foreach(n =>
-                ci = Some((Option(n.get("timestamp")).map(_.asLong()),
-                  Option(n.get("operation")).map(_.asText()).getOrElse(""))))
-            if (!withStats) done = ci.nonEmpty
-            else {
-              if (line.contains("\"add\""))
-                Option(jackson.readTree(line).get("add")).foreach { a =>
-                  adds += 1
-                  Option(a.get("stats")).filterNot(_.isNull)
-                    .map(_.asText()).filter(_.nonEmpty).foreach { st =>
-                      Option(jackson.readTree(st).get("numRecords"))
-                        .foreach { n => rows += n.asLong(); statted = true }
-                    }
-                }
-              if (line.contains("\"remove\"") &&
-                jackson.readTree(line).has("remove")) removes += 1
-            }
+        while (actions.hasNext && (withStats || ci.isEmpty))
+          actions.next() match {
+            case c: CommitInfo => if (ci.isEmpty) ci = Some(c)
+            case a: AddFile if withStats =>
+              adds += 1
+              a.stats.flatMap(DeltaStats.parse).flatMap(_.numRecords)
+                .foreach { n => rows += n; statted = true }
+            case _: RemoveFile if withStats => removes += 1
+            case _ =>
           }
-        } finally declared.close()
-        (v, ci.flatMap(_._1).getOrElse(f.lastModified()),
-          ci.map(_._2).getOrElse(""), adds, removes,
+        (v, ci.flatMap(_.timestamp)
+            .getOrElse(DeltaActions.commitFile(logDir, v).lastModified()),
+          ci.flatMap(_.operation).getOrElse(""), adds, removes,
           if (statted) Some(rows) else None)
-      }.sortBy(_._1).toSeq
+      }
+    }
     if (raw.isEmpty) Nil
     else raw.tail.scanLeft(raw.head) { case ((_, prev, _, _, _, _), c) =>
       (c._1, math.max(prev, c._2), c._3, c._4, c._5, c._6)
@@ -711,111 +629,6 @@ object DeltaReader {
     if (decoded.startsWith("/")) decoded
     else new File(root, decoded).getAbsolutePath
 
-  /** Latest `txn` version recorded for `appId` — the exactly-once
-    * producer ledger ([[DeltaWriter.appendOnce]]'s check): max over the
-    * JSON commits' txn actions plus any checkpoint parquet's carried
-    * txn rows (this engine's checkpoint writer carries them verbatim,
-    * so the ledger survives log cleanup). None when the app has no
-    * record (including a not-yet-created table). */
-  def lastTxnVersion(spark: SparkSession, tablePath: String,
-      appId: String): Option[Long] = {
-    val logDir = new File(tablePath, "_delta_log")
-    val files = Option(logDir.listFiles()).getOrElse(Array.empty[File])
-    val mapper = new ObjectMapper()
-    var best: Option[Long] = None
-    def consider(v: Long): Unit =
-      if (best.forall(_ < v)) best = Some(v)
-    files.filter(_.getName.matches("\\d{20}\\.json")).foreach { f =>
-      new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-        .split('\n').filter(_.contains("\"txn\""))
-        .foreach { l =>
-          Option(mapper.readTree(l).get("txn")).foreach { t =>
-            if (t.get("appId").asText() == appId)
-              consider(t.get("version").asLong())
-          }
-        }
-    }
-    newestCheckpointTxns(spark, logDir).foreach { case (id, v) =>
-      if (id == appId) consider(v)
-    }
-    best
-  }
-
-  /** Version → the file names of each COMPLETE checkpoint at that
-    * version, across every layout this reader supports: classic
-    * single-file `v.checkpoint.parquet`, multi-part
-    * `v.checkpoint.<part>.<of>.parquet` (usable only when the part
-    * INDICES cover exactly 1..of — counting files would accept a
-    * malformed log whose parts are out of range and silently drop
-    * actions; filename numbers are untrusted, overflow skips the
-    * file), and V2 UUID `v.checkpoint.<uuid>.{parquet|json}` (multiple
-    * UUID checkpoints can coexist at one version — take the
-    * lexicographically first for determinism, which also prefers .json
-    * over .parquet of the identical state). Shared by the snapshot
-    * replay and the txn-ledger reads, so a ledger consumer can never
-    * see FEWER checkpoints than replay does. */
-  private def checkpointsOf(entries: Seq[String]): Map[Long, Seq[String]] = {
-    val singleCps: Map[Long, Seq[String]] = entries
-      .collect { case n if n.matches("\\d{20}\\.checkpoint\\.parquet") =>
-        n.take(20).toLong -> n }
-      .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2) }
-    val MultiCp = "(\\d{20})\\.checkpoint\\.(\\d{10})\\.(\\d{10})\\.parquet".r
-    val multiCps: Map[Long, Seq[String]] = entries
-      .flatMap {
-        case n @ MultiCp(v, part, of) =>
-          scala.util.Try((v.toLong, part.toInt, of.toInt, n)).toOption
-        case _ => None
-      }
-      .groupBy(t => (t._1, t._3))
-      .collect { case ((v, of), xs)
-          if xs.size == of && xs.map(_._2).toSet == (1 to of).toSet =>
-        v -> xs.map(_._4).distinct.sorted
-      }
-    val UuidCp = ("(\\d{20})\\.checkpoint\\.([0-9a-fA-F]{8}-[0-9a-fA-F]{4}" +
-      "-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12})\\.(parquet|json)").r
-    val uuidCps: Map[Long, Seq[String]] = entries
-      .flatMap {
-        case n @ UuidCp(v, _, _) => Some(v.toLong -> n)
-        case _ => None
-      }
-      .groupBy(_._1).map { case (v, xs) => v -> Seq(xs.map(_._2).min) }
-    multiCps ++ singleCps ++ uuidCps
-  }
-
-  /** The `(appId, version)` txn rows carried by the NEWEST complete
-    * checkpoint (any layout — the V2 top file carries txn INLINE, its
-    * sidecars hold only file actions). The durability read both
-    * [[lastTxnVersion]] and [[txnAppIds]] layer under the retained
-    * JSON commits: reading only single-file checkpoints here would
-    * silently lose the ledger on multi-part/V2 tables the snapshot
-    * replay itself handles. */
-  private def newestCheckpointTxns(spark: SparkSession,
-      logDir: File): Seq[(String, Long)] = {
-    val entries = Option(logDir.listFiles())
-      .getOrElse(Array.empty[File]).toSeq.map(_.getName)
-    val cps = checkpointsOf(entries)
-    if (cps.isEmpty) return Nil
-    val files = cps(cps.keys.max)
-    files.flatMap { n =>
-      val f = new File(logDir, n)
-      if (n.endsWith(".json"))
-        new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-          .split('\n').filter(_.contains("\"txn\""))
-          .flatMap(l => Option(mapper.readTree(l).get("txn")).map(t =>
-            (t.get("appId").asText(), t.get("version").asLong())))
-          .toSeq
-      else {
-        val df = spark.read.parquet(f.getAbsolutePath)
-        if (!df.columns.contains("txn")) Nil
-        else df.select(col("txn.appId"), col("txn.version")).collect()
-          .toSeq.collect {
-            case r if !r.isNullAt(0) && !r.isNullAt(1) =>
-              (r.getString(0), r.getLong(1))
-          }
-      }
-    }
-  }
-
   /** One row per LIVE file: `__i` (the file's index in `snap.files`)
     * plus the partition columns TYPED per the metaData schema —
     * partition values looked up under column mapping's physical
@@ -842,31 +655,14 @@ object DeltaReader {
       col(c).cast(snap.schema(c).dataType).as(c)): _*)
   }
 
-  /** Every recorded txn appId with the given prefix — ONE scan of the
-    * retained JSON commits plus any checkpoint's carried txn rows
-    * (same durability as [[lastTxnVersion]], amortized over a whole
-    * ledger family instead of one appId per scan). COPY INTO's
-    * already-ingested-file set reads through this. */
-  def txnAppIds(spark: SparkSession, tablePath: String,
-      prefix: String): Set[String] = {
+  /** The retained JSON commits in `(fromExclusive, toInclusive]`,
+    * version ascending, with their typed actions. */
+  private def windowCommits(tablePath: String, fromExclusive: Long,
+      toInclusive: Long): Seq[(Long, Vector[Action])] = {
     val logDir = new File(tablePath, "_delta_log")
-    val files = Option(logDir.listFiles()).getOrElse(Array.empty[File])
-    val mapper = new ObjectMapper()
-    val out = scala.collection.mutable.Set.empty[String]
-    files.filter(_.getName.matches("\\d{20}\\.json")).foreach { f =>
-      new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-        .split('\n').filter(_.contains("\"txn\""))
-        .foreach { l =>
-          Option(mapper.readTree(l).get("txn")).foreach { t =>
-            val id = t.get("appId").asText()
-            if (id.startsWith(prefix)) out += id
-          }
-        }
-    }
-    newestCheckpointTxns(spark, logDir).foreach { case (id, _) =>
-      if (id.startsWith(prefix)) out += id
-    }
-    out.toSet
+    DeltaActions.listLog(logDir).commits
+      .filter(v => v > fromExclusive && v <= toInclusive)
+      .map(v => v -> DeltaActions.readCommit(logDir, v))
   }
 
   /** Incremental CDC read: the rows ADDED in versions
@@ -903,60 +699,41 @@ object DeltaReader {
     // partitionValues keys stay physical either way.
     def phys(n: String): String = snap.physicalNames.getOrElse(n, n)
     val idMode = snap.fieldIds.nonEmpty
-    val mapper = new ObjectMapper()
-    val logDir = new File(tablePath, "_delta_log")
-    val commits = Option(logDir.listFiles()).getOrElse(Array.empty[File])
-      .filter(_.getName.matches("\\d{20}\\.json"))
-      .filter { f =>
-        val v = f.getName.take(20).toLong
-        v > fromExclusive && v <= toInclusive
-      }.sortBy(_.getName)
+    val commits = windowCommits(tablePath, fromExclusive, toInclusive)
     require(commits.nonEmpty || fromExclusive >= toInclusive,
       s"no commits in ($fromExclusive, $toInclusive] at $tablePath")
     val added = mutable.LinkedHashMap
       .empty[String, Map[String, Option[String]]]
-    commits.foreach { f =>
-      val nodes = new String(Files.readAllBytes(f.toPath),
-        StandardCharsets.UTF_8)
-        .split('\n').filter(_.nonEmpty).map(mapper.readTree).toSeq
-      val fileActs = nodes.flatMap(n =>
-        Option(n.get("add")).orElse(Option(n.get("remove"))))
-      // dataChange defaults true when absent (hand-written logs)
-      if (fileActs.nonEmpty && fileActs.forall(a =>
-          Option(a.get("dataChange")).exists(!_.asBoolean())))
-        () // layout-only commit (compact / z-order): transparent
-      else nodes.foreach { node =>
-          Option(node.get("add")).foreach { a =>
-            // an add carrying a deletion vector mutates pre-existing
-            // rows — not expressible as an append-only feed
-            require(Option(a.get("deletionVector")).forall(_.isNull),
-              s"loadChanges($fromExclusive, $toInclusive] at $tablePath: " +
-                "window contains a deletion-vector commit — the CDC feed " +
-                "is append-only; refresh consumers from a full snapshot")
-            val pv = Option(a.get("partitionValues")).map { m =>
-              m.properties().asScala.map { e =>
-                e.getKey -> (if (e.getValue.isNull) None
-                             else Some(e.getValue.asText()))
-              }.toMap
-            }.getOrElse(Map.empty[String, Option[String]])
-            added(decodePath(a.get("path").asText())) = pv
-          }
-          Option(node.get("remove")).foreach { r =>
-            val p = decodePath(r.get("path").asText())
-            // ENFORCED append-only contract (IncrementalAgg consumes
-            // this feed — feeding it a rewrite window would double-count
-            // survivor rows as new data): a remove may only cancel an
-            // add made EARLIER IN the window (same-window supersede); a
-            // remove of a pre-window file means the window mutated
-            // existing data (delete/update/merge/compact/backfill) and
-            // the feed cannot represent it.
-            require(added.contains(p),
-              s"loadChanges($fromExclusive, $toInclusive] at $tablePath: " +
-                s"window removes pre-window file $p — the CDC feed is " +
-                "append-only; refresh consumers from a full snapshot")
-            added.remove(p)
-          }
-        }
+    // layout-only commits (compact / z-order) are transparent
+    commits.filterNot(c => isLayoutOnly(c._2)).foreach { case (_, actions) =>
+      actions.foreach {
+        case r: RemoveFile =>
+          val p = decodePath(r.path)
+          // ENFORCED append-only contract (IncrementalAgg consumes this
+          // feed — feeding it a rewrite window would double-count
+          // survivor rows as new data): a remove may only cancel an add
+          // made EARLIER IN the window (same-window supersede); a remove
+          // of a pre-window file means the window mutated existing data
+          // (delete/update/merge/compact/backfill) and the feed cannot
+          // represent it.
+          require(added.contains(p),
+            s"loadChanges($fromExclusive, $toInclusive] at $tablePath: " +
+              s"window removes pre-window file $p — the CDC feed is " +
+              "append-only; refresh consumers from a full snapshot")
+          added.remove(p)
+        case _ =>
+      }
+      actions.foreach {
+        case a: AddFile =>
+          // an add carrying a deletion vector mutates pre-existing rows
+          // — not expressible as an append-only feed
+          require(a.deletionVector.isEmpty,
+            s"loadChanges($fromExclusive, $toInclusive] at $tablePath: " +
+              "window contains a deletion-vector commit — the CDC feed " +
+              "is append-only; refresh consumers from a full snapshot")
+          added(decodePath(a.path)) = a.partitionValues
+        case _ =>
+      }
     }
     val partCols = snap.partitionColumns
     val dataFields = snap.schema.fields.toIndexedSeq
@@ -1043,43 +820,20 @@ object DeltaReader {
     // read flag set at session build, [[graft.AdtContext.engineConfs]]).
     def phys(n: String): String = snap.physicalNames.getOrElse(n, n)
     val idMode = snap.fieldIds.nonEmpty
-    val jackson = new ObjectMapper()
-    val logDir = new File(tablePath, "_delta_log")
-    val commits = Option(logDir.listFiles()).getOrElse(Array.empty[File])
-      .filter(_.getName.matches("\\d{20}\\.json"))
-      .filter { f =>
-        val v = f.getName.take(20).toLong
-        v > fromExclusive && v <= toInclusive
-      }.sortBy(_.getName)
-    val have = commits.map(_.getName.take(20).toLong).toSet
+    val commits = windowCommits(tablePath, fromExclusive, toInclusive)
+    val have = commits.map(_._1).toSet
     (math.max(0L, fromExclusive + 1) to toInclusive).foreach(v =>
       require(have.contains(v),
         s"loadChangeFeed($fromExclusive, $toInclusive] at $tablePath: " +
           s"JSON commit $v is gone (log cleanup) — the change window " +
           "cannot be replayed; bootstrap consumers from a snapshot"))
 
-    // running live state, seeded at the window start
+    // running live state by decoded path, seeded at the window start
+    def decoded(a: AddFile): AddFile = a.copy(path = decodePath(a.path))
     val state = mutable.LinkedHashMap.empty[String, AddFile]
     if (fromExclusive >= 0L)
       snapshotAt(spark, tablePath, fromExclusive).files
-        .foreach(a => state(a.path) = a)
-
-    def parseDvNode(node: JsonNode): Option[DvDescriptor] =
-      Option(node.get("deletionVector")).filterNot(_.isNull).map { dv =>
-        DvDescriptor(
-          dv.get("storageType").asText(),
-          dv.get("pathOrInlineDv").asText(),
-          Option(dv.get("offset")).map(_.asInt()).getOrElse(0),
-          dv.get("sizeInBytes").asInt(),
-          dv.get("cardinality").asLong())
-      }
-    def parsePv(node: JsonNode): Map[String, Option[String]] =
-      Option(node.get("partitionValues")).map { m =>
-        m.properties().asScala.map { e =>
-          e.getKey -> (if (e.getValue.isNull) None
-                       else Some(e.getValue.asText()))
-        }.toMap
-      }.getOrElse(Map.empty)
+        .foreach(a => state(decodePath(a.path)) = decoded(a))
 
     /** one row-producing scan unit: rows of `file` that are in
       * `mustIn`'s DV (None = no constraint) and NOT in `mustNotIn`'s. */
@@ -1095,32 +849,22 @@ object DeltaReader {
     // files exist to eliminate. State still advances from add/remove.
     val cdcEmits = mutable.ArrayBuffer
       .empty[(Long, Seq[(String, Map[String, Option[String]])])]
-    commits.foreach { f =>
-      val v = f.getName.take(20).toLong
-      val nodes = new String(Files.readAllBytes(f.toPath),
-        StandardCharsets.UTF_8)
-        .split('\n').filter(_.nonEmpty).map(jackson.readTree).toSeq
-      val acts: Seq[(Boolean, JsonNode)] = nodes.flatMap(n =>
-        Option(n.get("add")).map((true, _))
-          .orElse(Option(n.get("remove")).map((false, _))))
-      val layoutOnly = acts.nonEmpty && acts.forall { case (_, a) =>
-        Option(a.get("dataChange")).exists(!_.asBoolean())
+    commits.foreach { case (v, actions) =>
+      val layoutOnly = isLayoutOnly(actions)
+      val cdcPaths = actions.collect { case c: AddCDCFile =>
+        (decodePath(c.path), c.partitionValues)
       }
-      val cdcPaths = nodes.flatMap(n =>
-        Option(n.get("cdc")).filterNot(_.isNull)).map(c =>
-        (decodePath(c.get("path").asText()), parsePv(c)))
       if (cdcPaths.nonEmpty && !layoutOnly) cdcEmits += ((v, cdcPaths))
-      // net per-path outcome WITHIN the commit (a DV update is
-      // remove+add of the same path in one commit: the add wins)
+      // net per-path outcome WITHIN the commit: removes apply before
+      // adds, so a DV update (remove+add of one path) ends as the add
       val outcome = mutable.LinkedHashMap.empty[String, Option[AddFile]]
-      acts.foreach {
-        case (true, a) =>
-          val p = decodePath(a.get("path").asText())
-          outcome(p) = Some(AddFile(p,
-            Option(a.get("size")).map(_.asLong()).getOrElse(0L),
-            parsePv(a), parseDvNode(a)))
-        case (false, r) =>
-          outcome(decodePath(r.get("path").asText())) = None
+      actions.foreach {
+        case r: RemoveFile => outcome(decodePath(r.path)) = None
+        case _ =>
+      }
+      actions.foreach {
+        case a: AddFile => outcome(decodePath(a.path)) = Some(decoded(a))
+        case _ =>
       }
       outcome.foreach { case (p, out) =>
         if (!layoutOnly && cdcPaths.isEmpty) (state.get(p), out) match {
@@ -1255,7 +999,7 @@ private[sources] class DeltaSnapshotFileIndex(
 
   private val zone = spark.sessionState.conf.sessionLocalTimeZone
 
-  private def statusOf(a: DeltaReader.AddFile): FileStatus =
+  private def statusOf(a: AddFile): FileStatus =
     new FileStatus(a.size, false, 1, 128L * 1024 * 1024, 0L,
       new Path("file:" + DeltaReader.resolved(
         root, DeltaReader.decodePath(a.path))))
@@ -1330,27 +1074,16 @@ private[sources] class DeltaSnapshotFileIndex(
 object DeletionVectors {
 
   /** All deleted row indexes for one DV descriptor. */
-  def deletedRows(dv: DeltaReader.DvDescriptor, tableRoot: String): Seq[Long] =
+  def deletedRows(dv: DvDescriptor, tableRoot: String): Seq[Long] =
     dv.storageType match {
       case "i" => // inline: pathOrInlineDv is Z85-encoded bitmap bytes
         parseRoaringArray(Z85.decode(dv.pathOrInlineDv))
       case "p" => // absolute path; offset points at [size:int32][data]
         val all = Files.readAllBytes(Paths.get(dv.pathOrInlineDv))
         sliceAtOffset(all, dv.offset, dv.sizeInBytes)
-      case "u" =>
-        // pathOrInlineDv = [random prefix]<z85-encoded 16-byte UUID> (the
-        // last 20 chars are the UUID); file is
-        // [prefix/]deletion_vector_<canonical uuid>.bin under the table
-        // root, same [version byte][size][data][crc] layout as "p".
-        val enc = dv.pathOrInlineDv
-        require(enc.length >= 20, s"malformed UUID DV path: $enc")
-        val (prefix, uuidPart) = enc.splitAt(enc.length - 20)
-        val bytes = Z85.decode(uuidPart)
-        val bb = ByteBuffer.wrap(bytes)
-        val uuid = new java.util.UUID(bb.getLong, bb.getLong)
-        val dir = if (prefix.isEmpty) tableRoot else s"$tableRoot/$prefix"
-        val all = Files.readAllBytes(
-          Paths.get(s"$dir/deletion_vector_$uuid.bin"))
+      case "u" => // [prefix/]deletion_vector_<uuid>.bin under the table
+        // root, same [version byte][size][data][crc] layout as "p"
+        val all = Files.readAllBytes(Paths.get(s"$tableRoot/${dv.relativeFile}"))
         sliceAtOffset(all, dv.offset, dv.sizeInBytes)
       case other =>
         throw new IllegalArgumentException(s"unknown DV storageType: $other")

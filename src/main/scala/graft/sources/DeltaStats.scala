@@ -51,6 +51,34 @@ object DeltaStats {
         }.getOrElse(Map.empty)))
     } catch { case _: Exception => None }
 
+  /** The `stats` string of an add action from a file's collected stats
+    * text — the inverse of [[parse]]. Min/max ride only for
+    * stat-writable types ([[StatsParquetFormat.statWritable]]). */
+  private[sources] def json(st: StatsParquetFormat.FileStatsText,
+      dataFields: Seq[StructField]): String = {
+    import DeltaActions.jstr
+    val statFields =
+      dataFields.filter(f => StatsParquetFormat.statWritable(f.dataType))
+    def bounds(of: Map[String, String]): String = statFields.flatMap { sf =>
+      of.get(sf.name).map(v => s"${jstr(sf.name)}:${jsonVal(sf.dataType, v)}")
+    }.mkString(",")
+    val nulls = dataFields.map(sf =>
+      s"${jstr(sf.name)}:${st.nullCount(sf.name)}").mkString(",")
+    s"""{"numRecords":${st.numRecords},"minValues":{${bounds(st.minValues)}},""" +
+      s""""maxValues":{${bounds(st.maxValues)}},"nullCount":{$nulls}}"""
+  }
+
+  /** Numeric/boolean stat text goes out as a raw JSON scalar when it is
+    * one (NaN/Infinity are not valid JSON numbers — quote them; readers
+    * take `asText()` either way); everything else is quoted. */
+  private def jsonVal(dt: DataType, text: String): String = dt match {
+    case ByteType | ShortType | IntegerType | LongType | FloatType |
+         DoubleType | _: DecimalType
+        if text.matches("-?\\d+(\\.\\d+)?([eE][+-]?\\d+)?") => text
+    case BooleanType if text == "true" || text == "false" => text
+    case _ => DeltaActions.jstr(text)
+  }
+
   // jackson's properties() returns a java Set of Map.Entry
   private implicit final class EntrySetOps(
       private val s: java.util.Set[java.util.Map.Entry[String, JsonNode]])
@@ -66,7 +94,7 @@ object DeltaStats {
 
   /** Could any row of `a` satisfy ALL of `dataFilters`? True when stats
     * are missing or inconclusive (never skip on uncertainty). */
-  def mayMatch(a: DeltaReader.AddFile,
+  def mayMatch(a: DeltaActions.AddFile,
       dataFilters: Seq[Expression]): Boolean =
     mayMatch(a.stats.flatMap(parse), dataFilters)
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.DeltaActions.{Action, AddCDCFile, AddFile, CommitInfo, DvDescriptor, LastCheckpoint, Protocol, RemoveFile, Sidecar, Txn}
 import graft.sources.StatsParquetFormat.{FileStatsText, statWritable}
 
 /** The Delta Lake WRITER — the committing half of [[DeltaReader]] (the
@@ -41,7 +42,12 @@ import graft.sources.StatsParquetFormat.{FileStatsText, statWritable}
   *    to emit implicitly;
   *  - minReaderVersion escalates to 3 + readerFeatures only when the
   *    schema demands it (TimestampNTZ), mirroring
-  *    `DeltaReader.applyProtocol`'s supported set.
+  *    `DeltaReader.applyProtocol`'s supported set;
+  *  - every action is a typed [[DeltaActions]] value written by its one
+  *    serializer. A remove is derived from the add it retires
+  *    ([[DeltaActions.RemoveFile.of]]: same (path, DV) key, partition
+  *    values and size), and the protocol and metaData a later commit
+  *    builds on come from the snapshot the verb already replayed.
   *
   * Per-file statistics (numRecords, min/max cast to string, nullCount)
   * are collected by the write tasks themselves: data files stage
@@ -71,8 +77,8 @@ object DeltaWriter {
   /** Append `df` to the Delta table at `tablePath`, creating it (with
     * protocol + metaData) when no log exists. Returns the committed
     * version. `txn` stamps the commit with the delta spec's transaction
-    * identifier action `{"txn":{"appId":…,"version":…}}` — the
-    * exactly-once ledger an idempotent producer ([[appendOnce]], the
+    * identifier action (a [[DeltaActions.Txn]] of appId and version) —
+    * the exactly-once ledger an idempotent producer ([[appendOnce]], the
     * streaming sink) checks before re-committing.
     *
     * `columnMapping = "name"` (table creation only) creates the table
@@ -116,9 +122,7 @@ object DeltaWriter {
     // batch twice (appendOnce converts this throw into a ledger
     // re-check and a no-op).
     txn.foreach { case (appId, tv) =>
-      if (version > 0L && DeltaReader
-          .lastTxnVersion(df.sparkSession, tablePath, appId)
-          .exists(_ >= tv))
+      if (version > 0L && recorded(df.sparkSession, tablePath, appId, tv))
         throw new ConcurrentTransactionException(
           s"txn ($appId, $tv) already recorded at $tablePath — " +
             "redelivered batch; consult the ledger")
@@ -145,16 +149,21 @@ object DeltaWriter {
     val adds = stageDataFiles(staged, table, version, stagedBy)
     // lastUpdated dates the ledger entry so checkpoint writes can expire
     // it once it ages past delta.setTransactionRetentionDuration
-    // ([[carryActions]]) — without a stamp an entry is undatable and is
+    // ([[checkpointActions]]) — without a stamp an entry is undatable and is
     // carried forever (delta's own posture for stampless txn actions)
-    val txnLine = txn.map { case (appId, v) =>
-      s"""{"txn":{"appId":${jstr(appId)},"version":$v,""" +
-        s""""lastUpdated":${System.currentTimeMillis()}}}"""
+    val txnAction = txn.map { case (appId, v) =>
+      Txn(appId, v, Some(System.currentTimeMillis()))
     }.toSeq
     publishOptimistic(table, version,
       header(df, partitionBy, version, columnMapping, phys) ++
-        txnLine ++ adds)
+        txnAction ++ adds)
   }
+
+  /** Whether the table's txn ledger ([[DeltaReader.txns]]) already
+    * records `appId` at or past `txnVersion`. */
+  private def recorded(spark: org.apache.spark.sql.SparkSession,
+      tablePath: String, appId: String, txnVersion: Long): Boolean =
+    DeltaReader.txns(spark, tablePath).get(appId).exists(_.version >= txnVersion)
 
   /** Rename a logical-named frame (and its partition columns) to the
     * table's physical column names for staging — identity for unmapped
@@ -192,7 +201,7 @@ object DeltaWriter {
   private def stageLogical(df: DataFrame, snap: DeltaReader.Snapshot,
       table: File, version: Long,
       tags: Map[String, String] = Map.empty,
-      dataChange: Boolean = true): Seq[String] = {
+      dataChange: Boolean = true): Seq[AddFile] = {
     val (staged, stagedBy) = toPhysical(df, snap.physicalNames,
       snap.fieldIds, snap.partitionColumns)
     stageDataFiles(staged, table, version, stagedBy, tags, dataChange)
@@ -215,8 +224,7 @@ object DeltaWriter {
   def appendOnce(df: DataFrame, tablePath: String,
       partitionBy: Seq[String], appId: String,
       txnVersion: Long): Option[Long] =
-    if (DeltaReader.lastTxnVersion(df.sparkSession, tablePath, appId)
-        .exists(_ >= txnVersion)) None
+    if (recorded(df.sparkSession, tablePath, appId, txnVersion)) None
     else try Some(append(df, tablePath, partitionBy,
       txn = Some((appId, txnVersion))))
     catch {
@@ -225,8 +233,7 @@ object DeltaWriter {
         // ledger: redelivery of an already-landed batch no-ops, a
         // genuinely NEWER batch from a racing producer must surface
         // (two live instances is an operational fault, not redelivery)
-        if (DeltaReader.lastTxnVersion(df.sparkSession, tablePath, appId)
-            .exists(_ >= txnVersion)) None
+        if (recorded(df.sparkSession, tablePath, appId, txnVersion)) None
         else throw e
     }
 
@@ -285,8 +292,8 @@ object DeltaWriter {
     val prefix = "graft-copy-into:"
     val already =
       if (force) Set.empty[String]
-      else DeltaReader.txnAppIds(spark, tablePath, prefix)
-        .map(_.stripPrefix(prefix))
+      else DeltaReader.txns(spark, tablePath).keySet
+        .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix))
     val fresh = found.filterNot(already)
     if (fresh.isEmpty) return (None, Nil)
     val snap = DeltaReader.snapshot(spark, tablePath)
@@ -353,9 +360,7 @@ object DeltaWriter {
       generatedToCheck = Some(df.columns.toSet))
     val adds = stageLogical(df, snap, table, version)
     val now = System.currentTimeMillis()
-    val txns = fresh.map(p =>
-      s"""{"txn":{"appId":${jstr(prefix + p)},"version":1,""" +
-        s""""lastUpdated":$now}}""")
+    val txns = fresh.map(p => Txn(prefix + p, 1L, Some(now)))
     val v = publishOptimistic(table, version, txns ++ adds,
       operation = "COPY INTO")
     (Some(v), fresh)
@@ -388,10 +393,10 @@ object DeltaWriter {
       s"new columns must be nullable (old files null-fill): " +
         added.filterNot(_.nullable).map(_.name).mkString(", "))
     if (snap.physicalNames.isEmpty)
-      // patch schemaString inside the last metaData line, verbatim
-      // otherwise (id/partitionColumns/configuration preserved)
-      patchMetaData(spark, tablePath, "ADD COLUMNS")(meta =>
-        meta.put("schemaString", newSchema.json))
+      // patch schemaString only (id/partitionColumns/configuration
+      // preserved)
+      patchMetaData(spark, tablePath, "ADD COLUMNS")(
+        _.copy(schemaString = newSchema.json))
     else {
       // name-mapped table: existing fields keep their schemaString
       // metadata VERBATIM (their physical name/id are the layout
@@ -423,15 +428,10 @@ object DeltaWriter {
               .build())
         }
       })
-      patchMetaData(spark, tablePath, "ADD COLUMNS") { meta =>
-        meta.put("schemaString", mapped.json)
-        val cfg = meta.get("configuration") match {
-          case o: com.fasterxml.jackson.databind.node.ObjectNode => o
-          case _ => meta.putObject("configuration")
-        }
-        cfg.put("delta.columnMapping.maxColumnId", nextId.toString)
-        ()
-      }
+      patchMetaData(spark, tablePath, "ADD COLUMNS")(m => m.copy(
+        schemaString = mapped.json,
+        configuration = m.configuration +
+          ("delta.columnMapping.maxColumnId" -> nextId.toString)))
     }
   }
 
@@ -465,15 +465,10 @@ object DeltaWriter {
         "drop them first")
     val renamed = StructType(snap.schema.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
-    patchMetaData(spark, tablePath, "RENAME COLUMN") { meta =>
-      meta.put("schemaString", renamed.json)
-      if (snap.partitionColumns.contains(from)) {
-        val arr = meta.putArray("partitionColumns")
-        snap.partitionColumns.foreach(c =>
-          arr.add(if (c == from) to else c))
-      }
-      ()
-    }
+    patchMetaData(spark, tablePath, "RENAME COLUMN")(m => m.copy(
+      schemaString = renamed.json,
+      partitionColumns =
+        m.partitionColumns.map(c => if (c == from) to else c)))
   }
 
   /** Drop a column on a COLUMN-MAPPED table — [[renameColumn]]'s
@@ -522,45 +517,21 @@ object DeltaWriter {
       s"CHECK constraint(s) reference $column: ${conRefs.mkString(", ")}" +
         " — drop them first")
     val dropped = StructType(snap.schema.fields.filterNot(_.name == column))
-    patchMetaData(spark, tablePath, "DROP COLUMN")(meta =>
-      meta.put("schemaString", dropped.json))
+    patchMetaData(spark, tablePath, "DROP COLUMN")(
+      _.copy(schemaString = dropped.json))
   }
 
-  /** Carry the table's newest metaData record forward (JSON commits
-    * first, newest-checkpoint fallback after log cleanup — the same
-    * rule [[checkpoint]] uses), apply `patch` to the metaData object,
-    * and publish it as a metaData commit. Shared by [[evolveSchema]]
-    * and the CHECK-constraint verbs. */
+  /** Publish the latest snapshot's metaData with `patch` applied, as a
+    * metaData commit — table id, partitioning and configuration ride
+    * through unless the patch changes them. Shared by the schema verbs
+    * and the property/CHECK-constraint verbs. */
   private def patchMetaData(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, operation: String)(
-      patch: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Long = {
+      patch: DeltaActions.Metadata => DeltaActions.Metadata): Long = {
     val table = new File(tablePath)
-    val logDir = new File(table, "_delta_log")
-    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
-    var metaLine: Option[String] = None
-    Option(logDir.listFiles()).getOrElse(Array.empty[File])
-      .filter(_.getName.matches("\\d{20}\\.json")).sortBy(_.getName)
-      .foreach { f =>
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().foreach(l =>
-          if (l.contains("\"metaData\"")) metaLine = Some(l))
-        finally src.close()
-      }
-    if (metaLine.isEmpty)
-      newestCheckpointFrame(spark, logDir).foreach { df =>
-        if (df.columns.contains("metaData"))
-          metaLine = df.filter(col("metaData").isNotNull)
-            .select(to_json(struct(col("metaData")))).collect()
-            .headOption.map(_.getString(0))
-      }
-    require(metaLine.nonEmpty,
-      s"no metaData action found in $tablePath's JSON commits or " +
-        "its newest checkpoint")
-    val root = jackson.readTree(metaLine.get)
-    patch(root.get("metaData")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
+    val meta = patch(DeltaReader.snapshot(spark, tablePath).metadata)
     val version = nextVersion(table)
-    publish(table, version, Seq(jackson.writeValueAsString(root)), operation)
+    publish(table, version, Seq(meta), operation)
     version
   }
 
@@ -584,14 +555,8 @@ object DeltaWriter {
     require(violating == 0L,
       s"cannot add CHECK constraint $name: $violating existing row(s) " +
         s"violate ($exprSql)")
-    patchMetaData(spark, tablePath, "ADD CONSTRAINT") { meta =>
-      val cfg = meta.get("configuration") match {
-        case o: com.fasterxml.jackson.databind.node.ObjectNode => o
-        case _ => meta.putObject("configuration")
-      }
-      cfg.put(s"delta.constraints.$name", exprSql)
-      ()
-    }
+    patchMetaData(spark, tablePath, "ADD CONSTRAINT")(m => m.copy(
+      configuration = m.configuration + (s"delta.constraints.$name" -> exprSql)))
   }
 
   /** Set a table property (metaData configuration entry) — e.g.
@@ -606,14 +571,8 @@ object DeltaWriter {
       s"use addCheckConstraint for $key — constraints validate current rows")
     require(key != "delta.columnMapping.mode",
       "column mapping mode is immutable after table creation")
-    patchMetaData(spark, tablePath, "SET TBLPROPERTIES") { meta =>
-      val cfg = meta.get("configuration") match {
-        case o: com.fasterxml.jackson.databind.node.ObjectNode => o
-        case _ => meta.putObject("configuration")
-      }
-      cfg.put(key, value)
-      ()
-    }
+    patchMetaData(spark, tablePath, "SET TBLPROPERTIES")(m =>
+      m.copy(configuration = m.configuration + (key -> value)))
   }
 
   /** Unset a table property set by [[setTableProperty]]. */
@@ -621,13 +580,8 @@ object DeltaWriter {
       tablePath: String, key: String): Long = {
     require(!key.startsWith("delta.constraints."),
       s"use dropCheckConstraint for $key")
-    patchMetaData(spark, tablePath, "UNSET TBLPROPERTIES") { meta =>
-      meta.get("configuration") match {
-        case o: com.fasterxml.jackson.databind.node.ObjectNode => o.remove(key)
-        case _ =>
-      }
-      ()
-    }
+    patchMetaData(spark, tablePath, "UNSET TBLPROPERTIES")(m =>
+      m.copy(configuration = m.configuration - key))
   }
 
   /** Drop a CHECK constraint added by [[addCheckConstraint]]. */
@@ -636,14 +590,8 @@ object DeltaWriter {
     val snap = DeltaReader.snapshot(spark, tablePath)
     require(snap.configuration.contains(s"delta.constraints.$name"),
       s"no such constraint: $name")
-    patchMetaData(spark, tablePath, "DROP CONSTRAINT") { meta =>
-      meta.get("configuration") match {
-        case o: com.fasterxml.jackson.databind.node.ObjectNode =>
-          o.remove(s"delta.constraints.$name")
-        case _ =>
-      }
-      ()
-    }
+    patchMetaData(spark, tablePath, "DROP CONSTRAINT")(m =>
+      m.copy(configuration = m.configuration - s"delta.constraints.$name"))
   }
 
   /** Partition-level overwrite (Delta `replaceWhere` restricted to
@@ -676,18 +624,16 @@ object DeltaWriter {
     require(outside == 0L,
       s"$outside rows fall outside the admitted partitions $partitionValues")
 
-    val removes = snap.files.filter { a =>
+    val replaced = snap.files.filter { a =>
       partitionValues.forall { case (k, vs) =>
         // add-action partitionValues are keyed by PHYSICAL names under
         // column mapping; the caller speaks logical
         a.partitionValues.get(snap.physicalNames.getOrElse(k, k))
           .flatten.exists(vs.contains)
       }
-    }.map(a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-        s"""${System.currentTimeMillis()},"dataChange":true}}""")
+    }
     val adds = stageLogical(df, snap, table, version)
-    publishOptimistic(table, version, removes ++ adds)
+    publishOptimistic(table, version, retire(replaced) ++ adds)
   }
 
   /** MERGE (upsert): rows of `source` REPLACE target rows sharing their
@@ -783,14 +729,7 @@ object DeltaWriter {
           .join(srcKeys, keys, "left_semi"))
         .select("__source_file").distinct()
         .collect().map(_.getString(0)).toSet
-      val root = table.getAbsolutePath
-      def absPath(rel: String): String =
-        DeltaReader.resolved(root, DeltaReader.decodePath(rel))
-      val removedAdds = snap.files.filter(a =>
-        touched.exists(t => new java.net.URI(t).getPath == absPath(a.path)))
-      require(removedAdds.length == touched.size,
-        s"internal: ${touched.size} touched files resolved to " +
-          s"${removedAdds.length} add actions")
+      val removedAdds = touchedAdds(snap, table, touched)
 
       val survivors =
         if (touched.isEmpty) source.limit(0)
@@ -807,7 +746,7 @@ object DeltaWriter {
       // source rows = insert — told apart by ONE left-outer join of the
       // source with the matched keys; the feed never ships touched-file
       // survivor churn
-      val cdcLines = matched.fold(Seq.empty[String]) { m =>
+      val cdcFiles = matched.fold(Seq.empty[AddCDCFile]) { m =>
         val pre = m.drop("__source_file")
         val matchedKeys = m.filter(col("__rn") === 1)
           .select(keys.map(col) :+ lit(true).as("__matched"): _*)
@@ -822,11 +761,8 @@ object DeltaWriter {
                   .otherwise(lit("insert")).as("_change_type"): _*)),
           table, version, snap)
       }
-      val removes = removedAdds.map(a =>
-        s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-          s"""${System.currentTimeMillis()},"dataChange":true}}""")
-      publishOptimistic(table, version, cdcLines ++ removes ++ adds,
-        operation = "MERGE")
+      publishOptimistic(table, version,
+        cdcFiles ++ retire(removedAdds) ++ adds, operation = "MERGE")
     } finally matched.foreach(_.unpersist())
   }
 
@@ -939,14 +875,7 @@ object DeltaWriter {
     val touched = cur.join(closingKeys, keys, "left_semi")
       .select("__source_file").distinct()
       .collect().map(_.getString(0)).toSet
-    val root = table.getAbsolutePath
-    def absPath(rel: String): String =
-      DeltaReader.resolved(root, DeltaReader.decodePath(rel))
-    val removedAdds = snap.files.filter(a =>
-      touched.exists(t => new java.net.URI(t).getPath == absPath(a.path)))
-    require(removedAdds.length == touched.size,
-      s"internal: ${touched.size} touched files resolved to " +
-        s"${removedAdds.length} add actions")
+    val removedAdds = touchedAdds(snap, table, touched)
 
     val fields = snap.schema.fieldNames.toIndexedSeq
     val inTouched =
@@ -967,11 +896,8 @@ object DeltaWriter {
     val out = Seq(survivors, closed, opened)
       .map(_.select(fields.map(col): _*)).reduce(_.unionByName(_))
     val adds = stageLogical(out, snap, table, version)
-    val removes = removedAdds.map(a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-        s"""${System.currentTimeMillis()},"dataChange":true}}""")
-    val committed = publishOptimistic(table, version, removes ++ adds,
-      operation = "SCD2 APPLY")
+    val committed = publishOptimistic(table, version,
+      retire(removedAdds) ++ adds, operation = "SCD2 APPLY")
     changedKeys.unpersist(); closingKeys.unpersist(); newKeys.unpersist()
     committed
   }
@@ -1000,14 +926,7 @@ object DeltaWriter {
       .select("__source_file").distinct()
       .collect().map(_.getString(0)).toSet
     if (touched.isEmpty) return version - 1 // nothing matches: no commit
-    val root = table.getAbsolutePath
-    def absPath(rel: String): String =
-      DeltaReader.resolved(root, DeltaReader.decodePath(rel))
-    val removedAdds = snap.files.filter(a =>
-      touched.exists(t => new java.net.URI(t).getPath == absPath(a.path)))
-    require(removedAdds.length == touched.size,
-      s"internal: ${touched.size} touched files resolved to " +
-        s"${removedAdds.length} add actions")
+    val removedAdds = touchedAdds(snap, table, touched)
     val survivors = tagged
       .join(broadcast(touched.toSeq.toDF("__source_file")),
         Seq("__source_file"), "left_semi")
@@ -1017,16 +936,13 @@ object DeltaWriter {
     // exact CDF delete images ([[stageCdcFiles]]) when the table
     // declares a consumer ([[cdfEnabled]]): the verb knows the matched
     // rows, so the feed never ships touched-file survivor churn
-    val cdcLines = if (!cdfEnabled(snap)) Nil else stageCdcFiles(
+    val cdcFiles = if (!cdfEnabled(snap)) Nil else stageCdcFiles(
       tagged.filter(predicate)
         .drop("__source_file", "__row_index")
         .select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
         .withColumn("_change_type", lit("delete")),
       table, version, snap)
-    val removes = removedAdds.map(a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-        s"""${System.currentTimeMillis()},"dataChange":true}}""")
-    publishOptimistic(table, version, cdcLines ++ removes ++ adds,
+    publishOptimistic(table, version, cdcFiles ++ retire(removedAdds) ++ adds,
       operation = operation)
   }
 
@@ -1071,7 +987,7 @@ object DeltaWriter {
       case None => nextVersion(new File(tablePath)) - 1 // no match: no commit
       case Some(p) =>
         publishOptimistic(p.table, p.version,
-          p.protoLine ++ p.removes ++ p.dvAdds, operation = "DELETE")
+          p.protocol ++ p.removes ++ p.dvAdds, operation = "DELETE")
     }
 
   /** Merge-on-read UPDATE: the matched rows are marked dead with
@@ -1114,7 +1030,7 @@ object DeltaWriter {
         // exact CDF update images when the table declares a consumer
         // ([[cdfEnabled]]), same mechanism as the CoW verb: the DV'd
         // rows are the pre-images, `updated` the post-images
-        val cdcLines = if (!cdfEnabled(p.snap)) Nil else {
+        val cdcFiles = if (!cdfEnabled(p.snap)) Nil else {
           val pre = p.tagged.filter(predicate)
             .drop("__source_file", "__row_index")
             .select(p.snap.schema.fieldNames.toIndexedSeq.map(col): _*)
@@ -1125,19 +1041,19 @@ object DeltaWriter {
             p.table, p.version, p.snap)
         }
         publishOptimistic(p.table, p.version,
-          p.protoLine ++ cdcLines ++ p.removes ++ p.dvAdds ++ newAdds,
+          p.protocol ++ cdcFiles ++ p.removes ++ p.dvAdds ++ newAdds,
           operation = "UPDATE")
     }
   }
 
   /** The shared merge-on-read core: build merged deletion vectors for
     * every file holding a predicate-matched row, plus the re-add/remove
-    * action lines and protocol escalation — WITHOUT publishing (the
-    * caller owns the commit, so [[updateWithVectors]] can append its
+    * actions and protocol escalation — WITHOUT publishing (the caller
+    * owns the commit, so [[updateWithVectors]] can append its
     * new-version files atomically alongside). None = nothing matched. */
   private final case class DvMark(table: File,
       snap: DeltaReader.Snapshot, tagged: DataFrame, version: Long,
-      protoLine: Seq[String], removes: Seq[String], dvAdds: Seq[String])
+      protocol: Seq[Protocol], removes: Seq[RemoveFile], dvAdds: Seq[AddFile])
 
   private def dvMarkDead(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, predicate: org.apache.spark.sql.Column,
@@ -1154,16 +1070,9 @@ object DeltaWriter {
       .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     if (hit.isEmpty) return None // nothing matches
     val root = table.getAbsolutePath
-    def absPath(rel: String): String =
-      DeltaReader.resolved(root, DeltaReader.decodePath(rel))
-    val touched = snap.files.flatMap { a =>
-      hit.collectFirst {
-        case (uri, rows) if new java.net.URI(uri).getPath == absPath(a.path) =>
-          a -> rows
-      }
-    }
-    require(touched.length == hit.size,
-      s"internal: ${hit.size} touched files resolved to ${touched.length}")
+    val rowsAt = hit.map { case (uri, rows) => new java.net.URI(uri).getPath -> rows }
+    val touched = touchedAdds(snap, table, hit.keySet).map(a =>
+      a -> rowsAt(DeltaReader.resolved(root, DeltaReader.decodePath(a.path))))
 
     // merged bitmap per file (old DV rows ∪ new dead rows), serialized
     // in the reader's own RoaringBitmapArray format
@@ -1179,10 +1088,7 @@ object DeltaWriter {
     val onDisk: Map[String, (String, Int)] = if (spill.isEmpty) Map.empty
     else {
       val uuid = java.util.UUID.randomUUID()
-      val bbUuid = java.nio.ByteBuffer.allocate(16)
-      bbUuid.putLong(uuid.getMostSignificantBits)
-      bbUuid.putLong(uuid.getLeastSignificantBits)
-      val enc = Z85.encode(bbUuid.array())
+      val enc = DvDescriptor.relativeId(uuid)
       val out = new java.io.ByteArrayOutputStream()
       out.write(1) // format version byte
       val offsets = spill.map { case (a, _, bytes) =>
@@ -1202,69 +1108,24 @@ object DeltaWriter {
     }
 
     // spec contract: a table carrying DVs must announce the reader
-    // feature — escalate the protocol IN the same commit (existing
-    // features preserved), once
-    val protoLine = dvProtocolEscalation(spark, table)
+    // feature — escalate the snapshot's protocol IN the same commit
+    // (existing features preserved), once
+    val protocol = Some(snap.protocol.withFeature("deletionVectors"))
+      .filter(_ != snap.protocol).toSeq
 
-    val removes = bitmaps.map { case (a, _, _) =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-        s"""${System.currentTimeMillis()},"dataChange":true}}"""
-    }
     val adds = bitmaps.map { case (a, rows, bytes) =>
       val dv = onDisk.get(a.path) match {
-        case Some((enc, off)) => DeltaReader.DvDescriptor("u", enc, off,
-          bytes.length, rows.length.toLong)
-        case None => DeltaReader.DvDescriptor("i", Z85.encode(pad4(bytes)),
+        case Some((enc, off)) =>
+          DvDescriptor("u", enc, off, bytes.length, rows.length.toLong)
+        case None => DvDescriptor("i", Z85.encode(pad4(bytes)),
           0, bytes.length, rows.length.toLong)
       }
       // the re-add keeps stats and tags (an `optimized=zorder` file
       // stays recognized by incremental z-order after a DV delete)
-      addJson(a.copy(deletionVector = Some(dv)), dataChange = true)
+      a.copy(deletionVector = Some(dv), dataChange = true)
     }
-    Some(DvMark(table, snap, tagged, version, protoLine, removes, adds))
-  }
-
-  /** The escalated protocol line a first DV commit must carry
-    * (minReaderVersion 3 + readerFeatures incl `deletionVectors`,
-    * existing features preserved) — empty when the table already
-    * announces the feature. */
-  private def dvProtocolEscalation(
-      spark: org.apache.spark.sql.SparkSession, table: File): Seq[String] = {
-    val logDir = new File(table, "_delta_log")
-    var proto: Option[String] = None
-    newestCheckpointFrame(spark, logDir).foreach { df =>
-      if (df.columns.contains("protocol"))
-        proto = df.filter(col("protocol").isNotNull)
-          .select(to_json(struct(col("protocol")))).collect()
-          .headOption.map(_.getString(0)).orElse(proto)
-    }
-    Option(logDir.listFiles()).getOrElse(Array.empty[File])
-      .filter(_.getName.matches("\\d{20}\\.json")).sortBy(_.getName)
-      .foreach { f =>
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().foreach(l =>
-          if (l.contains("\"protocol\"")) proto = Some(l))
-        finally src.close()
-      }
-    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = proto.map(jackson.readTree(_).get("protocol"))
-    def feats(field: String): Seq[String] = node.toSeq.flatMap { n =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      Option(n.get(field)).foreach { arr =>
-        val it = arr.elements()
-        while (it.hasNext) out += it.next().asText()
-      }
-      out.toSeq
-    }
-    val rf = feats("readerFeatures")
-    if (rf.contains("deletionVectors")) Nil
-    else {
-      val nrf = (rf :+ "deletionVectors").distinct
-      val nwf = (feats("writerFeatures") :+ "deletionVectors").distinct
-      Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-        s""""readerFeatures":[${nrf.map(jstr).mkString(",")}],""" +
-        s""""writerFeatures":[${nwf.map(jstr).mkString(",")}]}}""")
-    }
+    Some(DvMark(table, snap, tagged, version, protocol,
+      retire(bitmaps.map(_._1)), adds))
   }
 
   /** Z85 needs 4-byte alignment; the roaring array parser reads only
@@ -1272,12 +1133,6 @@ object DeltaWriter {
   private def pad4(bytes: Array[Byte]): Array[Byte] =
     if (bytes.length % 4 == 0) bytes
     else bytes ++ new Array[Byte](4 - bytes.length % 4)
-
-  private[sources] def dvJson(dv: DeltaReader.DvDescriptor): String =
-    s"""{"storageType":${jstr(dv.storageType)},""" +
-      s""""pathOrInlineDv":${jstr(dv.pathOrInlineDv)},""" +
-      s""""offset":${dv.offset},"sizeInBytes":${dv.sizeInBytes},""" +
-      s""""cardinality":${dv.cardinality}}"""
 
   /** UPDATE … SET … WHERE: apply `set` expressions to every row
     * matching `predicate`, copy-on-write at file granularity like
@@ -1316,14 +1171,7 @@ object DeltaWriter {
       .select("__source_file").distinct()
       .collect().map(_.getString(0)).toSet
     if (touched.isEmpty) return version - 1 // nothing matches: no commit
-    val root = table.getAbsolutePath
-    def absPath(rel: String): String =
-      DeltaReader.resolved(root, DeltaReader.decodePath(rel))
-    val removedAdds = snap.files.filter(a =>
-      touched.exists(t => new java.net.URI(t).getPath == absPath(a.path)))
-    require(removedAdds.length == touched.size,
-      s"internal: ${touched.size} touched files resolved to " +
-        s"${removedAdds.length} add actions")
+    val removedAdds = touchedAdds(snap, table, touched)
     val rewritten = tagged
       .join(broadcast(touched.toSeq.toDF("__source_file")),
         Seq("__source_file"), "left_semi")
@@ -1349,7 +1197,7 @@ object DeltaWriter {
     // the verb knows the exact matched rows — when the table declares
     // a CDF consumer ([[cdfEnabled]]), publish them as delta's own
     // update images ([[stageCdcFiles]]) in the same commit
-    val cdcLines = if (!cdfEnabled(snap)) Nil else {
+    val cdcFiles = if (!cdfEnabled(snap)) Nil else {
       val matched = tagged.filter(predicate)
         .drop("__source_file", "__row_index")
       val matchedPre = matched
@@ -1368,10 +1216,7 @@ object DeltaWriter {
             matchedPost.withColumn("_change_type", lit("update_postimage"))),
         table, version, snap)
     }
-    val removes = removedAdds.map(a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-        s"""${System.currentTimeMillis()},"dataChange":true}}""")
-    publishOptimistic(table, version, cdcLines ++ removes ++ adds,
+    publishOptimistic(table, version, cdcFiles ++ retire(removedAdds) ++ adds,
       operation = "UPDATE")
   }
 
@@ -1396,60 +1241,34 @@ object DeltaWriter {
     val df = applyGenerated(rawDf, tablePath, version, Map.empty)
     validateAgainstTable(df, tablePath, partitionBy, version,
       generatedToCheck = Some(rawDf.columns.toSet))
-    val (removes, phys, fids) =
-      if (version == 0L)
-        (Nil, Map.empty[String, String], Map.empty[String, Long])
-      else {
-        val snap = DeltaReader.snapshot(df.sparkSession, tablePath)
-        (snap.files.map(a =>
-          s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-            s"""${System.currentTimeMillis()},"dataChange":true}}"""),
-          snap.physicalNames, snap.fieldIds)
-      }
-    val (staged, stagedBy) = toPhysical(df, phys, fids, partitionBy)
+    val snap =
+      if (version == 0L) None
+      else Some(DeltaReader.snapshot(df.sparkSession, tablePath))
+    val (staged, stagedBy) = toPhysical(df,
+      snap.fold(Map.empty[String, String])(_.physicalNames),
+      snap.fold(Map.empty[String, Long])(_.fieldIds), partitionBy)
     val adds = stageDataFiles(staged, table, version, stagedBy)
     // a non-create overwrite carrying properties re-emits the latest
     // metaData with the patched configuration IN THIS commit
-    val metaPatch =
-      if (properties.isEmpty || version == 0L) Nil
-      else Seq(patchedMetaLine(df.sparkSession, tablePath, properties))
+    val metaPatch = snap.filter(_ => properties.nonEmpty).map(s =>
+      s.metadata.copy(configuration = s.configuration ++ properties))
     publishOptimistic(table, version,
       header(df, partitionBy, version, extraProps = properties) ++
-        metaPatch ++ removes ++ adds)
-  }
-
-  /** The table's latest metaData line with `props` merged into its
-    * configuration — the INLINE spelling of [[patchMetaData]] for verbs
-    * that must publish the patch atomically with other actions. */
-  private def patchedMetaLine(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, props: Map[String, String]): String = {
-    val (_, metaRaw, _) = carryActions(spark,
-      new File(tablePath, "_delta_log"), tablePath)
-    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = jackson.readTree(metaRaw)
-    val meta = root.get("metaData")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val cfg = meta.get("configuration") match {
-      case o: com.fasterxml.jackson.databind.node.ObjectNode => o
-      case _ => meta.putObject("configuration")
-    }
-    props.foreach { case (k, v) => cfg.put(k, v) }
-    jackson.writeValueAsString(root)
+        metaPatch ++ snap.toSeq.flatMap(s => retire(s.files)) ++ adds)
   }
 
   /** Write a classic single-part checkpoint parquet for the CURRENT
     * version plus `_last_checkpoint`, so log replay of a long-lived
     * table starts from one parquet scan instead of replaying every JSON
     * commit (the reader's checkpoint path, exercised from the producing
-    * side). Protocol, metaData, and the per-appId `txn` ledger are
-    * carried over from the surviving JSON commits (verbatim lines,
-    * preserving table id/configuration), falling back to the newest
-    * existing checkpoint for records that log cleanup already removed —
-    * so repeated checkpoint→cleanup cycles lose nothing; file actions
-    * are re-emitted from the replayed snapshot with
-    * `dataChange:false`. Remove tombstones are not carried (fine for
-    * readers of the latest version; a concurrent-vacuum coordination
-    * protocol is out of scope). Returns the checkpointed version.
+    * side). Protocol, metaData, files and version come from ONE
+    * snapshot; the per-appId `txn` ledger from [[DeltaReader.txns]]
+    * (retained JSON commits plus the newest checkpoint), so repeated
+    * checkpoint→cleanup cycles lose nothing ([[checkpointActions]]).
+    * File actions are re-emitted with `dataChange:false`. Remove
+    * tombstones are not carried (fine for readers of the latest
+    * version; a concurrent-vacuum coordination protocol is out of
+    * scope). Returns the checkpointed version.
     *
     * `parts > 1` writes the delta spec's MULTI-PART layout
     * (`v.checkpoint.<part>.<of>.parquet`, indices 1..of) — the shape a
@@ -1466,24 +1285,18 @@ object DeltaWriter {
   def checkpoint(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, parts: Int = 1): Long = {
     import spark.implicits._
+    require(parts >= 1, s"parts must be >= 1, got $parts")
     val table = new File(tablePath)
     val logDir = new File(table, "_delta_log")
-    val version = nextVersion(table) - 1
-    require(version >= 0L, s"no commits to checkpoint at $tablePath")
-    val (protoLine, metaLine, txnLines) =
-      carryActions(spark, logDir, tablePath)
-    val proto = Some(protoLine)
-    val meta = Some(metaLine)
-    val txns = txnLines
     val snap = DeltaReader.snapshot(spark, tablePath)
+    val version = snap.version
     // a DV'd file MUST re-emit its descriptor (a checkpoint that
     // dropped it would silently resurrect the deleted rows), and tags
     // carry through too (incremental z-order recognizes its outputs by
     // them; losing the tag across a checkpoint would re-churn every
     // optimized file on the next pass)
-    val adds = snap.files.map(a => addJson(a, dataChange = false))
-    require(parts >= 1, s"parts must be >= 1, got $parts")
-    val lines = Seq(proto.get, meta.get) ++ txns ++ adds
+    val lines = (checkpointActions(spark, tablePath, snap) ++
+      snap.files.map(_.copy(dataChange = false))).map(DeltaActions.write)
     // parquet of action rows (schema from the JSON lines, the same
     // layout the reader's checkpoint replay scans) — one file for the
     // classic layout, a round-robin shard set for multi-part
@@ -1509,11 +1322,8 @@ object DeltaWriter {
       }
     }
     delete(tmp)
-    val partsField =
-      if (parts == 1) "" else s""","parts":${written.length}"""
-    Files.write(new File(logDir, "_last_checkpoint").toPath,
-      s"""{"version":$version,"size":${lines.length}$partsField}"""
-        .getBytes(StandardCharsets.UTF_8))
+    DeltaActions.writeLastCheckpoint(logDir, LastCheckpoint(version,
+      lines.length, Some(written.length).filter(_ => parts > 1)))
     version
   }
 
@@ -1547,14 +1357,7 @@ object DeltaWriter {
       // DV sidecars referenced by any LIVE descriptor stay; a .bin left
       // behind once a compaction/rewrite absorbed its vectors is dead
       snapFiles.flatMap(_.deletionVector)
-        .filter(_.storageType == "u").map { dv =>
-          val enc = dv.pathOrInlineDv
-          val (prefix, uuidPart) = enc.splitAt(enc.length - 20)
-          val bb = java.nio.ByteBuffer.wrap(Z85.decode(uuidPart))
-          val uuid = new java.util.UUID(bb.getLong, bb.getLong)
-          val name = s"deletion_vector_$uuid.bin"
-          if (prefix.isEmpty) name else s"$prefix/$name"
-        }
+        .filter(_.storageType == "u").map(_.relativeFile)
     // tombstone timestamps from the surviving JSON commits (an orphan
     // from a lost commit race has none — its mtime stands in); the same
     // scan collects live CHANGE DATA references — a `_change_data/` cdc
@@ -1562,25 +1365,18 @@ object DeltaWriter {
     // that bounds loadChangeFeed's replayability: once log cleanup
     // removes the commit, the feed refuses the window and the file is
     // sweepable)
-    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
     val tombstoned = scala.collection.mutable.Map.empty[String, Long]
     val cdcLive = scala.collection.mutable.Set.empty[String]
-    Option(new File(table, "_delta_log").listFiles())
-      .getOrElse(Array.empty[File])
-      .filter(_.getName.matches("\\d{20}\\.json")).foreach { f =>
-        new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-          .split('\n').foreach { l =>
-            if (l.contains("\"remove\""))
-              Option(jackson.readTree(l).get("remove")).foreach { r =>
-                tombstoned(DeltaReader.decodePath(r.get("path").asText())) =
-                  Option(r.get("deletionTimestamp")).map(_.asLong())
-                    .getOrElse(0L)
-              }
-            if (l.contains("\"cdc\""))
-              Option(jackson.readTree(l).get("cdc")).foreach(c =>
-                cdcLive += DeltaReader.decodePath(c.get("path").asText()))
-          }
+    val logDir = new File(table, "_delta_log")
+    DeltaActions.listLog(logDir).commits.foreach { v =>
+      DeltaActions.readCommit(logDir, v).foreach {
+        case r: RemoveFile =>
+          tombstoned(DeltaReader.decodePath(r.path)) =
+            r.deletionTimestamp.getOrElse(0L)
+        case c: AddCDCFile => cdcLive += DeltaReader.decodePath(c.path)
+        case _ =>
       }
+    }
     val horizon = System.currentTimeMillis() - retainMs
     // scale-safe listing shared with COPY INTO ([[walkScalably]]): the
     // walk carries each file's mtime, so the orphan-horizon check below
@@ -1633,7 +1429,7 @@ object DeltaWriter {
       .filter(f => f.isDirectory && f.getName.startsWith(".stage-") &&
         f.lastModified() <= horizon)
       .foreach(delete)
-    Option(new File(table, "_delta_log").listFiles())
+    Option(logDir.listFiles())
       .getOrElse(Array.empty[File])
       .filter(f => f.getName.startsWith(".tmp-") &&
         f.lastModified() <= horizon)
@@ -1675,33 +1471,16 @@ object DeltaWriter {
       .getOrElse(30L * 24 * 3600 * 1000)
     require(window >= 0L, s"negative retention window: $window ms")
     val horizon = System.currentTimeMillis() - window
-    val entries = Option(logDir.listFiles()).getOrElse(Array.empty[File])
-      .map(_.getName)
     // newest COMPLETE checkpoint in any layout (classic single-file,
-    // multi-part with the full 1..of part set, V2 uuid) — the same
-    // completeness rules the reader's replay applies
-    val single = entries.collect {
-      case n if n.matches("\\d{20}\\.checkpoint\\.parquet") =>
-        n.take(20).toLong
-    }
-    val MultiCp = "(\\d{20})\\.checkpoint\\.(\\d{10})\\.(\\d{10})\\.parquet".r
-    val multi = entries.flatMap {
-      case MultiCp(v, part, of) =>
-        scala.util.Try((v.toLong, part.toInt, of.toInt)).toOption
-      case _ => None
-    }.groupBy(t => (t._1, t._3)).collect {
-      case ((v, of), xs) if xs.map(_._2).toSet == (1 to of).toSet => v
-    }
-    val UuidCp = ("(\\d{20})\\.checkpoint\\.([0-9a-fA-F]{8}-[0-9a-fA-F]{4}" +
-      "-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12})\\.(parquet|json)").r
-    val uuid = entries.collect { case UuidCp(v, _, _) => v.toLong }
-    (single ++ multi ++ uuid).maxOption match {
+    // multi-part with the full 1..of part set, V2 uuid) — the listing
+    // the reader's replay uses
+    DeltaActions.listLog(logDir).newestCheckpoint() match {
       case None => Nil // nothing is safely removable without a checkpoint
       case Some(newestCp) =>
         val expired = DeltaReader.commitHistory(tablePath)
           .takeWhile { case (v, ts, _) => v <= newestCp && ts <= horizon }
         expired.map { case (v, _, _) =>
-          val f = new File(logDir, f"$v%020d.json")
+          val f = DeltaActions.commitFile(logDir, v)
           f.delete()
           f.getName
         }
@@ -1795,11 +1574,8 @@ object DeltaWriter {
     // action carries dataChange=false and the CDC feeds skip the commit
     val adds = stageLogical(clustered, snap, table, version,
       dataChange = false)
-    val removes = targetFiles.map(a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-        s"""${System.currentTimeMillis()},"dataChange":false}}""")
-    publishOptimistic(table, version, removes ++ adds,
-      operation = "OPTIMIZE")
+    publishOptimistic(table, version,
+      retire(targetFiles, dataChange = false) ++ adds, operation = "OPTIMIZE")
   }
 
   /** `OPTIMIZE … ZORDER BY (x, y)`: rewrite the table's live rows
@@ -1874,11 +1650,8 @@ object DeltaWriter {
     // dataChange=false throughout, so the CDC feeds skip it
     val adds = stageLogical(clustered, snap, table, version,
       tags = ZOrderedTag, dataChange = false)
-    val removes = snap.files.map(a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-        s"""${System.currentTimeMillis()},"dataChange":false}}""")
-    publishOptimistic(table, version, removes ++ adds,
-      operation = "OPTIMIZE")
+    publishOptimistic(table, version,
+      retire(snap.files, dataChange = false) ++ adds, operation = "OPTIMIZE")
   }
 
   /** INCREMENTAL z-order maintenance — the steady-state loop that keeps
@@ -1938,7 +1711,7 @@ object DeltaWriter {
     // written stats and file columns are keyed by PHYSICAL names under
     // column mapping; the caller speaks logical
     def phys(n: String): String = snap.physicalNames.getOrElse(n, n)
-    def bound(a: DeltaReader.AddFile, field: String,
+    def bound(a: AddFile, field: String,
         wantMax: Boolean): Option[Long] =
       a.stats.flatMap(DeltaStats.parse).flatMap { st =>
         (if (wantMax) st.maxValues else st.minValues).get(field)
@@ -1946,7 +1719,7 @@ object DeltaWriter {
       }
     // per file: per-dim (min, max), present only when EVERY dim has
     // usable stats
-    val bounds: Seq[(DeltaReader.AddFile, Option[Seq[(Long, Long)]])] =
+    val bounds: Seq[(AddFile, Option[Seq[(Long, Long)]])] =
       snap.files.map { a =>
         val bs = cols.map(c => for {
           lo <- bound(a, phys(c), wantMax = false)
@@ -1957,13 +1730,13 @@ object DeltaWriter {
     val knownAll = bounds.flatMap(_._2)
     require(knownAll.nonEmpty,
       "no usable column stats on any file — run the full optimizeZOrder")
-    def optimized(a: DeltaReader.AddFile): Boolean =
+    def optimized(a: AddFile): Boolean =
       a.tags.get("optimized").contains("zorder")
     // loose detection runs PER HIVE PARTITION tuple — each dir is its
     // own key space (the full verb clusters each independently), so a
     // file tight within its dir must not be flagged against the global
     // range and vice versa
-    val loose: Seq[DeltaReader.AddFile] =
+    val loose: Seq[AddFile] =
       bounds.groupBy(_._1.partitionValues).values.flatMap { grp =>
         val known = grp.flatMap(_._2)
         if (known.isEmpty) grp.map(_._1).filterNot(optimized)
@@ -1985,7 +1758,7 @@ object DeltaWriter {
         "optimizeZOrder/compact (they read through DV filtering)")
     val version = nextVersion(table)
     val root = table.getAbsolutePath
-    def absOf(a: DeltaReader.AddFile): String =
+    def absOf(a: AddFile): String =
       DeltaReader.resolved(root, DeltaReader.decodePath(a.path))
     val partSet = snap.partitionColumns.toSet
     val dataFields = snap.schema.fields.toIndexedSeq
@@ -2036,11 +1809,8 @@ object DeltaWriter {
       .drop("__z")
     val adds = stageLogical(clustered, snap, table, version,
       tags = ZOrderedTag, dataChange = false)
-    val removes = loose.map(a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-        s"""${System.currentTimeMillis()},"dataChange":false}}""")
-    publishOptimistic(table, version, removes ++ adds,
-      operation = "OPTIMIZE")
+    publishOptimistic(table, version,
+      retire(loose, dataChange = false) ++ adds, operation = "OPTIMIZE")
   }
 
   /** Add-action tag both z-order verbs stamp on their outputs (and
@@ -2048,13 +1818,11 @@ object DeltaWriter {
     * convergence marker. */
   private val ZOrderedTag = Map("optimized" -> "zorder")
 
-  /** The carry-forward record set every checkpoint layout must re-emit:
-    * the last protocol/metaData lines (newest-existing-checkpoint seed
-    * first — after log cleanup it may hold the ONLY surviving records —
-    * then the JSON scan overrides with anything newer) and the last txn
-    * line PER appId (the exactly-once producer ledger must survive the
-    * log cleanup a checkpoint enables). Shared by [[checkpoint]] and
-    * [[checkpointV2]].
+  /** The non-file actions every checkpoint layout must carry: the
+    * snapshot's protocol and metaData, and the txn ledger
+    * ([[DeltaReader.txns]] — the exactly-once producer ledger must
+    * survive the log cleanup a checkpoint enables). Shared by
+    * [[checkpoint]] and [[checkpointV2]].
     *
     * TXN RETENTION (`delta.setTransactionRetentionDuration`): without a
     * bound, a landing pipeline's per-file [[copyInto]] ledger grows one
@@ -2070,72 +1838,17 @@ object DeltaWriter {
     * operator's promise about maximum redelivery lag. Entries without
     * a `lastUpdated` stamp are undatable and are carried forever
     * (delta's posture); absent the property nothing expires. */
-  private def carryActions(spark: org.apache.spark.sql.SparkSession,
-      logDir: File, tablePath: String): (String, String, Seq[String]) = {
-    var proto: Option[String] = None
-    var meta: Option[String] = None
-    // appId → (txn line, lastUpdated stamp if the entry carries one)
-    val txns = scala.collection.mutable.LinkedHashMap
-      .empty[String, (String, Option[Long])]
-    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
-    newestCheckpointFrame(spark, logDir).foreach { df =>
-      def carry(field: String): Option[String] =
-        if (!df.columns.contains(field)) None
-        else df.filter(col(field).isNotNull)
-          .select(to_json(struct(col(field)))).collect()
-          .headOption.map(_.getString(0))
-      proto = carry("protocol").orElse(proto)
-      meta = carry("metaData").orElse(meta)
-      if (df.columns.contains("txn")) {
-        // lastUpdated may be absent from an older checkpoint's schema
-        val hasLu = df.schema("txn").dataType match {
-          case s: StructType => s.fieldNames.contains("lastUpdated")
-          case _ => false
-        }
-        val luCol = if (hasLu) col("txn.lastUpdated")
-                    else lit(null).cast("long")
-        df.select(col("txn.appId"), col("txn.version"), luCol).collect()
-          .foreach { r =>
-            if (!r.isNullAt(0) && !r.isNullAt(1)) {
-              val lu = if (r.isNullAt(2)) None else Some(r.getLong(2))
-              val luPart = lu.map(v => s""","lastUpdated":$v""").getOrElse("")
-              txns(r.getString(0)) =
-                (s"""{"txn":{"appId":${jstr(r.getString(0))},""" +
-                  s""""version":${r.getLong(1)}$luPart}}""", lu)
-            }
-          }
-      }
-    }
-    Option(logDir.listFiles()).getOrElse(Array.empty[File])
-      .filter(_.getName.matches("\\d{20}\\.json")).sortBy(_.getName)
-      .foreach { f =>
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().foreach { l =>
-          if (l.contains("\"protocol\"")) proto = Some(l)
-          if (l.contains("\"metaData\"")) meta = Some(l)
-          if (l.contains("\"txn\""))
-            Option(jackson.readTree(l).get("txn")).foreach(t =>
-              txns(t.get("appId").asText()) =
-                (l, Option(t.get("lastUpdated")).filterNot(_.isNull)
-                  .map(_.asLong())))
-        } finally src.close()
-      }
-    require(proto.nonEmpty && meta.nonEmpty,
-      s"protocol/metaData not found in $tablePath's JSON commits or " +
-        "its newest checkpoint — not a replayable delta log")
-    val retention = Option(jackson.readTree(meta.get)
-        .path("metaData").path("configuration")
-        .get("delta.setTransactionRetentionDuration"))
-      .filterNot(_.isNull).map(n => parseRetention(n.asText()))
-    val kept = retention match {
-      case None => txns.values.map(_._1).toSeq
+  private def checkpointActions(spark: org.apache.spark.sql.SparkSession,
+      tablePath: String, snap: DeltaReader.Snapshot): Seq[Action] = {
+    val ledger = DeltaReader.txns(spark, tablePath).values.toSeq
+    val kept = snap.configuration.get("delta.setTransactionRetentionDuration")
+      .map(parseRetention) match {
+      case None => ledger
       case Some(windowMs) =>
         val horizon = System.currentTimeMillis() - windowMs
-        txns.values.collect {
-          case (line, lu) if lu.forall(_ > horizon) => line
-        }.toSeq
+        ledger.filter(_.lastUpdated.forall(_ > horizon))
     }
-    (proto.get, meta.get, kept)
+    Seq(snap.protocol, snap.metadata) ++ kept
   }
 
   /** V2 (UUID-named) checkpoint with SIDECAR file actions — the layout
@@ -2147,19 +1860,17 @@ object DeltaWriter {
     * writer maintains can hand its snapshot to any v2-capable reader
     * in the layout those readers shard best. The sidecar shard write
     * is one distributed pass (round-robin over `sidecars` files); adds
-    * carry stats/DV descriptors/tags through [[addJson]] exactly like
-    * the classic layout. */
+    * carry stats/DV descriptors/tags exactly like the classic layout. */
   def checkpointV2(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, sidecars: Int = 2): Long = {
     import spark.implicits._
     require(sidecars >= 1, s"sidecars must be >= 1, got $sidecars")
     val table = new File(tablePath)
     val logDir = new File(table, "_delta_log")
-    val version = nextVersion(table) - 1
-    require(version >= 0L, s"no commits to checkpoint at $tablePath")
-    val (proto, meta, txns) = carryActions(spark, logDir, tablePath)
     val snap = DeltaReader.snapshot(spark, tablePath)
-    val addLines = snap.files.map(a => addJson(a, dataChange = false))
+    val version = snap.version
+    val addLines =
+      snap.files.map(a => DeltaActions.write(a.copy(dataChange = false)))
     val scDir = new File(logDir, "_sidecars")
     scDir.mkdirs()
     val sidecarActions =
@@ -2174,13 +1885,13 @@ object DeltaWriter {
           val name = s"${java.util.UUID.randomUUID()}.parquet"
           val dest = new File(scDir, name)
           Files.move(f.toPath, dest.toPath)
-          s"""{"sidecar":{"path":"$name","sizeInBytes":${dest.length()},""" +
-            s""""modificationTime":${dest.lastModified()}}}"""
+          Sidecar(name, dest.length(), dest.lastModified())
         }
         delete(tmp)
         moved
       }
-    val lines = Seq(proto, meta) ++ txns ++ sidecarActions
+    val lines = (checkpointActions(spark, tablePath, snap) ++ sidecarActions)
+      .map(DeltaActions.write)
     val dest = new File(logDir,
       f"$version%020d.checkpoint.${java.util.UUID.randomUUID()}.json")
     Files.write(dest.toPath,
@@ -2191,31 +1902,9 @@ object DeltaWriter {
     // (ADVICE r15: engines validate size against the manifest; sidecar
     // CONTENTS are sized by their own sizeInBytes fields, and this
     // engine's reader discovers checkpoints by listing, never by size)
-    Files.write(new File(logDir, "_last_checkpoint").toPath,
-      s"""{"version":$version,"size":${lines.length}}"""
-        .getBytes(StandardCharsets.UTF_8))
+    DeltaActions.writeLastCheckpoint(logDir,
+      LastCheckpoint(version, lines.length))
     version
-  }
-
-  /** Serialize a live [[DeltaReader.AddFile]] back to its add-action
-    * line, every field carried (partitionValues, stats, DV descriptor,
-    * tags) — shared by [[checkpoint]] (dataChange=false) and
-    * [[restore]] (dataChange=true). */
-  private def addJson(a: DeltaReader.AddFile, dataChange: Boolean): String = {
-    val pvJ = a.partitionValues.map {
-      case (k, Some(v)) => s"${jstr(k)}:${jstr(v)}"
-      case (k, None) => s"${jstr(k)}:null"
-    }.mkString("{", ",", "}")
-    val statsPart = a.stats.map(s => s""","stats":${jstr(s)}""").getOrElse("")
-    val dvPart = a.deletionVector.map(dv => s""","deletionVector":""" +
-      dvJson(dv)).getOrElse("")
-    val tagsPart =
-      if (a.tags.isEmpty) ""
-      else s""","tags":${a.tags.map { case (k, v) =>
-        s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")}"""
-    s"""{"add":{"path":"${a.path}","partitionValues":$pvJ,""" +
-      s""""size":${a.size},"modificationTime":0,""" +
-      s""""dataChange":$dataChange$statsPart$dvPart$tagsPart}}"""
   }
 
   /** `RESTORE TABLE … TO VERSION AS OF v`: one atomic commit that makes
@@ -2245,15 +1934,13 @@ object DeltaWriter {
     require(old.schema == cur.schema,
       "restore across a schema change is refused (columns would be " +
         "silently dropped/retyped) — evolve first, then restore data")
-    val curByPath = cur.files.map(a => a.path -> a).toMap
-    val oldPaths = old.files.map(_.path).toSet
-    // a path live in BOTH snapshots can still differ — a deletion
-    // vector added after `version` must be rolled back by re-emitting
-    // the OLD add action (the newest add for a path wins at replay)
-    val toAdd = old.files.filter(a =>
-      !curByPath.contains(a.path) ||
-        curByPath(a.path).deletionVector != a.deletionVector)
-    val toRemove = cur.files.filterNot(a => oldPaths.contains(a.path))
+    // files are (path, DV) keyed: a path live in BOTH snapshots under
+    // different vectors (a DV delete after `version`) is a remove of the
+    // current vector plus a re-add of the old one
+    val curKeys = cur.files.map(_.key).toSet
+    val oldKeys = old.files.map(_.key).toSet
+    val toAdd = old.files.filterNot(a => curKeys(a.key))
+    val toRemove = cur.files.filterNot(a => oldKeys(a.key))
     val missing = toAdd.map(_.path).filterNot(rel =>
       new File(DeltaReader.resolved(table.getAbsolutePath,
         DeltaReader.decodePath(rel))).isFile)
@@ -2263,11 +1950,8 @@ object DeltaWriter {
         (if (missing.size > 5) s" (+${missing.size - 5} more)" else ""))
     val newVersion = nextVersion(table)
     if (toAdd.isEmpty && toRemove.isEmpty) return newVersion - 1 // no-op
-    val removes = toRemove.map(a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":""" +
-        s"""${System.currentTimeMillis()},"dataChange":true}}""")
     publishOptimistic(table, newVersion,
-      removes ++ toAdd.map(a => addJson(a, dataChange = true)),
+      retire(toRemove) ++ toAdd.map(_.copy(dataChange = true)),
       operation = "RESTORE")
   }
 
@@ -2276,11 +1960,11 @@ object DeltaWriter {
     * snapshot BY ABSOLUTE PATH — zero bytes copied, the delta
     * protocol's allowance that an add's `path` may be absolute (every
     * scan site resolves through [[DeltaReader.resolved]]). The clone
-    * carries the source's protocol and metaData VERBATIM (schema,
-    * partitioning, column mapping, CHECK constraints, properties —
-    * the raw action lines, not a re-derivation) under a FRESH table
-    * id, with stats and tags riding on every add, so file skipping
-    * and incremental z-order admit/skip work on the clone from birth.
+    * carries the source snapshot's protocol and metaData (schema,
+    * partitioning, column mapping, CHECK constraints, properties)
+    * under a FRESH table id, with stats and tags riding on every add,
+    * so file skipping and incremental z-order admit/skip work on the
+    * clone from birth.
     * From version 0 the histories diverge independently:
     *
     *  - writes to the clone land relative files in its OWN dir;
@@ -2315,12 +1999,6 @@ object DeltaWriter {
       case Some(v) => DeltaReader.snapshotAt(spark, sourcePath, v)
       case None => DeltaReader.snapshot(spark, sourcePath)
     }
-    val (proto, metaRaw) = cloneCarry(spark, srcTable, sourcePath, versionAsOf)
-    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
-    val metaRoot = jackson.readTree(metaRaw)
-    metaRoot.get("metaData")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      .put("id", java.util.UUID.randomUUID().toString)
     val srcRoot = srcTable.getAbsolutePath
     // readers decode add paths with URLDecoder, which rewrites both
     // %XX escapes AND '+' (→ space) — a root containing either would
@@ -2344,70 +2022,24 @@ object DeltaWriter {
           // re-address the table-relative sidecar absolutely: same
           // [version byte][size][data][crc] layout, same offset — the
           // "p" read path slices identically
-          val enc = d.pathOrInlineDv
-          val (prefix, uuidPart) = enc.splitAt(enc.length - 20)
-          val bb = java.nio.ByteBuffer.wrap(Z85.decode(uuidPart))
-          val uuid = new java.util.UUID(bb.getLong, bb.getLong)
-          val dir = if (prefix.isEmpty) srcRoot else s"$srcRoot/$prefix"
           d.copy(storageType = "p",
-            pathOrInlineDv = s"$dir/deletion_vector_$uuid.bin")
+            pathOrInlineDv = s"$srcRoot/${d.relativeFile}")
         case d => d
       }
-      addJson(a.copy(path = abs, deletionVector = dv), dataChange = true)
+      a.copy(path = abs, deletionVector = dv, dataChange = true)
     }
-    publish(table, 0L,
-      proto +: jackson.writeValueAsString(metaRoot) +: adds, "CLONE")
+    publish(table, 0L, cloneHeader(snap) ++ adds, "CLONE")
     0L
   }
 
-  /** The protocol + metaData action lines a clone's version 0 carries
-    * VERBATIM from its source — current head via [[carryActions]], or
-    * AS OF `versionAsOf` (a later schema evolution or property change
-    * does not belong to the cloned state): last lines at-or-below v
-    * among the RETAINED JSON commits, falling back to any checkpoint
-    * at c ≤ v (which cannot carry metadata postdating v); a horizon
-    * wholly above v refuses naming the cleanup instead of cloning a
-    * chimera. Shared by [[cloneShallow]] and [[cloneDeep]]. */
-  private def cloneCarry(spark: org.apache.spark.sql.SparkSession,
-      srcTable: File, sourcePath: String,
-      versionAsOf: Option[Long]): (String, String) = versionAsOf match {
-    case None =>
-      val (p, m, _) =
-        carryActions(spark, new File(srcTable, "_delta_log"), sourcePath)
-      (p, m)
-    case Some(v) =>
-      var proto: Option[String] = None
-      var meta: Option[String] = None
-      Option(new File(srcTable, "_delta_log").listFiles())
-        .getOrElse(Array.empty[File])
-        .filter(_.getName.matches("\\d{20}\\.json"))
-        .filter(_.getName.take(20).toLong <= v).sortBy(_.getName)
-        .foreach { f =>
-          val s = scala.io.Source.fromFile(f, "UTF-8")
-          try s.getLines().foreach { l =>
-            if (l.contains("\"protocol\"")) proto = Some(l)
-            if (l.contains("\"metaData\"")) meta = Some(l)
-          } finally s.close()
-        }
-      if (proto.isEmpty || meta.isEmpty)
-        newestCheckpointFrame(spark,
-          new File(srcTable, "_delta_log"), Some(v)).foreach { df =>
-          def carry(field: String): Option[String] =
-            if (!df.columns.contains(field)) None
-            else df.filter(col(field).isNotNull)
-              .select(to_json(struct(col(field)))).collect()
-              .headOption.map(_.getString(0))
-          if (proto.isEmpty) proto = carry("protocol")
-          if (meta.isEmpty) meta = carry("metaData")
-        }
-      require(proto.nonEmpty && meta.nonEmpty,
-        s"clone: protocol/metaData at-or-below version $v are " +
-          s"no longer in $sourcePath's retained JSON commits or any " +
-          "checkpoint at-or-below it (log-retention cleanup) — clone " +
-          "the current version, or a version at or past the retained " +
-          "horizon")
-      (proto.get, meta.get)
-  }
+  /** The protocol and metaData a clone's version 0 carries from the
+    * cloned source snapshot (current head, or AS OF a version — a later
+    * schema evolution or property change does not belong to the cloned
+    * state), under a FRESH table id. Shared by [[cloneShallow]] and
+    * [[cloneDeep]]. */
+  private def cloneHeader(snap: DeltaReader.Snapshot): Seq[Action] =
+    Seq(snap.protocol,
+      snap.metadata.copy(id = java.util.UUID.randomUUID().toString))
 
   /** DEEP CLONE: create a NEW table at `tablePath` whose version-0
     * commit references physical COPIES of every live file of the
@@ -2444,12 +2076,6 @@ object DeltaWriter {
       case Some(v) => DeltaReader.snapshotAt(spark, sourcePath, v)
       case None => DeltaReader.snapshot(spark, sourcePath)
     }
-    val (proto, metaRaw) = cloneCarry(spark, srcTable, sourcePath, versionAsOf)
-    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
-    val metaRoot = jackson.readTree(metaRaw)
-    metaRoot.get("metaData")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      .put("id", java.util.UUID.randomUUID().toString)
     val srcRoot = srcTable.getAbsolutePath
     // copy plan (srcAbsolute → cloneRelative, both DECODED spellings) +
     // the re-addressed adds. Relative source adds keep their relative
@@ -2471,12 +2097,7 @@ object DeltaWriter {
           // sidecar rides under the same relative spelling — copy it,
           // keep the descriptor verbatim (offsets into the copied
           // bytes are unchanged)
-          val enc = d.pathOrInlineDv
-          val (prefix, uuidPart) = enc.splitAt(enc.length - 20)
-          val bb = java.nio.ByteBuffer.wrap(Z85.decode(uuidPart))
-          val uuid = new java.util.UUID(bb.getLong, bb.getLong)
-          val name = s"deletion_vector_$uuid.bin"
-          val rel = if (prefix.isEmpty) name else s"$prefix/$name"
+          val rel = d.relativeFile
           plan += ((s"$srcRoot/$rel", rel))
           d
         case d if d.storageType == "p" =>
@@ -2485,16 +2106,12 @@ object DeltaWriter {
           val binName = new File(d.pathOrInlineDv).getName
           val uuid = java.util.UUID.fromString(binName
             .stripPrefix("deletion_vector_").stripSuffix(".bin"))
-          val bbUuid = java.nio.ByteBuffer.allocate(16)
-          bbUuid.putLong(uuid.getMostSignificantBits)
-          bbUuid.putLong(uuid.getLeastSignificantBits)
           plan += ((d.pathOrInlineDv, binName))
           d.copy(storageType = "u",
-            pathOrInlineDv = Z85.encode(bbUuid.array()))
+            pathOrInlineDv = DvDescriptor.relativeId(uuid))
         case d => d // inline "i": the bitmap lives in the log line
       }
-      addJson(a.copy(path = destEnc, deletionVector = dv),
-        dataChange = true)
+      a.copy(path = destEnc, deletionVector = dv, dataChange = true)
     }
     // the distributed copy: executor-side byte movement (local-FS
     // spelling of a distcp; shared storage on a real cluster), the
@@ -2510,8 +2127,7 @@ object DeltaWriter {
           Files.copy(new File(src).toPath, dst.toPath,
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         }
-    publish(table, 0L,
-      proto +: jackson.writeValueAsString(metaRoot) +: adds, "CLONE")
+    publish(table, 0L, cloneHeader(snap) ++ adds, "CLONE")
     0L
   }
 
@@ -2576,59 +2192,15 @@ object DeltaWriter {
   def tableExists(tablePath: String): Boolean =
     nextVersion(new File(tablePath)) > 0L
 
-  /** All parquet files of the NEWEST checkpoint version in the log —
-    * classic single-file or multi-part — as one (schema-merged) frame;
-    * None when no checkpoint exists. The carry-forward fallback
-    * [[checkpoint]] and [[evolveSchema]] use for records that log
-    * cleanup already removed. (V2 UUID checkpoints are a read-side
-    * concern: this writer never emits them, and a table it maintains
-    * carries only its own layouts.) */
-  private def newestCheckpointFrame(
-      spark: org.apache.spark.sql.SparkSession,
-      logDir: File,
-      /** consider only checkpoints at-or-below this version — the
-        * as-of carry source [[cloneShallow]]'s time-travel clone reads
-        * (a checkpoint at c ≤ v cannot carry metadata postdating v). */
-      maxVersion: Option[Long] = None): Option[DataFrame] = {
-    val entries = Option(logDir.listFiles()).getOrElse(Array.empty[File])
-    val classic = entries.filter(_.getName.matches(
-      "\\d{20}\\.checkpoint(\\.\\d{10}\\.\\d{10})?\\.parquet"))
-    // V2 UUID checkpoints carry their protocol/metaData/txn INLINE in
-    // the top file (sidecars hold only file actions), so the top file
-    // alone is a valid carry source
-    val uuid = entries.filter(_.getName.matches(
-      "\\d{20}\\.checkpoint\\.[0-9a-fA-F-]{36}\\.(json|parquet)"))
-    (classic ++ uuid).map(_.getName.take(20))
-      .filter(v => maxVersion.forall(v.toLong <= _))
-      .sorted.lastOption.map { v =>
-      val uuidAtV = uuid.filter(_.getName.startsWith(v))
-      if (uuidAtV.nonEmpty) {
-        val top = uuidAtV.map(_.getAbsolutePath).min // deterministic pick
-        if (top.endsWith(".json")) spark.read.json(top)
-        else spark.read.option("mergeSchema", "true").parquet(top)
-      } else {
-        val parts = classic.filter(_.getName.startsWith(v))
-          .map(_.getAbsolutePath).toIndexedSeq
-        spark.read.option("mergeSchema", "true").parquet(parts: _*)
-      }
-    }
-  }
-
-  /** Next unclaimed log version (0 for a fresh table). Checkpoint files
+  /** Next unclaimed log version (0 for a fresh table). Checkpoints
     * count: after log cleanup deletes the JSON commits a checkpoint
     * covers, the version counter must continue from the checkpoint, not
     * restart at 0 (a restarted version would be silently IGNORED by
     * replay — the checkpoint-tail stitch only applies commits past the
     * checkpoint version). */
-  private def nextVersion(table: File): Long = {
-    val logDir = new File(table, "_delta_log")
-    val existing = Option(logDir.listFiles()).getOrElse(Array.empty[File])
-      .map(_.getName).collect {
-        case n if n.matches("\\d{20}\\.json") => n.take(20).toLong
-        case n if n.matches("\\d{20}\\.checkpoint\\..*") => n.take(20).toLong
-      }
-    if (existing.isEmpty) 0L else existing.max + 1
-  }
+  private def nextVersion(table: File): Long =
+    DeltaActions.listLog(new File(table, "_delta_log"))
+      .latestVersion.fold(0L)(_ + 1)
 
   /** GENERATED COLUMNS (delta's `delta.generationExpression` field
     * metadata): at CREATE the declared columns are COMPUTED by the
@@ -2816,8 +2388,8 @@ object DeltaWriter {
   }
 
   /** Stage `df`'s data files, move them into the table root and return
-    * the composed `add` action lines (nothing is committed yet — the
-    * caller owns the log line set and the publish). The write goes
+    * their `add` actions (nothing is committed yet — the caller owns the
+    * commit's action set and the publish). The write goes
     * through [[StatsParquetFormat]], so each file's stats are a
     * by-product of the write task that produced it: the move loop reads
     * them from the file's stats sidecar and deletes it, and no second
@@ -2825,7 +2397,7 @@ object DeltaWriter {
   private def stageDataFiles(df: DataFrame, table: File, version: Long,
       partitionBy: Seq[String],
       tags: Map[String, String] = Map.empty,
-      dataChange: Boolean = true): Seq[String] = {
+      dataChange: Boolean = true): Seq[AddFile] = {
     val spark = df.sparkSession
     // ---- stage + move the data files (uuid suffix: two writers racing
     // for the same version must not share — or sweep — a staging dir)
@@ -2979,7 +2551,7 @@ object DeltaWriter {
   /** Stage the exact row-level change images of a row-verb commit
     * (update / CoW delete / merge) as CHANGE DATA files under
     * `_change_data/` and return their `cdc`
-    * action lines — the delta protocol's change-data-feed mechanism:
+    * actions — the delta protocol's change-data-feed mechanism:
     * when a commit carries cdc actions they are the COMPLETE change
     * representation of that commit, and [[DeltaReader.loadChangeFeed]]
     * reads THEM instead of deriving events from the commit's file
@@ -3005,7 +2577,7 @@ object DeltaWriter {
     * replayability. `dataChange:false` per the delta spec (the
     * add/remove actions carry the state change). */
   private def stageCdcFiles(changes: DataFrame, table: File,
-      version: Long, snap: DeltaReader.Snapshot): Seq[String] = {
+      version: Long, snap: DeltaReader.Snapshot): Seq[AddCDCFile] = {
     val staging = new File(table,
       s".stage-cdc-$version-${java.util.UUID.randomUUID()}")
     if (staging.exists()) delete(staging)
@@ -3041,25 +2613,9 @@ object DeltaWriter {
       s"_change_data/$rel"
     }
     delete(staging)
-    moved.map { rel =>
-      // partitionValues from the hive dir segs (same parse as the add
-      // actions'): `_change_data/<pc=v>/…/part.parquet`
-      val segs = rel.split('/')
-      val pv = segs.drop(1).dropRight(1).map { seg =>
-        val i = seg.indexOf('=')
-        require(i > 0, s"unparseable cdc partition dir '$seg' under $rel")
-        val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(seg.drop(i + 1))
-        seg.take(i) ->
-          (if (raw == "__HIVE_DEFAULT_PARTITION__") None else Some(raw))
-      }
-      val pvJ = pv.map {
-        case (k, Some(v)) => s"${jstr(k)}:${jstr(v)}"
-        case (k, None) => s"${jstr(k)}:null"
-      }.mkString("{", ",", "}")
-      s"""{"cdc":{"path":"$rel","partitionValues":$pvJ,""" +
-        s""""size":${new File(table, rel).length()},"dataChange":false}}"""
-    }
+    // partitionValues from the hive dir segs (`_change_data/<pc=v>/…`)
+    moved.map(rel => AddCDCFile(rel, hivePartitionValues(rel.split('/').drop(1)),
+      new File(table, rel).length()))
   }
 
   /** Whether the table declares a CDF consumer
@@ -3123,8 +2679,8 @@ object DeltaWriter {
   private def relKey(rel: String): String =
     rel.replace(File.separatorChar, '/')
 
-  /** The composed `add` action lines for `rels` (table-relative parquet
-    * paths, already in place under `table`) from their per-file `stats`
+  /** The `add` actions for `rels` (table-relative parquet paths,
+    * already in place under `table`) from their per-file `stats`
     * (keyed by [[relKey]]). Shared by the staged-write path and
     * [[convertToDelta]] — the latter must not delete a user's zero-row
     * files, only skip referencing them. */
@@ -3132,14 +2688,12 @@ object DeltaWriter {
       stats: Map[String, FileStatsText],
       dataFields: Seq[org.apache.spark.sql.types.StructField],
       tags: Map[String, String], dataChange: Boolean,
-      deleteEmpties: Boolean): Seq[String] = {
-    val statFields = dataFields.filter(f => statWritable(f.dataType))
-    // ---- compose the commit. A zero-row file (absent from `stats` or
-    // counting no records) is dropped — Spark's writer emits one eagerly
-    // even when the task's partition filtered empty, which the
-    // copy-on-write verbs (merge/delete survivors) routinely produce.
-    // A zero-row add is pure log+scan overhead: delete the file, skip
-    // the action.
+      deleteEmpties: Boolean): Seq[AddFile] = {
+    // A zero-row file (absent from `stats` or counting no records) is
+    // dropped — Spark's writer emits one eagerly even when the task's
+    // partition filtered empty, which the copy-on-write verbs
+    // (merge/delete survivors) routinely produce. A zero-row add is pure
+    // log+scan overhead: delete the file, skip the action.
     def hasRows(rel: String): Boolean =
       stats.get(relKey(rel)).exists(_.numRecords > 0L)
     rels.filter { rel =>
@@ -3155,44 +2709,31 @@ object DeltaWriter {
     }.map { rel =>
       val f = new File(table, rel)
       val segs = relKey(rel).split('/')
-      val pv = segs.dropRight(1).map { seg =>
-        val i = seg.indexOf('=')
-        require(i > 0, s"unparseable partition dir '$seg' under $rel")
-        val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(seg.drop(i + 1))
-        seg.take(i) ->
-          (if (raw == "__HIVE_DEFAULT_PARTITION__") None else Some(raw))
-      }
-      val st = stats(relKey(rel))
-      def bounds(of: Map[String, String]): String = statFields.flatMap { sf =>
-        of.get(sf.name).map(v => s"${jstr(sf.name)}:${jsonVal(sf.dataType, v)}")
-      }.mkString(",")
-      val nullsJ = dataFields.map(sf =>
-        s"${jstr(sf.name)}:${st.nullCount(sf.name)}")
-      val statsJ =
-        s"""{"numRecords":${st.numRecords},""" +
-          s""""minValues":{${bounds(st.minValues)}},""" +
-          s""""maxValues":{${bounds(st.maxValues)}},""" +
-          s""""nullCount":{${nullsJ.mkString(",")}}}"""
-      val pvJ = pv.map {
-        case (k, Some(v)) => s"${jstr(k)}:${jstr(v)}"
-        case (k, None) => s"${jstr(k)}:null"
-      }.mkString("{", ",", "}")
-      val tagsPart =
-        if (tags.isEmpty) ""
-        else s""","tags":${tags.map { case (k, v) =>
-          s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")}"""
-      s"""{"add":{"path":"${segs.mkString("/")}","partitionValues":$pvJ,""" +
-        s""""size":${f.length()},"modificationTime":${f.lastModified()},""" +
-        s""""dataChange":$dataChange,"stats":${jstr(statsJ)}$tagsPart}}"""
+      AddFile(segs.mkString("/"), f.length(),
+        hivePartitionValues(segs), None,
+        Some(DeltaStats.json(stats(relKey(rel)), dataFields)), tags,
+        f.lastModified(), dataChange)
     }
   }
 
-  /** Version-0 protocol + metaData lines (empty for later versions). */
+  /** Partition values of a hive-layout file from its directory
+    * segments (`<pc=v>/…/part.parquet`; the last segment is the file). */
+  private def hivePartitionValues(
+      segs: Seq[String]): Map[String, Option[String]] =
+    segs.dropRight(1).map { seg =>
+      val i = seg.indexOf('=')
+      require(i > 0, s"unparseable partition dir '$seg' in ${segs.mkString("/")}")
+      val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(seg.drop(i + 1))
+      seg.take(i) ->
+        (if (raw == "__HIVE_DEFAULT_PARTITION__") None else Some(raw))
+    }.toMap
+
+  /** Version-0 protocol + metaData actions (empty for later versions). */
   private def header(df: DataFrame, partitionBy: Seq[String],
       version: Long, columnMapping: String = "none",
       phys: Map[String, String] = Map.empty,
-      extraProps: Map[String, String] = Map.empty): Seq[String] =
+      extraProps: Map[String, String] = Map.empty): Seq[Action] =
     if (version != 0L) Nil
     else {
       val ntz = df.schema.exists(f => hasNtz(f.dataType))
@@ -3201,14 +2742,9 @@ object DeltaWriter {
         if (ntz) {
           val feats = (if (mapped) Seq("columnMapping") else Nil) :+
             "timestampNtz"
-          val fj = feats.map(jstr).mkString("[", ",", "]")
-          s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-            s""""readerFeatures":$fj,"writerFeatures":$fj}}"""
-        } else if (mapped)
-          // column mapping's classic protocol floor
-          """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""
-        else """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-      val pc = partitionBy.map(jstr).mkString("[", ",", "]")
+          Protocol(3, 7, Some(feats), Some(feats))
+        } else if (mapped) Protocol(2, 5) // column mapping's classic floor
+        else Protocol(1, 2)
       // under name mapping the schemaString's per-field metadata is the
       // logical→physical contract every reader resolves through
       val schemaJson =
@@ -3219,28 +2755,42 @@ object DeltaWriter {
             .putLong("delta.columnMapping.id", (i + 1).toLong)
             .build())
         }).json
-      val cfgEntries =
+      val cfg =
         (if (!mapped) Map.empty[String, String]
          else Map("delta.columnMapping.mode" -> columnMapping,
            "delta.columnMapping.maxColumnId" -> df.schema.size.toString)) ++
           extraProps
-      val cfg = cfgEntries
-        .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-        .mkString("{", ",", "}")
-      val meta =
-        s"""{"metaData":{"id":"${java.util.UUID.randomUUID()}",""" +
-          s""""format":{"provider":"parquet","options":{}},""" +
-          s""""schemaString":${jstr(schemaJson)},""" +
-          s""""partitionColumns":$pc,"configuration":$cfg,"createdTime":0}}"""
-      Seq(protocol, meta)
+      Seq(protocol, DeltaActions.Metadata(java.util.UUID.randomUUID().toString,
+        schemaJson, partitionBy, cfg, Some(System.currentTimeMillis())))
     }
+
+  /** The removes retiring `files`, stamped now ([[RemoveFile.of]]). */
+  private def retire(files: Seq[AddFile],
+      dataChange: Boolean = true): Seq[RemoveFile] = {
+    val now = System.currentTimeMillis()
+    files.map(RemoveFile.of(_, now, dataChange))
+  }
+
+  /** The live adds behind the `__source_file` URIs a tagged scan
+    * matched — each touched file must resolve to exactly one add. */
+  private def touchedAdds(snap: DeltaReader.Snapshot, table: File,
+      touched: Set[String]): Seq[AddFile] = {
+    val root = table.getAbsolutePath
+    val paths = touched.map(t => new java.net.URI(t).getPath)
+    val adds = snap.files.filter(a =>
+      paths(DeltaReader.resolved(root, DeltaReader.decodePath(a.path))))
+    require(adds.length == touched.size,
+      s"internal: ${touched.size} touched files resolved to " +
+        s"${adds.length} add actions")
+    adds
+  }
 
   /** Atomic publish: temp file + rename; an existing version wins.
     * `operation` lands in the commitInfo line — the verb name DESCRIBE
     * HISTORY reports (delta-spark's audit spelling; replay ignores
     * commitInfo, so foreign readers are unaffected). */
   private def publish(table: File, version: Long,
-      lines: Seq[String], operation: String = "WRITE"): Unit = {
+      actions: Seq[Action], operation: String = "WRITE"): Unit = {
     val logDir = new File(table, "_delta_log")
     logDir.mkdirs()
     val tmp = new File(logDir, s".tmp-$version-${java.util.UUID.randomUUID()}")
@@ -3248,12 +2798,11 @@ object DeltaWriter {
     // (DeltaReader.versionAtTimestamp) reads a DECLARED stamp instead
     // of falling back to file mtime; replay ignores unknown actions, so
     // foreign readers are unaffected
-    val commitInfo =
-      s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},""" +
-        s""""operation":${jstr(operation)},"engineInfo":"graft"}}"""
-    Files.write(tmp.toPath,
-      (commitInfo +: lines).mkString("\n").getBytes(StandardCharsets.UTF_8))
-    val target = new File(logDir, f"$version%020d.json")
+    val commitInfo = CommitInfo(Some(System.currentTimeMillis()),
+      Some(operation), Some("graft"))
+    Files.write(tmp.toPath, (commitInfo +: actions).map(DeltaActions.write)
+      .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val target = DeltaActions.commitFile(logDir, version)
     // createLink, NOT move: POSIX rename() REPLACES an existing target,
     // so an ATOMIC_MOVE would let a racing writer silently clobber a
     // committed version. A hard link is atomic AND fails with
@@ -3300,28 +2849,26 @@ object DeltaWriter {
     *
     * Bounded retries; returns the version actually committed. */
   private[graft] def publishOptimistic(table: File, firstVersion: Long,
-      lines: Seq[String], maxRetries: Int = 10,
+      actions: Seq[Action], maxRetries: Int = 10,
       operation: String = "WRITE"): Long = {
-    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
-    val mine = lines.map(jackson.readTree)
-    val iAmMetadata = mine.exists(n =>
-      n.has("metaData") || n.has("protocol"))
-    def removesOf(ns: Seq[com.fasterxml.jackson.databind.JsonNode]) =
-      ns.flatMap(n => Option(n.get("remove")))
-    def addsOf(ns: Seq[com.fasterxml.jackson.databind.JsonNode]) =
-      ns.flatMap(n => Option(n.get("add")))
-    def dc(a: com.fasterxml.jackson.databind.JsonNode): Boolean =
-      Option(a.get("dataChange")).forall(_.asBoolean())
-    val myRemoves = removesOf(mine)
-    val myRemovedPaths = myRemoves
-      .map(r => DeltaReader.decodePath(r.get("path").asText())).toSet
-    val iAmRowVerb = myRemoves.exists(dc)
-    val myTxnAppIds = mine.flatMap(n => Option(n.get("txn")))
-      .map(_.get("appId").asText()).toSet
+    def isMetadata(a: Action): Boolean = a match {
+      case _: DeltaActions.Metadata | _: Protocol => true
+      case _ => false
+    }
+    def fileActions(as: Seq[Action]): Seq[(String, Boolean)] = as.collect {
+      case a: AddFile => (DeltaReader.decodePath(a.path), a.dataChange)
+      case r: RemoveFile => (DeltaReader.decodePath(r.path), r.dataChange)
+    }
+    val iAmMetadata = actions.exists(isMetadata)
+    val myRemoves = actions.collect { case r: RemoveFile => r }
+    val myRemovedPaths = myRemoves.map(r => DeltaReader.decodePath(r.path)).toSet
+    val iAmRowVerb = myRemoves.exists(_.dataChange)
+    val myTxnAppIds = actions.collect { case t: Txn => t.appId }.toSet
+    val logDir = new File(table, "_delta_log")
     var v = firstVersion
     var attempts = 0
     while (true) {
-      try { publish(table, v, lines, operation); return v }
+      try { publish(table, v, actions, operation); return v }
       catch {
         case e: IllegalStateException =>
           if (iAmMetadata) throw e // metadata writers must coordinate
@@ -3331,12 +2878,8 @@ object DeltaWriter {
               "(sustained write contention)")
           val latest = nextVersion(table) - 1
           (v to latest).foreach { w =>
-            val f = new File(table, f"_delta_log/$w%020d.json")
-            val winner = new String(Files.readAllBytes(f.toPath),
-              StandardCharsets.UTF_8)
-              .split('\n').filter(_.nonEmpty).map(jackson.readTree).toSeq
-            require(!winner.exists(n =>
-                n.has("metaData") || n.has("protocol")),
+            val winner = DeltaActions.readCommit(logDir, w)
+            require(!winner.exists(isMetadata),
               s"concurrent conflict at $table: commit $w changed table " +
                 "metadata while this write was staged — re-validate and " +
                 "re-run against the new table state")
@@ -3347,32 +2890,24 @@ object DeltaWriter {
             // the hole real Delta's ConcurrentTransactionException
             // closes. Throw a typed conflict so appendOnce can re-check
             // the ledger and converge to a no-op.
-            if (myTxnAppIds.nonEmpty) {
-              val clash = winner.flatMap(n => Option(n.get("txn")))
-                .map(_.get("appId").asText()).filter(myTxnAppIds)
-              if (clash.nonEmpty)
-                throw new DeltaWriter.ConcurrentTransactionException(
-                  s"concurrent transaction at $table: commit $w carries " +
-                    s"txn for appId ${clash.mkString(", ")} — another " +
-                    "instance of this producer committed concurrently; " +
-                    "re-check the transaction ledger instead of retrying")
+            val clash = winner.collect {
+              case t: Txn if myTxnAppIds(t.appId) => t.appId
             }
+            if (clash.nonEmpty)
+              throw new DeltaWriter.ConcurrentTransactionException(
+                s"concurrent transaction at $table: commit $w carries " +
+                  s"txn for appId ${clash.mkString(", ")} — another " +
+                  "instance of this producer committed concurrently; " +
+                  "re-check the transaction ledger instead of retrying")
             if (myRemovedPaths.nonEmpty) {
-              val winnerPaths =
-                (removesOf(winner) ++ addsOf(winner))
-                  .map(a => DeltaReader.decodePath(a.get("path").asText()))
-                  .toSet
-              val overlap = winnerPaths.intersect(myRemovedPaths)
+              val winnerFiles = fileActions(winner)
+              val overlap = winnerFiles.map(_._1).toSet
+                .intersect(myRemovedPaths)
               require(overlap.isEmpty,
                 s"concurrent conflict at $table: commit $w touched " +
                   s"file(s) this write rewrites (${overlap.take(3)
                     .mkString(", ")}) — re-run against the new state")
-              val winnerLayoutOnly = {
-                val acts = removesOf(winner) ++ addsOf(winner)
-                acts.nonEmpty && acts.forall(a => !dc(a))
-              }
-              require(!iAmRowVerb || winnerLayoutOnly ||
-                  (removesOf(winner) ++ addsOf(winner)).isEmpty,
+              require(!iAmRowVerb || !winnerFiles.exists(_._2),
                 s"concurrent conflict at $table: commit $w changed data " +
                   "while this row-level write was staged — its predicate " +
                   "may match the new rows; re-run against the new state")
@@ -3390,25 +2925,6 @@ object DeltaWriter {
     case a: ArrayType => hasNtz(a.elementType)
     case m: MapType => hasNtz(m.keyType) || hasNtz(m.valueType)
     case _ => false
-  }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  /** Numeric/boolean stat text goes out as a raw JSON scalar when it is
-    * one (NaN/Infinity are not valid JSON numbers — quote them; readers
-    * take `asText()` either way); everything else is quoted. */
-  private def jsonVal(dt: DataType, text: String): String = dt match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType |
-         DoubleType | _: DecimalType
-        if text.matches("-?\\d+(\\.\\d+)?([eE][+-]?\\d+)?") => text
-    case BooleanType if text == "true" || text == "false" => text
-    case _ => jstr(text)
   }
 
   private def collectParquet(f: File): Seq[File] =

@@ -16,7 +16,12 @@ import graft.Tables
   * hand-written Delta tables (plain, multi-commit with removes,
   * partitioned, deletion-vectored, checkpointed). Everything derives
   * deterministically from the driver corpus, keyed by sf dir, and is
-  * created lazily exactly once per JVM. */
+  * created lazily exactly once per JVM.
+  *
+  * The Delta logs here are spelled out by hand on purpose, NOT through
+  * [[DeltaActions]]: they stand in for a foreign writer, so the reader
+  * is checked against log text this engine's own serializer did not
+  * produce. */
 object Fixtures {
 
   private def root(d: String): File = {

@@ -6,14 +6,14 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.graftbridge.StreamFrameBridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.sources.DeltaReader
+import graft.sources.{DeltaActions, DeltaReader}
+import graft.sources.DeltaActions.{AddFile, RemoveFile}
 
 /** Delta table as a STRUCTURED STREAMING SOURCE —
   * `spark.readStream.format("graft-delta").load(path)` tails the
@@ -110,7 +110,6 @@ final class DeltaStreamSource(
       "mutually exclusive — the change feed EMITS change commits as " +
       "row-level events, there is nothing to skip")
 
-  private val mapper = new ObjectMapper()
   private val logDir = new File(tablePath, "_delta_log")
   require(logDir.isDirectory,
     s"graft-delta stream: no Delta table at $tablePath (no _delta_log)")
@@ -223,11 +222,8 @@ final class DeltaStreamSource(
 
   if (restored.isEmpty) persist() // pin the resolved start immediately
 
-  private def latestVersion(): Option[Long] = {
-    val names = Option(logDir.list()).getOrElse(Array.empty[String])
-      .filter(_.matches("\\d{20}\\.json"))
-    if (names.isEmpty) None else Some(names.map(_.take(20).toLong).max)
-  }
+  private def latestVersion(): Option[Long] =
+    DeltaActions.listLog(logDir).commits.lastOption
 
   /** The drain ceiling under `stopAtLatest`: pinned ONCE, at source
     * construction (= query start). Deliberately NOT persisted — each
@@ -249,32 +245,23 @@ final class DeltaStreamSource(
   private val kinds = mutable.Map.empty[Long, Kind]
 
   private def kindOf(v: Long): Kind = kinds.getOrElseUpdate(v, {
-    val f = new File(logDir, f"$v%020d.json")
-    require(f.exists(),
+    require(DeltaActions.commitFile(logDir, v).exists(),
       s"graft-delta stream at $tablePath: commit $v is no longer in " +
         "_delta_log (log-retention cleanup) — restart with option " +
         "startingVersion set to a retained version (or 'latest') and " +
         "backfill consumers from a batch snapshot")
-    val nodes = new String(Files.readAllBytes(f.toPath),
-      StandardCharsets.UTF_8)
-      .split('\n').filter(_.nonEmpty).map(mapper.readTree).toSeq
-    val adds = nodes.flatMap(n => Option(n.get("add")))
-    val removes = nodes.flatMap(n => Option(n.get("remove")))
-    // dataChange defaults true when absent (hand-written logs)
-    def dataChange(a: JsonNode): Boolean =
-      Option(a.get("dataChange")).forall(_.asBoolean())
-    if ((adds ++ removes).forall(a => !dataChange(a))) Transparent
+    val actions = DeltaActions.readCommit(logDir, v)
+    val adds = actions.collect { case a: AddFile => a }
+    val removes = actions.collect { case r: RemoveFile => r }
+    val changing = adds.count(_.dataChange) + removes.count(_.dataChange)
+    if (changing == 0) Transparent
     else {
-      val addedHere = adds.map(_.get("path").asText()).toSet
-      val mutates =
-        adds.exists(a =>
-          Option(a.get("deletionVector")).exists(!_.isNull)) ||
-        removes.exists(r => dataChange(r) &&
-          !addedHere.contains(r.get("path").asText()))
-      val bytes = adds.filter(dataChange)
-        .map(a => Option(a.get("size")).map(_.asLong()).getOrElse(0L)).sum
-      if (mutates) Change((adds ++ removes).count(dataChange), bytes)
-      else Append(adds.count(dataChange), bytes)
+      val addedHere = adds.map(_.path).toSet
+      val mutates = adds.exists(_.deletionVector.nonEmpty) ||
+        removes.exists(r => r.dataChange && !addedHere.contains(r.path))
+      val bytes = adds.filter(_.dataChange).map(_.size).sum
+      if (mutates) Change(changing, bytes)
+      else Append(adds.count(_.dataChange), bytes)
     }
   })
 

@@ -665,4 +665,73 @@ ${meta(kF)}
     assert(DeltaReader.snapshot(spark, dir).files.forall(_.stats.nonEmpty))
     assert(DeltaReader.load(spark, dir).count() == 5L)
   }
+
+  test("replay order: a DV commit listing its add before its remove keeps its rows") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_dv_order").toFile.getAbsolutePath
+    DeltaWriter.append(Seq(1L, 2L, 3L, 4L).toDF("k").coalesce(1), dir) // v0
+    DeltaWriter.deleteWithVectors(spark, dir, col("k") <= 2L) // v1
+    assert(DeltaReader.load(spark, dir).count() == 2L)
+    // the same actions, file actions reordered adds-first
+    val v1 = new File(dir, f"_delta_log/${1L}%020d.json").toPath
+    val lines = new String(Files.readAllBytes(v1), "UTF-8").split('\n').toSeq
+    def isAdd(l: String) = l.startsWith("{\"add\"")
+    def isRemove(l: String) = l.startsWith("{\"remove\"")
+    val reordered = lines.filterNot(l => isAdd(l) || isRemove(l)) ++
+      lines.filter(isAdd) ++ lines.filter(isRemove)
+    assert(reordered != lines && reordered.sorted == lines.sorted)
+    Files.write(v1, reordered.mkString("\n").getBytes("UTF-8"))
+    assert(DeltaReader.load(spark, dir).count() == 2L)
+  }
+
+  test("replay keys files on (path, DV id): add(p, dv2) before remove(p, dv1) leaves one live file") {
+    val dir = Files.createTempDirectory("graft_dv_key").toFile
+    val log = new File(dir, "_delta_log"); log.mkdirs()
+    val schemaJson = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k",
+        org.apache.spark.sql.types.LongType))).json.replace("\"", "\\\"")
+    def dv(z: String, card: Int) =
+      s"""{"storageType":"i","pathOrInlineDv":"$z","offset":0,""" +
+        s""""sizeInBytes":20,"cardinality":$card}"""
+    def write(v: Long, lines: String*): Unit =
+      Files.write(new File(log, f"$v%020d.json").toPath,
+        lines.mkString("\n").getBytes("UTF-8"))
+    write(0L,
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
+      s"""{"metaData":{"id":"dvkey","format":{"provider":"parquet","options":{}},"schemaString":"$schemaJson","partitionColumns":[],"configuration":{},"createdTime":0}}""",
+      s"""{"add":{"path":"p.parquet","partitionValues":{},"size":10,"modificationTime":0,"dataChange":true,"deletionVector":${dv("aaaaa", 1)}}}""")
+    write(1L,
+      s"""{"add":{"path":"p.parquet","partitionValues":{},"size":10,"modificationTime":0,"dataChange":true,"deletionVector":${dv("bbbbb", 2)}}}""",
+      s"""{"remove":{"path":"p.parquet","deletionTimestamp":1,"dataChange":true,"deletionVector":${dv("aaaaa", 1)}}}""")
+    val files = DeltaReader.snapshot(spark, dir.getAbsolutePath).files
+    assert(files.size == 1)
+    assert(files.head.deletionVector.map(_.pathOrInlineDv).contains("bbbbb"))
+  }
+
+  test("replay reads removes that name no vector: a DV'd file retired by path alone stays retired") {
+    // the shape of logs written before removes carried the retired add's
+    // deletion vector: two DV deletes on one file, each a vector-less
+    // remove plus a re-add
+    val dir = Files.createTempDirectory("graft_dv_legacy").toFile
+    val log = new File(dir, "_delta_log"); log.mkdirs()
+    val schemaJson = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k",
+        org.apache.spark.sql.types.LongType))).json.replace("\"", "\\\"")
+    def add(dv: Option[String]) =
+      s"""{"add":{"path":"p.parquet","partitionValues":{},"size":10,"modificationTime":0,"dataChange":true""" +
+        dv.map(z => s""","deletionVector":{"storageType":"i","pathOrInlineDv":"$z","offset":0,"sizeInBytes":20,"cardinality":1}""")
+          .getOrElse("") + "}}"
+    val remove = """{"remove":{"path":"p.parquet","deletionTimestamp":1,"dataChange":true}}"""
+    def write(v: Long, lines: String*): Unit =
+      Files.write(new File(log, f"$v%020d.json").toPath,
+        lines.mkString("\n").getBytes("UTF-8"))
+    write(0L,
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
+      s"""{"metaData":{"id":"dvlegacy","format":{"provider":"parquet","options":{}},"schemaString":"$schemaJson","partitionColumns":[],"configuration":{},"createdTime":0}}""",
+      add(None))
+    write(1L, remove, add(Some("aaaaa")))
+    write(2L, remove, add(Some("bbbbb")))
+    val files = DeltaReader.snapshot(spark, dir.getAbsolutePath).files
+    assert(files.map(_.deletionVector.map(_.pathOrInlineDv)) == Seq(Some("bbbbb")))
+  }
 }

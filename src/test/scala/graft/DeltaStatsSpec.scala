@@ -21,8 +21,8 @@ class DeltaStatsSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   private val d = SparkTestSession.sfDir
 
-  private def add(stats: String): DeltaReader.AddFile =
-    DeltaReader.AddFile("f.parquet", 1L, Map.empty, None, Some(stats))
+  private def add(stats: String): DeltaActions.AddFile =
+    DeltaActions.AddFile("f.parquet", 1L, Map.empty, None, Some(stats))
 
   private val k = AttributeReference("k", LongType)()
 
@@ -151,7 +151,7 @@ class DeltaStatsSpec extends AnyFunSuite {
     val impossible = Seq(LessThan(k, Literal(5L)))
     // no stats at all
     assert(DeltaStats.mayMatch(
-      DeltaReader.AddFile("f", 1L, Map.empty, None, None), impossible))
+      DeltaActions.AddFile("f", 1L, Map.empty, None, None), impossible))
     // malformed stats JSON
     assert(DeltaStats.mayMatch(add("{not json"), impossible))
     // stats present but not for this column

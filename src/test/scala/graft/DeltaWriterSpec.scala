@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.sources.{DeltaReader, DeltaWriter}
+import graft.sources.{DeltaActions, DeltaReader, DeltaWriter}
+import graft.sources.DeltaActions.{AddCDCFile, AddFile, RemoveFile, Txn}
 
 /** DeltaWriter: graft's own commits must be readable by graft's own
   * reader (and structurally by any Delta reader) — row-exact round
@@ -118,7 +119,7 @@ class DeltaWriterSpec extends AnyFunSuite {
     DeltaWriter.checkpoint(spark, path)
     val logDir = new File(path, "_delta_log")
     logDir.listFiles().filter(_.getName.endsWith(".json")).foreach(_.delete())
-    assert(DeltaReader.lastTxnVersion(spark, path, "app-a").contains(0L))
+    assert(DeltaReader.txns(spark, path).get("app-a").map(_.version).contains(0L))
     assert(DeltaWriter.appendOnce(half, path, Nil, "app-a", 0L).isEmpty)
     // and a NEW batch still commits
     assert(DeltaWriter.appendOnce(
@@ -129,7 +130,7 @@ class DeltaWriterSpec extends AnyFunSuite {
     // first checkpoint (app-b's txn lives in no surviving JSON commit)
     DeltaWriter.checkpoint(spark, path)
     logDir.listFiles().filter(_.getName.endsWith(".json")).foreach(_.delete())
-    assert(DeltaReader.lastTxnVersion(spark, path, "app-b").contains(0L))
+    assert(DeltaReader.txns(spark, path).get("app-b").map(_.version).contains(0L))
   }
 
   test("loadChanges over successive windows partitions the table") {
@@ -260,7 +261,7 @@ class DeltaWriterSpec extends AnyFunSuite {
     // ledger in the sharded set too (2.json carries only metaData)
     assert(DeltaWriter.checkpoint(spark, path) == 2L)
     new File(logDir, "0" * 18 + "02.json").delete()
-    assert(DeltaReader.lastTxnVersion(spark, path, "mp-writer")
+    assert(DeltaReader.txns(spark, path).get("mp-writer").map(_.version)
       .contains(7L))
     assert(DeltaReader.load(spark, path).columns.contains("n_extra"))
     assert(DeltaReader.load(spark, path).count() == before.size)
@@ -930,9 +931,7 @@ class DeltaWriterSpec extends AnyFunSuite {
     }.get
     val src = new File(path, anyFile.path)
     def addLine(name: String, dataChange: Boolean) =
-      s"""{"add":{"path":"$name","partitionValues":{},""" +
-        s""""size":${src.length()},"modificationTime":0,""" +
-        s""""dataChange":$dataChange}}"""
+      AddFile(name, src.length(), Map.empty, dataChange = dataChange)
     val dup = "occ-dup-" + src.getName
     java.nio.file.Files.copy(src.toPath, new File(path, dup).toPath)
     assert(DeltaWriter.publishOptimistic(table, 1L,
@@ -950,8 +949,7 @@ class DeltaWriterSpec extends AnyFunSuite {
         .filterNot(nowLive).head
     }
     def removeLine(p: String, dataChange: Boolean) =
-      s"""{"remove":{"path":"$p","deletionTimestamp":0,""" +
-        s""""dataChange":$dataChange}}"""
+      RemoveFile(p, Some(0L), dataChange)
     val eOverlap = intercept[IllegalArgumentException](
       DeltaWriter.publishOptimistic(table, 3L,
         Seq(removeLine(winnerTouched, dataChange = true))))
@@ -995,9 +993,7 @@ class DeltaWriterSpec extends AnyFunSuite {
     val p2 = tmpTable("occ_create_race")
     DeltaWriter.append(nation, p2) // v0 wins
     val eCreate = intercept[IllegalStateException] {
-      val metaLine = """{"metaData":{"id":"x","format":{"provider":""" +
-        """"parquet","options":{}},"schemaString":"{}",""" +
-        """"partitionColumns":[],"configuration":{},"createdTime":0}}"""
+      val metaLine = DeltaActions.Metadata("x", "{}", createdTime = Some(0L))
       DeltaWriter.publishOptimistic(new File(p2), 0L, Seq(metaLine))
     }
     assert(eCreate.getMessage.contains("concurrent commit lost"))
@@ -1271,13 +1267,11 @@ class DeltaWriterSpec extends AnyFunSuite {
     // past the winner (it may be this very batch, redelivered) — even
     // though as a pure append it would otherwise be compatible
     val e = intercept[DeltaWriter.ConcurrentTransactionException](
-      DeltaWriter.publishOptimistic(table, 1L, Seq(
-        """{"txn":{"appId":"prod","version":1}}""")))
+      DeltaWriter.publishOptimistic(table, 1L, Seq(Txn("prod", 1L))))
     assert(e.getMessage.contains("prod"))
     // a DIFFERENT appId's txn retries fine (independent producer)
-    assert(DeltaWriter.publishOptimistic(table, 1L, Seq(
-      """{"txn":{"appId":"other","version":7}}""")) == 2L)
-    assert(DeltaReader.lastTxnVersion(spark, path, "other").contains(7L))
+    assert(DeltaWriter.publishOptimistic(table, 1L, Seq(Txn("other", 7L))) == 2L)
+    assert(DeltaReader.txns(spark, path).get("other").map(_.version).contains(7L))
   }
 
   test("exactly-once: concurrent same-appId appendOnce lands exactly one commit") {
@@ -1305,7 +1299,7 @@ class DeltaWriterSpec extends AnyFunSuite {
         s"rep $rep: expected exactly one committed batch, " +
           s"got ${results.asScala.toList}")
       assert(DeltaReader.load(spark, path).count() == batchCount)
-      assert(DeltaReader.lastTxnVersion(spark, path, "ingest")
+      assert(DeltaReader.txns(spark, path).get("ingest").map(_.version)
         .contains(1L))
       // and a post-hoc redelivery (the sequential order) still no-ops
       assert(DeltaWriter.appendOnce(batch, path, Nil, "ingest", 1L)
@@ -2191,7 +2185,7 @@ class DeltaWriterSpec extends AnyFunSuite {
     DeltaWriter.append(nation.filter(col("n_nationkey") % 2 =!= 0),
       path, Seq("n_regionkey"))
     val before = DeltaReader.snapshot(spark, path)
-    def partOf(a: graft.sources.DeltaReader.AddFile): String =
+    def partOf(a: graft.sources.DeltaActions.AddFile): String =
       a.partitionValues("n_regionkey").get
     assert(before.files.count(a => partOf(a) == "1") == 2)
 
@@ -2593,9 +2587,7 @@ class DeltaWriterSpec extends AnyFunSuite {
     val dest = new File(cdcDir, part.getName)
     java.nio.file.Files.move(part.toPath, dest.toPath)
     val v = DeltaWriter.publishOptimistic(new File(path), 1L, Seq(
-      s"""{"cdc":{"path":"_change_data/${dest.getName}",""" +
-        s""""partitionValues":{},"size":${dest.length()},""" +
-        s""""dataChange":false}}"""))
+      AddCDCFile(s"_change_data/${dest.getName}", Map.empty, dest.length())))
     assert(v == 1L)
     val feed = DeltaReader.loadChangeFeed(spark, path, 0L, 1L)
     val rows = feed.select("n_nationkey", "n_regionkey", "_change_type")
@@ -2632,5 +2624,72 @@ class DeltaWriterSpec extends AnyFunSuite {
     assert(DeltaReader.load(spark, path).collect()
       .map(r => (r.getInt(0), r.getString(1))).toSet ==
       Set((1, "new"), (2, "keep"), (3, "ins")))
+  }
+
+  test("reserved-word partition columns: tables partitioned by `protocol` or `metaData` keep the log verbs working") {
+    val nation = Tables.t(spark, d, "nation")
+    val p1 = tmpTable("pc_protocol")
+    DeltaWriter.append(
+      nation.withColumn("protocol", col("n_regionkey").cast("string")), p1,
+      partitionBy = Seq("protocol"))
+    DeltaWriter.deleteWithVectors(spark, p1, col("n_nationkey") < 5)
+    DeltaWriter.checkpoint(spark, p1)
+    val saved = System.err
+    val err = new java.io.ByteArrayOutputStream()
+    System.setErr(new java.io.PrintStream(err, true))
+    val (snap, rows) =
+      try (DeltaReader.snapshot(spark, p1), DeltaReader.load(spark, p1).count())
+      finally System.setErr(saved)
+    assert(snap.protocol.readerFeatures.exists(_.contains("deletionVectors")))
+    assert(rows == 20L)
+    assert(!err.toString.contains("no protocol action"), err.toString)
+
+    val p2 = tmpTable("pc_metadata")
+    DeltaWriter.append(
+      nation.withColumn("metaData", col("n_regionkey").cast("string")), p2,
+      partitionBy = Seq("metaData"))
+    DeltaWriter.setTableProperty(spark, p2, "graft.owner", "ops")
+    DeltaWriter.addCheckConstraint(spark, p2, "key_nonneg", "n_nationkey >= 0")
+    val snap2 = DeltaReader.snapshot(spark, p2)
+    assert(snap2.configuration.get("graft.owner").contains("ops"))
+    assert(snap2.configuration.contains("delta.constraints.key_nonneg"))
+    assert(snap2.partitionColumns == Seq("metaData"))
+    assert(DeltaReader.load(spark, p2).count() == 25L)
+  }
+
+  test("every remove retires a (path, DV id) live at the previous version, with its partition values and size") {
+    val nation = Tables.t(spark, d, "nation")
+    val path = tmpTable("remove_keys")
+    // one file per region: regions 0 = {0, 5, 14, 15, 16}, 1 = {1, 2, 3, 17, 24}
+    DeltaWriter.append(nation.coalesce(1), path,
+      partitionBy = Seq("n_regionkey")) // v0
+    DeltaWriter.deleteWithVectors(spark, path, col("n_nationkey") === 0) // v1
+    DeltaWriter.deleteWithVectors(spark, path, col("n_nationkey") === 5) // v2: same file
+    DeltaWriter.deleteWithVectors(spark, path, col("n_nationkey") === 1) // v3
+    DeltaWriter.delete(spark, path, col("n_nationkey") === 14) // v4: CoW of a DV'd file
+    DeltaWriter.update(spark, path, col("n_nationkey") === 2,
+      Map("n_name" -> lit("updated"))) // v5: CoW of a DV'd file
+    DeltaWriter.merge(nation.filter(col("n_nationkey") === 3)
+      .withColumn("n_name", lit("merged")), path, Seq("n_nationkey")) // v6
+    DeltaWriter.compact(spark, path) // v7
+    DeltaWriter.restore(spark, path, 2L) // v8
+    val logDir = new File(path, "_delta_log")
+    val latest = DeltaReader.snapshot(spark, path).version
+    assert(latest == 8L)
+    (1L to latest).foreach { v =>
+      val live = DeltaReader.snapshotAt(spark, path, v - 1).files
+        .map(a => a.key -> a).toMap
+      val removes = DeltaActions.readCommit(logDir, v)
+        .collect { case r: RemoveFile => r }
+      assert(removes.nonEmpty, s"v$v retires no file")
+      removes.foreach { r =>
+        val add = live.get(r.key)
+        assert(add.nonEmpty, s"v$v removes ${r.key}, not live at v${v - 1}")
+        assert(r.partitionValues.contains(add.get.partitionValues), s"v$v: $r")
+        assert(r.size.contains(add.get.size), s"v$v: $r")
+      }
+    }
+    assert(DeltaReader.load(spark, path).collect().toSet ==
+      DeltaReader.loadAt(spark, path, 2L).collect().toSet)
   }
 }

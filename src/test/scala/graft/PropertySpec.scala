@@ -331,4 +331,62 @@ object PropertySpec extends Properties("graft-kernels") {
           est <= c && c - est <= bound
         }
     }
+
+  // ---- Delta action codec: parse(write(a)) == a for every action kind,
+  // over paths and keys with spaces, quotes, backslashes, control
+  // characters and non-ASCII text
+  private object delta {
+    import graft.sources.DeltaActions._
+    val text: Gen[String] = Gen.oneOf(Gen.asciiPrintableStr,
+      Gen.listOf(Gen.oneOf("a", "Z", "0", " ", "\"", "\\", "/", "%20", "=",
+        "\n", "\t", "\u0001", "é", "ß", "中", "🦀")).map(_.mkString))
+    val opt: Gen[Option[String]] = Gen.option(text)
+    val strMap: Gen[Map[String, String]] =
+      Gen.mapOf(Gen.zip(text, text))
+    val pv: Gen[Map[String, Option[String]]] =
+      Gen.mapOf(Gen.zip(text, opt)) // None = a null partition value
+    val long: Gen[Long] = Gen.choose(0L, Long.MaxValue)
+    val dv: Gen[DvDescriptor] = for {
+      st <- Gen.oneOf("i", "u", "p")
+      where <- text
+      off <- Gen.choose(0, Int.MaxValue)
+      sz <- Gen.choose(1, Int.MaxValue)
+      card <- long
+    } yield DvDescriptor(st, where, off, sz, card) // inline and on-disk
+    val add: Gen[Action] = for {
+      path <- text; size <- long; p <- pv; d <- Gen.option(dv)
+      stats <- Gen.option(text.map("{" + _)); tags <- strMap
+      mtime <- long; dc <- Gen.oneOf(true, false)
+    } yield AddFile(path, size, p, d, stats, tags, mtime, dc)
+    val remove: Gen[Action] = for {
+      path <- text; ts <- Gen.option(long); dc <- Gen.oneOf(true, false)
+      ext <- Gen.option(Gen.oneOf(true, false)); p <- Gen.option(pv)
+      size <- Gen.option(long); d <- Gen.option(dv)
+    } yield RemoveFile(path, ts, dc, ext, p, size, d)
+    val metadata: Gen[Action] = for {
+      id <- text; schema <- text; parts <- Gen.listOf(text)
+      conf <- strMap; created <- Gen.option(long); name <- opt
+      desc <- opt; provider <- text; options <- strMap
+    } yield Metadata(id, schema, parts, conf, created, name, desc,
+      provider, options)
+    val protocol: Gen[Action] = for {
+      r <- Gen.choose(1, 3); w <- Gen.choose(1, 7)
+      rf <- Gen.option(Gen.listOf(text)); wf <- Gen.option(Gen.listOf(text))
+    } yield Protocol(r, w, rf, wf)
+    val action: Gen[Action] = Gen.oneOf(add, remove, metadata, protocol,
+      Gen.zip(text, pv, long, Gen.oneOf(true, false))
+        .map { case (p, v, sz, dc) => AddCDCFile(p, v, sz, dc) },
+      Gen.zip(text, long, Gen.option(long))
+        .map { case (id, v, lu) => Txn(id, v, lu) }, // with/without lastUpdated
+      Gen.zip(Gen.option(long), opt, opt)
+        .map { case (ts, op, eng) => CommitInfo(ts, op, eng) },
+      Gen.zip(text, long, long)
+        .map { case (p, sz, mt) => Sidecar(p, sz, mt) })
+  }
+
+  property("delta actions round-trip: parse(write(a)) == a") =
+    forAll(delta.action) { a =>
+      graft.sources.DeltaActions.parse(graft.sources.DeltaActions.write(a))
+        .contains(a)
+    }
 }

@@ -265,8 +265,8 @@ class StreamingSpec extends AnyFunSuite {
     val landed = graft.sources.DeltaReader.load(spark, table.getAbsolutePath)
     assert(landed.count() == docs.count())
     assert(landed.select("doc_id").distinct().count() == docs.count())
-    assert(graft.sources.DeltaReader.lastTxnVersion(spark,
-      table.getAbsolutePath, "graft-stream-ingest").contains(1L))
+    assert(graft.sources.DeltaReader.txns(spark,
+      table.getAbsolutePath).get("graft-stream-ingest").map(_.version).contains(1L))
   }
 
   test("writeStream.format(\"graft-delta\") lands exactly-once through the declarative sink") {
@@ -304,9 +304,8 @@ class StreamingSpec extends AnyFunSuite {
     run()
     assert(graft.sources.DeltaReader.load(spark, table.getAbsolutePath)
       .count() == docs.count())
-    assert(graft.sources.DeltaReader.lastTxnVersion(spark,
-      table.getAbsolutePath,
-      s"graft-delta-sink:${table.getAbsolutePath}").contains(0L))
+    assert(graft.sources.DeltaReader.txns(spark,
+      table.getAbsolutePath).get(s"graft-delta-sink:${table.getAbsolutePath}").map(_.version).contains(0L))
   }
 
   test("streaming domain scoring matches the batch q160 trained margins") {
