@@ -6,6 +6,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -18,10 +19,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (delta-kernel-rs's `actions` module and delta-spark's
   * `actions.scala` play the same role, SURVEY §0, §7.4).
   *
-  * Live files are keyed as the protocol keys them: (path, deletion
-  * vector unique id) — [[AddFile.key]], [[RemoveFile.key]]. A remove is
-  * always derived from the add it retires ([[RemoveFile.of]]), so it
-  * names the same key and carries the add's partition values and size.
+  * A file action is identified as the protocol identifies it: (path,
+  * deletion vector unique id) — [[AddFile.key]], [[RemoveFile.key]]. A
+  * remove is always derived from the add it retires ([[RemoveFile.of]]),
+  * so it names the same key and carries the add's partition values and
+  * size.
   *
   * Parsing is null-tolerant: a JSON null reads as an absent field, the
   * shape a checkpoint row takes once Spark has unified the action
@@ -430,6 +432,23 @@ object DeltaActions {
 
   def readCommit(logDir: File, version: Long): Vector[Action] =
     commitActions(logDir, version)(_.toVector)
+
+  /** Commit `version`'s `txn` actions. A line is parsed in full only
+    * when its action key — the object's first field, read by a
+    * streaming parser that stops there — is `txn`, so the add lines
+    * and their stats, the bulk of a commit, are never tree-parsed. */
+  def readTxns(logDir: File, version: Long): Vector[Txn] = {
+    def isTxn(line: String): Boolean = {
+      val p = mapper.getFactory.createParser(line)
+      try p.nextToken() == JsonToken.START_OBJECT &&
+        p.nextToken() == JsonToken.FIELD_NAME && p.currentName == "txn"
+      finally p.close()
+    }
+    val src = scala.io.Source.fromFile(commitFile(logDir, version), "UTF-8")
+    try src.getLines().filter(isTxn).flatMap(parse(_: String))
+      .collect { case t: Txn => t }.toVector
+    finally src.close()
+  }
 
   def writeLastCheckpoint(logDir: File, lc: LastCheckpoint): Unit =
     Files.write(new File(logDir, "_last_checkpoint").toPath,

@@ -28,12 +28,12 @@ import graft.sources.DeltaActions.{Action, AddCDCFile, AddFile, CommitInfo, DvDe
   * (/root/reference/crates/providers/src/deltatable.rs:85-384): snapshot =
   * log replay of the `_delta_log` JSON commits on top of the latest
   * checkpoint, over the typed actions of [[DeltaActions]] (the one module
-  * that parses the log). Live files are keyed on (path, deletion-vector
-  * unique id), as the protocol keys them, and within one commit removes
-  * apply before adds whatever the line order. A remove that names no
-  * vector and matches no vector-less entry retires the path's vectored
-  * one — the shape of logs this engine wrote before removes carried the
-  * retired add's vector. The snapshot carries the
+  * that parses the log). Replay holds at most one live add per path: an
+  * add replaces the path's entry, and a remove retires it when it names
+  * the entry's (path, deletion-vector unique id), as the protocol keys
+  * files, or no vector at all (logs this engine wrote before removes
+  * carried the retired add's vector). Within one commit removes apply
+  * before adds whatever the line order. The snapshot carries the
   * typed protocol, metaData and txn ledger it replayed; schema comes from
   * the metaData (Delta's schemaString IS Spark's StructType JSON); file
   * list + partition values from surviving `add` actions
@@ -283,20 +283,17 @@ object DeltaReader {
           log.checkpoints.keys).minOption.getOrElse(0L)}; history below it " +
         "was removed by log-retention cleanup (DeltaWriter.cleanupLogs / " +
         "delta.logRetentionDuration) or never existed")
-    val live = mutable.LinkedHashMap[(String, Option[String]), AddFile]()
-    // path → key of its live entry that carries a vector. Logs this
-    // engine wrote before removes carried the retired add's vector
-    // retire a DV'd file by path alone; such a remove — which a
-    // spec-conforming log never holds, as no vector-less entry of the
-    // path is live — retires the vectored entry
-    val vectored = mutable.HashMap[String, (String, Option[String])]()
-    def put(a: AddFile): Unit = {
-      live(a.key) = a
-      if (a.deletionVector.nonEmpty) vectored(a.path) = a.key
-    }
+    // path → its live add: at most one entry per path. An add replaces
+    // the path's entry (the protocol's same-key rewrite, and the old
+    // RESTORE shape this engine once wrote: a re-add with no remove of
+    // the current vector). A remove retires the entry when it names the
+    // entry's vector, or no vector at all (logs this engine wrote before
+    // removes carried the retired add's vector)
+    val live = mutable.LinkedHashMap[String, AddFile]()
+    def put(a: AddFile): Unit = live(a.path) = a
     def retire(r: RemoveFile): Unit =
-      if (live.remove(r.key).isEmpty && r.deletionVector.isEmpty)
-        vectored.remove(r.path).foreach(live.remove)
+      if (live.get(r.path).exists(a => r.deletionVector.isEmpty ||
+          a.key == r.key)) live.remove(r.path)
     val txns = mutable.LinkedHashMap[String, Txn]()
     var protocol: Option[Protocol] = None
     var metadata: Option[DeltaActions.Metadata] = None
@@ -353,7 +350,7 @@ object DeltaReader {
       actions.foreach {
         case a: AddFile =>
           if (admitted(prune, physNames, a)) put(a)
-          else live.remove(a.key) // newest action wins even when pruned out
+          else live.remove(a.path) // newest action wins even when pruned out
         case _ =>
       }
     }
@@ -378,25 +375,28 @@ object DeltaReader {
       txns.toMap)
   }
 
-  /** The exactly-once producer ledger: appId → its newest `txn` action
-    * (with `lastUpdated`, which checkpoint retention reads). Durable
-    * across log cleanup: every retained JSON commit plus the newest
-    * complete checkpoint, which carries the ledger forward. Empty for a
-    * table that does not exist yet. */
-  def txns(spark: SparkSession, tablePath: String): Map[String, Txn] = {
+  /** The exactly-once producer ledger at `snap`: appId → its newest
+    * `txn` action (with `lastUpdated`, which checkpoint retention
+    * reads). Durable across log cleanup: the snapshot's replay (the
+    * newest complete checkpoint at or below its version, which carries
+    * the ledger forward, plus the JSON tail) over the txns of the
+    * retained commits that checkpoint covers — older than what it
+    * carries, except for entries its retention already expired. */
+  def txns(tablePath: String, snap: Snapshot): Map[String, Txn] = {
     val logDir = new File(tablePath, "_delta_log")
     val log = DeltaActions.listLog(logDir)
-    if (log.isEmpty) Map.empty
-    else {
-      val cp = log.newestCheckpoint()
-      // commits at or below the checkpoint: older than what it carries,
-      // except for entries its retention already expired
-      val covered = log.commits.filter(v => cp.exists(v <= _))
-        .flatMap(DeltaActions.readCommit(logDir, _))
-        .collect { case t: Txn => t.appId -> t }
-      covered.toMap ++ snapshot(spark, tablePath).txns
-    }
+    log.newestCheckpoint(snap.version).fold(Map.empty[String, Txn]) { cp =>
+      log.commits.filter(_ <= cp).flatMap(DeltaActions.readTxns(logDir, _))
+        .map(t => t.appId -> t).toMap
+    } ++ snap.txns
   }
+
+  /** The ledger at the latest version; empty for a table that does not
+    * exist yet. */
+  def txns(spark: SparkSession, tablePath: String): Map[String, Txn] =
+    if (DeltaActions.listLog(new File(tablePath, "_delta_log")).isEmpty)
+      Map.empty
+    else txns(tablePath, snapshot(spark, tablePath))
 
   // ------------------------------------------------------------- dataframe
 

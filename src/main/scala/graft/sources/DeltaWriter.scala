@@ -121,8 +121,11 @@ object DeltaWriter {
     // no window for a concurrent same-appId producer to land the same
     // batch twice (appendOnce converts this throw into a ledger
     // re-check and a no-op).
+    val snap =
+      if (version == 0L) None
+      else Some(DeltaReader.snapshot(df.sparkSession, tablePath))
     txn.foreach { case (appId, tv) =>
-      if (version > 0L && recorded(df.sparkSession, tablePath, appId, tv))
+      if (snap.exists(recorded(tablePath, _, appId, tv)))
         throw new ConcurrentTransactionException(
           s"txn ($appId, $tv) already recorded at $tablePath — " +
             "redelivered batch; consult the ledger")
@@ -141,10 +144,7 @@ object DeltaWriter {
               .map { case (n, i) => n -> (i + 1).toLong }.toMap
           else Map.empty[String, Long]
         (minted, ids)
-      } else {
-        val snap = DeltaReader.snapshot(df.sparkSession, tablePath)
-        (snap.physicalNames, snap.fieldIds)
-      }
+      } else (snap.get.physicalNames, snap.get.fieldIds)
     val (staged, stagedBy) = toPhysical(df, phys, fids, partitionBy)
     val adds = stageDataFiles(staged, table, version, stagedBy)
     // lastUpdated dates the ledger entry so checkpoint writes can expire
@@ -159,11 +159,11 @@ object DeltaWriter {
         txnAction ++ adds)
   }
 
-  /** Whether the table's txn ledger ([[DeltaReader.txns]]) already
-    * records `appId` at or past `txnVersion`. */
-  private def recorded(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, appId: String, txnVersion: Long): Boolean =
-    DeltaReader.txns(spark, tablePath).get(appId).exists(_.version >= txnVersion)
+  /** Whether the txn ledger at `snap` ([[DeltaReader.txns]]) records
+    * `appId` at or past `txnVersion`. */
+  private def recorded(tablePath: String, snap: DeltaReader.Snapshot,
+      appId: String, txnVersion: Long): Boolean =
+    DeltaReader.txns(tablePath, snap).get(appId).exists(_.version >= txnVersion)
 
   /** Rename a logical-named frame (and its partition columns) to the
     * table's physical column names for staging — identity for unmapped
@@ -220,12 +220,13 @@ object DeltaWriter {
     * (mirroring Delta's ConcurrentTransactionException), and this verb
     * then re-checks the ledger — if the winner already landed this
     * batch, the duplicate converges to a no-op instead of a second
-    * commit. */
+    * commit. A batch the ledger already records is refused by
+    * [[append]]'s own ledger gate, on the snapshot it takes anyway, and
+    * converges to a no-op the same way. */
   def appendOnce(df: DataFrame, tablePath: String,
       partitionBy: Seq[String], appId: String,
       txnVersion: Long): Option[Long] =
-    if (recorded(df.sparkSession, tablePath, appId, txnVersion)) None
-    else try Some(append(df, tablePath, partitionBy,
+    try Some(append(df, tablePath, partitionBy,
       txn = Some((appId, txnVersion))))
     catch {
       case e: DeltaWriter.ConcurrentTransactionException =>
@@ -233,7 +234,8 @@ object DeltaWriter {
         // ledger: redelivery of an already-landed batch no-ops, a
         // genuinely NEWER batch from a racing producer must surface
         // (two live instances is an operational fault, not redelivery)
-        if (recorded(df.sparkSession, tablePath, appId, txnVersion)) None
+        if (DeltaReader.txns(df.sparkSession, tablePath).get(appId)
+            .exists(_.version >= txnVersion)) None
         else throw e
     }
 
@@ -290,13 +292,13 @@ object DeltaWriter {
     // throw (only a missing DIRECTORY is a caller error, above)
     if (found.isEmpty) return (None, Nil)
     val prefix = "graft-copy-into:"
+    val snap = DeltaReader.snapshot(spark, tablePath)
     val already =
       if (force) Set.empty[String]
-      else DeltaReader.txns(spark, tablePath).keySet
+      else DeltaReader.txns(tablePath, snap).keySet
         .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix))
     val fresh = found.filterNot(already)
     if (fresh.isEmpty) return (None, Nil)
-    val snap = DeltaReader.snapshot(spark, tablePath)
     val raw = format.toLowerCase match {
       case "parquet" => spark.read.parquet(fresh: _*)
       case "csv" =>
@@ -1295,7 +1297,7 @@ object DeltaWriter {
     // carry through too (incremental z-order recognizes its outputs by
     // them; losing the tag across a checkpoint would re-churn every
     // optimized file on the next pass)
-    val lines = (checkpointActions(spark, tablePath, snap) ++
+    val lines = (checkpointActions(tablePath, snap) ++
       snap.files.map(_.copy(dataChange = false))).map(DeltaActions.write)
     // parquet of action rows (schema from the JSON lines, the same
     // layout the reader's checkpoint replay scans) — one file for the
@@ -1838,9 +1840,9 @@ object DeltaWriter {
     * operator's promise about maximum redelivery lag. Entries without
     * a `lastUpdated` stamp are undatable and are carried forever
     * (delta's posture); absent the property nothing expires. */
-  private def checkpointActions(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, snap: DeltaReader.Snapshot): Seq[Action] = {
-    val ledger = DeltaReader.txns(spark, tablePath).values.toSeq
+  private def checkpointActions(tablePath: String,
+      snap: DeltaReader.Snapshot): Seq[Action] = {
+    val ledger = DeltaReader.txns(tablePath, snap).values.toSeq
     val kept = snap.configuration.get("delta.setTransactionRetentionDuration")
       .map(parseRetention) match {
       case None => ledger
@@ -1890,7 +1892,7 @@ object DeltaWriter {
         delete(tmp)
         moved
       }
-    val lines = (checkpointActions(spark, tablePath, snap) ++ sidecarActions)
+    val lines = (checkpointActions(tablePath, snap) ++ sidecarActions)
       .map(DeltaActions.write)
     val dest = new File(logDir,
       f"$version%020d.checkpoint.${java.util.UUID.randomUUID()}.json")
@@ -2719,7 +2721,7 @@ object DeltaWriter {
   /** Partition values of a hive-layout file from its directory
     * segments (`<pc=v>/…/part.parquet`; the last segment is the file). */
   private def hivePartitionValues(
-      segs: Seq[String]): Map[String, Option[String]] =
+      segs: Array[String]): Map[String, Option[String]] =
     segs.dropRight(1).map { seg =>
       val i = seg.indexOf('=')
       require(i > 0, s"unparseable partition dir '$seg' in ${segs.mkString("/")}")

@@ -734,4 +734,29 @@ ${meta(kF)}
     val files = DeltaReader.snapshot(spark, dir.getAbsolutePath).files
     assert(files.map(_.deletionVector.map(_.pathOrInlineDv)) == Seq(Some("bbbbb")))
   }
+
+  test("replay reads the old RESTORE shape: a re-add with no remove of the current vector replaces it") {
+    // a RESTORE across a DV delete, as logs written before removes
+    // carried the retired add's vector spelled it: v2 re-adds the v0
+    // file with no remove of the v1 vector. The file is read once, whole
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_dv_restore").toFile.getAbsolutePath
+    DeltaWriter.append(Seq(1L, 2L, 3L, 4L).toDF("k").coalesce(1), dir) // v0
+    DeltaWriter.deleteWithVectors(spark, dir, col("k") <= 2L) // v1
+    val log = new File(dir, "_delta_log")
+    val v0Add = new String(Files.readAllBytes(
+      new File(log, f"${0L}%020d.json").toPath), "UTF-8")
+      .split('\n').filter(_.startsWith("{\"add\"")).toSeq
+    assert(v0Add.size == 1 && !v0Add.head.contains("deletionVector"))
+    Files.write(new File(log, f"${2L}%020d.json").toPath,
+      v0Add.head.getBytes("UTF-8"))
+    val files = DeltaReader.snapshot(spark, dir).files
+    assert(files.size == 1 && files.head.deletionVector.isEmpty)
+    assert(DeltaReader.load(spark, dir).as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L))
+    // a later delete resolves the one live file it touches
+    DeltaWriter.deleteWithVectors(spark, dir, col("k") === 4L)
+    assert(DeltaReader.load(spark, dir).as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+  }
 }
