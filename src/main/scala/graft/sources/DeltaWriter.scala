@@ -234,8 +234,8 @@ object DeltaWriter {
         // ledger: redelivery of an already-landed batch no-ops, a
         // genuinely NEWER batch from a racing producer must surface
         // (two live instances is an operational fault, not redelivery)
-        if (DeltaReader.txns(df.sparkSession, tablePath).get(appId)
-            .exists(_.version >= txnVersion)) None
+        if (recorded(tablePath, DeltaReader.snapshot(df.sparkSession,
+            tablePath), appId, txnVersion)) None
         else throw e
     }
 
