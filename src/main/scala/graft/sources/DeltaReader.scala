@@ -527,17 +527,29 @@ object DeltaReader {
     * (`OPTIONS(versionAsOf='N')` through the DDL shim). */
   def loadAt(spark: SparkSession, tablePath: String,
       version: Long, prune: Map[String, Set[String]] = Map.empty,
-      tagSourceFile: Boolean = false): DataFrame = {
-    val snap = snapshotAt(spark, tablePath, version, prune)
+      tagSourceFile: Boolean = false): DataFrame =
+    scan(spark, tablePath, snapshotAt(spark, tablePath, version, prune),
+      tagSourceFile)
+
+  /** The rows of an already-replayed snapshot — the scan body of
+    * [[loadAt]], and the one read of a [[DeltaWriter]] verb, which
+    * takes its file list and its rows from the same snapshot. */
+  private[sources] def scan(spark: SparkSession, tablePath: String,
+      snap: Snapshot, tagSourceFile: Boolean): DataFrame = {
     if (snap.files.isEmpty)
       // no live files — every file pruned out, or the table is
       // legitimately EMPTY (a delete that matched every row, an IVM
       // materialization whose groups all retracted): an empty relation
       // in the table's schema, not a refusal — the metaData commit is
       // what proves a delta table exists here, snapshotAt already
-      // failed if it does not
+      // failed if it does not. A tagged scan keeps its tag columns, so a
+      // row verb on an emptied table matches nothing instead of failing
+      // analysis
       return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        if (!tagSourceFile) snap.schema
+        else snap.schema.add("__source_file", StringType)
+          .add("__row_index", LongType))
 
     // Under column mapping the parquet files and partitionValues keys use
     // physical names. `name` mode: the scan runs on physical names and
@@ -616,8 +628,16 @@ object DeltaReader {
   }
 
   /** Delta paths are URL-encoded relative paths. */
-  private[sources] def decodePath(p: String): String =
+  private[graft] def decodePath(p: String): String =
     java.net.URLDecoder.decode(p, "UTF-8")
+
+  /** The file-action spelling of an on-disk relative path, inverse to
+    * [[decodePath]]: `%`, `+` and space are the characters URL decoding
+    * rewrites, so they are percent-escaped (a hive dir `p=a+b` or
+    * `p=c%25d` would otherwise decode to a directory that does not
+    * exist). */
+  private[graft] def encodePath(p: String): String =
+    p.replace("%", "%25").replace("+", "%2B").replace(" ", "%20")
 
   /** Resolve an already-decoded file-action path against the table
     * root. Delta paths are table-relative OR ABSOLUTE — the shallow-

@@ -47,7 +47,16 @@ import graft.sources.StatsParquetFormat.{FileStatsText, statWritable}
   *    serializer. A remove is derived from the add it retires
   *    ([[DeltaActions.RemoveFile.of]]: same (path, DV) key, partition
   *    values and size), and the protocol and metaData a later commit
-  *    builds on come from the snapshot the verb already replayed.
+  *    builds on come from the snapshot the verb already replayed;
+  *  - ONE SNAPSHOT PER WRITE: a verb on an existing table replays the
+  *    log once and takes everything from that snapshot — the files it
+  *    retires, the rows it reads ([[DeltaReader.scan]] of the same
+  *    snapshot), the schema, invariants and txn ledger it checks — and
+  *    commits at the snapshot's version + 1 (a no-op returns the
+  *    snapshot's version). Any commit that lands while the verb runs
+  *    therefore meets [[publishOptimistic]]'s conflict matrix instead of
+  *    being half-read. A creating write replays nothing; [[restore]]
+  *    also replays the version it restores.
   *
   * Per-file statistics (numRecords, min/max cast to string, nullCount)
   * are collected by the write tasks themselves: data files stage
@@ -104,7 +113,8 @@ object DeltaWriter {
       columnMapping == "id",
       s"columnMapping must be 'none', 'name' or 'id', got '$columnMapping'")
     val table = new File(tablePath)
-    val version = nextVersion(table)
+    val snap = currentSnapshot(rawDf.sparkSession, tablePath)
+    val version = snap.fold(0L)(_.version + 1)
     require(version == 0L || columnMapping == "none",
       "columnMapping is fixed at table creation (version 0)")
     require(generated.isEmpty || version == 0L,
@@ -112,26 +122,21 @@ object DeltaWriter {
         "later appends read them from the table schema")
     require(generated.isEmpty || columnMapping == "none",
       "generated columns compose with unmapped tables only")
-    val providedGenerated = rawDf.columns.toSet
-    val df = applyGenerated(rawDf, tablePath, version, generated)
-    // exactly-once, second gate: the ledger is re-read AFTER the commit
-    // version is pinned, so every same-appId commit BELOW `version` is
-    // visible here and every one AT-OR-ABOVE it is caught by
-    // publishOptimistic's winner scan — together the two checks leave
-    // no window for a concurrent same-appId producer to land the same
-    // batch twice (appendOnce converts this throw into a ledger
-    // re-check and a no-op).
-    val snap =
-      if (version == 0L) None
-      else Some(DeltaReader.snapshot(df.sparkSession, tablePath))
+    val df = applyGenerated(rawDf, snap, generated)
+    // exactly-once, second gate: the ledger comes from the snapshot the
+    // commit builds on, so every same-appId commit at or below its
+    // version is visible here and every later one meets
+    // publishOptimistic's winner scan — no window for a concurrent
+    // same-appId producer to land the same batch twice (appendOnce
+    // converts this throw into a ledger re-check and a no-op)
     txn.foreach { case (appId, tv) =>
       if (snap.exists(recorded(tablePath, _, appId, tv)))
         throw new ConcurrentTransactionException(
           s"txn ($appId, $tv) already recorded at $tablePath — " +
             "redelivered batch; consult the ledger")
     }
-    validateAgainstTable(df, tablePath, partitionBy, version,
-      generatedToCheck = Some(providedGenerated))
+    validateAgainstTable(df, tablePath, partitionBy, snap,
+      generatedToCheck = Some(rawDf.columns.toSet))
     val (phys, fids): (Map[String, String], Map[String, Long]) =
       if (version == 0L) {
         val minted =
@@ -357,8 +362,8 @@ object DeltaWriter {
     // the table schema is the contract, not the landing files')
     val df = raw.select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
     val table = new File(tablePath)
-    val version = nextVersion(table)
-    validateAgainstTable(df, tablePath, snap.partitionColumns, version,
+    val version = snap.version + 1
+    validateAgainstTable(df, tablePath, snap.partitionColumns, Some(snap),
       generatedToCheck = Some(df.columns.toSet))
     val adds = stageLogical(df, snap, table, version)
     val now = System.currentTimeMillis()
@@ -382,7 +387,6 @@ object DeltaWriter {
     * schema. */
   def evolveSchema(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, newSchema: StructType): Long = {
-    val table = new File(tablePath)
     val snap = DeltaReader.snapshot(spark, tablePath)
     val old = snap.schema
     val badOld = old.fields.filterNot(f =>
@@ -397,7 +401,7 @@ object DeltaWriter {
     if (snap.physicalNames.isEmpty)
       // patch schemaString only (id/partitionColumns/configuration
       // preserved)
-      patchMetaData(spark, tablePath, "ADD COLUMNS")(
+      patchMetaData(tablePath, snap, "ADD COLUMNS")(
         _.copy(schemaString = newSchema.json))
     else {
       // name-mapped table: existing fields keep their schemaString
@@ -430,7 +434,7 @@ object DeltaWriter {
               .build())
         }
       })
-      patchMetaData(spark, tablePath, "ADD COLUMNS")(m => m.copy(
+      patchMetaData(tablePath, snap, "ADD COLUMNS")(m => m.copy(
         schemaString = mapped.json,
         configuration = m.configuration +
           ("delta.columnMapping.maxColumnId" -> nextId.toString)))
@@ -467,7 +471,7 @@ object DeltaWriter {
         "drop them first")
     val renamed = StructType(snap.schema.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
-    patchMetaData(spark, tablePath, "RENAME COLUMN")(m => m.copy(
+    patchMetaData(tablePath, snap, "RENAME COLUMN")(m => m.copy(
       schemaString = renamed.json,
       partitionColumns =
         m.partitionColumns.map(c => if (c == from) to else c)))
@@ -519,21 +523,19 @@ object DeltaWriter {
       s"CHECK constraint(s) reference $column: ${conRefs.mkString(", ")}" +
         " — drop them first")
     val dropped = StructType(snap.schema.fields.filterNot(_.name == column))
-    patchMetaData(spark, tablePath, "DROP COLUMN")(
+    patchMetaData(tablePath, snap, "DROP COLUMN")(
       _.copy(schemaString = dropped.json))
   }
 
-  /** Publish the latest snapshot's metaData with `patch` applied, as a
-    * metaData commit — table id, partitioning and configuration ride
-    * through unless the patch changes them. Shared by the schema verbs
-    * and the property/CHECK-constraint verbs. */
-  private def patchMetaData(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, operation: String)(
+  /** Publish `snap`'s metaData with `patch` applied, as a metaData
+    * commit at its version + 1 — table id, partitioning and
+    * configuration ride through unless the patch changes them. Shared
+    * by the schema verbs and the property/CHECK-constraint verbs. */
+  private def patchMetaData(tablePath: String, snap: DeltaReader.Snapshot,
+      operation: String)(
       patch: DeltaActions.Metadata => DeltaActions.Metadata): Long = {
-    val table = new File(tablePath)
-    val meta = patch(DeltaReader.snapshot(spark, tablePath).metadata)
-    val version = nextVersion(table)
-    publish(table, version, Seq(meta), operation)
+    val version = snap.version + 1
+    publish(new File(tablePath), version, Seq(patch(snap.metadata)), operation)
     version
   }
 
@@ -552,12 +554,12 @@ object DeltaWriter {
     val snap = DeltaReader.snapshot(spark, tablePath)
     require(!snap.configuration.contains(s"delta.constraints.$name"),
       s"constraint $name already exists (drop it first)")
-    val violating = DeltaReader.load(spark, tablePath)
+    val violating = DeltaReader.scan(spark, tablePath, snap, tagSourceFile = false)
       .filter(coalesce(expr(exprSql), lit(true)) === false).count()
     require(violating == 0L,
       s"cannot add CHECK constraint $name: $violating existing row(s) " +
         s"violate ($exprSql)")
-    patchMetaData(spark, tablePath, "ADD CONSTRAINT")(m => m.copy(
+    patchMetaData(tablePath, snap, "ADD CONSTRAINT")(m => m.copy(
       configuration = m.configuration + (s"delta.constraints.$name" -> exprSql)))
   }
 
@@ -573,7 +575,8 @@ object DeltaWriter {
       s"use addCheckConstraint for $key — constraints validate current rows")
     require(key != "delta.columnMapping.mode",
       "column mapping mode is immutable after table creation")
-    patchMetaData(spark, tablePath, "SET TBLPROPERTIES")(m =>
+    val snap = DeltaReader.snapshot(spark, tablePath)
+    patchMetaData(tablePath, snap, "SET TBLPROPERTIES")(m =>
       m.copy(configuration = m.configuration + (key -> value)))
   }
 
@@ -582,7 +585,8 @@ object DeltaWriter {
       tablePath: String, key: String): Long = {
     require(!key.startsWith("delta.constraints."),
       s"use dropCheckConstraint for $key")
-    patchMetaData(spark, tablePath, "UNSET TBLPROPERTIES")(m =>
+    val snap = DeltaReader.snapshot(spark, tablePath)
+    patchMetaData(tablePath, snap, "UNSET TBLPROPERTIES")(m =>
       m.copy(configuration = m.configuration - key))
   }
 
@@ -592,7 +596,7 @@ object DeltaWriter {
     val snap = DeltaReader.snapshot(spark, tablePath)
     require(snap.configuration.contains(s"delta.constraints.$name"),
       s"no such constraint: $name")
-    patchMetaData(spark, tablePath, "DROP CONSTRAINT")(m =>
+    patchMetaData(tablePath, snap, "DROP CONSTRAINT")(m =>
       m.copy(configuration = m.configuration - s"delta.constraints.$name"))
   }
 
@@ -616,8 +620,8 @@ object DeltaWriter {
     val bad = partitionValues.keySet -- snap.partitionColumns.toSet
     require(bad.isEmpty, s"not partition columns of $tablePath: $bad")
     require(partitionValues.nonEmpty, "no partitions admitted")
-    val version = nextVersion(table)
-    validateAgainstTable(df, tablePath, snap.partitionColumns, version)
+    val version = snap.version + 1
+    validateAgainstTable(df, tablePath, snap.partitionColumns, Some(snap))
     // every incoming row must land in an admitted partition
     val inScope = partitionValues.map { case (k, vs) =>
       col(k).cast("string").isin(vs.toSeq: _*)
@@ -671,20 +675,16 @@ object DeltaWriter {
   def merge(source: DataFrame, tablePath: String,
       keys: Seq[String]): Long = {
     val spark = source.sparkSession
-    import spark.implicits._
-    val table = new File(tablePath)
     val snap = DeltaReader.snapshot(spark, tablePath)
     require(keys.nonEmpty, "merge needs at least one key column")
     val missing = keys.filterNot(snap.schema.fieldNames.contains)
     require(missing.isEmpty, s"merge keys absent from table schema: $missing")
-    val version = nextVersion(table)
-    validateAgainstTable(source, tablePath, snap.partitionColumns, version)
+    validateAgainstTable(source, tablePath, snap.partitionColumns, Some(snap))
     require(source.groupBy(keys.map(col): _*).count()
         .filter(col("count") > 1).isEmpty,
       s"source has duplicate key tuples on $keys — upsert is ambiguous")
 
-    val tagged = DeltaReader.loadAt(spark, tablePath, Long.MaxValue,
-      tagSourceFile = true)
+    val tagged = DeltaReader.scan(spark, tablePath, snap, tagSourceFile = true)
     val srcKeys = source.select(keys.map(col): _*).distinct()
     val fields = snap.schema.fieldNames.toIndexedSeq
     // exact CDF images ([[stageCdcFiles]]) when the table declares a
@@ -725,34 +725,23 @@ object DeltaWriter {
           .withColumn("__rn", row_number().over(keyW))
           .localCheckpoint())
       }
-    try {
-      val touched = matched
-        .getOrElse(tagged.select(keys.map(col) :+ col("__source_file"): _*)
-          .join(srcKeys, keys, "left_semi"))
-        .select("__source_file").distinct()
-        .collect().map(_.getString(0)).toSet
-      val removedAdds = touchedAdds(snap, table, touched)
-
-      val survivors =
-        if (touched.isEmpty) source.limit(0)
-        else tagged
-          .join(broadcast(touched.toSeq.toDF("__source_file")),
-            Seq("__source_file"), "left_semi")
-          .drop("__source_file", "__row_index")
-          .join(srcKeys, keys, "left_anti")
-      val srcNorm = source.select(fields.map(col): _*)
-      val out = survivors.unionByName(srcNorm)
-      val adds = stageLogical(out, snap, table, version)
-      // replaced target rows = update_preimage (or delete, for duplicate
-      // surplus), their source versions = update_postimage, unmatched
-      // source rows = insert — told apart by ONE left-outer join of the
-      // source with the matched keys; the feed never ships touched-file
-      // survivor churn
-      val cdcFiles = matched.fold(Seq.empty[AddCDCFile]) { m =>
-        val pre = m.drop("__source_file")
-        val matchedKeys = m.filter(col("__rn") === 1)
-          .select(keys.map(col) :+ lit(true).as("__matched"): _*)
-        stageCdcFiles(
+    val srcNorm = source.select(fields.map(col): _*)
+    try rewriteRows(snap, new File(tablePath), tagged,
+        hits = matched.getOrElse(
+          tagged.select(keys.map(col) :+ col("__source_file"): _*)
+            .join(srcKeys, keys, "left_semi")),
+        operation = "MERGE", noOpWhenUntouched = false)(
+        // touched-file rows the source does not replace, plus the source
+        _.join(srcKeys, keys, "left_anti").unionByName(srcNorm))(
+        // replaced target rows = update_preimage (or delete, for
+        // duplicate surplus), their source versions = update_postimage,
+        // unmatched source rows = insert — told apart by ONE left-outer
+        // join of the source with the matched keys; the feed never ships
+        // touched-file survivor churn
+        matched.map { m =>
+          val pre = m.drop("__source_file")
+          val matchedKeys = m.filter(col("__rn") === 1)
+            .select(keys.map(col) :+ lit(true).as("__matched"): _*)
           pre.filter(col("__rn") === 1).drop("__rn")
             .withColumn("_change_type", lit("update_preimage"))
             .unionByName(pre.filter(col("__rn") > 1).drop("__rn")
@@ -760,12 +749,9 @@ object DeltaWriter {
             .unionByName(srcNorm.join(matchedKeys, keys, "left_outer")
               .select(fields.map(col) :+
                 when(col("__matched"), lit("update_postimage"))
-                  .otherwise(lit("insert")).as("_change_type"): _*)),
-          table, version, snap)
-      }
-      publishOptimistic(table, version,
-        cdcFiles ++ retire(removedAdds) ++ adds, operation = "MERGE")
-    } finally matched.foreach(_.unpersist())
+                  .otherwise(lit("insert")).as("_change_type"): _*))
+        })
+    finally matched.foreach(_.unpersist())
   }
 
   /** SCD TYPE-2 APPLY — the versioned-dimension maintenance every
@@ -809,7 +795,6 @@ object DeltaWriter {
   def scd2Apply(changes: DataFrame, tablePath: String,
       keys: Seq[String], ts: Long, snapshotMode: Boolean): Long = {
     val spark = changes.sparkSession
-    import spark.implicits._
     require(keys.nonEmpty, "scd2Apply needs at least one key column")
     require(!changes.columns.contains("valid_from") &&
       !changes.columns.contains("valid_to"),
@@ -822,17 +807,14 @@ object DeltaWriter {
       .withColumn("valid_to", lit(null).cast("long"))
     if (!tableExists(tablePath)) return append(stamped, tablePath)
 
-    val table = new File(tablePath)
     val snap = DeltaReader.snapshot(spark, tablePath)
     val attrs = snap.schema.fieldNames.toSeq
       .filterNot(keys.contains).filterNot(Seq("valid_from", "valid_to").contains)
     val missing = (keys ++ attrs).filterNot(changes.columns.contains)
     require(missing.isEmpty, s"change batch is missing columns: $missing")
-    val version = nextVersion(table)
-    validateAgainstTable(stamped, tablePath, snap.partitionColumns, version)
+    validateAgainstTable(stamped, tablePath, snap.partitionColumns, Some(snap))
 
-    val tagged = DeltaReader.loadAt(spark, tablePath, Long.MaxValue,
-      tagSourceFile = true)
+    val tagged = DeltaReader.scan(spark, tablePath, snap, tagSourceFile = true)
     val cur = tagged.filter(col("valid_to").isNull)
     // changed keys: current attrs differ (NULL-safe) from the batch's
     val s = changes.select((keys ++ attrs).map(col): _*)
@@ -866,42 +848,31 @@ object DeltaWriter {
     // closingKeys close their current row; only changed keys reopen
     val changedKeys = changedKeys0.cache()
     val closingKeys = changedKeys.unionByName(absentKeys).distinct().cache()
-    if (closingKeys.isEmpty && newKeys.isEmpty) {
+    val fields = snap.schema.fieldNames.toIndexedSeq
+    try {
       // the whole batch re-delivered current state — idempotent no-op,
       // publish NOTHING (an empty commit would still advance the
       // version and dirty every incremental consumer's window)
+      if (closingKeys.isEmpty && newKeys.isEmpty) snap.version
+      else rewriteRows(snap, new File(tablePath), tagged,
+          hits = cur.join(closingKeys, keys, "left_semi"),
+          operation = "SCD2 APPLY", noOpWhenUntouched = false) { inTouched =>
+        // survivors: every touched-file row EXCEPT the closing current ones
+        val survivors = inTouched
+          .join(closingKeys, keys, "left_anti")
+          .unionByName(inTouched.filter(col("valid_to").isNotNull)
+            .join(closingKeys, keys, "left_semi"))
+        val closed = inTouched.filter(col("valid_to").isNull)
+          .join(closingKeys, keys, "left_semi")
+          .withColumn("valid_to", lit(ts))
+        val opened = stamped
+          .join(changedKeys.unionByName(newKeys), keys, "left_semi")
+        Seq(survivors, closed, opened)
+          .map(_.select(fields.map(col): _*)).reduce(_.unionByName(_))
+      }(None)
+    } finally {
       changedKeys.unpersist(); closingKeys.unpersist(); newKeys.unpersist()
-      return snap.version
     }
-
-    val touched = cur.join(closingKeys, keys, "left_semi")
-      .select("__source_file").distinct()
-      .collect().map(_.getString(0)).toSet
-    val removedAdds = touchedAdds(snap, table, touched)
-
-    val fields = snap.schema.fieldNames.toIndexedSeq
-    val inTouched =
-      if (touched.isEmpty) tagged.limit(0)
-      else tagged.join(broadcast(touched.toSeq.toDF("__source_file")),
-        Seq("__source_file"), "left_semi")
-        .drop("__source_file", "__row_index")
-    // survivors: every touched-file row EXCEPT the closing current ones
-    val survivors = inTouched
-      .join(closingKeys, keys, "left_anti")
-      .unionByName(inTouched.filter(col("valid_to").isNotNull)
-        .join(closingKeys, keys, "left_semi"))
-    val closed = inTouched.filter(col("valid_to").isNull)
-      .join(closingKeys, keys, "left_semi")
-      .withColumn("valid_to", lit(ts))
-    val opened = stamped
-      .join(changedKeys.unionByName(newKeys), keys, "left_semi")
-    val out = Seq(survivors, closed, opened)
-      .map(_.select(fields.map(col): _*)).reduce(_.unionByName(_))
-    val adds = stageLogical(out, snap, table, version)
-    val committed = publishOptimistic(table, version,
-      retire(removedAdds) ++ adds, operation = "SCD2 APPLY")
-    changedKeys.unpersist(); closingKeys.unpersist(); newKeys.unpersist()
-    committed
   }
 
   /** DELETE WHERE: drop every row matching `predicate` in one atomic
@@ -918,34 +889,15 @@ object DeltaWriter {
       /** audit name for the commitInfo line — TRUNCATE rides this verb
         * with an all-rows predicate and its own operation label. */
       operation: String = "DELETE"): Long = {
-    import spark.implicits._
-    val table = new File(tablePath)
     val snap = DeltaReader.snapshot(spark, tablePath)
-    val version = nextVersion(table)
-    val tagged = DeltaReader.loadAt(spark, tablePath, Long.MaxValue,
-      tagSourceFile = true)
-    val touched = tagged.filter(predicate)
-      .select("__source_file").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touched.isEmpty) return version - 1 // nothing matches: no commit
-    val removedAdds = touchedAdds(snap, table, touched)
-    val survivors = tagged
-      .join(broadcast(touched.toSeq.toDF("__source_file")),
-        Seq("__source_file"), "left_semi")
-      .drop("__source_file", "__row_index")
-      .filter(coalesce(!predicate, lit(true))) // NULL predicate keeps the row
-    val adds = stageLogical(survivors, snap, table, version)
-    // exact CDF delete images ([[stageCdcFiles]]) when the table
-    // declares a consumer ([[cdfEnabled]]): the verb knows the matched
-    // rows, so the feed never ships touched-file survivor churn
-    val cdcFiles = if (!cdfEnabled(snap)) Nil else stageCdcFiles(
-      tagged.filter(predicate)
-        .drop("__source_file", "__row_index")
-        .select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
-        .withColumn("_change_type", lit("delete")),
-      table, version, snap)
-    publishOptimistic(table, version, cdcFiles ++ retire(removedAdds) ++ adds,
-      operation = operation)
+    val tagged = DeltaReader.scan(spark, tablePath, snap, tagSourceFile = true)
+    rewriteRows(snap, new File(tablePath), tagged,
+        hits = tagged.filter(predicate), operation = operation,
+        noOpWhenUntouched = true)(
+      _.filter(coalesce(!predicate, lit(true))))( // NULL predicate keeps the row
+      // exact CDF delete images: the verb knows the matched rows, so the
+      // feed never ships touched-file survivor churn
+      Some(changeImages(tagged.filter(predicate), snap, "delete")))
   }
 
   /** DELETE WHERE via DELETION VECTORS — the merge-on-read spelling of
@@ -984,13 +936,15 @@ object DeltaWriter {
     * production Delta runs. */
   def deleteWithVectors(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, predicate: org.apache.spark.sql.Column,
-      inlineMax: Int = 512): Long =
-    dvMarkDead(spark, tablePath, predicate, inlineMax) match {
-      case None => nextVersion(new File(tablePath)) - 1 // no match: no commit
-      case Some(p) =>
-        publishOptimistic(p.table, p.version,
-          p.protocol ++ p.removes ++ p.dvAdds, operation = "DELETE")
-    }
+      inlineMax: Int = 512): Long = {
+    val table = new File(tablePath)
+    val snap = DeltaReader.snapshot(spark, tablePath)
+    val tagged = DeltaReader.scan(spark, tablePath, snap, tagSourceFile = true)
+    dvMarkDead(snap, table, tagged, predicate, inlineMax)
+      .fold(snap.version) { marks => // no match: no commit
+        publishOptimistic(table, snap.version + 1, marks, operation = "DELETE")
+      }
+  }
 
   /** Merge-on-read UPDATE: the matched rows are marked dead with
     * writer-emitted deletion vectors (NOTHING is rewritten in place —
@@ -1005,66 +959,39 @@ object DeltaWriter {
       tablePath: String, predicate: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
       inlineMax: Int = 512): Long = {
-    val snap0 = DeltaReader.snapshot(spark, tablePath)
-    require(set.nonEmpty, "updateWithVectors needs at least one SET assignment")
-    val unknown = set.keySet.filterNot(snap0.schema.fieldNames.contains)
-    require(unknown.isEmpty, s"SET targets absent from table schema: $unknown")
-    // generated-column invariant, same contract as [[update]]
-    val gens = generationExpressions(snap0.schema)
-    val genHit = set.keySet.intersect(gens.keySet)
-    require(genHit.isEmpty,
-      s"cannot SET generated column(s) ${genHit.mkString(", ")} — " +
-        "update their source columns; the writer recomputes them")
-    dvMarkDead(spark, tablePath, predicate, inlineMax) match {
-      case None => nextVersion(new File(tablePath)) - 1 // no match: no commit
-      case Some(p) =>
-        val updated = p.tagged.filter(predicate)
+    val table = new File(tablePath)
+    val snap = DeltaReader.snapshot(spark, tablePath)
+    val applySet = setClause(snap, set, "updateWithVectors")
+    val tagged = DeltaReader.scan(spark, tablePath, snap, tagSourceFile = true)
+    dvMarkDead(snap, table, tagged, predicate, inlineMax)
+      .fold(snap.version) { marks => // no match: no commit
+        val version = snap.version + 1
+        val matched = tagged.filter(predicate)
           .drop("__source_file", "__row_index")
-          .select(p.snap.schema.fields.toIndexedSeq.map { f =>
-            set.get(f.name) match {
-              case Some(e) => e.cast(f.dataType).as(f.name)
-              case None => col(f.name)
-            }
-          }: _*)
-          .transform(df2 => recomputeGenerated(df2, p.snap.schema, gens))
-        enforceRowInvariants(updated, p.snap, tablePath)
-        val newAdds = stageLogical(updated, p.snap, p.table, p.version)
+        val updated = applySet(matched, None)
+        enforceRowInvariants(updated, snap, tablePath)
+        val newAdds = stageLogical(updated, snap, table, version)
         // exact CDF update images when the table declares a consumer
         // ([[cdfEnabled]]), same mechanism as the CoW verb: the DV'd
         // rows are the pre-images, `updated` the post-images
-        val cdcFiles = if (!cdfEnabled(p.snap)) Nil else {
-          val pre = p.tagged.filter(predicate)
-            .drop("__source_file", "__row_index")
-            .select(p.snap.schema.fieldNames.toIndexedSeq.map(col): _*)
-          stageCdcFiles(
-            pre.withColumn("_change_type", lit("update_preimage"))
-              .unionByName(
-                updated.withColumn("_change_type", lit("update_postimage"))),
-            p.table, p.version, p.snap)
-        }
-        publishOptimistic(p.table, p.version,
-          p.protocol ++ cdcFiles ++ p.removes ++ p.dvAdds ++ newAdds,
+        val cdcFiles = if (!cdfEnabled(snap)) Nil else stageCdcFiles(
+          changeImages(matched, snap, "update_preimage")
+            .unionByName(changeImages(updated, snap, "update_postimage")),
+          table, version, snap)
+        publishOptimistic(table, version, marks ++ cdcFiles ++ newAdds,
           operation = "UPDATE")
-    }
+      }
   }
 
-  /** The shared merge-on-read core: build merged deletion vectors for
-    * every file holding a predicate-matched row, plus the re-add/remove
-    * actions and protocol escalation — WITHOUT publishing (the caller
-    * owns the commit, so [[updateWithVectors]] can append its
-    * new-version files atomically alongside). None = nothing matched. */
-  private final case class DvMark(table: File,
-      snap: DeltaReader.Snapshot, tagged: DataFrame, version: Long,
-      protocol: Seq[Protocol], removes: Seq[RemoveFile], dvAdds: Seq[AddFile])
-
-  private def dvMarkDead(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, predicate: org.apache.spark.sql.Column,
-      inlineMax: Int): Option[DvMark] = {
-    val table = new File(tablePath)
-    val snap = DeltaReader.snapshot(spark, tablePath)
-    val version = nextVersion(table)
-    val tagged = DeltaReader.loadAt(spark, tablePath, Long.MaxValue,
-      tagSourceFile = true)
+  /** The shared merge-on-read core: merged deletion vectors for every
+    * file of `snap` holding a `predicate`-matched row of `tagged` (the
+    * snapshot's tagged scan), as the protocol escalation, removes and
+    * re-adds of one commit — WITHOUT publishing (the caller owns the
+    * commit, so [[updateWithVectors]] can append its new-version files
+    * atomically alongside). None = nothing matched. */
+  private def dvMarkDead(snap: DeltaReader.Snapshot, table: File,
+      tagged: DataFrame, predicate: org.apache.spark.sql.Column,
+      inlineMax: Int): Option[Seq[Action]] = {
     val hit = tagged.filter(predicate)
       .groupBy(col("__source_file"))
       .agg(collect_list(col("__row_index")).as("__rows"))
@@ -1126,8 +1053,7 @@ object DeltaWriter {
       // stays recognized by incremental z-order after a DV delete)
       a.copy(deletionVector = Some(dv), dataChange = true)
     }
-    Some(DvMark(table, snap, tagged, version, protocol,
-      retire(bitmaps.map(_._1)), adds))
+    Some(protocol ++ retire(bitmaps.map(_._1)) ++ adds)
   }
 
   /** Z85 needs 4-byte alignment; the roaring array parser reads only
@@ -1151,76 +1077,111 @@ object DeltaWriter {
   def update(spark: org.apache.spark.sql.SparkSession, tablePath: String,
       predicate: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Long = {
-    import spark.implicits._
-    val table = new File(tablePath)
     val snap = DeltaReader.snapshot(spark, tablePath)
-    require(set.nonEmpty, "update needs at least one SET assignment")
+    val applySet = setClause(snap, set, "update")
+    val tagged = DeltaReader.scan(spark, tablePath, snap, tagSourceFile = true)
+    rewriteRows(snap, new File(tablePath), tagged,
+        hits = tagged.filter(predicate), operation = "UPDATE",
+        noOpWhenUntouched = true) { rows =>
+      val rewritten = applySet(rows, Some(predicate))
+      // an UPDATE can move rows OUT of a declared CHECK range or SET a
+      // non-nullable column to NULL — same gates as the append-family
+      // verbs, over the rewritten (post-SET) rows
+      enforceRowInvariants(rewritten, snap, tablePath)
+      rewritten
+    } {
+      // the verb knows the exact matched rows: delta's own update images
+      val matched = tagged.filter(predicate)
+        .drop("__source_file", "__row_index")
+      Some(changeImages(matched, snap, "update_preimage")
+        .unionByName(changeImages(applySet(matched, None), snap,
+          "update_postimage")))
+    }
+  }
+
+  /** The row-rewrite core of [[delete]], [[update]], [[merge]] and
+    * [[scd2Apply]] — copy-on-write at FILE granularity over ONE
+    * snapshot. `hits` (rows of `tagged`, the snapshot's tagged scan)
+    * name the touched files, collected DISTINCT (file-count-sized
+    * metadata, never row data); only those files' rows — a broadcast
+    * semi-join on the file id, so untouched files are never read or
+    * rewritten — reach `rewrite`, whose output is staged with the
+    * verb's exact change images (`changes`, staged only when the table
+    * declares a feed consumer, [[cdfEnabled]]) and committed with the
+    * touched files' removes at the snapshot's version + 1. With no
+    * touched file, `noOpWhenUntouched` returns the snapshot's version
+    * without a commit; otherwise `rewrite` sees no rows (merge's and
+    * scd2's inserts still land). */
+  private def rewriteRows(snap: DeltaReader.Snapshot, table: File,
+      tagged: DataFrame, hits: DataFrame, operation: String,
+      noOpWhenUntouched: Boolean)(rewrite: DataFrame => DataFrame)(
+      changes: => Option[DataFrame]): Long = {
+    val spark = tagged.sparkSession
+    import spark.implicits._
+    val touched = hits.select("__source_file").distinct()
+      .collect().map(_.getString(0)).toSet
+    if (touched.isEmpty && noOpWhenUntouched) return snap.version
+    val removed = touchedAdds(snap, table, touched)
+    val rows =
+      (if (touched.isEmpty) tagged.limit(0)
+       else tagged.join(broadcast(touched.toSeq.toDF("__source_file")),
+         Seq("__source_file"), "left_semi"))
+        .drop("__source_file", "__row_index")
+    val version = snap.version + 1
+    val adds = stageLogical(rewrite(rows), snap, table, version)
+    val cdcFiles =
+      if (!cdfEnabled(snap)) Nil
+      else changes.fold(Seq.empty[AddCDCFile])(
+        stageCdcFiles(_, table, version, snap))
+    publishOptimistic(table, version, cdcFiles ++ retire(removed) ++ adds,
+      operation = operation)
+  }
+
+  /** The validated SET clause of [[update]] and [[updateWithVectors]]:
+    * every target is a table column and none is a generated column —
+    * the projection recomputes those over the post-SET rows instead
+    * (their source columns may just have changed; for a row the SET
+    * left alone the expression reproduces the held invariant
+    * bit-identically). Set expressions are cast back to the column's
+    * declared type, so an UPDATE never drifts the schema. The returned
+    * projection SETs every row, or only where `onlyWhere` holds (a NULL
+    * predicate keeps the row, SQL UPDATE's three-valued logic). */
+  private def setClause(snap: DeltaReader.Snapshot,
+      set: Map[String, org.apache.spark.sql.Column], verb: String)
+      : (DataFrame, Option[org.apache.spark.sql.Column]) => DataFrame = {
+    require(set.nonEmpty, s"$verb needs at least one SET assignment")
     val unknown = set.keySet.filterNot(snap.schema.fieldNames.contains)
     require(unknown.isEmpty, s"SET targets absent from table schema: $unknown")
-    // generated columns keep their invariant through updates: a direct
-    // SET on one is refused, and whenever a SET touches a row every
-    // generated column is recomputed from its expression (its source
-    // columns may just have changed)
     val gens = generationExpressions(snap.schema)
     val genHit = set.keySet.intersect(gens.keySet)
     require(genHit.isEmpty,
       s"cannot SET generated column(s) ${genHit.mkString(", ")} — " +
         "update their source columns; the writer recomputes them")
-    val version = nextVersion(table)
-    val tagged = DeltaReader.loadAt(spark, tablePath, Long.MaxValue,
-      tagSourceFile = true)
-    val touched = tagged.filter(predicate)
-      .select("__source_file").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touched.isEmpty) return version - 1 // nothing matches: no commit
-    val removedAdds = touchedAdds(snap, table, touched)
-    val rewritten = tagged
-      .join(broadcast(touched.toSeq.toDF("__source_file")),
-        Seq("__source_file"), "left_semi")
-      .drop("__source_file", "__row_index")
-      .select(snap.schema.fields.toIndexedSeq.map { f =>
+    val fields = snap.schema.fields.toIndexedSeq
+    (df, onlyWhere) => {
+      val setDf = df.select(fields.map { f =>
         set.get(f.name) match {
           case Some(e) =>
-            when(predicate, e.cast(f.dataType)).otherwise(col(f.name))
-              .as(f.name)
+            val v = e.cast(f.dataType)
+            onlyWhere.fold(v)(when(_, v).otherwise(col(f.name))).as(f.name)
           case None => col(f.name)
         }
       }: _*)
-      // generated columns recompute OVER the post-SET rows (their
-      // source columns may just have changed); for rows the predicate
-      // did not touch the expression reproduces the held invariant
-      // bit-identically, so pass-through stays exact
-      .transform(df2 => recomputeGenerated(df2, snap.schema, gens))
-    // an UPDATE can move rows OUT of a declared CHECK range or SET a
-    // non-nullable column to NULL — same gates as the append-family
-    // verbs, over the rewritten (post-SET) rows
-    enforceRowInvariants(rewritten, snap, tablePath)
-    val adds = stageLogical(rewritten, snap, table, version)
-    // the verb knows the exact matched rows — when the table declares
-    // a CDF consumer ([[cdfEnabled]]), publish them as delta's own
-    // update images ([[stageCdcFiles]]) in the same commit
-    val cdcFiles = if (!cdfEnabled(snap)) Nil else {
-      val matched = tagged.filter(predicate)
-        .drop("__source_file", "__row_index")
-      val matchedPre = matched
-        .select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
-      val matchedPost = matched
-        .select(snap.schema.fields.toIndexedSeq.map { f =>
-          set.get(f.name) match {
-            case Some(e) => e.cast(f.dataType).as(f.name)
-            case None => col(f.name)
-          }
-        }: _*)
-        .transform(df2 => recomputeGenerated(df2, snap.schema, gens))
-      stageCdcFiles(
-        matchedPre.withColumn("_change_type", lit("update_preimage"))
-          .unionByName(
-            matchedPost.withColumn("_change_type", lit("update_postimage"))),
-        table, version, snap)
+      if (gens.isEmpty) setDf
+      else setDf.select(fields.map { f =>
+        gens.get(f.name) match {
+          case Some(g) => expr(g).cast(f.dataType).as(f.name)
+          case None => col(f.name)
+        }
+      }: _*)
     }
-    publishOptimistic(table, version, cdcFiles ++ retire(removedAdds) ++ adds,
-      operation = "UPDATE")
   }
+
+  /** `rows` in table-schema column order, labelled as change `kind`. */
+  private def changeImages(rows: DataFrame, snap: DeltaReader.Snapshot,
+      kind: String): DataFrame =
+    rows.select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
+      .withColumn("_change_type", lit(kind))
 
   /** Full-table overwrite in ONE atomic commit: removes every live file
     * and adds the staged replacement — the "refresh this
@@ -1237,15 +1198,13 @@ object DeltaWriter {
         * window between the two. */
       properties: Map[String, String] = Map.empty): Long = {
     val table = new File(tablePath)
-    val version = nextVersion(table)
+    val snap = currentSnapshot(rawDf.sparkSession, tablePath)
+    val version = snap.fold(0L)(_.version + 1)
     // same generated-column symmetry as [[append]]: an absent declared
     // column is computed, a provided one validates below
-    val df = applyGenerated(rawDf, tablePath, version, Map.empty)
-    validateAgainstTable(df, tablePath, partitionBy, version,
+    val df = applyGenerated(rawDf, snap, Map.empty)
+    validateAgainstTable(df, tablePath, partitionBy, snap,
       generatedToCheck = Some(rawDf.columns.toSet))
-    val snap =
-      if (version == 0L) None
-      else Some(DeltaReader.snapshot(df.sparkSession, tablePath))
     val (staged, stagedBy) = toPhysical(df,
       snap.fold(Map.empty[String, String])(_.physicalNames),
       snap.fold(Map.empty[String, Long])(_.fieldIds), partitionBy)
@@ -1355,7 +1314,7 @@ object DeltaWriter {
       unlinkThreshold: Int = 4096): Seq[String] = {
     val table = new File(tablePath)
     val snapFiles = DeltaReader.snapshot(spark, tablePath).files
-    val live = snapFiles.map(_.path).toSet ++
+    val live = snapFiles.map(a => DeltaReader.decodePath(a.path)).toSet ++
       // DV sidecars referenced by any LIVE descriptor stay; a .bin left
       // behind once a compaction/rewrite absorbed its vectors is dead
       snapFiles.flatMap(_.deletionVector)
@@ -1530,7 +1489,6 @@ object DeltaWriter {
       where: Option[org.apache.spark.sql.Column] = None): Long = {
     val table = new File(tablePath)
     val snap = DeltaReader.snapshot(spark, tablePath)
-    val version = nextVersion(table)
     val scoped = where.map { pred =>
       require(snap.partitionColumns.nonEmpty,
         s"compact: OPTIMIZE … WHERE needs a partitioned table; " +
@@ -1557,13 +1515,14 @@ object DeltaWriter {
       }
       case None => snap.files
     }
-    if (targetFiles.isEmpty) return version - 1 // nothing in scope: no-op
-    val current = where match {
-      // a pure-partition predicate prunes the scan to exactly the
-      // scoped files — the rewrite never reads outside its scope
-      case Some(pred) => DeltaReader.load(spark, tablePath).filter(pred)
-      case None => DeltaReader.load(spark, tablePath)
-    }
+    if (targetFiles.isEmpty) return snap.version // nothing in scope: no-op
+    val version = snap.version + 1
+    // the rows come from the snapshot the removes do: a file committed
+    // since is neither rewritten nor retired. A pure-partition predicate
+    // prunes the scan to exactly the scoped files — the rewrite never
+    // reads outside its scope
+    val all = DeltaReader.scan(spark, tablePath, snap, tagSourceFile = false)
+    val current = where.fold(all)(all.filter)
     val clustered = {
       val base =
         if (snap.partitionColumns.nonEmpty)
@@ -1626,8 +1585,8 @@ object DeltaWriter {
         s"(${cols.mkString(", ")})")
     val table = new File(tablePath)
     val snap = DeltaReader.snapshot(spark, tablePath)
-    val version = nextVersion(table)
-    val current = DeltaReader.load(spark, tablePath)
+    val version = snap.version + 1
+    val current = DeltaReader.scan(spark, tablePath, snap, tagSourceFile = false)
     val aggs = cols.flatMap(c => Seq(
       max(col(c).cast("long")), min(col(c).cast("long"))))
     val m = current.agg(aggs.head, aggs.tail: _*).head()
@@ -1758,7 +1717,7 @@ object DeltaWriter {
     require(loose.forall(_.deletionVector.isEmpty),
       "loose files carry deletion vectors — rewrite through " +
         "optimizeZOrder/compact (they read through DV filtering)")
-    val version = nextVersion(table)
+    val version = snap.version + 1
     val root = table.getAbsolutePath
     def absOf(a: AddFile): String =
       DeltaReader.resolved(root, DeltaReader.decodePath(a.path))
@@ -1950,9 +1909,8 @@ object DeltaWriter {
       s"restore to version $version needs vacuumed file(s): " +
         s"${missing.take(5).mkString(", ")}" +
         (if (missing.size > 5) s" (+${missing.size - 5} more)" else ""))
-    val newVersion = nextVersion(table)
-    if (toAdd.isEmpty && toRemove.isEmpty) return newVersion - 1 // no-op
-    publishOptimistic(table, newVersion,
+    if (toAdd.isEmpty && toRemove.isEmpty) return cur.version // no-op
+    publishOptimistic(table, cur.version + 1,
       retire(toRemove) ++ toAdd.map(_.copy(dataChange = true)),
       operation = "RESTORE")
   }
@@ -2194,6 +2152,12 @@ object DeltaWriter {
   def tableExists(tablePath: String): Boolean =
     nextVersion(new File(tablePath)) > 0L
 
+  /** The latest snapshot, or None when the write creates the table. */
+  private def currentSnapshot(spark: org.apache.spark.sql.SparkSession,
+      tablePath: String): Option[DeltaReader.Snapshot] =
+    if (tableExists(tablePath)) Some(DeltaReader.snapshot(spark, tablePath))
+    else None
+
   /** Next unclaimed log version (0 for a fresh table). Checkpoints
     * count: after log cleanup deletes the JSON commits a checkpoint
     * covers, the version counter must continue from the checkpoint, not
@@ -2217,40 +2181,27 @@ object DeltaWriter {
     * partition pruning on the generated key comes free. [[update]]
     * keeps the invariant by recomputing generated columns whenever a
     * SET touches their row (and refusing a direct SET on one). */
-  private def applyGenerated(df: DataFrame, tablePath: String,
-      version: Long, declared: Map[String, String]): DataFrame =
-    if (version == 0L) {
-      val clash = declared.keySet.intersect(df.columns.toSet)
-      require(clash.isEmpty,
-        s"generated columns are computed by the writer — remove " +
-          s"${clash.mkString(", ")} from the incoming frame")
-      declared.foldLeft(df) { case (acc, (c, g)) =>
-        acc.withColumn(c, expr(g).as(c, new MetadataBuilder()
-          .putString("delta.generationExpression", g).build()))
-      }
-    } else {
-      // compute ABSENT generated columns; PROVIDED ones validate in
-      // [[validateAgainstTable]] (one combined pass, shared with every
-      // verb that lands rows — merge, overwrite, scd2)
-      val gens = generationExpressions(
-        DeltaReader.snapshot(df.sparkSession, tablePath).schema)
-      gens.foldLeft(df) { case (acc, (c, g)) =>
-        if (!acc.columns.contains(c)) acc.withColumn(c, expr(g)) else acc
-      }
+  private def applyGenerated(df: DataFrame,
+      snap: Option[DeltaReader.Snapshot],
+      declared: Map[String, String]): DataFrame =
+    snap match {
+      case None =>
+        val clash = declared.keySet.intersect(df.columns.toSet)
+        require(clash.isEmpty,
+          s"generated columns are computed by the writer — remove " +
+            s"${clash.mkString(", ")} from the incoming frame")
+        declared.foldLeft(df) { case (acc, (c, g)) =>
+          acc.withColumn(c, expr(g).as(c, new MetadataBuilder()
+            .putString("delta.generationExpression", g).build()))
+        }
+      case Some(s) =>
+        // compute ABSENT generated columns; PROVIDED ones validate in
+        // [[validateAgainstTable]] (one combined pass, shared with every
+        // verb that lands rows — merge, overwrite, scd2)
+        generationExpressions(s.schema).foldLeft(df) { case (acc, (c, g)) =>
+          if (!acc.columns.contains(c)) acc.withColumn(c, expr(g)) else acc
+        }
     }
-
-  /** Recompute every generated column over an already-SET frame —
-    * the second stage of [[update]]/[[updateWithVectors]]'s rewrite:
-    * generation expressions must see the POST-SET source columns. */
-  private def recomputeGenerated(df: DataFrame, schema: StructType,
-      gens: Map[String, String]): DataFrame =
-    if (gens.isEmpty) df
-    else df.select(schema.fields.toIndexedSeq.map { f =>
-      gens.get(f.name) match {
-        case Some(g) => expr(g).cast(f.dataType).as(f.name)
-        case None => col(f.name)
-      }
-    }: _*)
 
   /** The `col → generation expression` map a table schema declares
     * (empty for tables without generated columns). */
@@ -2261,34 +2212,37 @@ object DeltaWriter {
         Some(f.name -> f.metadata.getString("delta.generationExpression"))
       else None).toMap
 
+  /** The incoming frame fits the table `snap` replayed (None = the
+    * write creates it): same partitioning and schema, and every row
+    * invariant holds. */
   private def validateAgainstTable(df: DataFrame, tablePath: String,
-      partitionBy: Seq[String], version: Long,
+      partitionBy: Seq[String], snap: Option[DeltaReader.Snapshot],
       /** generated columns to validate — None = all declared; append/
         * overwrite pass ONLY the columns the caller's frame PROVIDED,
         * so the writer-computed ones (tautologically consistent) don't
         * cost a second full pass over the frame. */
       generatedToCheck: Option[Set[String]] = None): Unit =
-    if (version == 0L) {
-      val missing = partitionBy.filterNot(df.schema.fieldNames.contains)
-      require(missing.isEmpty,
-        s"partition columns $missing absent from schema ${df.schema.fieldNames.toSeq}")
-    } else {
-      val snap = DeltaReader.snapshot(df.sparkSession, tablePath)
-      require(snap.partitionColumns == partitionBy,
-        s"append partitioning $partitionBy != table's ${snap.partitionColumns}")
-      val want = snap.schema.fields.map(f => f.name -> f.dataType).toMap
-      val got = df.schema.fields.map(f => f.name -> f.dataType).toMap
-      require(want == got,
-        s"schema mismatch appending to $tablePath (schema evolution needs " +
-          s"an explicit metaData commit): table=$want df=$got")
-      // ALL row-level invariants — CHECK constraints, NOT NULL columns,
-      // generated-column consistency — in ONE combined pass over the
-      // frame (three separate actions would re-evaluate the incoming
-      // plan three times per landed batch); per-category culprit
-      // probes run only on the failure path
-      val gens = generationExpressions(snap.schema)
-        .filter { case (c, _) => generatedToCheck.forall(_.contains(c)) }
-      enforceRowInvariants(df, snap, tablePath, gens)
+    snap match {
+      case None =>
+        val missing = partitionBy.filterNot(df.schema.fieldNames.contains)
+        require(missing.isEmpty,
+          s"partition columns $missing absent from schema ${df.schema.fieldNames.toSeq}")
+      case Some(snap) =>
+        require(snap.partitionColumns == partitionBy,
+          s"append partitioning $partitionBy != table's ${snap.partitionColumns}")
+        val want = snap.schema.fields.map(f => f.name -> f.dataType).toMap
+        val got = df.schema.fields.map(f => f.name -> f.dataType).toMap
+        require(want == got,
+          s"schema mismatch appending to $tablePath (schema evolution needs " +
+            s"an explicit metaData commit): table=$want df=$got")
+        // ALL row-level invariants — CHECK constraints, NOT NULL columns,
+        // generated-column consistency — in ONE combined pass over the
+        // frame (three separate actions would re-evaluate the incoming
+        // plan three times per landed batch); per-category culprit
+        // probes run only on the failure path
+        val gens = generationExpressions(snap.schema)
+          .filter { case (c, _) => generatedToCheck.forall(_.contains(c)) }
+        enforceRowInvariants(df, snap, tablePath, gens)
     }
 
   /** The row-level invariant gate shared by EVERY verb that lands or
@@ -2616,7 +2570,8 @@ object DeltaWriter {
     }
     delete(staging)
     // partitionValues from the hive dir segs (`_change_data/<pc=v>/…`)
-    moved.map(rel => AddCDCFile(rel, hivePartitionValues(rel.split('/').drop(1)),
+    moved.map(rel => AddCDCFile(DeltaReader.encodePath(rel),
+      hivePartitionValues(rel.split('/').drop(1)),
       new File(table, rel).length()))
   }
 
@@ -2710,10 +2665,10 @@ object DeltaWriter {
       keep
     }.map { rel =>
       val f = new File(table, rel)
-      val segs = relKey(rel).split('/')
-      AddFile(segs.mkString("/"), f.length(),
-        hivePartitionValues(segs), None,
-        Some(DeltaStats.json(stats(relKey(rel)), dataFields)), tags,
+      val key = relKey(rel)
+      AddFile(DeltaReader.encodePath(key), f.length(),
+        hivePartitionValues(key.split('/')), None,
+        Some(DeltaStats.json(stats(key), dataFields)), tags,
         f.lastModified(), dataChange)
     }
   }

@@ -2692,4 +2692,126 @@ class DeltaWriterSpec extends AnyFunSuite {
     assert(DeltaReader.load(spark, path).collect().toSet ==
       DeltaReader.loadAt(spark, path, 2L).collect().toSet)
   }
+
+  test("row verbs on a table emptied by a delete: no-op delete/update, merge inserts") {
+    val path = tmpTable("emptied")
+    val rows = spark.range(0, 50).select(col("id"), (col("id") * 2).as("v"))
+    DeltaWriter.append(rows, path) // v0
+    assert(DeltaWriter.delete(spark, path, lit(true)) == 1L) // every row
+    assert(DeltaReader.load(spark, path).isEmpty)
+    assert(DeltaWriter.delete(spark, path, col("id") === 3) == 1L)
+    assert(DeltaWriter.update(spark, path, col("id") === 3,
+      Map("v" -> lit(0L))) == 1L)
+    assert(DeltaWriter.deleteWithVectors(spark, path, col("id") === 3) == 1L)
+    assert(DeltaWriter.merge(rows.filter(col("id") < 5), path, Seq("id")) == 2L)
+    assert(DeltaReader.load(spark, path).collect().toSet ==
+      rows.filter(col("id") < 5).collect().toSet)
+  }
+
+  test("compact rewrites its snapshot's rows only: a file committed mid-verb stays live, once") {
+    val path = tmpTable("compact_race")
+    val rows = spark.range(0, 1550)
+      .select(col("id"), (col("id") % 5).cast("string").as("p"))
+    DeltaWriter.append(rows.filter(col("id") < 800), path, Seq("p"))
+    DeltaWriter.append(rows.filter(col("id") >= 800), path, Seq("p"))
+    val snap = DeltaReader.snapshot(spark, path)
+    val injected = ForeignCommit.arm(spark, path, snap)
+    // the scope predicate is the first thing the verb evaluates, after
+    // it took its snapshot: the foreign append lands in between
+    val v = DeltaWriter.compact(spark, path,
+      where = Some(ForeignCommit.fire(col("p")).isNotNull))
+    assert(ForeignCommit.hasFired)
+    assert(v == snap.version + 2, "the layout commit lands after the append")
+    assert(DeltaReader.load(spark, path).count() == 1550L + injected)
+    assert(DeltaReader.snapshot(spark, path).files
+      .exists(_.path.contains("foreign-")))
+  }
+
+  test("merge over a commit landing mid-verb is refused by the conflict matrix") {
+    val path = tmpTable("merge_race")
+    val rows = spark.range(0, 1200).select(col("id"), (col("id") * 2).as("v"))
+    DeltaWriter.append(rows.filter(col("id") < 600), path)
+    DeltaWriter.append(rows.filter(col("id") >= 600), path)
+    val snap = DeltaReader.snapshot(spark, path)
+    val injected = ForeignCommit.arm(spark, path, snap)
+    // a filter is never pruned away: the source's first evaluation
+    // (after the verb's snapshot) lands the foreign append
+    val source = spark.range(0, 1200, 7).select(col("id"), lit(-1L).as("v"))
+      .filter(ForeignCommit.fire(col("id").cast("string")).isNotNull)
+    val e = intercept[IllegalArgumentException](
+      DeltaWriter.merge(source, path, Seq("id")))
+    assert(ForeignCommit.hasFired)
+    assert(e.getMessage.contains("concurrent conflict"), e.getMessage)
+    val after = DeltaReader.snapshot(spark, path)
+    assert(after.version == snap.version + 1)
+    assert(after.files.length == snap.files.length + 1)
+    assert(DeltaReader.load(spark, path).count() == 1200L + injected)
+    assert(DeltaReader.load(spark, path).filter(col("v") === -1L).isEmpty)
+  }
+
+  test("partition values with '+', '%' and spaces survive append, DV delete, update, the change feed and a checkpoint") {
+    val path = tmpTable("partition_specials")
+    val base = spark.range(0, 60).select(col("id"),
+      element_at(array(lit("a+b"), lit("c%d"), lit("e f")),
+        (col("id") % 3 + 1).cast("int")).as("p"))
+    def rows(): Set[(Long, String)] = DeltaReader.load(spark, path)
+      .select("id", "p").collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    var want = base.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    DeltaWriter.append(base, path, Seq("p")) // v0
+    DeltaWriter.setTableProperty(spark, path,
+      "delta.enableChangeDataFeed", "true") // v1
+    assert(rows() == want)
+    assert(DeltaReader.snapshot(spark, path).files.map(_.partitionValues("p"))
+      .toSet == Set(Some("a+b"), Some("c%d"), Some("e f")))
+    DeltaWriter.deleteWithVectors(spark, path, col("id") % 4 === 0) // v2
+    want = want.filterNot(_._1 % 4 == 0)
+    assert(rows() == want)
+    DeltaWriter.update(spark, path, col("id") % 4 === 1,
+      Map("id" -> (col("id") + 1000))) // v3: cdc files under the same dirs
+    want = want.map { case (i, p) => if (i % 4 == 1) (i + 1000, p) else (i, p) }
+    assert(rows() == want)
+    // the change feed over both row verbs folds v1 into the current rows
+    val cdf = DeltaReader.loadChangeFeed(spark, path, 1L, 3L)
+    def images(kinds: String*) = cdf.filter(col("_change_type").isin(kinds: _*))
+      .select("id", "p")
+    val folded = DeltaReader.loadAt(spark, path, 1L).select("id", "p")
+      .exceptAll(images("delete", "update_preimage"))
+      .unionAll(images("insert", "update_postimage"))
+    assert(folded.collect().map(r => (r.getLong(0), r.getString(1))).toSet == want)
+    DeltaWriter.checkpoint(spark, path)
+    assert(rows() == want)
+  }
+}
+
+/** Lands one foreign commit the first time [[fire]] is evaluated: a
+  * byte copy of one live file of the armed snapshot, added at the
+  * snapshot's version + 1 — another writer committing while a verb that
+  * took that snapshot is still running. */
+object ForeignCommit {
+  private val fired = new java.util.concurrent.atomic.AtomicBoolean(true)
+  @volatile private var land: () => Unit = () => ()
+
+  /** Arm the next [[fire]]; returns the number of rows the commit adds. */
+  def arm(spark: org.apache.spark.sql.SparkSession, tablePath: String,
+      snap: DeltaReader.Snapshot): Long = {
+    val a = snap.files.head
+    val src = new File(tablePath, DeltaReader.decodePath(a.path))
+    val rel = (DeltaReader.decodePath(a.path).split('/').dropRight(1) :+
+      s"foreign-${java.util.UUID.randomUUID()}.parquet").mkString("/")
+    land = () => {
+      java.nio.file.Files.copy(src.toPath, new File(tablePath, rel).toPath)
+      DeltaWriter.publishOptimistic(new File(tablePath), snap.version + 1,
+        Seq(a.copy(path = DeltaReader.encodePath(rel), dataChange = true)))
+    }
+    fired.set(false)
+    spark.read.parquet(src.getAbsolutePath).count()
+  }
+
+  def hasFired: Boolean = fired.get()
+
+  /** Identity on its argument; lands the armed commit on the first call. */
+  val fire = udf { (s: String) =>
+    if (fired.compareAndSet(false, true)) land()
+    s
+  }
 }

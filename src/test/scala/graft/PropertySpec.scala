@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
-import graft.sources.{DeletionVectors, Z85}
+import graft.sources.{DeletionVectors, DeltaReader, Z85}
 import graft.functions.{ValueWeight, WeightedPercentileAgg}
 import graft.streaming.Sessionize
 
@@ -11,6 +11,16 @@ import graft.streaming.Sessionize
   * fold semantics match a reference implementation. Pure-JVM (no Spark
   * session needed). */
 object PropertySpec extends Properties("graft-kernels") {
+
+  // the characters URL decoding rewrites, mixed into arbitrary text
+  private val pathText = Gen.listOf(Gen.frequency(
+    3 -> Gen.oneOf('%', '+', ' ', '/', '=', '2', 'B'),
+    2 -> org.scalacheck.Arbitrary.arbitrary[Char])).map(_.mkString)
+
+  property("delta path encoding round-trips through the readers' decoding") =
+    forAll(pathText) { s =>
+      DeltaReader.decodePath(DeltaReader.encodePath(s)) == s
+    }
 
   property("z85 round-trips 4-aligned byte arrays") =
     forAll(Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue))) { bytes0 =>
