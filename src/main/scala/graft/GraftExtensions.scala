@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{DHash63, DotProductI64, Md5Long}
+import graft.functions.{DHash63, DotProductI64, Md5Long, WordNgramMd5Long}
 
 /** Session-extension entry point — the Spark-native way to ship this
   * library's custom Catalyst surface into ANY session, including ones the
@@ -13,11 +13,11 @@ import graft.functions.{DHash63, DotProductI64, Md5Long}
   *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * Registers all three native codegen expressions — `dot_i64`, `md5_60`,
-  * `dhash63` — through the injected function hook (so they resolve in
-  * plain `spark.sql(...)` with no runtime `register` call; the per-query
-  * `X.register(s)` calls stay as idempotent belt-and-braces for sessions
-  * built without the extension) and the
+  * Registers all four native codegen expressions — `dot_i64`, `md5_60`,
+  * `word_ngram_md5_60`, `dhash63` — through the injected function hook
+  * (so they resolve in plain `spark.sql(...)` with no runtime `register`
+  * call; the per-query `X.register(s)` calls stay as idempotent
+  * belt-and-braces for sessions built without the extension) and the
   * `information_schema.{tables,columns}` analyzer rule
   * ([[graft.plans.ResolveInformationSchema]]). The DDL shim
   * stays in [[AdtContext]] because it rewrites a statement Spark's parser
@@ -37,6 +37,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[Md5Long].getName, "md5_60"),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         Md5Long(exprs.head)))
+    ext.injectFunction((
+      FunctionIdentifier("word_ngram_md5_60"),
+      new ExpressionInfo(classOf[WordNgramMd5Long].getName, "word_ngram_md5_60"),
+      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+        WordNgramMd5Long(exprs(0), exprs(1))))
     ext.injectFunction((
       FunctionIdentifier("dhash63"),
       new ExpressionInfo(classOf[DHash63].getName, "dhash63"),

@@ -56,8 +56,11 @@ object Md5Long {
   /** First 60 bits of md5 as used by the hex spelling: hex chars 2..16
     * (1-indexed) = low nibble of digest byte 0, then digest bytes 1..7.
     * Always non-negative (< 2^60). Called from generated code. */
-  def hash60(bytes: Array[Byte]): Long = {
-    val d = org.apache.commons.codec.digest.DigestUtils.md5(bytes)
+  def hash60(bytes: Array[Byte]): Long =
+    pack60(org.apache.commons.codec.digest.DigestUtils.md5(bytes))
+
+  /** [[hash60]]'s bit-packing of a 16-byte md5 digest. */
+  def pack60(d: Array[Byte]): Long = {
     var v = (d(0) & 0xfL) << 56
     var i = 1
     while (i < 8) {

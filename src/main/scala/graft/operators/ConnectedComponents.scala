@@ -39,11 +39,11 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   /** Symmetrize a directed pair frame `(d1, d2)` into the edge frame
-    * the kernel requires, caching the pair list FIRST (the union
-    * references it twice — without the cache each reference re-runs
-    * the whole upstream pair pipeline) and the result (every round
-    * re-reads the edges). The one spelling of the precondition both
-    * q89 and q147 route through. */
+    * [[fixpoint]] (every node must appear as a d1) and PageRank
+    * (degrees count edges) require, caching the pair list FIRST (the
+    * union references it twice — without the cache each reference
+    * re-runs the whole upstream pair pipeline) and the result (every
+    * round re-reads the edges). */
   def symmetrize(pairs: DataFrame): DataFrame = {
     val p = pairs.select(col("d1"), col("d2")).cache()
     p.unionByName(p.select(col("d2").as("d1"), col("d1").as("d2")))
@@ -69,27 +69,36 @@ object ConnectedComponents {
 
   /** The fixed-round kernel (q89/q147/q181/q183's declared,
     * oracle-mirrored semantics): exactly `rounds` min-label rounds over
-    * symmetrized edges `(d1, d2)`; returns `(doc_id, lbl)`.
+    * the undirected graph of a pair list `(d1, d2)` (either direction,
+    * duplicates allowed); returns `(doc_id, lbl)` for every endpoint.
     *
-    * r22 (guide §2.4 remove passes/actions): appending one SELF-LOOP per
-    * node folds each round's `min(own, neighbour-min)` into a single
-    * join + min-aggregate — `min over {lbl(u) : (v,u) ∈ E ∪ {(v,v)}}`
-    * is exactly `min(lbl(v), min_nbr lbl(u))`, so every round is
+    * r22 (guide §2.4 remove passes/actions): a SELF-LOOP per node folds
+    * each round's `min(own, neighbour-min)` into a single join +
+    * min-aggregate — `min over {lbl(u) : (v,u) ∈ E ∪ {(v,v)}}` is
+    * exactly `min(lbl(v), min_nbr lbl(u))`, so every round is
     * value-identical to the two-join spelling. With labels referenced
-    * ONCE per round the logical tree grows linearly (the per-round
-    * doubling that forced an eager localCheckpoint per round is gone),
-    * so the whole fixed-round fold now executes as ONE query: measured
-    * q89 36 → ~8 scheduler jobs at sf0.1. Round 1 over the identity
-    * labeling is itself just `min(d2) GROUP BY d1` on the self-looped
-    * edges — no separate init-labels pass. */
-  def minLabelRounds(edges: DataFrame, rounds: Int): DataFrame = {
+    * ONCE per round the logical tree grows linearly, so the whole
+    * fixed-round fold executes as ONE query with no checkpoint. Round 1
+    * over the identity labeling is itself just `min(d2) GROUP BY d1` on
+    * the self-looped edges — no separate init-labels pass.
+    *
+    * The self-looped edge frame is one narrow explode of the cached pair
+    * list: each pair emits (d1,d2), (d2,d1), (d1,d1) and (d2,d2). A node
+    * in several pairs gets several copies of its self-loop (and a pair
+    * listed twice, or in both directions, duplicate edges) — harmless
+    * under `min` — so there is no node `distinct()` shuffle and no
+    * union cache; every round re-reads the pair cache through the
+    * explode. */
+  def minLabelRounds(pairs: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // edges arrives cached (symmetrize); the self-looped frame is what
-    // every round re-reads, so cache THAT (node set = distinct d1 — in a
-    // symmetrized frame every endpoint appears as d1)
-    val edgesPlus = edges.unionByName(
-      edges.select(col("d1")).distinct()
-        .select(col("d1"), col("d1").as("d2"))).cache()
+    val p = pairs.select(col("d1"), col("d2")).cache()
+    val edgesPlus = p
+      .select(explode(array(
+        struct(col("d1"), col("d2")),
+        struct(col("d2").as("d1"), col("d1").as("d2")),
+        struct(col("d1"), col("d1").as("d2")),
+        struct(col("d2").as("d1"), col("d2")))).as("e"))
+      .select(col("e.d1").as("d1"), col("e.d2").as("d2"))
     var labels = edgesPlus.groupBy(col("d1")).agg(min(col("d2")).as("lbl"))
       .withColumnRenamed("d1", "doc_id")
     for (_ <- 2 to rounds)

@@ -4,9 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fixed-round exact-integer PageRank over a symmetrized pair graph —
-  * the graph-centrality twin of [[ConnectedComponents]] (same edge
-  * contract, same fixed-round oracle discipline, same per-round
-  * equi-join + aggregate shape). q162 runs it over the q143 perceptual
+  * the graph-centrality twin of [[ConnectedComponents]] (same
+  * fixed-round oracle discipline, same per-round equi-join + aggregate
+  * shape; unlike the CC kernel it needs the exact symmetrized edge
+  * frame, since degrees count edges). q162 runs it over the q143 perceptual
   * near-dup graph to rank cluster members by centrality — the
   * "pick the canonical representative" signal a dedup pass wants
   * beyond q147's arbitrary min-label survivor.
@@ -29,8 +30,9 @@ import org.apache.spark.sql.functions._
   * production checkpointed); each round is one equi-join of edges
   * against the rank frame + one map-side-combined sum per destination —
   * the identical per-round cost envelope as a CC round, linear in
-  * |edges|. `localCheckpoint` truncates the doubling lineage per round
-  * exactly as the CC kernel does (reliable checkpoint on a cluster).
+  * |edges|. Every round is `localCheckpoint`ed (reliable checkpoint on
+  * a cluster), so the plan size is round-independent; the CC kernel's
+  * fixed rounds instead run as one linear-lineage query.
   */
 object PageRank {
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.Md5Long
+import graft.functions.{Md5Long, WordNgramMd5Long}
 
 /** Round-10 corpus-curation operators: substring-level duplicate-span
   * detection (the Lee et al. 2022 "Deduplicating Training Data" exact-
@@ -38,15 +38,14 @@ object Curation {
   /** Positioned word 5-grams hashed to 60-bit longs — `(doc_id, k, h)`
     * with k the 1-based gram start. The one corpus explode the span and
     * fingerprint families share; downstream shuffles move 8-byte keys,
-    * never gram text (the q42 discipline). */
+    * never gram text (the q42 discipline). Docs with fewer than G words
+    * have no grams ([[WordNgramMd5Long]]). */
   private def positionedGrams(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    tokenized(s, d).select($"doc_id", explode(expr(
-      s"""transform(sequence(1, size(w) - ${G - 1}),
-                    k -> struct(k AS k, concat_ws(' ', slice(w, k, $G)) AS g))"""))
-        .as("x"))
-      .select($"doc_id", $"x.k".cast("long").as("k"),
-        Md5Long.md5_60($"x.g").as("h"))
+    Tables.t(s, d, "documents")
+      .select($"doc_id",
+        posexplode(WordNgramMd5Long.wordNgramMd5_60($"text", G)))
+      .select($"doc_id", ($"pos" + 1).cast("long").as("k"), $"col".as("h"))
   }
 
   /** q130/q135's shared span computation: maximal runs of corpus-dup

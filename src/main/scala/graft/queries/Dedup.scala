@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.WordNgramMd5Long
 
 /** Large-scale training-data dedup + similarity-search operators over the
   * `documents` and `embeddings` tables.
@@ -64,47 +65,31 @@ object Dedup {
   private[queries] def evalPct(n: Long): Long =
     math.min(100L, math.max(1L, (100L * EvalSampleTarget) / n))
 
-  /** doc_id → distinct word-3-gram shingles, df-capped — EXECUTED over
-    * the 60-bit md5 hash of each shingle string (r22, guide §2.3
-    * "shuffle keys and metadata instead of payloads"): the exchange,
-    * distinct, df window and downstream self-join all move/compare
-    * 8-byte longs instead of ~20-byte gram strings. Value-identical to
-    * the string spelling (which q41's oracle keeps) because md5_60 is
-    * INJECTIVE on the corpus shingle universe — verified per SF in
-    * DuckDB (`count(distinct s) == count(distinct md5_60(s))`: 16 506 =
-    * 16 506 at sf0.001, 16 245 at sf0.01, 27 213 at sf0.1), so every
-    * equality, distinct, df count and intersection count is the same
-    * number under either key; the driver's hash-exact oracle gate
-    * re-proves it on every corpus it tests. */
-  private def shingles(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"h")
-    Tables.t(s, d, "documents")
-      .select($"doc_id", split($"text", " ").as("w"))
-      .select($"doc_id", explode(expr(
-        "transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3)))"))
-        .as("s"))
-      .select($"doc_id", h60($"s").as("h"))
-      // one exchange for distinct + df window (see [[hashedShinglesOf]])
-      .repartition($"h")
-      .distinct()
-      .withColumn("df", count(lit(1)).over(w))
-      .filter($"df" <= MaxShingleDf)
-      .select($"doc_id", $"h")
-  }
-
-  /** doc_id → 60-bit-hashed distinct shingles, df-capped — over an
-    * arbitrary (doc_id, text) frame. The df cap is computed WITHIN the
-    * given frame (for the incremental q125 shapes each side caps against
-    * its own corpus; the full-corpus operators pass the whole table). */
+  /** doc_id → distinct word-3-gram shingles, df-capped — over an
+    * arbitrary (doc_id, text) frame, EXECUTED over the 60-bit md5 hash
+    * of each shingle string (r22, guide §2.3 "shuffle keys and metadata
+    * instead of payloads"): the exchange, distinct, df window and
+    * downstream self-join all move/compare 8-byte longs instead of
+    * ~20-byte gram strings. Value-identical to the string spelling
+    * (which q41's oracle keeps) because md5_60 is INJECTIVE on the
+    * corpus shingle universe — verified per SF in DuckDB
+    * (`count(distinct s) == count(distinct md5_60(s))`: 16 506 = 16 506
+    * at sf0.001, 16 245 at sf0.01, 27 213 at sf0.1), so every equality,
+    * distinct, df count and intersection count is the same number under
+    * either key; the driver's hash-exact oracle gate re-proves it on
+    * every corpus it tests. The hashes come straight from the text
+    * bytes ([[graft.functions.WordNgramMd5Long]]); a document with
+    * fewer than 3 words has no shingles, as in the DuckDB mirror
+    * [[duckShingleCtes]].
+    *
+    * The df cap is computed WITHIN the given frame (for the incremental
+    * q125 shapes each side caps against its own corpus; the full-corpus
+    * operators pass the whole table). */
   private def hashedShinglesOf(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
     docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3)))"))
-        .as("s"))
-      .select(col("doc_id"), h60(col("s")).as("h"))
+      .select(col("doc_id"),
+        explode(WordNgramMd5Long.wordNgramMd5_60(col("text"), 3)).as("h"))
       // ONE corpus-wide exchange serves BOTH the distinct and the df
       // window: HashPartitioning(h) satisfies the distinct's
       // ClusteredDistribution({doc_id, h}) (a subset of the clustering
@@ -122,36 +107,53 @@ object Dedup {
       .select(col("doc_id"), col("h"))
   }
 
-  /** [[hashedShinglesOf]] over the documents table. The scale
-    * variant of [[shingles]]: the corpus-wide distinct + df-window
-    * exchanges move 8-byte longs instead of shingle text (production
-    * minhash never shuffles shingle strings). Used by q42 and q89; the
-    * DuckDB mirror is [[duckHashedShingles]]. */
+  /** [[hashedShinglesOf]] over the documents table (q41/q42/q89/q121);
+    * the DuckDB mirror is [[duckHashedShingles]]. */
   private def hashedShingles(s: SparkSession, d: String): DataFrame =
     hashedShinglesOf(Tables.t(s, d, "documents").select(
       col("doc_id"), col("text")))
 
-  /** q89's SYMMETRIZED near-dup edge frame: hashed-shingle jaccard >=
-    * 0.8 pairs (the q42 scale identity), both directions via the
-    * shared [[graft.operators.ConnectedComponents.symmetrize]] — the
-    * input to the CC kernel, also exercised directly by
-    * ConnectedComponentsSpec. Set sizes ride along as a window count
-    * over doc_id (one window exchange instead of a sizes aggregate +
-    * two pair-stream joins). */
-  private[graft] def nearDupEdges08(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val byDoc = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id")
-    val sh = hashedShingles(s, d)
-      .withColumn("n", count(lit(1)).over(byDoc))
+  /** `(doc_id, h)` shingles plus each doc's set size `n`, CACHED: the
+    * jaccard self-join reads it twice. Sizes ride along as a window
+    * count over doc_id, so n1/n2 fall out of the pair aggregate (min of
+    * a per-doc constant) — one window exchange instead of a sizes
+    * aggregate plus two pair-stream joins. */
+  private def withSetSizes(sh: DataFrame): DataFrame =
+    sh.withColumn("n", count(lit(1)).over(
+      org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))))
       .cache()
-    val pairs = sh.as("a")
-      .join(sh.as("b"), $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
-      .groupBy($"a.doc_id".as("d1"), $"b.doc_id".as("d2"))
-      .agg(count(lit(1)).as("i"), min($"a.n").as("n1"), min($"b.n").as("n2"))
-      .filter($"i".cast("double") / ($"n1" + $"n2" - $"i") >= 0.8)
-      .select($"d1", $"d2")
-    graft.operators.ConnectedComponents.symmetrize(pairs)
-  }
+
+  /** Exact shingle-jaccard >= 0.8 pairs over sized shingles
+    * `(doc_id, h, n)`: `(d1, d2, i, n1, n2, jac)` with d1 < d2 — the one
+    * spelling of the thresholded pair join (q41, q89, and the q121/q144
+    * ground truths).
+    *
+    * The size filter of exact set-similarity joins (Bayardo et al., WWW
+    * 2007) rides in the join condition: J(a,b) = i / (n1 + n2 - i) <=
+    * min(n1,n2) / max(n1,n2), so J >= 4/5 needs
+    * 5·min(n1,n2) >= 4·max(n1,n2). The test is exact integer
+    * arithmetic and prunes only pairs that cannot reach the threshold
+    * (sf0.1: 1.27 M joined rows → 469 k); the double `jac` filter still
+    * decides every pair that remains. */
+  private def jaccardPairs08(sh: DataFrame): DataFrame =
+    sh.as("a")
+      .join(sh.as("b"),
+        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
+          lit(5L) * col("a.n") >= lit(4L) * col("b.n") &&
+          lit(5L) * col("b.n") >= lit(4L) * col("a.n"))
+      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+      .agg(count(lit(1)).as("i"), min(col("a.n")).as("n1"),
+        min(col("b.n")).as("n2"))
+      .withColumn("jac",
+        col("i").cast("double") / (col("n1") + col("n2") - col("i")))
+      .filter(col("jac") >= 0.8)
+
+  /** q89's near-dup pair list `(d1, d2)`, d1 < d2: hashed-shingle
+    * jaccard >= 0.8 (the q42 scale identity) — the input to the CC
+    * kernel, also exercised directly by ConnectedComponentsSpec. */
+  private[graft] def nearDupPairs08(s: SparkSession, d: String): DataFrame =
+    jaccardPairs08(withSetSizes(hashedShingles(s, d)))
+      .select(col("d1"), col("d2"))
 
   /** DuckDB mirror of [[hashedShinglesOf]] as a reusable CTE block over
     * source relation `src`, CTE names prefixed with `p` — the single
@@ -202,25 +204,6 @@ object Dedup {
       JOIN sizes s1 ON d1 = s1.doc_id
       JOIN sizes s2 ON d2 = s2.doc_id)"""
 
-  /** Exact pairwise jaccard over shingle sets for pairs sharing >=1
-    * shingle. Shuffle key = shingle string (uniformly distributed). */
-  private def jaccardPairs(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    // Set sizes ride along as a window count over doc_id BEFORE the pair
-    // join; n1/n2 then fall out of the pair aggregate for free (min of a
-    // per-doc constant). Replaces a separate sizes aggregate plus two
-    // shuffle joins of the pair stream with one window exchange.
-    val byDoc = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id")
-    val sh = shingles(s, d)
-      .withColumn("n", count(lit(1)).over(byDoc))
-      .cache()
-    sh.as("a")
-      .join(sh.as("b"), $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
-      .groupBy($"a.doc_id".as("d1"), $"b.doc_id".as("d2"))
-      .agg(count(lit(1)).as("i"), min($"a.n").as("n1"), min($"b.n").as("n2"))
-      .withColumn("jac", $"i".cast("double") / ($"n1" + $"n2" - $"i"))
-  }
-
   /** The MinHash+LSH signature pipeline — q42's candidate generation,
     * shared verbatim with the q121 recall harness so the measured
     * operator and its measurement can never drift apart: 16
@@ -267,8 +250,9 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
-  /** DuckDB mirror of [[shingles]]; `MaxShingleDf` is interpolated so the
-    * declared df-cap has a single source of truth across all oracles. */
+  /** String-keyed DuckDB mirror of [[hashedShinglesOf]] (q41's oracle);
+    * `MaxShingleDf` is interpolated so the declared df-cap has a single
+    * source of truth across all oracles. */
   private[queries] val duckShingles = s"""
     sh0 AS (
       SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
@@ -329,8 +313,7 @@ object Dedup {
     Q("q41_dedup_ngram_jaccard",
       (s, d) => {
         import s.implicits._
-        jaccardPairs(s, d)
-          .filter($"jac" >= 0.8)
+        jaccardPairs08(withSetSizes(hashedShingles(s, d)))
           .select($"d1", $"d2", $"i", $"n1", $"n2", $"jac")
           .orderBy($"d1", $"d2")
       },
@@ -382,20 +365,17 @@ object Dedup {
             (0 until 16).map(j =>
               when(col(s"x_mh$j") === col(s"y.mh$j"), 1L).otherwise(0L))
               .reduce(_ + _).as("n_eq"))
-        // r22 (guide §2.4, the nearDupEdges08 pattern): set sizes ride
-        // along as a window count over doc_id, and n1/n2 fall out of the
-        // pair aggregate (min of a per-doc constant) — replacing the
-        // separate sizes aggregate plus TWO pair-stream broadcast joins.
+        // r22 ([[withSetSizes]]): set sizes ride along as a window
+        // count over doc_id, and n1/n2 fall out of the pair aggregate
+        // (min of a per-doc constant) — replacing the separate sizes
+        // aggregate plus TWO pair-stream broadcast joins.
         // Value-identical output: a candidate pair with no shared
         // shingle had jac = 0.0 (old inner sizes joins) and now has
         // jac = NULL (no inter row) — both fail `jac >= 0.8` identically
         // and never reach the output, which carries jac only for
         // survivors (i >= 1, all columns present).
-        val byDoc = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id")
-        val shc = sh // reuses the cached shingle table — no second derivation
-          .join(candDocs, Seq("doc_id"), "left_semi")
-          .withColumn("n", count(lit(1)).over(byDoc))
-          .cache()
+        // reuses the cached shingle table — no second derivation
+        val shc = withSetSizes(sh.join(candDocs, Seq("doc_id"), "left_semi"))
         val inter = shc.as("a")
           .join(shc.as("b"), $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
           .groupBy($"a.doc_id".as("d1"), $"b.doc_id".as("d2"))
@@ -642,11 +622,10 @@ object Dedup {
         // components are dense — fixpoint within one round), and the
         // convergence-checked production variant lives next to the
         // kernel in operators/ConnectedComponents — SCALE.md §"CC
-        // convergence"). The lineage-truncation rationale (measured
-        // 1.1s → 10.5s/round by round 4 with cache alone, ~0.1s flat
-        // with localCheckpoint) is documented at the shared kernel.
+        // convergence"). The kernel runs all 4 rounds as one query with
+        // linear lineage (no per-round checkpoint) — see its scaladoc.
         graft.operators.ConnectedComponents
-          .minLabelRounds(nearDupEdges08(s, d), 4)
+          .minLabelRounds(nearDupPairs08(s, d), 4)
           .groupBy($"lbl".as("cluster"))
           .agg(count(lit(1)).as("n_docs"), max($"doc_id").as("max_doc"))
           .orderBy($"cluster")
@@ -689,11 +668,8 @@ object Dedup {
       (s, d) => {
         import s.implicits._
         def grams(df: DataFrame) = df
-          .select($"doc_id", split($"text", " ").as("w"))
-          .select($"doc_id", explode(expr(
-            "transform(sequence(1, size(w)-4), i -> concat_ws(' ', slice(w, i, 5)))"))
-            .as("g"))
-          .select($"doc_id", h60($"g").as("h"))
+          .select($"doc_id",
+            explode(WordNgramMd5Long.wordNgramMd5_60($"text", 5)).as("h"))
           .distinct()
         val docs = Tables.t(s, d, "documents")
         val evalGrams = grams(docs.filter($"doc_id" < 10))
@@ -861,18 +837,10 @@ object Dedup {
         import s.implicits._
         graft.functions.Md5Long.register(s)
         val pct = evalPct(Tables.rowCount(s, d, "documents"))
-        val byDoc = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id")
-        val sh = hashedShingles(s, d)
-          .withColumn("n", count(lit(1)).over(byDoc))
-          .cache()
+        val sh = withSetSizes(hashedShingles(s, d))
         def sampled(c: String) =
           expr(s"md5_60(CAST($c AS STRING)) % 100 < $pct")
-        val shS = sh.filter(sampled("doc_id"))
-        val exact = shS.as("a")
-          .join(shS.as("b"), $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
-          .groupBy($"a.doc_id".as("d1"), $"b.doc_id".as("d2"))
-          .agg(count(lit(1)).as("i"), min($"a.n").as("n1"), min($"b.n").as("n2"))
-          .filter($"i".cast("double") / ($"n1" + $"n2" - $"i") >= 0.8)
+        val exact = jaccardPairs08(sh.filter(sampled("doc_id")))
           .select($"d1", $"d2").cache()
         // THE pipeline under measurement — not a re-spelling of it:
         // [[minhashCandidates]] is the same code q42 runs over the FULL
@@ -952,16 +920,8 @@ object Dedup {
         val pct = evalPct(Tables.rowCount(s, d, "documents"))
         val sampled = docs.filter(
           expr(s"md5_60(CAST(doc_id AS STRING)) % 100 < $pct"))
-        val byDoc = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id")
-        val sh = hashedShinglesOf(sampled)
-          .withColumn("n", count(lit(1)).over(byDoc))
-          .cache()
-        val exact = sh.as("a")
-          .join(sh.as("b"), $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
-          .groupBy($"a.doc_id".as("d1"), $"b.doc_id".as("d2"))
-          .agg(count(lit(1)).as("i"), min($"a.n").as("n1"), min($"b.n").as("n2"))
-          .filter($"i".cast("double") / ($"n1" + $"n2" - $"i") >= 0.8)
-          .select($"d1", $"d2")
+        val sh = withSetSizes(hashedShinglesOf(sampled))
+        val exact = jaccardPairs08(sh).select($"d1", $"d2")
         val cand = minhashCandidates(s, sh.select($"doc_id", $"h"))._2
         // r22 (guide §2.4): ONE full-outer join + ONE aggregate replaces
         // {semi-join + three separate count jobs crossJoined}. exact and

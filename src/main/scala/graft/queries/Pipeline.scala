@@ -112,13 +112,11 @@ object Pipeline {
   private[graft] def bm25Tok(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.Md5Long.register(s)
+    graft.functions.WordNgramMd5Long.register(s)
     Tables.sql(s, d, """
         WITH tok0 AS (
-          SELECT doc_id, explode(transform(sequence(1, size(ws) - 2),
-            i -> md5_60(concat_ws(' ', slice(ws, i, 3))))) AS h
-          FROM (SELECT doc_id, split(text, ' ') AS ws FROM documents) t0
-          WHERE size(ws) >= 3)
+          SELECT doc_id, explode(word_ngram_md5_60(text, 3)) AS h
+          FROM documents)
         SELECT /*+ REPARTITION(h) */ doc_id, h FROM tok0""")
       .cache()
   }

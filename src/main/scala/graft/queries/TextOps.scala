@@ -62,15 +62,13 @@ object TextOps {
     s.read.parquet(graft.sources.Fixtures
       .dhashPairsArtifact(d, rebuild = publish)(dhashPairs(s, d)))
 
-  /** q147's SYMMETRIZED perceptual edge frame over [[dhashPairs]] via
-    * the shared [[graft.operators.ConnectedComponents.symmetrize]] —
-    * the input to the CC kernel, also exercised directly by
-    * ConnectedComponentsSpec. Reads the shared pair artifact;
-    * `publish = true` for the q147 publisher. */
-  private[graft] def dhashEdges(s: SparkSession, d: String,
-      publish: Boolean = false): DataFrame =
-    graft.operators.ConnectedComponents.symmetrize(
-      dhashPairsShared(s, d, publish))
+  /** q162's SYMMETRIZED perceptual edge frame over the shared pair
+    * artifact via [[graft.operators.ConnectedComponents.symmetrize]] —
+    * the input to PageRank (exact degrees), also exercised directly by
+    * ConnectedComponentsSpec. The CC queries (q147/q181/q183) pass the
+    * pair list itself to the kernel. */
+  private[graft] def dhashEdges(s: SparkSession, d: String): DataFrame =
+    graft.operators.ConnectedComponents.symmetrize(dhashPairsShared(s, d))
 
   /** DuckDB mirror of [[dhashPairs]] as a reusable CTE block ending in
     * `dpairs(d1, d2, hamming)` — shared by the q143 and q147 oracles.
@@ -781,7 +779,7 @@ object TextOps {
     // ---- Perceptual dedup MAP: connected components over the q143 pair
     // graph (the shared operators/ConnectedComponents kernel applied to
     // media blobs — 4 declared min-label rounds, each one equi-join +
-    // min-aggregate on the edge key, lineage truncated per round;
+    // min-aggregate on the edge key, all in one linear-lineage query;
     // NOTE: on this graph the declared 4 rounds are genuinely a
     // declared approximation — hamming-chained components can exceed
     // diameter 4 (ConnectedComponentsSpec pins a natural sf0.001
@@ -796,7 +794,7 @@ object TextOps {
       (s, d) => {
         import s.implicits._
         graft.operators.ConnectedComponents
-          .minLabelRounds(dhashEdges(s, d, publish = true), 4)
+          .minLabelRounds(dhashPairsShared(s, d, publish = true), 4)
           .filter($"lbl" =!= $"doc_id")
           .select($"doc_id", $"lbl".as("kept_as"))
           .orderBy($"doc_id")
@@ -824,7 +822,7 @@ object TextOps {
         import s.implicits._
         graft.functions.Md5Long.register(s)
         val lbl = graft.operators.ConnectedComponents
-          .minLabelRounds(dhashEdges(s, d), 4)
+          .minLabelRounds(dhashPairsShared(s, d), 4)
           .select($"doc_id", $"lbl")
         Tables.t(s, d, "documents").select($"doc_id")
           .join(lbl, Seq("doc_id"), "left_outer")
@@ -862,7 +860,7 @@ object TextOps {
       (s, d) => {
         import s.implicits._
         val lbl = graft.operators.ConnectedComponents
-          .minLabelRounds(dhashEdges(s, d), 4)
+          .minLabelRounds(dhashPairsShared(s, d), 4)
           .select($"doc_id", $"lbl")
         val rep = Tables.t(s, d, "documents").select($"doc_id")
           .join(lbl, Seq("doc_id"), "left_outer")
@@ -1111,7 +1109,7 @@ object TextOps {
     // the oracle-proven operators above, so the whole pipeline stays
     // hash-deterministic.
     Q("q81_pipeline_e2e",
-      (s, d) => { graft.functions.Md5Long.register(s)
+      (s, d) => { graft.functions.WordNgramMd5Long.register(s)
         // r22 (guide §5, same finding as q135/q137): Spark inlines
         // multiply-referenced CTEs, and column pruning then specializes
         // each copy so exchange reuse can't dedupe them — the exact-dedup
@@ -1131,9 +1129,8 @@ object TextOps {
           .cache().createOrReplaceTempView("q81_docs")
         s.sql(s"""
           WITH sh00 AS (
-            SELECT doc_id, md5_60(concat_ws(' ', slice(w, i, 3))) AS h
-            FROM (SELECT doc_id, split(text, ' ') AS w FROM q81_docs)
-            LATERAL VIEW explode(sequence(1, size(w) - 2)) t AS i),
+            SELECT doc_id, explode(word_ngram_md5_60(text, 3)) AS h
+            FROM q81_docs),
           -- one h exchange serves the distinct and the df window
           -- (subset-clustering, the q42 shingle discipline); the hint
           -- block sits BELOW the distinct so the repartition lands

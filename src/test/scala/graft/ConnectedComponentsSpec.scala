@@ -52,11 +52,17 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     lbl
   }
 
-  private lazy val graphs = Seq(
+  /** The corpus pair lists q89 and q147 hand the fixed-round kernel. */
+  private lazy val pairLists = Seq(
     "text-jaccard" -> graft.queries.Dedup
-      .nearDupEdges08(SparkTestSession.spark, SparkTestSession.sfDir),
+      .nearDupPairs08(SparkTestSession.spark, SparkTestSession.sfDir),
     "perceptual-dhash" -> graft.queries.TextOps
-      .dhashEdges(SparkTestSession.spark, SparkTestSession.sfDir))
+      .dhashPairsShared(SparkTestSession.spark, SparkTestSession.sfDir))
+
+  /** The same graphs as symmetrized edge frames (fixpoint's input). */
+  private lazy val graphs = pairLists.map { case (name, pairs) =>
+    name -> ConnectedComponents.symmetrize(pairs)
+  }
 
   test("fixpoint == union-find ground truth on both corpus pair graphs") {
     for ((name, edges) <- graphs) {
@@ -68,11 +74,51 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("minLabelRounds(4) == the declared 4-round semantics on both graphs") {
-    for ((name, edges) <- graphs) {
+    for (((name, pairs), (_, edges)) <- pairLists.zip(graphs)) {
       val sim = simulateRounds(collectEdges(edges), 4).toSet
-      assert(labelSet(ConnectedComponents.minLabelRounds(edges, 4)) == sim,
+      assert(labelSet(ConnectedComponents.minLabelRounds(pairs, 4)) == sim,
         s"$name fixed-round kernel != simulation")
     }
+  }
+
+  /** The fixed-round kernel as it was spelled before its self-loops
+    * came from an explode: symmetrize, then one self-loop per DISTINCT
+    * node, unioned into one edge frame. */
+  private def unionSpelling(pairs: DataFrame, rounds: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, min}
+    val edges = ConnectedComponents.symmetrize(pairs)
+    val edgesPlus = edges.unionByName(edges.select(col("d1")).distinct()
+      .select(col("d1"), col("d1").as("d2")))
+    var labels = edgesPlus.groupBy(col("d1")).agg(min(col("d2")).as("lbl"))
+      .withColumnRenamed("d1", "doc_id")
+    for (_ <- 2 to rounds)
+      labels = edgesPlus.as("e")
+        .join(labels.as("l"), col("e.d2") === col("l.doc_id"))
+        .groupBy(col("e.d1")).agg(min(col("l.lbl")).as("lbl"))
+        .withColumnRenamed("d1", "doc_id")
+    labels
+  }
+
+  test("explode-built self-loops label like the union spelling: duplicates, isolated pairs, a chain") {
+    val s = SparkTestSession.spark
+    import s.implicits._
+    // (1,2) three times, once reversed; an isolated pair listed
+    // backwards; a diameter-7 chain 20..27 (under-converges in 4
+    // rounds, so every hop counts); a triangle with a tail
+    val chain = (20L until 27L).map(i => (i, i + 1))
+    val pairs = (Seq((1L, 2L), (1L, 2L), (2L, 1L), (11L, 10L),
+      (30L, 31L), (31L, 32L), (30L, 32L), (32L, 33L)) ++ chain)
+      .toDF("d1", "d2")
+    for (rounds <- 1 to 4) {
+      val got = labelSet(ConnectedComponents.minLabelRounds(pairs, rounds))
+      assert(got == labelSet(unionSpelling(pairs, rounds)),
+        s"$rounds rounds: explode spelling != union spelling")
+      assert(got == simulateRounds(collectEdges(
+        ConnectedComponents.symmetrize(pairs)), rounds).toSet)
+    }
+    assert(labelSet(ConnectedComponents.minLabelRounds(pairs, 4))
+      .filter { case (n, _) => n >= 20L && n <= 27L } ==
+      (20L to 27L).map(i => i -> math.max(20L, i - 4L)).toSet)
   }
 
   test("the sf0.001 perceptual-dhash graph is a natural >4-diameter witness") {

@@ -103,6 +103,26 @@ class DedupSpec extends AnyFunSuite {
     assert((0 until 10).forall(i => contained.contains(1000L + i)))
   }
 
+  test("q41/q89 shingle short documents and space runs like the oracle") {
+    import spark.implicits._
+    // docs with fewer than 3 words have no shingles (the DuckDB oracles'
+    // `WHERE i <= len(w) - 2`); a run of spaces is an empty word, so
+    // "p  q r s" shingles differently from "p q r s"
+    val dir = java.nio.file.Files.createTempDirectory("short-docs").toString
+    try {
+      Seq(1L -> "a b c d e", 2L -> "a b c d e", 3L -> "", 4L -> "x",
+        5L -> "x y", 6L -> "p  q r s", 7L -> "p  q r s", 8L -> "p q r s")
+        .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val q41 = SparkEntry.queries("q41_dedup_ngram_jaccard")(spark, dir)
+        .collect().map(_.toSeq).toSeq
+      assert(q41 == Seq(Seq(1L, 2L, 3L, 3L, 3L, 1.0), Seq(6L, 7L, 3L, 3L, 3L, 1.0)))
+      val q89 = SparkEntry.queries("q89_dedup_clusters")(spark, dir)
+        .collect().map(_.toSeq).toSeq
+      assert(q89 == Seq(Seq(1L, 2L, 2L), Seq(6L, 2L, 7L)))
+    } finally new scala.reflect.io.Directory(new java.io.File(dir))
+      .deleteRecursively()
+  }
+
   test("approx_count_distinct within 10% of exact") {
     // q53 now emits normalized error-bound booleans (oracle-checkable);
     // the 5% HLL bound subsumes the old 10% raw check.

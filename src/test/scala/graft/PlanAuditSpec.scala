@@ -451,12 +451,22 @@ class PlanAuditSpec extends AnyFunSuite {
     // q162 note), so pin the property that MATTERS: per-round plan
     // growth must be CONSTANT (the old double-reference round doubled
     // the tree per round).
-    val edges = graft.queries.Dedup.nearDupEdges08(spark, d)
+    val pairs = graft.queries.Dedup.nearDupPairs08(spark, d)
     def exchanges(n: Int): Int = "Exchange".r.findAllIn(
-      graft.operators.ConnectedComponents.minLabelRounds(edges, n)
+      graft.operators.ConnectedComponents.minLabelRounds(pairs, n)
         .queryExecution.explainString(FormattedMode)).size
     assert(exchanges(4) - exchanges(3) == exchanges(3) - exchanges(2),
       "per-round plan growth is not constant — lineage doubling regressed")
+  }
+
+  test("q89: shingles hash natively — no lambda in the shingle stage") {
+    val p = plan("q89_dedup_clusters")
+    // the word-3-gram hashes come from the native WordNgramMd5Long
+    // expression; the composable transform(sequence, slice, concat_ws)
+    // spelling evaluates an interpreted lambda per window
+    assert(p.contains("wordngrammd5long("), "shingle stage is not the native expression")
+    assert(!p.toLowerCase.contains("lambdafunction"),
+      "shingle stage regressed to an interpreted lambda")
   }
 
   test("q145: BM25 retrieval is equi-joins + a group-limited top-k, never all-pairs") {
@@ -515,9 +525,9 @@ class PlanAuditSpec extends AnyFunSuite {
     // r22: same linear-growth invariant as q89 (single-query self-looped
     // rounds; a fixed bound can't pin the InMemoryRelation-printed
     // upstream, constant per-round growth can)
-    val edges = graft.queries.TextOps.dhashEdges(spark, d)
+    val pairs = graft.queries.TextOps.dhashPairsShared(spark, d)
     def exchanges(n: Int): Int = "Exchange".r.findAllIn(
-      graft.operators.ConnectedComponents.minLabelRounds(edges, n)
+      graft.operators.ConnectedComponents.minLabelRounds(pairs, n)
         .queryExecution.explainString(FormattedMode)).size
     assert(exchanges(4) - exchanges(3) == exchanges(3) - exchanges(2),
       "per-round plan growth is not constant — lineage doubling regressed")

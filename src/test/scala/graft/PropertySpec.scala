@@ -63,6 +63,34 @@ object PropertySpec extends Properties("graft-kernels") {
         java.lang.Long.parseLong(hex.substring(1, 16), 16)
     }
 
+  // space runs, edge spaces and multi-byte characters: every shape
+  // `split(text, ' ')` turns into empty or non-ASCII words
+  private val spacedText = Gen.listOf(Gen.oneOf(
+    "a", "Z", "0", "ab", " ", "  ", "é", "ß", "中", "🦀")).map(_.mkString)
+
+  property("word_ngram_md5_60 == md5_60(concat_ws(' ', slice(split(t,' '), i, k))), codegen and interpreted") =
+    forAll(spacedText, Gen.choose(1, 5)) { (text, k) =>
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.catalyst.expressions._
+      import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+      import org.apache.spark.sql.catalyst.util.ArrayData
+      import org.apache.spark.sql.types.StringType
+      val row = InternalRow(org.apache.spark.unsafe.types.UTF8String.fromString(text))
+      val in = BoundReference(0, StringType, nullable = false)
+      val words = StringSplit(in, Literal(" "), Literal(-1))
+      val n = words.eval(row).asInstanceOf[ArrayData].numElements()
+      val composable = (1 to n - k + 1).map { i =>
+        graft.functions.Md5Long(ConcatWs(Seq(Literal(" "),
+          Slice(words, Literal(i), Literal(k))))).eval(row)
+          .asInstanceOf[Long]
+      }
+      val native = graft.functions.WordNgramMd5Long(in, Literal(k))
+      val interpreted = native.eval(row).asInstanceOf[ArrayData].toLongArray.toSeq
+      val codegen = GenerateUnsafeProjection.generate(Seq(native))
+        .apply(row).getArray(0).toLongArray.toSeq
+      Prop(interpreted == composable) && Prop(codegen == composable)
+    }
+
   property("roaring RUN containers round-trip row-index sets") =
     forAll(rowGen) { rows =>
       val set = rows.toSet
