@@ -2,52 +2,42 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{DHash63, DotProductI64, Md5Long, WordNgramMd5Long}
 
-/** Session-extension entry point — the Spark-native way to ship this
-  * library's custom Catalyst surface into ANY session, including ones the
-  * library doesn't build itself:
+/** Session-extension entry point: graft's one wiring point for its
+  * custom Catalyst surface. [[AdtContext.engineConfs]] installs it in
+  * every session the library builds; a session built elsewhere gets it
+  * from the static conf
   *
   * {{{
   *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * Registers all four native codegen expressions — `dot_i64`, `md5_60`,
-  * `word_ngram_md5_60`, `dhash63` — through the injected function hook
-  * (so they resolve in plain `spark.sql(...)` with no runtime `register`
-  * call; the per-query `X.register(s)` calls stay as idempotent
-  * belt-and-braces for sessions built without the extension) and the
-  * `information_schema.{tables,columns}` analyzer rule
-  * ([[graft.plans.ResolveInformationSchema]]). The DDL shim
-  * stays in [[AdtContext]] because it rewrites a statement Spark's parser
-  * rejects outright (`STORED AS fmt LOCATION`), which a resolution hook
-  * never sees.
+  * Injects the four native codegen expressions — `dot_i64`, `md5_60`,
+  * `word_ngram_md5_60`, `dhash63` — through each one's own `build`
+  * (arity checked there), so they resolve in plain `spark.sql(...)`,
+  * and the `information_schema.*` analyzer rule
+  * ([[graft.plans.ResolveInformationSchema]]). The DDL shim and graft's
+  * own statements stay in [[AdtContext.sql]] because Spark's parser
+  * rejects them outright, which a resolution hook never sees.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_i64"),
-      new ExpressionInfo(classOf[DotProductI64].getName, "dot_i64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProductI64(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("md5_60"),
-      new ExpressionInfo(classOf[Md5Long].getName, "md5_60"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Md5Long(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("word_ngram_md5_60"),
-      new ExpressionInfo(classOf[WordNgramMd5Long].getName, "word_ngram_md5_60"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WordNgramMd5Long(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("dhash63"),
-      new ExpressionInfo(classOf[DHash63].getName, "dhash63"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DHash63(exprs.head)))
-    ext.injectResolutionRule(session =>
-      graft.plans.ResolveInformationSchema(session))
+    Seq[(String, Class[_], Seq[Expression] => Expression)](
+      ("dot_i64", classOf[DotProductI64], DotProductI64.build _),
+      ("md5_60", classOf[Md5Long], Md5Long.build _),
+      ("word_ngram_md5_60", classOf[WordNgramMd5Long], WordNgramMd5Long.build _),
+      ("dhash63", classOf[DHash63], DHash63.build _)
+    ).foreach { case (name, cls, build) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
+    // the Hints batch runs before relation resolution, so Spark never
+    // looks `information_schema.x` up in its catalog — the first such
+    // miss in a JVM builds an error-class exception, a one-time cost
+    // measured at about 1.5 s on a cold `local[4]` session
+    ext.injectHintResolutionRule(graft.plans.ResolveInformationSchema(_))
   }
 }

@@ -10,9 +10,10 @@ import org.apache.spark.sql.catalyst.TableIdentifier
   * information_schema in its session config,
   * /root/reference/crates/core/src/context.rs:27).
   *
-  * Spark has no information_schema catalog, so [[AdtContext.sql]]
-  * rewrites `information_schema.*` references to temp views refreshed
-  * here from `spark.catalog`. Catalog metadata is inherently driver-side
+  * Spark has no information_schema catalog, so the analyzer rule
+  * [[graft.plans.ResolveInformationSchema]] resolves
+  * `information_schema.*` references to temp views refreshed here from
+  * `spark.catalog`. Catalog metadata is inherently driver-side
   * and tiny (one row per table/column/setting), so local construction is
   * the correct shape at any scale.
   */
@@ -29,11 +30,8 @@ object InformationSchema {
   val Members: Set[String] =
     Set("tables", "columns", "views", "df_settings", "schemata", "routines")
 
-  /** (Re)build every [[Members]] view from the current catalog state. */
-  def refresh(spark: SparkSession): Unit = refresh(spark, Members)
-
-  /** (Re)build only the requested members — the statement rewriters pass
-    * the member set they actually saw, so a query touching only `tables`
+  /** (Re)build only the requested members — the analyzer rule passes
+    * the member set the plan references, so a query touching only `tables`
     * never pays the `SET -v` + listFunctions + per-table listColumns
     * driver walks the other members need. All walks are metadata-bound
     * (one row per table/column/setting) at any data scale. */

@@ -2,7 +2,8 @@ package graft
 
 import java.util.regex.Pattern
 
-/** Postgres-dialect operator shim for [[AdtContext.sql]].
+/** Postgres-dialect shim for [[AdtContext.sql]]: the one place that
+  * spells a statement for Spark's parser.
   *
   * The reference parses SQL with the postgres sqlparser dialect
   * (/root/reference/crates/core/src/context.rs:29), so adt scripts can
@@ -22,18 +23,26 @@ import java.util.regex.Pattern
   *     ordinary characters in SIMILAR TO and get escaped; `| * + ? {}
   *     () []` pass through — they are regex-meta in both languages)
   *
-  * Deliberately conservative: the scan never rewrites inside string
-  * literals or quoted identifiers; `~` only rewrites in binary position
-  * (preceded by an identifier/literal/closing bracket) so unary bitwise
-  * `~x` is untouched; the case-insensitive and SIMILAR TO forms rewrite
-  * only when the pattern is a string literal immediately following —
-  * anything out of scope is left verbatim and fails loudly at parse
-  * time instead of silently changing semantics.
+  * String literals are standard-conforming, as in postgres and
+  * DataFusion: `\` is an ordinary character. Spark's default parser
+  * reads `\` as an escape, so every backslash inside a `'…'` or `"…"`
+  * literal is re-spelled `\\` (a raw `r'…'` or `r"…"` literal is left
+  * as it is). Spark then reads the text the user wrote, and no session
+  * conf is toggled. A text must pass through here exactly once: a
+  * second pass would double the backslashes again.
+  *
+  * Deliberately conservative: the scan never rewrites operators inside
+  * string literals or quoted identifiers; `~` only rewrites in binary
+  * position (preceded by an identifier/literal/closing bracket) so unary
+  * bitwise `~x` is untouched; the case-insensitive and SIMILAR TO forms
+  * rewrite only when the pattern is a string literal immediately
+  * following — anything out of scope is left verbatim and fails loudly
+  * at parse time instead of silently changing semantics.
   */
 object SqlCompat {
 
   /** Fast path: statements with no candidate token skip the scan. */
-  private val Maybe = Pattern.compile("(?i)~|similar\\s+to")
+  private val Maybe = Pattern.compile("(?i)~|similar\\s+to|\\\\")
 
   private val SimilarTo =
     Pattern.compile("(?i)SIMILAR\\s+TO(?![A-Za-z0-9_])")
@@ -66,6 +75,8 @@ object SqlCompat {
 
     while (i < n) {
       val c = sql(i)
+      // a literal right after the bare word `r` is a Spark raw literal
+      val raw = inWord && word.toString.equalsIgnoreCase("r")
       if (c == '\'') {
         val body = new StringBuilder
         i += 1
@@ -81,11 +92,16 @@ object SqlCompat {
           else if (pendingCI) "(?i)" + body.toString
           else body.toString
         pendingSimilar = false; pendingCI = false
-        out.append('\'').append(b).append('\'')
+        out.append('\'').append(if (raw) b else b.replace("\\", "\\\\"))
+          .append('\'')
         lastSig = '\''; word.clear(); inWord = false
       } else if (c == '"' || c == '`') {
         out.append(c); i += 1
-        while (i < n && sql(i) != c) { out.append(sql(i)); i += 1 }
+        while (i < n && sql(i) != c) {
+          // "…" is a string literal to Spark's parser
+          if (c == '"' && !raw && sql(i) == '\\') out.append('\\')
+          out.append(sql(i)); i += 1
+        }
         if (i < n) { out.append(c); i += 1 }
         lastSig = c; word.clear(); inWord = false
       } else if (c == '-' && i + 1 < n && sql(i + 1) == '-') {

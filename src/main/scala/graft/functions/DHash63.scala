@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -53,14 +53,11 @@ object DHash63 {
   def dhash63(c: Column): Column =
     ColumnBridge.column(DHash63(ColumnBridge.expression(c)))
 
-  /** SQL registration (idempotent): `dhash63(binary) → bigint`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dhash63",
-      exprs => {
-        require(exprs.length == 1,
-          s"dhash63 expects 1 binary argument, got ${exprs.length}")
-        DHash63(exprs.head)
-      },
-      "built-in")
+  /** The SQL builder [[graft.GraftExtensions]] injects:
+    * `dhash63(binary) → bigint`. */
+  def build(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 1,
+      s"dhash63 expects 1 binary argument, got ${exprs.length}")
+    DHash63(exprs.head)
+  }
 }

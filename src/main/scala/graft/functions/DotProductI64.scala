@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -102,15 +102,12 @@ object DotProductI64 {
     ColumnBridge.column(DotProductI64(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** SQL registration (idempotent): `dot_i64(array<bigint>, array<bigint>)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_i64",
-      exprs => {
-        require(exprs.length == 2,
-          s"dot_i64 expects 2 arguments (array<bigint>, array<bigint>), " +
-            s"got ${exprs.length}")
-        DotProductI64(exprs(0), exprs(1))
-      },
-      "built-in")
+  /** The SQL builder [[graft.GraftExtensions]] injects:
+    * `dot_i64(array<bigint>, array<bigint>) → bigint`. */
+  def build(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 2,
+      s"dot_i64 expects 2 arguments (array<bigint>, array<bigint>), " +
+        s"got ${exprs.length}")
+    DotProductI64(exprs(0), exprs(1))
+  }
 }

@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.annotation.unused
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -38,7 +40,7 @@ object GapFunctions {
     slice(arr, lit(1), greatest(size(arr) - 1, lit(0)))
 
   /** DataFusion `array_ndims` (Spark arrays are rank-1 unless nested). */
-  def arrayNdims(arr: Column): Column = lit(1)
+  def arrayNdims(@unused arr: Column): Column = lit(1)
 
   /** DataFusion `array_dims` (rank-1 array → `[cardinality]`). */
   def arrayDims(arr: Column): Column = array(size(arr))

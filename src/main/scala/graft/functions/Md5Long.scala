@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -74,14 +74,11 @@ object Md5Long {
   def md5_60(c: Column): Column =
     ColumnBridge.column(Md5Long(ColumnBridge.expression(c)))
 
-  /** SQL registration (idempotent): `md5_60(string) → bigint`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_60",
-      exprs => {
-        require(exprs.length == 1,
-          s"md5_60 expects 1 string argument, got ${exprs.length}")
-        Md5Long(exprs.head)
-      },
-      "built-in")
+  /** The SQL builder [[graft.GraftExtensions]] injects:
+    * `md5_60(string) → bigint`. */
+  def build(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 1,
+      s"md5_60 expects 1 string argument, got ${exprs.length}")
+    Md5Long(exprs.head)
+  }
 }

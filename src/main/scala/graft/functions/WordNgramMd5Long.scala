@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -114,15 +114,11 @@ object WordNgramMd5Long {
     ColumnBridge.column(WordNgramMd5Long(
       ColumnBridge.expression(text), ColumnBridge.expression(lit(k))))
 
-  /** SQL registration (idempotent):
+  /** The SQL builder [[graft.GraftExtensions]] injects:
     * `word_ngram_md5_60(string, int) → array<bigint>`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngram_md5_60",
-      exprs => {
-        require(exprs.length == 2,
-          s"word_ngram_md5_60 expects (text, k), got ${exprs.length} arguments")
-        WordNgramMd5Long(exprs(0), exprs(1))
-      },
-      "built-in")
+  def build(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 2,
+      s"word_ngram_md5_60 expects (text, k), got ${exprs.length} arguments")
+    WordNgramMd5Long(exprs(0), exprs(1))
+  }
 }

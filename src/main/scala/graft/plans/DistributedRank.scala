@@ -51,8 +51,8 @@ object DistributedRank {
     val keyIdx = df.columns.length // key value re-projected as last col
     val sorted = df
       .withColumn("__rk", key)
-      .repartitionByRange(numPartitions, (col(df, "__rk") +: order): _*)
-      .sortWithinPartitions((col(df, "__rk") +: order): _*)
+      .repartitionByRange(numPartitions, (col("__rk") +: order): _*)
+      .sortWithinPartitions((col("__rk") +: order): _*)
     val schema = sorted.schema
     val keyType = schema.fields(keyIdx).dataType
     // ONE materialization feeds both passes (r21, guide §2.4): without
@@ -133,8 +133,8 @@ object DistributedRank {
     val sorted = df
       .withColumn("__rk", key)
       .withColumn("__rv", value.cast("long"))
-      .repartitionByRange(numPartitions, (col(df, "__rk") +: order): _*)
-      .sortWithinPartitions((col(df, "__rk") +: order): _*)
+      .repartitionByRange(numPartitions, (col("__rk") +: order): _*)
+      .sortWithinPartitions((col("__rk") +: order): _*)
     val schema = sorted.schema
     val keyType = schema.fields(keyIdx).dataType
     // one materialization for both passes — see [[rowNumber]] (r21/r22)
@@ -186,6 +186,5 @@ object DistributedRank {
     InternalRowBridge.fromRdd(spark, rows, outSchema)
   }
 
-  private def col(df: DataFrame, n: String): Column =
-    org.apache.spark.sql.functions.col(n)
+  private def col(n: String): Column = org.apache.spark.sql.functions.col(n)
 }

@@ -12,11 +12,15 @@ import graft.InformationSchema
   * /root/reference/crates/core/src/context.rs:27) onto the catalog-backed
   * views of [[graft.InformationSchema]].
   *
-  * Injected through `GraftExtensions.injectResolutionRule`, so plain
+  * Injected through `GraftExtensions` (as a hint-batch rule, which runs
+  * before Spark's own relation resolution), so plain
   * `spark.sql("SELECT … FROM information_schema.tables")` works in ANY
-  * session carrying `spark.sql.extensions=graft.GraftExtensions` — no
-  * [[graft.AdtContext]] wrapper needed (the wrapper keeps a string-rewrite
-  * fallback for sessions without the extension).
+  * session carrying the extension — every session
+  * [[graft.AdtContext.session]] builds, or one started with
+  * `spark.sql.extensions=graft.GraftExtensions`. It is the only route:
+  * [[graft.AdtContext]] refuses a session without it. Only relation
+  * references resolve here, so a string literal that spells
+  * `information_schema.tables` stays as written.
   *
   * The views refresh when — and only when — a plan actually references
   * information_schema, so the catalog walk (driver-side, one row per

@@ -322,7 +322,6 @@ object Curation {
     Q("q132_semantic_decon",
       (s, d) => {
         import s.implicits._
-        graft.functions.DotProductI64.register(s)
         val w = Tables.t(s, d, "embeddings")
           .select($"vec_id", expr(Extensions.QV).as("v"))
         val ev = w.filter($"vec_id".between(8, 12))

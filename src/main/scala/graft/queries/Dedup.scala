@@ -213,7 +213,7 @@ object Dedup {
     * CACHED wide signature table (16 longs/doc — q42's n_eq
     * verification reads it twice, q121's band self-join benefits too)
     * and the UNcached candidate pairs (callers cache per their reuse). */
-  private def minhashCandidates(s: SparkSession, sh: DataFrame)
+  private def minhashCandidates(sh: DataFrame)
       : (DataFrame, DataFrame) = {
     val mhWide = minhashSignatures(sh).cache()
     val bands = bandSignatures(mhWide)
@@ -342,7 +342,7 @@ object Dedup {
         // (the pipeline is SHARED with the q121 recall harness — one
         // aggregate pass computes all 16 minhashes; only same-bucket
         // pairs ever meet)
-        val (mhWide, candRaw) = minhashCandidates(s, sh)
+        val (mhWide, candRaw) = minhashCandidates(sh)
         val cand = candRaw.cache() // consumed below (candDocs, n_eq join, verified)
         // exact-jaccard verification of the CANDIDATES ONLY — the point
         // of LSH is that the quadratic shingle intersection never touches
@@ -720,7 +720,6 @@ object Dedup {
             .as("v"))
         val qs = emb.filter($"vec_id" < 10)
           .withColumnRenamed("vec_id", "q_id").withColumnRenamed("v", "qv")
-        graft.functions.DotProductI64.register(s)
         // r21 per-pair hoist (the q68/q93 note): self-norms computed
         // once per corpus row (na) and once per broadcast query (nb) —
         // identical longs feeding the identical cos tree, one dot per
@@ -835,7 +834,6 @@ object Dedup {
     Q("q121_lsh_recall",
       (s, d) => {
         import s.implicits._
-        graft.functions.Md5Long.register(s)
         val pct = evalPct(Tables.rowCount(s, d, "documents"))
         val sh = withSetSizes(hashedShingles(s, d))
         def sampled(c: String) =
@@ -845,7 +843,7 @@ object Dedup {
         // THE pipeline under measurement — not a re-spelling of it:
         // [[minhashCandidates]] is the same code q42 runs over the FULL
         // corpus; only the comparison restricts to the sampled space
-        val cand = minhashCandidates(s, sh.select($"doc_id", $"h"))._2
+        val cand = minhashCandidates(sh.select($"doc_id", $"h"))._2
           .filter(sampled("d1") && sampled("d2")).cache()
         val hit = exact.join(cand, Seq("d1", "d2"), "left_semi")
         exact.agg(count(lit(1)).as("n_exact"))
@@ -915,14 +913,13 @@ object Dedup {
     Q("q144_lsh_recall_sampled",
       (s, d) => {
         import s.implicits._
-        graft.functions.Md5Long.register(s)
         val docs = Tables.t(s, d, "documents").select($"doc_id", $"text")
         val pct = evalPct(Tables.rowCount(s, d, "documents"))
         val sampled = docs.filter(
           expr(s"md5_60(CAST(doc_id AS STRING)) % 100 < $pct"))
         val sh = withSetSizes(hashedShinglesOf(sampled))
         val exact = jaccardPairs08(sh).select($"d1", $"d2")
-        val cand = minhashCandidates(s, sh.select($"doc_id", $"h"))._2
+        val cand = minhashCandidates(sh.select($"doc_id", $"h"))._2
         // r22 (guide §2.4): ONE full-outer join + ONE aggregate replaces
         // {semi-join + three separate count jobs crossJoined}. exact and
         // cand are both unique-pair frames (groupBy resp. distinct

@@ -123,8 +123,6 @@ object Extensions {
     * broadcast join against the k-row centroid side with the
     * partial-aggregatable argmin, never a window over the n·k expansion. */
   private def lloyd2(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    graft.functions.DotProductI64.register(s)
-    graft.functions.Md5Long.register(s)
     val emb = Tables.t(s, d, "embeddings")
       .select(col("vec_id"), expr(QV).as("v"))
     val n = Tables.rowCount(s, d, "embeddings") // footer metadata, no job
@@ -315,8 +313,6 @@ object Extensions {
     * to n·m rows, where a row_number window would shuffle the full
     * n·m·ks expansion. */
   private def pqTrain(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    graft.functions.DotProductI64.register(s)
-    graft.functions.Md5Long.register(s)
     val emb = Tables.t(s, d, "embeddings")
       .select(col("vec_id"), expr(QV).as("v"))
     val n = Tables.rowCount(s, d, "embeddings") // footer metadata, no job
@@ -669,7 +665,6 @@ object Extensions {
             when(col("proj") > 0, expr("CAST(pow(2, j) AS BIGINT)")).otherwise(0L))
           .groupBy(col("vec_id"))
           .agg(sum(col("bit")).as("bucket"))
-        graft.functions.DotProductI64.register(s)
         val withB = emb.join(buckets, "vec_id")
           .withColumn("nn", expr("dot_i64(v, v)"))
         withB.as("a")
@@ -721,7 +716,6 @@ object Extensions {
           .select(col("vec_id"), expr(QV).as("v"))
         val cents = seedCentroids(emb,
           centroidKOf(Tables.rowCount(s, d, "embeddings")))
-        graft.functions.DotProductI64.register(s)
         // r21 per-pair hoist: self-norms move to the per-row (nv) and
         // per-centroid broadcast (nc) sides — the cos expression tree is
         // unchanged (same long → double casts, same sqrt/multiply/divide
@@ -780,7 +774,6 @@ object Extensions {
           .select(col("vec_id"), expr(QV).as("v"))
         val cents = seedCentroids(emb,
           centroidKOf(Tables.rowCount(s, d, "embeddings")))
-        graft.functions.DotProductI64.register(s)
         // r21 per-pair hoist (q68 note): self-norms computed per row /
         // per broadcast centroid, cos expression tree otherwise
         // unchanged — bit-identical doubles, one dot per pair. nv rides
@@ -984,7 +977,6 @@ object Extensions {
     Q("q120_sq8_recall",
       (s, d) => {
         import s.implicits._
-        graft.functions.DotProductI64.register(s)
         val sq = Tables.t(s, d, "embeddings")
           .select($"vec_id", expr(QV).as("v"))
           .withColumn("sc", expr(
@@ -1113,7 +1105,6 @@ object Extensions {
     Q("q128_pq_recall",
       (s, d) => {
         import s.implicits._
-        graft.functions.DotProductI64.register(s)
         val emb = Tables.t(s, d, "embeddings")
           .select($"vec_id", expr(QV).as("v"))
         val qset = emb.filter($"vec_id".between(8, 12))
@@ -1301,7 +1292,6 @@ object Extensions {
     Q("q173_jl_projection",
       (s, d) => {
         import s.implicits._
-        graft.functions.DotProductI64.register(s)
         // 32×64 ±1 matrix as ONE typedLit literal (a single Literal
         // node, not a 2048-leaf CreateArray tree — the tree form made
         // codegen compile a pathological method per occurrence):
@@ -1431,7 +1421,6 @@ object Extensions {
     Q("q174_hard_negatives",
       (s, d) => {
         import s.implicits._
-        graft.functions.DotProductI64.register(s)
         val emb = Tables.t(s, d, "embeddings")
           .select($"vec_id", $"label", expr(QV).as("v"))
         val qset = emb.filter($"vec_id" < 10)
@@ -1501,7 +1490,6 @@ object Extensions {
     Q("q175_mmr_rerank",
       (s, d) => {
         import s.implicits._
-        graft.functions.DotProductI64.register(s)
         def cos(a: String, b: String) =
           expr(s"dot_i64($a, $b)").cast("double") /
             (sqrt(expr(s"dot_i64($a, $a)").cast("double")) *

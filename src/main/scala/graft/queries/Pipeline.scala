@@ -24,27 +24,28 @@ object Pipeline {
     * same declared-semantics contract, mirrored in the oracle CTE). */
   private[queries] val MaxSegmentDf = 50
 
+  /** The md5_60 of every unigram, then of every bigram, of a document's
+    * `text` (the q96 feature-hashing convention) — one spelling for the
+    * batch trainers ([[HashedFeatureCtes]]) and the stream scorers
+    * (`StreamDsirScore.featsCol`), so their feature identity cannot
+    * drift. A one-word text has no bigrams. */
+  private[graft] val FeatureHashes: String =
+    "concat(word_ngram_md5_60(text, 1), word_ngram_md5_60(text, 2))"
+
   /** The hashed-feature extraction every content-based selection
     * operator shares (q146 DSIR, q160/q161 domain classifier): unigrams
-    * + bigrams hashed into 4096 buckets via md5_60 (the q96
-    * feature-hashing convention), reduced to per-doc bucket counts
-    * `c(doc_id, b, c)`. Spark dialect; DuckDB mirror =
-    * [[DuckHashedFeatureCtes]]. */
-  private[graft] val HashedFeatureCtes: String = """
-        base AS (SELECT doc_id, split(text, ' ') AS ws FROM documents),
+    * + bigrams ([[FeatureHashes]]) hashed into 4096 buckets, reduced to
+    * per-doc bucket counts `c(doc_id, b, c)`. Spark dialect; DuckDB
+    * mirror = [[DuckHashedFeatureCtes]]. */
+  private[graft] val HashedFeatureCtes: String = s"""
         tok0 AS (
-          SELECT doc_id, explode(transform(ws, w -> md5_60(w) % 4096)) AS b
-          FROM base
-          UNION ALL
-          SELECT doc_id, explode(transform(sequence(1, size(ws) - 1),
-            i -> md5_60(concat_ws(' ', slice(ws, i, 2))) % 4096)) AS b
-          FROM base WHERE size(ws) >= 2),
+          SELECT doc_id, explode($FeatureHashes) AS h FROM documents),
         -- r21: ONE b exchange serves the per-doc bucket counts (subset
         -- clustering on {doc_id, b}) and q146's rb/tb corpus counts +
         -- weight join on b; consumers needing doc_id clustering (the
         -- q160 training loop) re-exchange but REUSE this exchange's
         -- output instead of re-running tokenize + md5
-        tok AS (SELECT /*+ REPARTITION(b) */ doc_id, b FROM tok0),
+        tok AS (SELECT /*+ REPARTITION(b) */ doc_id, h % 4096 AS b FROM tok0),
         c AS (
           SELECT doc_id, b, CAST(count(*) AS BIGINT) AS c
           FROM tok GROUP BY doc_id, b)"""
@@ -112,7 +113,6 @@ object Pipeline {
   private[graft] def bm25Tok(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.WordNgramMd5Long.register(s)
     Tables.sql(s, d, """
         WITH tok0 AS (
           SELECT doc_id, explode(word_ngram_md5_60(text, 3)) AS h
@@ -212,7 +212,6 @@ object Pipeline {
   private[graft] def featureTok(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.Md5Long.register(s)
     Tables.sql(s, d, s"WITH $HashedFeatureCtes SELECT doc_id, b FROM tok")
       .cache()
   }
@@ -350,7 +349,6 @@ object Pipeline {
   private[graft] def domainFeatures(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.Md5Long.register(s)
     import s.implicits._
     Tables.sql(s, d,
       s"WITH $HashedFeatureCtes SELECT doc_id, b, c FROM c")
@@ -617,7 +615,6 @@ object Pipeline {
           .select($"vec_id", expr(
             "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT))")
             .as("v"))
-        graft.functions.DotProductI64.register(s)
         val embN = emb.withColumn("nv", expr("dot_i64(v, v)"))
         def cosH(b: String, nb: String) =
           expr(s"dot_i64(v, $b)").cast("double") /
@@ -1159,12 +1156,6 @@ object Pipeline {
     Q("q192_hybrid_rrf",
       (s, d) => {
         import s.implicits._
-        graft.functions.Md5Long.register(s)
-        graft.functions.DotProductI64.register(s)
-        def cos(a: String, b: String) =
-          expr(s"dot_i64($a, $b)").cast("double") /
-            (sqrt(expr(s"dot_i64($a, $a)").cast("double")) *
-              sqrt(expr(s"dot_i64($b, $b)").cast("double")))
         // lexical leg: shared BM25 chain, ranked per query
         val lex = bm25M(s, d, bm25Tok(s, d))
           .withColumn("rank", row_number().over(
@@ -1285,8 +1276,6 @@ object Pipeline {
     Q("q198_dense_recall_sampled",
       (s, d) => {
         import s.implicits._
-        graft.functions.Md5Long.register(s)
-        graft.functions.DotProductI64.register(s)
         // r21 per-pair hoist (q68/q93 note): per-row self-norm nv rides
         // the cached sample; cos trees unchanged → bit-identical doubles
         def cosH(b: String, nb: String) =
@@ -1727,7 +1716,6 @@ object Pipeline {
     Q("q180_curriculum",
       (s, d) => {
         import s.implicits._
-        graft.functions.Md5Long.register(s)
         // cached (r22): the count action below and the rank's
         // materialization both read fl — uncached, the whole fluency
         // join pipeline ran twice

@@ -525,14 +525,14 @@ object TextOps {
     // as a sparse vector. No vocabulary state at all — the property that
     // makes it the scale path for featurization.
     Q("q96_feature_hashing",
-      (s, d) => { graft.functions.Md5Long.register(s); Tables.sql(s, d, """
+      (s, d) => Tables.sql(s, d, """
         SELECT doc_id,
           md5_60(w) % 64 AS bucket,
           count(*) AS cnt
         FROM (SELECT doc_id, explode(split(text, ' ')) AS w
               FROM documents WHERE doc_id < 50)
         GROUP BY doc_id, 2
-        ORDER BY doc_id, bucket""") },
+        ORDER BY doc_id, bucket"""),
       Some("""
         SELECT doc_id,
           ('0x' || substr(md5(w), 2, 15))::BIGINT % 64 AS bucket,
@@ -629,7 +629,7 @@ object TextOps {
     // ---- Document fingerprinting: order-insensitive content digest +
     // order-sensitive polynomial rolling hash over the token stream.
     Q("q49_text_fingerprint",
-      (s, d) => { graft.functions.Md5Long.register(s); Tables.sql(s, d, s"""
+      (s, d) => Tables.sql(s, d, s"""
         SELECT doc_id,
           md5(concat_ws(' ', array_sort(array_distinct(split(text, ' '))))) AS set_digest,
           aggregate(
@@ -637,7 +637,7 @@ object TextOps {
               w -> md5_60(w) % $P31),
             CAST(0 AS BIGINT),
             (acc, x) -> (acc * 31 + x) % $P31) AS roll_hash
-        FROM documents WHERE doc_id < 200 ORDER BY doc_id""") },
+        FROM documents WHERE doc_id < 200 ORDER BY doc_id"""),
       Some(s"""
         SELECT doc_id,
           md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS set_digest,
@@ -820,7 +820,6 @@ object TextOps {
     Q("q181_leakage_safe_split",
       (s, d) => {
         import s.implicits._
-        graft.functions.Md5Long.register(s)
         val lbl = graft.operators.ConnectedComponents
           .minLabelRounds(dhashPairsShared(s, d), 4)
           .select($"doc_id", $"lbl")
@@ -1109,7 +1108,7 @@ object TextOps {
     // the oracle-proven operators above, so the whole pipeline stays
     // hash-deterministic.
     Q("q81_pipeline_e2e",
-      (s, d) => { graft.functions.WordNgramMd5Long.register(s)
+      (s, d) => {
         // r22 (guide §5, same finding as q135/q137): Spark inlines
         // multiply-referenced CTEs, and column pruning then specializes
         // each copy so exchange reuse can't dedupe them — the exact-dedup
@@ -1353,7 +1352,7 @@ object TextOps {
     // training-data mixing primitive: one narrow filter, zero shuffles
     // beyond the final per-language rollup.
     Q("q92_stratified_sample",
-      (s, d) => { graft.functions.Md5Long.register(s); Tables.sql(s, d, """
+      (s, d) => Tables.sql(s, d, """
         WITH rates AS (
           SELECT * FROM VALUES
             ('en', 50), ('de', 20), ('es', 30), ('fr', 10), ('zh', 40)
@@ -1365,7 +1364,7 @@ object TextOps {
         SELECT lang, count(*) AS n_sampled,
           CAST(sum(doc_id) AS BIGINT) AS id_sum,
           CAST(min(doc_id) AS BIGINT) AS first_id
-        FROM sampled GROUP BY lang ORDER BY lang""") },
+        FROM sampled GROUP BY lang ORDER BY lang"""),
       Some("""
         WITH rates AS (
           SELECT * FROM (VALUES

@@ -48,7 +48,9 @@ object Ddl {
 
   def parse(sql: String): ExternalTable = sql match {
     case CreatePattern(name, _, cols, fmt, order, parts, opts, loc) =>
+      // the column list is handed to Spark's DDL parser
       val schema = Option(cols).map(_.trim).filter(_.nonEmpty)
+        .map(graft.SqlCompat.rewrite)
       val orderCols = Option(order).toSeq.flatMap(_.split(","))
         .map(_.trim.split("\\s+")(0)).filter(_.nonEmpty)
       // listing.rs:130-141 parity: WITH ORDER columns must exist in the

@@ -121,7 +121,7 @@ object DeltaStats {
             cmpLe(st.minValues.get(n), v, dt)
         case None => true
       }
-    case LessThan(a: AttributeReference, l @ Literal(v, _)) if v != null =>
+    case LessThan(a: AttributeReference, Literal(v, _)) if v != null =>
       cmpLt(st.minValues.get(a.name), v, a.dataType)
     case LessThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
       cmpLe(st.minValues.get(a.name), v, a.dataType)

@@ -2747,7 +2747,7 @@ object DeltaWriter {
     * HISTORY reports (delta-spark's audit spelling; replay ignores
     * commitInfo, so foreign readers are unaffected). */
   private def publish(table: File, version: Long,
-      actions: Seq[Action], operation: String = "WRITE"): Unit = {
+      actions: Seq[Action], operation: String): Unit = {
     val logDir = new File(table, "_delta_log")
     logDir.mkdirs()
     val tmp = new File(logDir, s".tmp-$version-${java.util.UUID.randomUUID()}")

@@ -1,19 +1,23 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit}
+import graft.SqlCompat
 
-/** SQL DML + maintenance over DDL-registered Delta tables — `DELETE
-  * FROM`, `UPDATE … SET`, the canonical upsert `MERGE INTO`, plus the
-  * maintenance statements `OPTIMIZE [ZORDER BY (…)]`, `VACUUM
-  * [RETAIN n HOURS]`, `RESTORE TABLE … TO VERSION/TIMESTAMP AS OF`,
-  * `ALTER TABLE … ADD/DROP CONSTRAINT`, and `ALTER TABLE … SET/UNSET
-  * TBLPROPERTIES` (where `delta.enableDeletionVectors=true` flips
-  * DELETE/UPDATE to the merge-on-read verbs) — dispatched to
-  * [[DeltaWriter]]'s verbs through
-  * `AdtContext.sql`, so the CLI's execute pipeline can mutate AND
-  * maintain a table it created (the reference is read-only; this is
-  * the write half its users script by hand).
+/** graft's own statements — the one grammar [[graft.AdtContext.sql]]
+  * tries before handing a statement to Spark SQL: DML over
+  * DDL-registered Delta tables (`DELETE FROM`, `UPDATE … SET`, the
+  * canonical upsert `MERGE INTO`, `INSERT`), the maintenance statements
+  * (`OPTIMIZE [ZORDER BY (…)]`, `VACUUM [RETAIN n HOURS]`, `RESTORE TABLE
+  * … TO VERSION/TIMESTAMP AS OF`, `ALTER TABLE … ADD/DROP CONSTRAINT`,
+  * `ALTER TABLE … SET/UNSET TBLPROPERTIES`, where
+  * `delta.enableDeletionVectors=true` flips DELETE/UPDATE to the
+  * merge-on-read verbs), the read-only metadata statements (`SHOW
+  * TBLPROPERTIES`, `SHOW PARTITIONS`, `DESCRIBE DETAIL|HISTORY`, `VACUUM
+  * … DRY RUN`) and `EXPLAIN ANALYZE`. Writes dispatch to [[DeltaWriter]]'s
+  * verbs, so the CLI's execute pipeline can mutate AND maintain a table
+  * it created (the reference is read-only; this is the write half its
+  * users script by hand).
   *
   * Scope is deliberate:
   *  - targets must be `STORED AS DELTA` external tables registered in
@@ -25,7 +29,8 @@ import org.apache.spark.sql.functions.{col, expr, lit}
   *    — anything else errors with the supported spelling;
   *  - WHERE/SET expressions are Spark SQL, parsed with `expr` and
   *    resolved against the table's frame (so every scalar function the
-  *    engine exposes works in DML predicates);
+  *    engine exposes works in DML predicates); their literals read like
+  *    a SELECT's through [[graft.AdtContext.sql]] ([[graft.SqlCompat]]);
   *  - after a write the view is RE-REGISTERED, so the next statement
   *    in a script reads the new snapshot.
   *
@@ -35,12 +40,18 @@ import org.apache.spark.sql.functions.{col, expr, lit}
   */
 object Dml {
 
-  sealed trait Stmt { def table: String }
-  final case class Delete(table: String, where: Option[String]) extends Stmt
+  sealed trait Stmt extends Product with Serializable
+  /** A statement that commits to (or sweeps) one registered, writable
+    * Delta table. */
+  sealed trait Write extends Stmt { def table: String }
+  /** A statement that reads one registered Delta table's log and
+    * returns rows; it writes nothing. */
+  sealed trait Show extends Stmt { def table: String }
+  final case class Delete(table: String, where: Option[String]) extends Write
   final case class Update(table: String, sets: Seq[(String, String)],
-      where: Option[String]) extends Stmt
+      where: Option[String]) extends Write
   final case class Merge(table: String, sourceQuery: String,
-      keys: Seq[String]) extends Stmt
+      keys: Seq[String]) extends Write
   /** `OPTIMIZE t [WHERE partition-pred]` (compact) /
     * `OPTIMIZE t ZORDER BY (x[, y[, z]])` — 1 col = clustered
     * compaction sort, 2/3 cols = the Morton interleaves
@@ -50,21 +61,21 @@ object Dml {
     * multi-col Morton verbs refuse it — their scoped form is the
     * incremental z-order, which rewrites only loose files). */
   final case class Optimize(table: String, zorder: Seq[String],
-      where: Option[String] = None) extends Stmt
+      where: Option[String] = None) extends Write
   /** `VACUUM t [RETAIN n HOURS]` — missing RETAIN sweeps immediately
     * (retainMs = 0), the library default. */
   final case class Vacuum(table: String, retainHours: Option[Long])
-      extends Stmt
+      extends Write
   /** `VACUUM t LOGS [RETAIN n HOURS]` — retention-driven LOG cleanup
     * ([[DeltaWriter.cleanupLogs]]); missing RETAIN defers to the
     * table's `delta.logRetentionDuration` (then 30 days). */
   final case class CleanupLogs(table: String, retainHours: Option[Long])
-      extends Stmt
+      extends Write
   /** `ALTER TABLE t ADD CONSTRAINT name CHECK (expr)` /
     * `ALTER TABLE t DROP CONSTRAINT name`. */
   final case class AddConstraint(table: String, name: String,
-      check: String) extends Stmt
-  final case class DropConstraint(table: String, name: String) extends Stmt
+      check: String) extends Write
+  final case class DropConstraint(table: String, name: String) extends Write
   /** `INSERT INTO t [(c1, c2, …)] VALUES (…)[, (…)]` / `INSERT INTO t
     * [(c1, …)] SELECT …` — the append commit a script author expects
     * after CREATE (the reference's DataFusion context accepts INSERT
@@ -75,36 +86,36 @@ object Dml {
     * generated-column invariants gate it exactly like every other
     * row-landing verb, and absent generated columns are computed. */
   final case class Insert(table: String, cols: Seq[String],
-      sourceSql: String) extends Stmt
+      sourceSql: String) extends Write
   /** `ALTER TABLE t DROP COLUMN c` — metadata-only drop on a
     * column-mapped table ([[DeltaWriter.dropColumn]]). */
-  final case class DropColumn(table: String, column: String) extends Stmt
+  final case class DropColumn(table: String, column: String) extends Write
   /** `ALTER TABLE t RENAME COLUMN a TO b` — metadata-only rename on a
     * column-mapped table ([[DeltaWriter.renameColumn]]). */
   final case class RenameColumn(table: String, from: String,
-      to: String) extends Stmt
+      to: String) extends Write
   /** `TRUNCATE TABLE t` — delete every row in one commit (delta's
     * TRUNCATE: the log keeps history, so the pre-truncate state stays
     * time-travelable; routed through [[DeltaWriter.delete]] with an
     * all-rows predicate). */
-  final case class Truncate(table: String) extends Stmt
+  final case class Truncate(table: String) extends Write
   /** `INSERT OVERWRITE t SELECT …` / `INSERT OVERWRITE t VALUES (…)`
     * — atomic full-table swap ([[DeltaWriter.overwrite]]): the same
     * positional binding and invariant gating as [[Insert]], but the
     * commit removes every live file and lands the new rows in one
     * version. */
   final case class InsertOverwrite(table: String, cols: Seq[String],
-      sourceSql: String) extends Stmt
+      sourceSql: String) extends Write
   /** `ALTER TABLE t ADD COLUMNS (c1 TYPE [, c2 TYPE …])` — the SQL
     * spelling of [[DeltaWriter.evolveSchema]]'s additive-only
     * evolution: new columns are nullable (old files null-fill on
     * read), name collisions refuse, the commit patches only the
     * metaData schemaString. */
-  final case class AddColumns(table: String, colsDdl: String) extends Stmt
+  final case class AddColumns(table: String, colsDdl: String) extends Write
   /** `RESTORE TABLE t TO VERSION AS OF n` /
     * `RESTORE TABLE t TO TIMESTAMP AS OF '<ts>'`. */
   final case class Restore(table: String, versionAsOf: Option[Long],
-      timestampAsOf: Option[String]) extends Stmt
+      timestampAsOf: Option[String]) extends Write
   /** `CREATE TABLE t SHALLOW CLONE src LOCATION '<path>'` — zero-copy
     * clone ([[DeltaWriter.cloneShallow]]): `table` is the NEW name the
     * clone registers under, `source` must be a registered DELTA table.
@@ -129,12 +140,31 @@ object Dml {
     * ([[DeltaWriter.copyInto]]): files load exactly once, keyed by
     * path in the table's own txn ledger. */
   final case class CopyInto(table: String, from: String,
-      fileFormat: String, force: Boolean) extends Stmt
+      fileFormat: String, force: Boolean) extends Write
   /** `ALTER TABLE t SET TBLPROPERTIES ('k'='v'[, …])` / `… UNSET
     * TBLPROPERTIES ('k'[, …])`. */
   final case class SetProps(table: String,
-      props: Seq[(String, String)]) extends Stmt
-  final case class UnsetProps(table: String, keys: Seq[String]) extends Stmt
+      props: Seq[(String, String)]) extends Write
+  final case class UnsetProps(table: String, keys: Seq[String]) extends Write
+  /** `SHOW TBLPROPERTIES t` — the metaData configuration (CHECK
+    * constraints, column-mapping mode, …) as sorted (key, value) rows. */
+  final case class ShowTblProperties(table: String) extends Show
+  /** `VACUUM t [RETAIN n HOURS] DRY RUN` — the files a real VACUUM would
+    * delete, as rows, with nothing touched (delta's DRY RUN shape). */
+  final case class VacuumDryRun(table: String, retainHours: Option[Long])
+      extends Show
+  /** `SHOW PARTITIONS t` — the distinct live partition tuples, typed
+    * from the metaData schema. */
+  final case class ShowPartitions(table: String) extends Show
+  /** `DESCRIBE DETAIL t` — one row of table-level metadata. */
+  final case class DescribeDetail(table: String) extends Show
+  /** `DESCRIBE HISTORY t` — one row per commit, newest first. */
+  final case class DescribeHistory(table: String) extends Show
+  /** `EXPLAIN ANALYZE <statement>` — runs the statement to completion
+    * and returns its executed plan with each node's runtime metrics
+    * (DataFusion's `AnalyzeExec` output, reachable through
+    * `ADTContext::sql`). */
+  final case class ExplainAnalyze(statement: String) extends Stmt
 
   /** A table identifier: bare word, pg-style "quoted" (any chars), or a
     * dot-qualified mix of both — captured whole, normalized by
@@ -154,7 +184,8 @@ object Dml {
   private val VacuumLogsP =
     raw"""(?is)\s*VACUUM\s+$Id\s+LOGS\s*(?:RETAIN\s+(\d+)\s+HOURS?)?\s*;?\s*""".r
   private val VacuumP =
-    raw"""(?is)\s*VACUUM\s+$Id\s*(?:RETAIN\s+(\d+)\s+HOURS?)?\s*;?\s*""".r
+    (raw"""(?is)\s*VACUUM\s+$Id\s*(?:RETAIN\s+(\d+)\s+HOURS?)?""" +
+      """(\s+DRY\s+RUN)?\s*;?\s*""").r
   private val AddConstraintP =
     raw"""(?is)\s*ALTER\s+TABLE\s+$Id\s+ADD\s+CONSTRAINT\s+(\w+)\s+CHECK\s*\((.+)\)\s*;?\s*""".r
   private val DropConstraintP =
@@ -196,13 +227,20 @@ object Dml {
     raw"""(?is)\s*ALTER\s+TABLE\s+$Id\s+SET\s+TBLPROPERTIES\s*\(([^)]*)\)\s*;?\s*""".r
   private val UnsetPropsP =
     raw"""(?is)\s*ALTER\s+TABLE\s+$Id\s+UNSET\s+TBLPROPERTIES\s*\(([^)]*)\)\s*;?\s*""".r
+  private val ShowTblPropsP =
+    raw"""(?is)\s*SHOW\s+TBLPROPERTIES\s+$Id\s*;?\s*""".r
+  private val ShowPartitionsP =
+    raw"""(?is)\s*SHOW\s+PARTITIONS\s+$Id\s*;?\s*""".r
+  private val DescribeP =
+    raw"""(?is)\s*DESCRIBE\s+(DETAIL|HISTORY)\s+$Id\s*;?\s*""".r
+  private val ExplainAnalyzeP = """(?is)\s*EXPLAIN\s+ANALYZE\s+(.*)""".r
   private val PropPair = """\s*'([^']+)'\s*=\s*'([^']*)'\s*""".r
   private val PropKey = """\s*'([^']+)'\s*""".r
 
   def matches(sql: String): Boolean = parseOpt(sql).isDefined
 
   def parse(sql: String): Stmt = parseOpt(sql).getOrElse(
-    throw new IllegalArgumentException(s"not a DML statement: $sql"))
+    throw new IllegalArgumentException(s"not a graft statement: $sql"))
 
   /** `"My.Table"` → `My.Table`; `sch."tab le"` → `sch.tab le` — quotes
     * stripped per dot-separated part, parts rejoined (the registry key
@@ -230,17 +268,27 @@ object Dml {
       .map(p => if (p.startsWith("\"")) p.substring(1, p.length - 1) else p)
       .mkString(".")
 
-  private def parseOpt(sql: String): Option[Stmt] = sql match {
+  /** The statement `sql` spells, or None when it is not one of graft's
+    * own (Spark SQL then parses it). */
+  def parseOpt(sql: String): Option[Stmt] = sql match {
+    case ExplainAnalyzeP(statement) => Some(ExplainAnalyze(statement))
+    case ShowTblPropsP(table) => Some(ShowTblProperties(unquote(table)))
+    case ShowPartitionsP(table) => Some(ShowPartitions(unquote(table)))
+    case DescribeP(kind, table) =>
+      Some(if (kind.equalsIgnoreCase("DETAIL")) DescribeDetail(unquote(table))
+        else DescribeHistory(unquote(table)))
     case MergeP(table, source, _, on) =>
-      Some(Merge(unquote(table), source, onKeys(table, on)))
+      Some(Merge(unquote(table), source, onKeys(on)))
     case OptimizeP(table, pred, cols) =>
       Some(Optimize(unquote(table), Option(cols).toSeq
         .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty)),
         Option(pred).map(_.trim).filter(_.nonEmpty)))
     case VacuumLogsP(table, hours) =>
       Some(CleanupLogs(unquote(table), Option(hours).map(_.toLong)))
-    case VacuumP(table, hours) =>
-      Some(Vacuum(unquote(table), Option(hours).map(_.toLong)))
+    case VacuumP(table, hours, dryRun) =>
+      val retain = Option(hours).map(_.toLong)
+      Some(if (dryRun == null) Vacuum(unquote(table), retain)
+        else VacuumDryRun(unquote(table), retain))
     case AddConstraintP(table, name, check) =>
       Some(AddConstraint(unquote(table), name, check.trim))
     case DropConstraintP(table, name) =>
@@ -313,7 +361,7 @@ object Dml {
 
   /** `t.k = s.k [AND …]` → the equi-key column list; anything that is
     * not a conjunction of matching-name equalities is refused. */
-  private def onKeys(table: String, on: String): Seq[String] =
+  private def onKeys(on: String): Seq[String] =
     splitTopLevelAll(on, "AND").map { clause =>
       val i = topLevelIndexOf(clause, '=')
       require(i > 0, s"MERGE ON supports equi-key conjunctions only: $clause")
@@ -329,43 +377,44 @@ object Dml {
       l
     }
 
-  /** Execute against the session's registry; `run` evaluates a nested
-    * query through the full context (MERGE's USING source). Returns the
-    * committed version (VACUUM: the deleted-file count — it publishes
-    * no commit). */
+  /** Execute against the session's registry. `run` evaluates nested SQL
+    * (MERGE and INSERT sources, EXPLAIN ANALYZE's statement) through the
+    * full context, which spells it for Spark's parser; the fragments this
+    * statement hands to Spark's parser itself (WHERE, SET, CHECK, a
+    * column list) are spelled here by [[SqlCompat]] — so every text is
+    * re-spelled exactly once. Returns the statement's rows: an empty
+    * frame for every statement that writes. */
   def execute(spark: SparkSession, stmt: Stmt,
-      run: String => DataFrame): Long = {
+      run: String => DataFrame): DataFrame = {
+    import spark.implicits._
     stmt match {
+      case ExplainAnalyze(statement) =>
+        // full execution with the rows discarded executor-side (nothing
+        // is collected), then the FINAL post-AQE plan as DataFusion's one
+        // "Plan with Metrics" row
+        val qe = run(statement).queryExecution
+        qe.toRdd.foreach(_ => ())
+        Seq(("Plan with Metrics",
+          graft.AdtContext.planWithMetrics(qe.executedPlan)))
+          .toDF("plan_type", "plan")
       // the clone's TARGET is by definition unregistered — resolve the
       // SOURCE through the registry, clone, then register the target so
       // the next statement in the script reads it
       case ShallowClone(target, source, loc, vAsOf) =>
-        val srcT = Ddl.lookup(spark, source).getOrElse(
-          throw new IllegalArgumentException(
-            s"$source is not a registered external table — SHALLOW CLONE " +
-              "sources must be created via CREATE EXTERNAL TABLE … " +
-              "STORED AS DELTA"))
-        require(srcT.format == "DELTA",
-          s"SHALLOW CLONE supports DELTA sources only; $source is ${srcT.format}")
-        val v = DeltaWriter.cloneShallow(spark, srcT.location, loc, vAsOf)
+        DeltaWriter.cloneShallow(spark,
+          deltaTable(spark, source, stmt).location, loc, vAsOf)
         Ddl.register(spark, Ddl.ExternalTable(
           target, "DELTA", loc, None, Nil, Map.empty))
-        return v
+        spark.emptyDataFrame
       case DeepClone(target, source, loc, vAsOf) =>
-        val srcT = Ddl.lookup(spark, source).getOrElse(
-          throw new IllegalArgumentException(
-            s"$source is not a registered external table — CLONE " +
-              "sources must be created via CREATE EXTERNAL TABLE … " +
-              "STORED AS DELTA"))
-        require(srcT.format == "DELTA",
-          s"CLONE supports DELTA sources only; $source is ${srcT.format}")
-        val v = DeltaWriter.cloneDeep(spark, srcT.location, loc, vAsOf)
+        DeltaWriter.cloneDeep(spark,
+          deltaTable(spark, source, stmt).location, loc, vAsOf)
         Ddl.register(spark, Ddl.ExternalTable(
           target, "DELTA", loc, None, Nil, Map.empty))
-        return v
-      // the convert TARGET is registered as PARQUET (the generic delta
-      // guard below would refuse it) — flip the registration after the
-      // in-place conversion so the next statement gets the delta view
+        spark.emptyDataFrame
+      // the convert TARGET is registered as PARQUET (the delta lookup
+      // would refuse it) — flip the registration after the in-place
+      // conversion so the next statement gets the delta view
       case ConvertToDelta(name) =>
         val t = Ddl.lookup(spark, name).getOrElse(
           throw new IllegalArgumentException(
@@ -375,67 +424,158 @@ object Dml {
         require(t.format == "PARQUET",
           s"CONVERT TO DELTA converts PARQUET tables; $name is ${t.format}" +
             (if (t.format == "DELTA") " already" else ""))
-        val v = DeltaWriter.convertToDelta(spark, t.location)
+        DeltaWriter.convertToDelta(spark, t.location)
         Ddl.register(spark, t.copy(format = "DELTA"))
-        return v
-      case _ => ()
+        spark.emptyDataFrame
+      case s: Show => show(spark, s, deltaTable(spark, s.table, s).location)
+      case w: Write =>
+        val t = deltaTable(spark, w.table, w)
+        require(!t.options.contains("versionasof") &&
+          !t.options.contains("timestampasof"),
+          s"${w.table} is pinned to a time-travel snapshot " +
+            "(versionAsOf/timestampAsOf) — a time-travel view is read-only")
+        write(spark, w, t.location, run)
+        Ddl.register(spark, t) // the view must see the new snapshot
+        spark.emptyDataFrame
     }
-    val t = Ddl.lookup(spark, stmt.table).getOrElse(
+  }
+
+  /** The registered DELTA table `name` — the one lookup every statement
+    * on a table goes through. */
+  private def deltaTable(spark: SparkSession, name: String,
+      stmt: Stmt): Ddl.ExternalTable = {
+    val t = Ddl.lookup(spark, name).getOrElse(
       throw new IllegalArgumentException(
-        s"${stmt.table} is not a registered external table — DML targets " +
-          "must be created via CREATE EXTERNAL TABLE … STORED AS DELTA"))
+        s"$name is not a registered external table — ${stmt.productPrefix} " +
+          "needs a table created via CREATE EXTERNAL TABLE … STORED AS DELTA"))
     require(t.format == "DELTA",
-      s"DML is supported only for DELTA tables; ${stmt.table} is ${t.format}")
-    require(!t.options.contains("versionasof") &&
-      !t.options.contains("timestampasof"),
-      s"${stmt.table} is pinned to a time-travel snapshot " +
-        "(versionAsOf/timestampAsOf) — a time-travel view is read-only")
+      s"${stmt.productPrefix} is supported only for DELTA tables; " +
+        s"$name is ${t.format}")
+    t
+  }
+
+  /** An expression fragment of a graft statement, spelled for Spark's
+    * parser. */
+  private def sparkExpr(fragment: String): Column =
+    expr(SqlCompat.rewrite(fragment))
+
+  /** The rows of a read-only statement; nothing is written. */
+  private def show(spark: SparkSession, stmt: Show,
+      location: String): DataFrame = {
+    import spark.implicits._
+    stmt match {
+      case ShowTblProperties(_) =>
+        DeltaReader.snapshot(spark, location)
+          .configuration.toSeq.sortBy(_._1).toDF("key", "value")
+      case VacuumDryRun(_, hours) =>
+        DeltaWriter.vacuum(spark, location, hours.getOrElse(0L) * 3600000L,
+          dryRun = true).sorted.toDF("path")
+      case ShowPartitions(name) =>
+        // read off the snapshot's add actions; unpartitioned tables
+        // refuse naming the fact
+        val snap = DeltaReader.snapshot(spark, location)
+        require(snap.partitionColumns.nonEmpty,
+          s"$name is not a partitioned table")
+        // the same typed frame OPTIMIZE … WHERE scopes against, distinct'd
+        DeltaReader.partitionValuesFrame(spark, snap)
+          .drop("__i").distinct()
+          .orderBy(snap.partitionColumns.map(col): _*)
+      case DescribeDetail(_) =>
+        // delta's DESCRIBE DETAIL shape: createdAt is the earliest
+        // RETAINED commit's stamp (commit 0 unless log cleanup swept it),
+        // lastModified the latest's; file count and byte total come from
+        // the snapshot's own add actions (no filesystem stats)
+        val snap = DeltaReader.snapshot(spark, location)
+        val hist = DeltaReader.commitHistory(location)
+        // checkpoint + VACUUM LOGS can delete EVERY json commit (the table
+        // replays whole from its checkpoint) — commitHistory is then empty
+        // and the newest checkpoint file's mtime stands in for both stamps
+        // (the earliest surviving evidence of the table's state)
+        val (createdMs, modifiedMs) =
+          if (hist.nonEmpty) (hist.minBy(_._1)._2, hist.maxBy(_._1)._2)
+          else {
+            val logDir = new java.io.File(location, "_delta_log")
+            val log = DeltaActions.listLog(logDir)
+            val cp = log.newestCheckpoint().getOrElse(
+              throw new IllegalArgumentException(
+                s"$location has neither JSON commits nor a checkpoint — " +
+                  "not a replayable delta log"))
+            val m = log.checkpoints(cp)
+              .map(n => new java.io.File(logDir, n).lastModified()).max
+            (m, m)
+          }
+        Seq(("delta", location,
+          new java.sql.Timestamp(createdMs),
+          new java.sql.Timestamp(modifiedMs),
+          snap.partitionColumns,
+          snap.files.size.toLong,
+          snap.files.map(_.size).sum,
+          snap.configuration,
+          snap.minReaderVersion, snap.minWriterVersion))
+          .toDF("format", "location", "createdAt", "lastModified",
+            "partitionColumns", "numFiles", "sizeInBytes", "properties",
+            "minReaderVersion", "minWriterVersion")
+      case DescribeHistory(_) =>
+        // stamps + operation + per-commit action-profile metrics in ONE
+        // pass over the JSON log (numOutputRows null when no add in the
+        // commit carried stats); hand-written logs without commitInfo
+        // fall back to file mtime
+        DeltaReader.commitHistoryWithMetrics(location)
+          .toDF("version", "timestamp", "operation", "numAddedFiles",
+            "numRemovedFiles", "numOutputRows")
+          .orderBy(col("version").desc)
+    }
+  }
+
+  /** Run a writing statement's [[DeltaWriter]] verb. */
+  private def write(spark: SparkSession, stmt: Write, location: String,
+      run: String => DataFrame): Unit = {
     // delta.enableDeletionVectors=true routes DELETE/UPDATE to the
     // merge-on-read verbs (write cost ∝ matched rows), the same
     // property switch real engines use; default stays copy-on-write
     def morEnabled: Boolean =
-      DeltaReader.snapshot(spark, t.location)
+      DeltaReader.snapshot(spark, location)
         .configuration.get("delta.enableDeletionVectors").contains("true")
-    val version = stmt match {
+    stmt match {
       case Delete(_, where) =>
-        val pred = where.map(expr).getOrElse(lit(true))
-        if (morEnabled) DeltaWriter.deleteWithVectors(spark, t.location, pred)
-        else DeltaWriter.delete(spark, t.location, pred)
+        val pred = where.map(sparkExpr).getOrElse(lit(true))
+        if (morEnabled) DeltaWriter.deleteWithVectors(spark, location, pred)
+        else DeltaWriter.delete(spark, location, pred)
       case Update(_, sets, where) =>
-        val pred = where.map(expr).getOrElse(lit(true))
-        val assignments = sets.map { case (k, v) => k -> expr(v) }.toMap
+        val pred = where.map(sparkExpr).getOrElse(lit(true))
+        val assignments = sets.map { case (k, v) => k -> sparkExpr(v) }.toMap
         if (morEnabled)
-          DeltaWriter.updateWithVectors(spark, t.location, pred, assignments)
-        else DeltaWriter.update(spark, t.location, pred, assignments)
+          DeltaWriter.updateWithVectors(spark, location, pred, assignments)
+        else DeltaWriter.update(spark, location, pred, assignments)
       case Merge(_, source, keys) =>
-        DeltaWriter.merge(run(source), t.location, keys)
-      case Insert(_, cols, srcSql) =>
-        val (out, snap) = bindInsertSource(spark, run, t.location,
-          stmt.table, "INSERT INTO", cols, srcSql)
-        DeltaWriter.append(out, t.location,
+        DeltaWriter.merge(run(source), location, keys)
+      case Insert(table, cols, srcSql) =>
+        val (out, snap) = bindInsertSource(spark, run, location,
+          table, "INSERT INTO", cols, srcSql)
+        DeltaWriter.append(out, location,
           partitionBy = snap.partitionColumns)
-      case InsertOverwrite(_, cols, srcSql) =>
+      case InsertOverwrite(table, cols, srcSql) =>
         // the atomic full-table swap: same binding + invariant gating,
         // one commit removes every live file and lands the new rows
-        val (out, snap) = bindInsertSource(spark, run, t.location,
-          stmt.table, "INSERT OVERWRITE", cols, srcSql)
-        DeltaWriter.overwrite(out, t.location,
+        val (out, snap) = bindInsertSource(spark, run, location,
+          table, "INSERT OVERWRITE", cols, srcSql)
+        DeltaWriter.overwrite(out, location,
           partitionBy = snap.partitionColumns)
       case DropColumn(_, column) =>
-        DeltaWriter.dropColumn(spark, t.location, column)
+        DeltaWriter.dropColumn(spark, location, column)
       case RenameColumn(_, from, to) =>
-        DeltaWriter.renameColumn(spark, t.location, from, to)
+        DeltaWriter.renameColumn(spark, location, from, to)
       case Truncate(_) =>
         // all-rows delete; the log keeps history, so the pre-truncate
         // state stays time-travelable (delta's TRUNCATE semantics,
         // audited under its own operation name)
-        DeltaWriter.delete(spark, t.location, lit(true),
+        DeltaWriter.delete(spark, location, lit(true),
           operation = "TRUNCATE")
       case Optimize(_, Nil, w) =>
-        DeltaWriter.compact(spark, t.location, where = w.map(expr))
+        DeltaWriter.compact(spark, location, where = w.map(sparkExpr))
       case Optimize(_, Seq(one), w) =>
-        DeltaWriter.compact(spark, t.location, sortBy = Seq(one),
-          where = w.map(expr))
+        DeltaWriter.compact(spark, location, sortBy = Seq(one),
+          where = w.map(sparkExpr))
       case Optimize(_, cs, w) =>
         require(w.isEmpty,
           "OPTIMIZE … WHERE scopes compaction and 1-column clustered " +
@@ -460,7 +600,7 @@ object Dml {
         // also falls back to the full rewrite: the incremental verb
         // refuses DV'd loose files, while the full pass absorbs the
         // vectors (ADVICE r15).
-        val snap = DeltaReader.snapshot(spark, t.location)
+        val snap = DeltaReader.snapshot(spark, location)
         val propCols = snap.configuration
           .get("graft.autoOptimize.zOrderCols")
           .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
@@ -473,28 +613,23 @@ object Dml {
             !a.tags.get("optimized").contains("zorder"))
         if (colsMatch && seeded && !dvOnLoose &&
             (cs.length == 2 || cs.length == 3))
-          DeltaWriter.optimizeZOrderIncremental(spark, t.location,
+          DeltaWriter.optimizeZOrderIncremental(spark, location,
             propCols.get, 8, 500)
-        else DeltaWriter.optimizeZOrder(spark, t.location, cs)
+        else DeltaWriter.optimizeZOrder(spark, location, cs)
       case Vacuum(_, hours) =>
-        // returns the deleted-file count, not a version — vacuum
-        // publishes no commit
-        DeltaWriter.vacuum(spark, t.location,
-          hours.getOrElse(0L) * 3600000L).length.toLong
+        DeltaWriter.vacuum(spark, location, hours.getOrElse(0L) * 3600000L)
       case CleanupLogs(_, hours) =>
-        // returns the deleted-commit count — log cleanup publishes no
-        // commit either
-        DeltaWriter.cleanupLogs(spark, t.location,
-          hours.map(_ * 3600000L)).length.toLong
+        DeltaWriter.cleanupLogs(spark, location, hours.map(_ * 3600000L))
       case AddColumns(_, colsDdl) =>
         val added =
-          try org.apache.spark.sql.types.StructType.fromDDL(colsDdl)
+          try org.apache.spark.sql.types.StructType.fromDDL(
+            SqlCompat.rewrite(colsDdl))
           catch {
             case e: Exception => throw new IllegalArgumentException(
               s"ADD COLUMNS: unparseable column list '$colsDdl' — " +
                 "expected 'name TYPE[, name TYPE …]'", e)
           }
-        val old = DeltaReader.snapshot(spark, t.location).schema
+        val old = DeltaReader.snapshot(spark, location).schema
         // CASE-INSENSITIVE collision check: Spark resolves names
         // case-insensitively by default, so a case-variant duplicate
         // would commit a schema whose every later read is ambiguous
@@ -502,32 +637,28 @@ object Dml {
         val dup = added.fieldNames.filter(n => oldLower(n.toLowerCase))
         require(dup.isEmpty,
           s"ADD COLUMNS: column(s) already exist: ${dup.mkString(", ")}")
-        DeltaWriter.evolveSchema(spark, t.location,
+        DeltaWriter.evolveSchema(spark, location,
           org.apache.spark.sql.types.StructType(
             old.fields ++ added.fields))
       case AddConstraint(_, name, check) =>
-        DeltaWriter.addCheckConstraint(spark, t.location, name, check)
+        DeltaWriter.addCheckConstraint(spark, location, name,
+          SqlCompat.rewrite(check))
       case DropConstraint(_, name) =>
-        DeltaWriter.dropCheckConstraint(spark, t.location, name)
+        DeltaWriter.dropCheckConstraint(spark, location, name)
       case Restore(_, v, ts) =>
-        DeltaWriter.restore(spark, t.location, v.getOrElse(
-          DeltaReader.versionAtTimestamp(t.location,
+        DeltaWriter.restore(spark, location, v.getOrElse(
+          DeltaReader.versionAtTimestamp(location,
             Ddl.parseTsMillis(ts.get))))
       case SetProps(_, props) =>
-        props.map { case (k, v) =>
-          DeltaWriter.setTableProperty(spark, t.location, k, v)
-        }.last
+        props.foreach { case (k, v) =>
+          DeltaWriter.setTableProperty(spark, location, k, v)
+        }
       case UnsetProps(_, keys) =>
-        keys.map(k =>
-          DeltaWriter.unsetTableProperty(spark, t.location, k)).last
+        keys.foreach(DeltaWriter.unsetTableProperty(spark, location, _))
       case CopyInto(_, from, fmt, force) =>
-        // no-op (every file already ingested) reports the current
-        // version — the statement is idempotent by design
-        DeltaWriter.copyInto(spark, t.location, from, fmt, force)._1
-          .getOrElse(DeltaReader.snapshot(spark, t.location).version)
+        // idempotent by design: a no-op when every file is ingested
+        DeltaWriter.copyInto(spark, location, from, fmt, force)
     }
-    Ddl.register(spark, t) // the view must see the new snapshot
-    version
   }
 
   /** Shared INSERT source binding ([[Insert]] / [[InsertOverwrite]]):

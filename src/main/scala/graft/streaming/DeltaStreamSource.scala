@@ -14,6 +14,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.sources.{DeltaActions, DeltaReader}
 import graft.sources.DeltaActions.{AddFile, RemoveFile}
+import DeltaStreamSource.{Append, Change, Kind, Transparent}
 
 /** Delta table as a STRUCTURED STREAMING SOURCE —
   * `spark.readStream.format("graft-delta").load(path)` tails the
@@ -232,15 +233,6 @@ final class DeltaStreamSource(
   private val drainCeiling: Option[Long] =
     if (stopAtLatest) Some(latestVersion().getOrElse(-1L)) else None
 
-  private sealed trait Kind
-  private case object Transparent extends Kind // metadata-only / layout
-  // bytes = the data-changing ADD actions' own `size` fields (what a
-  // consumer will scan); removes carry no reliable size and charge 0
-  private final case class Append(nFiles: Int, bytes: Long) extends Kind
-  // rewrite / delete / DV; nFiles = data-changing file actions (the
-  // CDF scan-work proxy the pacing budget charges)
-  private final case class Change(nFiles: Int, bytes: Long) extends Kind
-
   /** Commit jsons are immutable — classification memoizes forever. */
   private val kinds = mutable.Map.empty[Long, Kind]
 
@@ -364,4 +356,15 @@ final class DeltaStreamSource(
   override def stop(): Unit = ()
 
   override def toString: String = s"GraftDeltaStreamSource[$tablePath]"
+}
+
+private object DeltaStreamSource {
+  sealed trait Kind
+  case object Transparent extends Kind // metadata-only / layout
+  // bytes = the data-changing ADD actions' own `size` fields (what a
+  // consumer will scan); removes carry no reliable size and charge 0
+  final case class Append(nFiles: Int, bytes: Long) extends Kind
+  // rewrite / delete / DV; nFiles = data-changing file actions (the
+  // CDF scan-work proxy the pacing budget charges)
+  final case class Change(nFiles: Int, bytes: Long) extends Kind
 }

@@ -30,10 +30,8 @@ object StreamDomainScore {
   def score(docs: DataFrame, weights: Array[Long]): DataFrame = {
     require(weights.length == 4096,
       "domain-classifier weight array must have 4096 slots")
-    graft.functions.Md5Long.register(docs.sparkSession)
     val wArr: Column = typedLit(weights.toSeq)
     docs
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .withColumn("feats", StreamDsirScore.featsCol)
       .select(col("doc_id"), StreamDsirScore.foldScore(wArr).as("sc"))
       .withColumn("pred_target", col("sc") > 0L)

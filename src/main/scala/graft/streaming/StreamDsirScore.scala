@@ -26,16 +26,11 @@ import org.apache.spark.sql.functions._
 object StreamDsirScore {
 
   /** The per-row form of `Pipeline.HashedFeatureCtes`: the hashed
-    * unigram+bigram bucket array over a tokenized `ws` column — ONE
-    * spelling shared by the DSIR and domain-classifier stream scorers
-    * so the feature identity with the batch trainers cannot drift. */
-  private[streaming] def featsCol: Column = expr(
-    """concat(
-         transform(ws, w -> md5_60(w) % 4096),
-         CASE WHEN size(ws) >= 2 THEN
-           transform(sequence(1, size(ws) - 1),
-             i -> md5_60(concat_ws(' ', slice(ws, i, 2))) % 4096)
-         ELSE CAST(array() AS ARRAY<BIGINT>) END)""")
+    * unigram+bigram bucket array of a `text` column, over the batch
+    * trainers' own `Pipeline.FeatureHashes` — shared by the DSIR and
+    * domain-classifier stream scorers. */
+  private[streaming] def featsCol: Column =
+    expr(s"transform(${graft.queries.Pipeline.FeatureHashes}, h -> h % 4096)")
 
   /** Per-row weight-table fold: Σ over the feature-bucket array of the
     * looked-up weight — the shared scoring kernel (exact integers,
@@ -49,10 +44,8 @@ object StreamDsirScore {
     * score_ppm, npt), the q146 row shape. */
   def score(docs: DataFrame, weights: Array[Long]): DataFrame = {
     require(weights.length == 4096, "DSIR weight array must have 4096 slots")
-    graft.functions.Md5Long.register(docs.sparkSession)
     val wArr: Column = typedLit(weights.toSeq)
     docs
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .withColumn("feats", featsCol)
       .select(col("doc_id"),
         size(col("feats")).cast("long").as("n_feat"),

@@ -98,7 +98,7 @@ class CliSpec extends AnyFunSuite {
     assert(graft.sources.ArrowReader.load(spark, dir).rdd.getNumPartitions == 2)
   }
 
-  test("AdtContext rewrites information_schema.views and df_settings (no-extension route)") {
+  test("information_schema.views and df_settings resolve through the analyzer rule") {
     val spark = SparkTestSession.spark
     val ctx = new AdtContext(spark)
     spark.sql("CREATE OR REPLACE TEMP VIEW cli_is_view AS SELECT 41 + 1 AS x")
@@ -130,7 +130,7 @@ class CliSpec extends AnyFunSuite {
       "spark.sql.session.timeZone")))
   }
 
-  test("EXPLAIN ANALYZE composes with the information_schema rewrite") {
+  test("EXPLAIN ANALYZE composes with the information_schema analyzer rule") {
     val spark = SparkTestSession.spark
     val ctx = new AdtContext(spark)
     spark.range(2).createOrReplaceTempView("cli_ea_probe")
@@ -218,7 +218,7 @@ class CliSpec extends AnyFunSuite {
     assert(r("SELECT a !~~* 'x%'") == "SELECT a NOT ILIKE 'x%'")
     // SIMILAR TO: anchored, %/_ translated, . ^ $ escaped as ordinary
     assert(r("SELECT a SIMILAR TO 'ab%c_[0-9]|x.'") ==
-      "SELECT a RLIKE '^(?:ab.*c.[0-9]|x\\.)$'")
+      "SELECT a RLIKE '^(?:ab.*c.[0-9]|x\\\\.)$'")
     assert(r("SELECT a NOT SIMILAR TO 'x%'") ==
       "SELECT a NOT RLIKE '^(?:x.*)$'")
     // \c is the SQL escape: the escaped char becomes a LITERAL —
@@ -227,7 +227,11 @@ class CliSpec extends AnyFunSuite {
       "SELECT a RLIKE '^(?:100%)$'")
     assert(r("SELECT a SIMILAR TO 'a\\_b'") == "SELECT a RLIKE '^(?:a_b)$'")
     assert(r("SELECT a SIMILAR TO 'c:\\\\%'") ==
-      "SELECT a RLIKE '^(?:c:\\\\.*)$'")
+      "SELECT a RLIKE '^(?:c:\\\\\\\\.*)$'")
+    // every literal backslash is re-spelled for Spark's default parser,
+    // which reads `\\` as one backslash; raw r'…' literals stay as written
+    assert(r("SELECT 'C:\\x', \"a\\b\", r'\\d', `c\\d`") ==
+      "SELECT 'C:\\\\x', \"a\\\\b\", r'\\d', `c\\d`")
     // a pattern ending in a lone escape fails loudly (postgres errors)
     intercept[IllegalArgumentException] {
       SqlCompat.rewrite("SELECT a SIMILAR TO 'oops\\'")
@@ -284,9 +288,9 @@ class CliSpec extends AnyFunSuite {
       .collect()
     assert(sim(0).getLong(0) == 6) // NATION_2 + NATION_20..24
     // escaped wildcards and ordinary `.` survive the round trip: the
-    // emitted regex backslashes depend on AdtContext parsing literals
-    // standard-SQL-style (escapedStringLiterals), like the reference's
-    // postgres dialect — Spark's default escape mode would eat them
+    // emitted regex backslashes depend on AdtContext reading literals
+    // standard-SQL-style, like the reference's postgres dialect —
+    // SqlCompat re-spells them so Spark's default parser keeps them
     val esc = ctx.sql(
       "SELECT '100%' SIMILAR TO '100\\%' AS e, " +
         "'1009' SIMILAR TO '100\\%' AS f, " +
@@ -294,5 +298,11 @@ class CliSpec extends AnyFunSuite {
         "'axb' SIMILAR TO 'a.b' AS h").collect()(0)
     assert(esc.getBoolean(0) && !esc.getBoolean(1))
     assert(esc.getBoolean(2) && !esc.getBoolean(3))
+  }
+
+  test("a string literal that spells an information_schema member stays as written") {
+    val ctx = new AdtContext(SparkTestSession.spark)
+    val s = ctx.sql("SELECT 'information_schema.tables' AS s").head().getString(0)
+    assert(s == "information_schema.tables")
   }
 }

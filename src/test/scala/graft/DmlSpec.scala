@@ -1034,4 +1034,74 @@ class DmlSpec extends AnyFunSuite {
       ctx.sql("ALTER TABLE droppart DROP COLUMN n_name"))
     assert(e3.getMessage.contains("namelen"))
   }
+
+  private def freshDeltaDir(name: String): String = {
+    val dir = new java.io.File(sys.props("java.io.tmpdir"), name)
+    def del(f: java.io.File): Unit = {
+      if (f.isDirectory)
+        Option(f.listFiles()).getOrElse(Array.empty).foreach(del)
+      f.delete()
+    }
+    del(dir)
+    import spark.implicits._
+    DeltaWriter.append(Seq((1, "a.b"), (2, "axb"), (3, "100%"), (4, "1009"))
+      .toDF("k", "s"), dir.getAbsolutePath)
+    dir.getAbsolutePath
+  }
+
+  test("DML predicates and SET values read literals like a SELECT") {
+    val ctx = new AdtContext(spark)
+    ctx.sql("CREATE EXTERNAL TABLE dml_lit STORED AS DELTA " +
+      s"LOCATION '${freshDeltaDir("graft_dml_lit")}'")
+    def keys() = ctx.sql("SELECT k FROM dml_lit ORDER BY k")
+      .collect().map(_.getInt(0)).toSeq
+    // `\.` is a regex-escaped dot in a standard-conforming literal: the
+    // SELECT and the DELETE both match "a.b" only, never "axb"
+    assert(ctx.sql("SELECT k FROM dml_lit WHERE s RLIKE '^a\\.b$'")
+      .collect().map(_.getInt(0)).toSeq == Seq(1))
+    ctx.sql("DELETE FROM dml_lit WHERE s RLIKE '^a\\.b$'")
+    assert(keys() == Seq(2, 3, 4))
+    ctx.sql("UPDATE dml_lit SET s = 'C:\\x' WHERE s RLIKE '^a.b$'")
+    assert(ctx.sql("SELECT s FROM dml_lit WHERE k = 2").head().getString(0) ==
+      "C:\\x")
+  }
+
+  test("SIMILAR TO escapes hold in a SELECT, inside EXPLAIN ANALYZE and in a MERGE source") {
+    val ctx = new AdtContext(spark)
+    ctx.sql("CREATE EXTERNAL TABLE dml_guard STORED AS DELTA " +
+      s"LOCATION '${freshDeltaDir("graft_dml_guard")}'")
+    // each text is re-spelled once: a second pass would double the
+    // regex backslash SIMILAR TO 'a.b' emits, and "a.b" would not match
+    val row = ctx.sql("SELECT '100%' SIMILAR TO '100\\%' AS e, " +
+      "'1009' SIMILAR TO '100\\%' AS f, 'a.b' SIMILAR TO 'a.b' AS g, " +
+      "'axb' SIMILAR TO 'a.b' AS h").head()
+    assert(row.getBoolean(0) && !row.getBoolean(1))
+    assert(row.getBoolean(2) && !row.getBoolean(3))
+    val pred = "s SIMILAR TO '100\\%' OR s SIMILAR TO 'a.b'"
+    val plan = ctx.sql(s"EXPLAIN ANALYZE SELECT k FROM dml_guard WHERE $pred")
+      .head().getString(1)
+    val filter = plan.linesIterator.map(_.trim).find(_.startsWith("Filter"))
+    assert(filter.exists(_.contains("numOutputRows=2")), plan)
+    ctx.sql("MERGE INTO dml_guard t USING (SELECT k, s FROM VALUES " +
+      s"(5, '100%'), (6, 'a.b'), (7, 'axb'), (8, '1009') AS v(k, s) WHERE $pred) src " +
+      "ON t.k = src.k WHEN MATCHED THEN UPDATE SET * " +
+      "WHEN NOT MATCHED THEN INSERT *")
+    assert(ctx.sql("SELECT k FROM dml_guard ORDER BY k")
+      .collect().map(_.getInt(0)).toSeq == Seq(1, 2, 3, 4, 5, 6))
+  }
+
+  test("plain spark.sql keeps Spark's default literal reading while AdtContext runs") {
+    import scala.jdk.CollectionConverters._
+    val ctx = new AdtContext(spark)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    // Spark's default parser reads '\\d' as the two characters \d
+    val reader = new Thread(() =>
+      while (!stop.get())
+        seen.add(spark.sql("SELECT '\\\\d'").head().getString(0)))
+    reader.start()
+    try (1 to 200).foreach(_ => ctx.sql("SELECT 'a.b' RLIKE '^a\\.b$' AS m"))
+    finally { stop.set(true); reader.join() }
+    assert(seen.asScala.toSet == Set("\\d"))
+  }
 }

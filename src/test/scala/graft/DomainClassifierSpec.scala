@@ -67,7 +67,6 @@ class DomainClassifierSpec extends AnyFunSuite {
     val d = SparkTestSession.sfDir
 
     val (w, _) = graft.queries.Pipeline.domainTrain(s, d)
-    graft.functions.Md5Long.register(s)
     val c = Tables.sql(s, d,
       s"WITH ${graft.queries.Pipeline.HashedFeatureCtes} " +
         "SELECT doc_id, b, c FROM c")

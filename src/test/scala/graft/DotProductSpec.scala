@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.DotProductI64
 import graft.functions.DotProductI64.dot_i64
 
 /** Native Catalyst expression: interpreted eval, codegen path, SQL
@@ -17,7 +16,6 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("SQL registration + codegen over many rows") {
-    DotProductI64.register(spark)
     val n = spark.range(1000)
       .selectExpr("sequence(1, 16) as a", "sequence(1, 16) as b")
       .selectExpr("dot_i64(CAST(a AS ARRAY<BIGINT>), CAST(b AS ARRAY<BIGINT>)) AS d")
@@ -53,10 +51,8 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("wrong arity fails with a named error, not a raw index exception") {
-    DotProductI64.register(spark)
     val e = intercept[Exception] { spark.sql("SELECT dot_i64(array(1L))").collect() }
     assert(e.getMessage.contains("dot_i64"))
-    graft.functions.Md5Long.register(spark)
     val e2 = intercept[Exception] { spark.sql("SELECT md5_60()").collect() }
     assert(e2.getMessage.contains("md5_60"))
   }

@@ -398,10 +398,8 @@ class GoldenExecSpec extends AnyFunSuite {
     val url = getClass.getResource("/queries/golden5.sql")
     assert(url != null, "golden5.sql resource missing")
     val spark = SparkTestSession.spark
-    // the CLI deployment registers md5_60 via GraftExtensions
-    // (spark.sql.extensions); the shared test session registers it
-    // directly, same resolution path
-    graft.functions.Md5Long.register(spark)
+    // md5_60 resolves through GraftExtensions, which the session
+    // factory installs
     val emb = s"${SparkTestSession.sfDir}/embeddings.parquet"
     val lines = Files.readAllLines(
       Paths.get(url.toURI), StandardCharsets.UTF_8).asScala.toSeq

@@ -84,9 +84,8 @@ class MultimodalSpec extends AnyFunSuite {
       id -> graft.operators.Multimodal.dHash(t.getBytes("UTF-8"))
     }.toMap
     assert(viaExpr == viaKernel)
-    // SQL registration path too
-    graft.functions.DHash63.register(spark)
-    val viaSql = docs.toSeq.toDF("doc_id", "text").createOrReplaceTempView("dh_t")
+    // the SQL path too, through the injected builder
+    docs.toSeq.toDF("doc_id", "text").createOrReplaceTempView("dh_t")
     val sqlMap = spark.sql(
       "SELECT doc_id, dhash63(encode(text, 'UTF-8')) AS dh FROM dh_t")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -492,7 +492,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // every training round scores through this exact kernel — a 4096-row
     // weight dim regressing to a shuffle join would shuffle the corpus
     // feature frame R times at 100 TB
-    graft.functions.Md5Long.register(spark)
     val c = Tables.sql(spark, d,
       s"WITH ${graft.queries.Pipeline.HashedFeatureCtes} " +
         "SELECT doc_id, b, c FROM c")

@@ -21,7 +21,6 @@ class PqSpec extends AnyFunSuite {
     val n = emb.count()
     // the codebook trains on the deterministic hash-threshold sample;
     // recompute its size with the same predicate the trainer uses
-    graft.functions.Md5Long.register(spark)
     val pct = graft.queries.Extensions.samplePct(
       n, graft.queries.Extensions.pqKs(n))
     val sampN = emb.filter(org.apache.spark.sql.functions.expr(

@@ -321,7 +321,6 @@ class StreamingSpec extends AnyFunSuite {
 
     // batch margins through the trainer's own scoring join — every doc,
     // bit-for-bit, plus the threshold convention
-    graft.functions.Md5Long.register(spark)
     val c = Tables.sql(spark, d,
       s"WITH ${graft.queries.Pipeline.HashedFeatureCtes} " +
         "SELECT doc_id, b, c FROM c")
