@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import graft.sources.Fixtures
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
@@ -34,12 +35,12 @@ object Bench {
       Fixtures.deltaOrdersWritten(spark, sfDir)
       Fixtures.deltaOrdersMaintained(spark, sfDir)
       Fixtures.deltaOrdersIvm(spark, sfDir)
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] fixture warmup failed: ${e.getMessage}")
     }
     try SparkEntry.queries("q1_agg")(spark, sfDir).write
       .format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     // EVERY query runs min-of-2 by default (r18): single-shot timings on
     // this shared box have jittered ±30-60% on plain untouched queries
@@ -59,7 +60,7 @@ object Bench {
           try {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             true
-          } catch { case e: Throwable =>
+          } catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             false
           }
@@ -112,7 +113,7 @@ object Bench {
       s"""{"metric":"total","value":${ms(total)},"unit":"sec"$slowest$failedKey,"sf":$sf}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("/tmp/graft_bench.json"), detail + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     spark.stop()
     System.out.flush()
     println(detail)

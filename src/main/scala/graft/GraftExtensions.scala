@@ -17,8 +17,9 @@ import graft.functions.{DHash63, DotProductI64, Md5Long, WordNgramMd5Long}
   * Injects the four native codegen expressions — `dot_i64`, `md5_60`,
   * `word_ngram_md5_60`, `dhash63` — through each one's own `build`
   * (arity checked there), so they resolve in plain `spark.sql(...)`,
-  * and the `information_schema.*` analyzer rule
-  * ([[graft.plans.ResolveInformationSchema]]). The DDL shim and graft's
+  * the `information_schema.*` analyzer rule and the local-relation sort
+  * ([[graft.plans.ResolveInformationSchema]],
+  * [[graft.plans.SortLocalRelation]]). The DDL shim and graft's
   * own statements stay in [[AdtContext.sql]] because Spark's parser
   * rejects them outright, which a resolution hook never sees.
   */
@@ -39,5 +40,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // miss in a JVM builds an error-class exception, a one-time cost
     // measured at about 1.5 s on a cold `local[4]` session
     ext.injectHintResolutionRule(graft.plans.ResolveInformationSchema(_))
+    ext.injectOptimizerRule(_ => graft.plans.SortLocalRelation)
   }
 }

@@ -2,15 +2,15 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import graft.InformationSchema
 
-/** Analyzer rule resolving `information_schema.*` — the
-  * [[graft.InformationSchema.Members]] set (the reference enables
-  * DataFusion's information_schema,
-  * /root/reference/crates/core/src/context.rs:27) onto the catalog-backed
-  * views of [[graft.InformationSchema]].
+/** Analyzer rule resolving `information_schema.*` (the reference enables
+  * DataFusion's, `crates/core/src/context.rs:27`) in place: each
+  * reference becomes the member's [[graft.InformationSchema.relation]],
+  * aliased `information_schema.<member>`. No temp view is registered,
+  * so two statements analyzed at once never share a relation.
   *
   * Injected through `GraftExtensions` (as a hint-batch rule, which runs
   * before Spark's own relation resolution), so plain
@@ -22,34 +22,32 @@ import graft.InformationSchema
   * references resolve here, so a string literal that spells
   * `information_schema.tables` stays as written.
   *
-  * The views refresh when — and only when — a plan actually references
-  * information_schema, so the catalog walk (driver-side, one row per
-  * table/column) never taxes ordinary queries.
+  * A plan with no reference returns unchanged without reading the
+  * catalog, and a plan builds each member it references once.
   */
 case class ResolveInformationSchema(session: SparkSession)
     extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val referenced = plan.collect {
-      case u: UnresolvedRelation if matches(u) =>
-        u.multipartIdentifier.last.toLowerCase
-    }.toSet
+    val referenced = plan.collect { case Member(m) => m }.toSet
     if (referenced.isEmpty) plan
     else {
-      // build only the members this plan references (a tables probe must
-      // not pay the SET -v / listFunctions walks the other members need)
-      InformationSchema.refresh(session, referenced)
+      val relations =
+        referenced.map(m => m -> InformationSchema.relation(session, m)).toMap
       plan.resolveOperatorsUp {
-        case u: UnresolvedRelation if matches(u) =>
-          UnresolvedRelation(
-            Seq("information_schema_" + u.multipartIdentifier.last.toLowerCase))
+        case Member(m) => SubqueryAlias(Seq("information_schema", m), relations(m))
       }
     }
   }
 
-  private def matches(u: UnresolvedRelation): Boolean = {
-    val id = u.multipartIdentifier
-    id.length == 2 && id.head.equalsIgnoreCase("information_schema") &&
-      InformationSchema.Members.contains(id.last.toLowerCase)
+  private object Member {
+    def unapply(plan: LogicalPlan): Option[String] = plan match {
+      case u: UnresolvedRelation =>
+        val id = u.multipartIdentifier
+        Some(id.last.toLowerCase).filter(m =>
+          id.length == 2 && id.head.equalsIgnoreCase("information_schema") &&
+            InformationSchema.Members.contains(m))
+      case _ => None
+    }
   }
 }

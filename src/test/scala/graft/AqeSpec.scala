@@ -23,7 +23,6 @@ class AqeSpec extends AnyFunSuite {
   private val d = SparkTestSession.sfDir
 
   test("AQE splits a runtime-detected skewed join partition, losslessly") {
-    import spark.implicits._
     // many map tasks matter: AQE splits a skewed reduce partition at
     // MAPPER boundaries, so a single-mapper shuffle (one small parquet
     // file → one task) is unsplittable no matter the thresholds — at

@@ -261,18 +261,21 @@ class CliSpec extends AnyFunSuite {
 
   test("information_schema refresh is lazy: only referenced members rebuild") {
     val spark = SparkTestSession.spark
-    val ctx = new AdtContext(spark)
-    // clear any members left by earlier tests, then touch only `tables`
-    Seq(InformationSchema.SettingsView, InformationSchema.RoutinesView)
-      .foreach(spark.catalog.dropTempView(_))
-    ctx.sql("SELECT count(*) FROM information_schema.tables").collect()
-    // the statement must not have paid the SET -v / listFunctions walks
-    assert(!spark.catalog.tableExists(InformationSchema.SettingsView))
-    assert(!spark.catalog.tableExists(InformationSchema.RoutinesView))
-    // touching df_settings builds it (and only what's referenced)
-    ctx.sql("SELECT count(*) FROM information_schema.df_settings").collect()
-    assert(spark.catalog.tableExists(InformationSchema.SettingsView))
-    assert(!spark.catalog.tableExists(InformationSchema.RoutinesView))
+    val rule = graft.plans.ResolveInformationSchema(spark)
+    def built(sql: String): Seq[String] =
+      rule(spark.sessionState.sqlParser.parsePlan(sql)).collect {
+        case org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(id, _) => id.name
+      }
+    // a `tables` probe builds `tables` alone: no SET -v / listFunctions walk
+    assert(built("SELECT count(*) FROM information_schema.tables") == Seq("tables"))
+    assert(built("SELECT count(*) FROM information_schema.df_settings") ==
+      Seq("df_settings"))
+    // a member referenced twice is built once and aliased at each site
+    val twice = rule(spark.sessionState.sqlParser.parsePlan("""
+      SELECT * FROM information_schema.columns a
+      JOIN information_schema.columns b ON a.table_name = b.table_name"""))
+      .collect { case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l }
+    assert(twice.size == 2 && (twice.head eq twice.last))
   }
 
   test("postgres regex operators run end-to-end through AdtContext") {

@@ -55,7 +55,6 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("token budget: kept tokens within budget and maximal in fill order") {
-    import spark.implicits._
     val B = 3000L
     val out = SparkEntry.queries("q138_token_budget")(spark, d).collect()
     assert(out.nonEmpty)

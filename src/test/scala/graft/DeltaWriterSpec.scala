@@ -508,7 +508,7 @@ class DeltaWriterSpec extends AnyFunSuite {
     // o_orderkey stats provably exclude the delete predicate, so the
     // verb's filtered discovery scan must skip them and the commit must
     // carry them forward UNREWRITTEN
-    val mx = orders.agg(max(col("o_orderkey"))).head.getLong(0)
+    val mx = orders.agg(max(col("o_orderkey"))).head().getLong(0)
     DeltaWriter.append(orders.filter(col("o_orderkey") < mx / 2), path)
     val early = DeltaReader.snapshot(spark, path).files.map(_.path).toSet
     DeltaWriter.append(orders.filter(col("o_orderkey") >= mx / 2), path)
@@ -537,7 +537,7 @@ class DeltaWriterSpec extends AnyFunSuite {
   test("update rewrites matching rows in place; untouched files and non-matching rows ride through") {
     val path = tmpTable("orders_update")
     val orders = Tables.t(spark, d, "orders")
-    val mx = orders.agg(max(col("o_orderkey"))).head.getLong(0)
+    val mx = orders.agg(max(col("o_orderkey"))).head().getLong(0)
     DeltaWriter.append(orders.filter(col("o_orderkey") < mx / 2), path)
     val early = DeltaReader.snapshot(spark, path).files.map(_.path).toSet
     DeltaWriter.append(orders.filter(col("o_orderkey") >= mx / 2), path)

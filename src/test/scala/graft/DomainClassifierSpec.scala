@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** q160/q161 domain classifier: the distributed batch-perceptron trainer
   * must equal a driver-side reference implementation run over the same

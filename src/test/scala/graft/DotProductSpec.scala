@@ -12,7 +12,7 @@ class DotProductSpec extends AnyFunSuite {
 
   test("column API computes the integer dot product") {
     val df = Seq((Seq(1L, 2L, 3L), Seq(4L, 5L, 6L))).toDF("a", "b")
-    assert(df.select(dot_i64($"a", $"b")).head.getLong(0) == 32L)
+    assert(df.select(dot_i64($"a", $"b")).head().getLong(0) == 32L)
   }
 
   test("SQL registration + codegen over many rows") {
@@ -26,7 +26,7 @@ class DotProductSpec extends AnyFunSuite {
 
   test("null input propagates null") {
     val df = Seq((Some(Seq(1L)), Option.empty[Seq[Long]])).toDF("a", "b")
-    assert(df.select(dot_i64($"a", $"b")).head.isNullAt(0))
+    assert(df.select(dot_i64($"a", $"b")).head().isNullAt(0))
   }
 
   test("mismatched lengths and null elements yield NULL, like the lambda spelling") {
@@ -59,7 +59,7 @@ class DotProductSpec extends AnyFunSuite {
 
   test("type mismatch fails analysis") {
     val df = Seq(("x", Seq(1L))).toDF("a", "b")
-    val e = intercept[Exception] { df.select(dot_i64($"a", $"b")).head }
+    val e = intercept[Exception] { df.select(dot_i64($"a", $"b")).head() }
     assert(e.getMessage.toLowerCase.contains("array<bigint>"))
   }
 

@@ -22,7 +22,7 @@ class FunctionsSpec extends AnyFunSuite {
     val row = df.select(
       GapFunctions.arrayResize($"a", 5, lit(0L)).as("r"),
       GapFunctions.arrayPopFront($"a").as("pf"),
-      GapFunctions.arrayPopBack($"a").as("pb")).head
+      GapFunctions.arrayPopBack($"a").as("pb")).head()
     assert(row.getSeq[Long](0) == Seq(1L, 2L, 3L, 0L, 0L))
     assert(row.getSeq[Long](1) == Seq(2L, 3L))
     assert(row.getSeq[Long](2) == Seq(1L, 2L))
@@ -46,7 +46,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("digest dispatches to the right hash") {
     val df = Seq("abc").toDF("s")
-    val md5v = df.select(GapFunctions.digest($"s", "md5")).head.getString(0)
+    val md5v = df.select(GapFunctions.digest($"s", "md5")).head().getString(0)
     assert(md5v == "900150983cd24fb0d6963f7d28e17f72")
     val e = intercept[IllegalArgumentException] {
       GapFunctions.digest($"s", "crc32")

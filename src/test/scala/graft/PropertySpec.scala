@@ -85,7 +85,7 @@ object PropertySpec extends Properties("graft-kernels") {
           .asInstanceOf[Long]
       }
       val native = graft.functions.WordNgramMd5Long(in, Literal(k))
-      val interpreted = native.eval(row).asInstanceOf[ArrayData].toLongArray.toSeq
+      val interpreted = native.eval(row).asInstanceOf[ArrayData].toLongArray().toSeq
       val codegen = GenerateUnsafeProjection.generate(Seq(native))
         .apply(row).getArray(0).toLongArray.toSeq
       Prop(interpreted == composable) && Prop(codegen == composable)

@@ -41,7 +41,6 @@ class StreamPerceptualDedupSpec extends AnyFunSuite {
     val dir = writeBatches("graft_spdedup_wm", Seq(
       docs.filter(col("doc_id") % 2 === 0),
       docs.filter(col("doc_id") % 2 === 1)))
-    import spark.implicits._
     val q = StreamPerceptualDedup.pairsWithinWatermark(
       spark.readStream.schema(graft.streaming.StreamDedup.schema)
         .option("maxFilesPerTrigger", "1").parquet(dir),
