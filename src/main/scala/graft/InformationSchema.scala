@@ -19,6 +19,11 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType, StructF
   * session catalog directly, with no Dataset or job, and hold what
   * `spark.catalog.listTables`/`listColumns` report. Catalog metadata is
   * driver-side and tiny, so local construction fits any scale.
+  *
+  * Stated divergence: `columns.is_nullable` is `true` for a `NOT NULL`
+  * column of a persistent data-source table (`USING parquet`), where
+  * DataFusion reports it not nullable. Spark stores data-source table
+  * schemas as nullable, so the catalog holds no other answer.
   */
 object InformationSchema {
 

@@ -51,10 +51,10 @@ import graft.sources.DeltaActions.{Action, AddCDCFile, AddFile, CommitInfo, DvDe
   * [[checkpointCache]] — at most a small constant number of entries,
   * each O(#files) like the snapshot itself and softly referenced, so the
   * heap can reclaim it under pressure — and replay only the JSON tail. Data
-  * reading is a plain multi-file vectorized parquet scan, so column
-  * pruning and predicate pushdown are inherited; partition values are
-  * attached via a broadcast join on `_metadata.file_path` (one tiny dim
-  * per file — no shuffle of the fact side).
+  * reading is [[scan]], the one reader of table data files: a
+  * multi-file vectorized parquet scan over a snapshot-backed FileIndex,
+  * so column pruning, predicate pushdown and partition pruning are
+  * inherited, and partition values come typed from the add actions.
   */
 object DeltaReader {
 
@@ -531,9 +531,12 @@ object DeltaReader {
     scan(spark, tablePath, snapshotAt(spark, tablePath, version, prune),
       tagSourceFile)
 
-  /** The rows of an already-replayed snapshot — the scan body of
-    * [[loadAt]], and the one read of a [[DeltaWriter]] verb, which
-    * takes its file list and its rows from the same snapshot. */
+  /** The rows of an already-replayed snapshot — the only code that
+    * turns `add` actions into logical rows. It is the scan body of
+    * [[loadAt]] and the one read of a [[DeltaWriter]] verb, which takes
+    * its file list and its rows from the same snapshot; the change
+    * feeds and incremental z-order read a snapshot narrowed to the adds
+    * they need (`snap.copy(files = …)`, with their encoded paths). */
   private[sources] def scan(spark: SparkSession, tablePath: String,
       snap: Snapshot, tagSourceFile: Boolean): DataFrame = {
     if (snap.files.isEmpty)
@@ -597,15 +600,10 @@ object DeltaReader {
     }
 
     // Deletion vectors filter the scan itself: one predicate over the
-    // `_metadata` row address, carrying only the descriptors. Its keys
-    // must match `_metadata.file_path` EXACTLY — Spark emits
-    // "file:/abs/path" with RFC-encoded specials (a partition dir like
-    // `k=A B` reads as `k=A%20B`), which File.toURI reproduces; a decoded
-    // spelling would silently skip the file's vector and resurrect its
-    // dead rows (caught by the partitioned deleteWithVectors spec).
+    // `_metadata` row address, carrying only the descriptors, keyed by
+    // [[fileUri]]
     val vectors = snap.files.flatMap { a =>
-      a.deletionVector.map(dv =>
-        new File(resolved(root, decodePath(a.path))).toURI.toString -> dv)
+      a.deletionVector.map(dv => fileUri(root, a) -> dv)
     }.toMap
     val live =
       if (vectors.isEmpty) base
@@ -648,6 +646,15 @@ object DeltaReader {
   private[sources] def resolved(root: String, decoded: String): String =
     if (decoded.startsWith("/")) decoded
     else new File(root, decoded).getAbsolutePath
+
+  /** `a`'s file as `_metadata.file_path` spells it, the key of a
+    * [[DvDeleted]] vector map. It must match EXACTLY — Spark emits
+    * "file:/abs/path" with RFC-encoded specials (a partition dir like
+    * `k=A B` reads as `k=A%20B`), which File.toURI reproduces; a decoded
+    * spelling would silently skip the file's vector and resurrect its
+    * dead rows (caught by the partitioned deleteWithVectors spec). */
+  private def fileUri(root: String, a: AddFile): String =
+    new File(resolved(root, decodePath(a.path))).toURI.toString
 
   /** One row per LIVE file: `__i` (the file's index in `snap.files`)
     * plus the partition columns TYPED per the metaData schema —
@@ -692,9 +699,7 @@ object DeltaReader {
     * re-scanning the table. Append-only CDC by declared contract: add
     * actions inside the window minus files also removed inside it
     * (update/delete feeds need deletion-vector diffing — that is
-    * [[loadChangeFeed]]; name-mapped tables scan physical spellings and
-    * project back to logical, id-mapped tables resolve file columns by
-    * parquet field id — q190 drives the full id-mapped life cycle
+    * [[loadChangeFeed]]; q190 drives the full id-mapped life cycle
     * through this feed). Layout-only
     * commits (compact / z-order: every file action carries
     * dataChange=false) move rows between files without changing the row
@@ -702,28 +707,18 @@ object DeltaReader {
     * their removes don't trip the append-only guard, so the feed
     * composes with table maintenance (the original files stay on disk
     * until vacuum, and this feed reads them at the version they were
-    * added). Partition columns are restored typed from the adds'
-    * partitionValues, one `lit().cast()` projection per distinct
-    * partition-value tuple in the window — metadata-sized by
-    * construction (the window's files grouped by their partition
-    * dirs), unioned under ONE logical plan. */
+    * added). The surviving adds are read by ONE [[scan]] over the
+    * snapshot at `toInclusive` narrowed to them — column mapping and
+    * typed partition values exactly as [[load]] reads them, one scan
+    * node whatever the number of partition tuples. */
   def loadChanges(spark: SparkSession, tablePath: String,
       fromExclusive: Long, toInclusive: Long): DataFrame = {
     val snap = snapshotAt(spark, tablePath, toInclusive)
-    // NAME-mapped tables: files + partitionValues carry physical
-    // spellings; the feed scans physical and projects back to logical.
-    // ID-mapped tables resolve file columns by parquet field id (the
-    // same native path [[loadAt]] uses — scan keeps logical names,
-    // fields tagged with their id; the session read flag is set at
-    // session build, [[graft.AdtContext.engineConfs]]); their
-    // partitionValues keys stay physical either way.
-    def phys(n: String): String = snap.physicalNames.getOrElse(n, n)
-    val idMode = snap.fieldIds.nonEmpty
     val commits = windowCommits(tablePath, fromExclusive, toInclusive)
     require(commits.nonEmpty || fromExclusive >= toInclusive,
       s"no commits in ($fromExclusive, $toInclusive] at $tablePath")
-    val added = mutable.LinkedHashMap
-      .empty[String, Map[String, Option[String]]]
+    // decoded path → the add as logged ([[scan]] decodes its path)
+    val added = mutable.LinkedHashMap.empty[String, AddFile]
     // layout-only commits (compact / z-order) are transparent
     commits.filterNot(c => isLayoutOnly(c._2)).foreach { case (_, actions) =>
       actions.foreach {
@@ -751,39 +746,12 @@ object DeltaReader {
             s"loadChanges($fromExclusive, $toInclusive] at $tablePath: " +
               "window contains a deletion-vector commit — the CDC feed " +
               "is append-only; refresh consumers from a full snapshot")
-          added(decodePath(a.path)) = a.partitionValues
+          added(decodePath(a.path)) = a
         case _ =>
       }
     }
-    val partCols = snap.partitionColumns
-    val dataFields = snap.schema.fields.toIndexedSeq
-      .filterNot(f => partCols.contains(f.name))
-    val dataSchema = StructType(dataFields.map(f =>
-      if (idMode) StructField(f.name, f.dataType, f.nullable,
-        new MetadataBuilder()
-          .putLong("parquet.field.id", snap.fieldIds(f.name)).build())
-      else StructField(phys(f.name), f.dataType, f.nullable)))
-    if (added.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    val byPv = added.toSeq.groupBy(_._2)
-    val parts = byPv.toSeq.map { case (pv, files) =>
-      val scanned = spark.read.schema(dataSchema)
-        .parquet(files.map(f =>
-          resolved(new File(tablePath).getAbsolutePath, f._1)): _*)
-      val base =
-        if (idMode) scanned // already logical (field-id resolution)
-        else scanned
-          .select(dataFields.map(f => col(phys(f.name)).as(f.name)): _*)
-      partCols.foldLeft(base) { (df, c) =>
-        val dt = snap.schema(c).dataType
-        df.withColumn(c, pv.get(phys(c)).flatten match {
-          case Some(v) => lit(v).cast(dt)
-          case None => lit(null).cast(dt)
-        })
-      }
-    }
-    parts.reduce(_ unionByName _)
+    scan(spark, tablePath, snap.copy(files = added.values.toSeq),
+      tagSourceFile = false)
       .select(snap.schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
@@ -824,22 +792,18 @@ object DeltaReader {
     * window reaching behind [[DeltaWriter.vacuum]]'s horizon fails at
     * scan time rather than fabricating rows, and a window whose JSON
     * commits were log-cleaned is refused up front. Driver cost: the
-    * window's action lines only; DV bitmaps decode in the tasks that
-    * read their files, through the same [[DvDeleted]] scan predicate as
-    * [[load]]. Scans group per
-    * (version, change, partition tuple) with per-file branches only
-    * where a DV row-diff is needed — metadata-sized for any sane
-    * window. [[graft.operators.IncrementalAgg]] consumes this feed
+    * window's action lines only. The data-file events of one (version,
+    * change) are ONE [[scan]] over the snapshot at `toInclusive`
+    * narrowed to their files, each file carrying its ¬in vector as its
+    * deletion vector, and the in vectors a [[DvDeleted]] filter over
+    * the tagged row address; DV bitmaps decode in the tasks that read
+    * their files. [[graft.operators.IncrementalAgg]] consumes this feed
     * with retractions, so a materialization follows deletes/updates
     * without ever re-scanning the base. */
   def loadChangeFeed(spark: SparkSession, tablePath: String,
       fromExclusive: Long, toInclusive: Long): DataFrame = {
     val snap = snapshotAt(spark, tablePath, toInclusive)
-    // NAME-mapped: scan physical spellings, project to logical.
-    // ID-mapped: native parquet field-id resolution (loadAt's path;
-    // read flag set at session build, [[graft.AdtContext.engineConfs]]).
     def phys(n: String): String = snap.physicalNames.getOrElse(n, n)
-    val idMode = snap.fieldIds.nonEmpty
     val commits = windowCommits(tablePath, fromExclusive, toInclusive)
     val have = commits.map(_._1).toSet
     (math.max(0L, fromExclusive + 1) to toInclusive).foreach(v =>
@@ -848,12 +812,12 @@ object DeltaReader {
           s"JSON commit $v is gone (log cleanup) — the change window " +
           "cannot be replayed; bootstrap consumers from a snapshot"))
 
-    // running live state by decoded path, seeded at the window start
-    def decoded(a: AddFile): AddFile = a.copy(path = decodePath(a.path))
+    // running live state by decoded path, seeded at the window start;
+    // each value is the add as logged ([[scan]] decodes its path)
     val state = mutable.LinkedHashMap.empty[String, AddFile]
     if (fromExclusive >= 0L)
       snapshotAt(spark, tablePath, fromExclusive).files
-        .foreach(a => state(decodePath(a.path)) = decoded(a))
+        .foreach(a => state(decodePath(a.path)) = a)
 
     /** one row-producing scan unit: rows of `file` that are in
       * `mustIn`'s DV (None = no constraint) and NOT in `mustNotIn`'s. */
@@ -883,7 +847,7 @@ object DeltaReader {
         case _ =>
       }
       actions.foreach {
-        case a: AddFile => outcome(decodePath(a.path)) = Some(decoded(a))
+        case a: AddFile => outcome(decodePath(a.path)) = Some(a)
         case _ =>
       }
       outcome.foreach { case (p, out) =>
@@ -911,21 +875,6 @@ object DeltaReader {
     }
 
     val partCols = snap.partitionColumns
-    val dataFields = snap.schema.fields.toIndexedSeq
-      .filterNot(f => partCols.contains(f.name))
-    val dataSchema = StructType(dataFields.map(f =>
-      if (idMode) StructField(f.name, f.dataType, f.nullable,
-        new MetadataBuilder()
-          .putLong("parquet.field.id", snap.fieldIds(f.name)).build())
-      else StructField(phys(f.name), f.dataType, f.nullable)))
-    def toLogical(df: DataFrame): DataFrame =
-      if (idMode) df // already logical (field-id resolution)
-      else {
-        val extras = df.columns.filterNot(c =>
-          dataFields.exists(f => phys(f.name) == c)).toIndexedSeq
-        df.select(dataFields.map(f => col(phys(f.name)).as(f.name)) ++
-          extras.map(col): _*)
-      }
     val feedFields = snap.schema.fields.toIndexedSeq :+
       StructField("_change_type", StringType, nullable = false) :+
       StructField("_commit_version", LongType, nullable = false)
@@ -934,48 +883,39 @@ object DeltaReader {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(feedFields))
     val root = new File(tablePath).getAbsolutePath
+    def asFeed(df: DataFrame, change: Column, version: Long): DataFrame =
+      df.select(snap.schema.fieldNames.toIndexedSeq.map(col) :+
+        change.as("_change_type") :+ lit(version).as("_commit_version"): _*)
+    // one scan per (version, change): the scan drops each file's
+    // `mustNotIn` rows as its deletion vector, and the `mustIn` files
+    // keep only their vector's rows
+    val dataParts = emits.groupBy(e => (e.version, e.change)).toSeq.map {
+      case ((v, change), es) =>
+        val mustIn = es.flatMap(e => e.mustIn.map(fileUri(root, e.file) -> _))
+          .toMap
+        val rows = scan(spark, tablePath, snap.copy(files =
+          es.map(e => e.file.copy(deletionVector = e.mustNotIn)).toSeq),
+          tagSourceFile = mustIn.nonEmpty)
+        asFeed(
+          if (mustIn.isEmpty) rows
+          else rows.filter(!col("__source_file").isin(mustIn.keys.toSeq: _*) ||
+            DvDeleted.dvDeleted(col("__source_file"), col("__row_index"),
+              mustIn, root)),
+          lit(change), v)
+    }
+    // cdc files carry the logical NON-PARTITION row plus _change_type,
+    // under logical names even on a column-mapped table; partition
+    // columns live in each cdc action's partitionValues
+    // (hive-partitioned `_change_data/`, the writer's delta-parity
+    // layout) and are restored typed here. Pre-r20 cdc files (partition
+    // columns inline, empty partitionValues) read through the legacy
+    // schema — on a partitioned table an EMPTY pv marks that layout.
+    // Pinned schemas either way: no inference pass.
     def withPv(df: DataFrame, pv: Map[String, Option[String]]): DataFrame =
       partCols.foldLeft(df) { (d2, c) =>
-        val dt = snap.schema(c).dataType
-        d2.withColumn(c, pv.get(phys(c)).flatten match {
-          case Some(x) => lit(x).cast(dt)
-          case None => lit(null).cast(dt)
-        })
+        d2.withColumn(c,
+          lit(pv.get(phys(c)).flatten.orNull).cast(snap.schema(c).dataType))
       }
-    val (plain, dvDiff) =
-      emits.partition(e => e.mustIn.isEmpty && e.mustNotIn.isEmpty)
-    val plainParts = plain.groupBy(e =>
-        (e.version, e.change, e.file.partitionValues)).toSeq
-      .map { case ((v, ch, pv), es) =>
-        val df = toLogical(spark.read.schema(dataSchema).parquet(
-          es.map(e => resolved(root, e.file.path)).toSeq: _*))
-        withPv(df, pv)
-          .withColumn("_change_type", lit(ch))
-          .withColumn("_commit_version", lit(v))
-      }
-    val dvParts = dvDiff.toSeq.map { e =>
-      // single-file scan: rows in `mustIn`'s vector and not in
-      // `mustNotIn`'s, by the same scan predicate as [[loadAt]]
-      val file = resolved(root, e.file.path)
-      val uri = new File(file).toURI.toString
-      def in(dv: DvDescriptor): Column = DvDeleted.dvDeleted(
-        col("_metadata.file_path"), col("_metadata.row_index"),
-        Map(uri -> dv), root)
-      val keep = (e.mustIn.map(in) ++ e.mustNotIn.map(dv => !in(dv)))
-        .reduce(_ && _)
-      val rows = spark.read.schema(dataSchema).parquet(file).filter(keep)
-      withPv(toLogical(rows), e.file.partitionValues)
-        .withColumn("_change_type", lit(e.change))
-        .withColumn("_commit_version", lit(e.version))
-    }
-    // cdc files carry the logical NON-PARTITION row plus _change_type;
-    // partition columns live in each cdc action's partitionValues
-    // (hive-partitioned `_change_data/`, the writer's delta-parity
-    // layout) and are restored typed here, exactly like the data-file
-    // emits above. Pre-r20 cdc files (partition columns inline, empty
-    // partitionValues) read through the legacy schema — on a
-    // partitioned table an EMPTY pv marks that layout. Pinned schemas
-    // either way: no inference pass.
     val cdcSchema = StructType(
       snap.schema.fields.toIndexedSeq
         .filterNot(f => partCols.contains(f.name)) :+
@@ -994,10 +934,9 @@ object DeltaReader {
         withPv(spark.read.schema(cdcSchema)
           .parquet(es.map(e => resolved(root, e._1)): _*), pv)
       }
-      (legacyPart ++ hivedParts).map(_.withColumn("_commit_version", lit(v)))
+      (legacyPart ++ hivedParts).map(asFeed(_, col("_change_type"), v))
     }
-    (plainParts ++ dvParts ++ cdcParts).reduce(_ unionByName _)
-      .select(feedFields.map(f => col(f.name)): _*)
+    (dataParts ++ cdcParts).reduce(_ union _)
   }
 }
 

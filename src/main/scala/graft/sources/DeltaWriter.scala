@@ -174,13 +174,12 @@ object DeltaWriter {
     * table's physical column names for staging — identity for unmapped
     * tables. The logical→physical projection is pure aliasing: zero
     * cost in the written plan. For `id`-mapped tables each column also
-    * carries `parquet.field.id` metadata; [[stageDataFiles]] detects
-    * that metadata and enables the parquet field-id WRITE flag scoped
-    * to the staged write only (the write is EAGER, so a save/restore
-    * brackets it exactly — unlike the READ flag, which lazy scans force
-    * to session-build scope, [[graft.AdtContext.engineConfs]]), so every staged
-    * file is stamped with the ids the delta `id` contract resolves
-    * columns by. */
+    * carries `parquet.field.id` metadata; [[StatsParquetFormat]]
+    * detects that metadata and enables the parquet field-id WRITE flag
+    * in that write job's conf only (the READ flag is a session-build
+    * conf, [[graft.AdtContext.engineConfs]]), so every staged file is
+    * stamped with the ids the delta `id` contract resolves columns
+    * by. */
   private def toPhysical(df: DataFrame, phys: Map[String, String],
       fieldIds: Map[String, Long],
       partitionBy: Seq[String]): (DataFrame, Seq[String]) =
@@ -1597,16 +1596,8 @@ object DeltaWriter {
         s"z-order dims must be non-negative: ${cols(i)} in " +
           s"[${m.getLong(2 * i + 1)}, ${m.getLong(2 * i)}]")
     }
-    val grid = cols.indices.map(i => expr(
-      s"CAST(${cols(i)} AS BIGINT) * 256 DIV ${m.getLong(2 * i) + 1}"))
-    val z =
-      if (cols.size == 2) graft.functions.ZOrder.morton(grid(0), grid(1))
-      else graft.functions.ZOrder.morton3(grid(0), grid(1), grid(2))
-    val keys = snap.partitionColumns.map(col) :+ col("__z")
-    val clustered = current.withColumn("__z", z)
-      .repartitionByRange(targetFiles, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .drop("__z")
+    val clustered = mortonClustered(current, snap, cols,
+      cols.indices.map(i => m.getLong(2 * i)), targetFiles)
     // layout-only commit (DVs absorbed = already-dead rows dropped):
     // dataChange=false throughout, so the CDC feeds skip it
     val adds = stageLogical(clustered, snap, table, version,
@@ -1636,17 +1627,13 @@ object DeltaWriter {
     * still prunes for that dim and needn't churn). The global range is
     * the stats-union, widened by the loose rows' own max pre-agg so
     * out-of-range fresh keys can't overflow the grid.
-    * No loose files → NO commit (idempotent steady state). Files
-    * carrying deletion vectors are refused — rewrite those through
-    * [[optimizeZOrder]]/[[compact]], which read through DV filtering.
-    * Hive-partitioned tables work too: loose detection runs PER
-    * partition tuple (each dir is its own key space), the partition
-    * columns are restored from the add actions by reading the loose
-    * tail grouped by partition tuple (hive layout strips them from the
-    * files; part-file NAMES are not unique across dirs, so a
-    * name-keyed restore would collide), and the rewrite
-    * range-partitions on (partitionCols ++ z) so each dir's tail
-    * clusters independently. */
+    * No loose files → NO commit (idempotent steady state). The loose
+    * tail is read through [[DeltaReader.scan]], so a loose file's
+    * deletion vector is absorbed by the rewrite (a tight file keeps
+    * its vector). Hive-partitioned tables work too: loose detection
+    * runs PER partition tuple (each dir is its own key space), and the
+    * rewrite range-partitions on (partitionCols ++ z) so each dir's
+    * tail clusters independently. */
   def optimizeZOrderIncremental(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, xCol: String, yCol: String,
       targetFiles: Int = 8, spanPermille: Int = 500): Long =
@@ -1714,60 +1701,18 @@ object DeltaWriter {
         }
       }.toSeq
     if (loose.isEmpty) return snap.version // steady state: no commit
-    require(loose.forall(_.deletionVector.isEmpty),
-      "loose files carry deletion vectors — rewrite through " +
-        "optimizeZOrder/compact (they read through DV filtering)")
     val version = snap.version + 1
-    val root = table.getAbsolutePath
-    def absOf(a: AddFile): String =
-      DeltaReader.resolved(root, DeltaReader.decodePath(a.path))
-    val partSet = snap.partitionColumns.toSet
-    val dataFields = snap.schema.fields.toIndexedSeq
-      .filterNot(f => partSet.contains(f.name))
-    // scan schema carries the PHYSICAL spellings the files were written
-    // with; the projection below restores logical names (identity when
-    // unmapped)
-    val dataSchema = StructType(dataFields.map(f =>
-      StructField(phys(f.name), f.dataType, f.nullable)))
-    // hive layout strips partition columns from the files — restore
-    // them by reading the loose tail GROUPED BY partition tuple and
-    // attaching each group's values as literals (one scan branch per
-    // distinct loose tuple, metadata-sized by this verb's bounded-tail
-    // contract). NOT a per-file-name lookup: one partitioned staged
-    // write emits the SAME part-file name into every hive dir it
-    // touches, so a basename-keyed map would last-win every colliding
-    // file onto one dir's partition values — silent row corruption
-    // (the identical collision the stageDataFiles stats keying fixed).
-    def toLogical(df: DataFrame): DataFrame =
-      df.select(dataFields.map(f => col(phys(f.name)).as(f.name)): _*)
-    val looseDf =
-      if (snap.partitionColumns.isEmpty)
-        toLogical(spark.read.schema(dataSchema).parquet(loose.map(absOf): _*))
-      else loose.groupBy(_.partitionValues).map { case (pv, grp) =>
-        val g = toLogical(
-          spark.read.schema(dataSchema).parquet(grp.map(absOf): _*))
-        snap.partitionColumns.foldLeft(g) { (df, pc) =>
-          df.withColumn(pc, lit(pv.get(phys(pc)).flatten.orNull)
-            .cast(snap.schema(pc).dataType))
-        }
-      }.reduce(_ unionByName _)
+    // the loose tail through the table reader: column mapping, typed
+    // partition values and deletion vectors (absorbed by the rewrite)
+    val looseDf = DeltaReader.scan(spark, tablePath, snap.copy(files = loose),
+      tagSourceFile = false)
     // grid maxima: stats-union widened by the loose rows' own pre-agg
     val m = looseDf.agg(max(col(cols.head).cast("long")),
       cols.tail.map(c => max(col(c).cast("long"))): _*).head()
     cols.indices.foreach(i => require(!m.isNullAt(i),
       s"z-order dims must not be all-NULL in the loose tail: ${cols(i)}"))
-    val grid = cols.indices.map { i =>
-      val mx = math.max(knownAll.map(_(i)._2).max, m.getLong(i))
-      expr(s"CAST(`${cols(i)}` AS BIGINT) * 256 DIV ${mx + 1}")
-    }
-    val z =
-      if (cols.size == 2) graft.functions.ZOrder.morton(grid(0), grid(1))
-      else graft.functions.ZOrder.morton3(grid(0), grid(1), grid(2))
-    val keys = snap.partitionColumns.map(col) :+ col("__z")
-    val clustered = looseDf.withColumn("__z", z)
-      .repartitionByRange(targetFiles, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .drop("__z")
+    val clustered = mortonClustered(looseDf, snap, cols, cols.indices.map(i =>
+      math.max(knownAll.map(_(i)._2).max, m.getLong(i))), targetFiles)
     val adds = stageLogical(clustered, snap, table, version,
       tags = ZOrderedTag, dataChange = false)
     publishOptimistic(table, version,
@@ -1778,6 +1723,26 @@ object DeltaWriter {
     * checkpoints carry through) — [[optimizeZOrderIncremental]]'s
     * convergence marker. */
   private val ZOrderedTag = Map("optimized" -> "zorder")
+
+  /** Both z-order verbs' layout: `rows` keyed on the Morton interleave
+    * of `cols` over a shared 8-bit grid (dim i scaled by `maxes(i)`),
+    * range-partitioned into `targetFiles` files on (partition columns
+    * ++ z) and sorted within each, so each hive dir clusters on its
+    * own. */
+  private def mortonClustered(rows: DataFrame, snap: DeltaReader.Snapshot,
+      cols: Seq[String], maxes: Seq[Long], targetFiles: Int): DataFrame = {
+    val grid = cols.zip(maxes).map { case (c, mx) =>
+      call_function("div", col(c).cast("long") * 256, lit(mx + 1))
+    }
+    val z =
+      if (cols.size == 2) graft.functions.ZOrder.morton(grid(0), grid(1))
+      else graft.functions.ZOrder.morton3(grid(0), grid(1), grid(2))
+    val keys = snap.partitionColumns.map(col) :+ col("__z")
+    rows.withColumn("__z", z)
+      .repartitionByRange(targetFiles, keys: _*)
+      .sortWithinPartitions(keys: _*)
+      .drop("__z")
+  }
 
   /** The non-file actions every checkpoint layout must carry: the
     * snapshot's protocol and metaData, and the txn ledger
@@ -2305,44 +2270,6 @@ object DeltaWriter {
     }
   }
 
-  /** Per-session REF-COUNTED guard for the session-global parquet
-    * field-id WRITE flag: the first entrant saves + sets, only the
-    * LAST exit restores, so overlapping id-mapped staged writes on the
-    * same SparkSession can never clear the flag out from under each
-    * other (staged files missing field ids would be unresolvable by an
-    * id-mapped reader). Keyed by session — a concurrent write on a
-    * DIFFERENT session (e.g. a streaming micro-batch clone) gets its
-    * own save/set/restore. */
-  private object FieldIdWriteGuard {
-    private val key = "spark.sql.parquet.fieldId.write.enabled"
-    private val state = scala.collection.mutable.Map
-      .empty[org.apache.spark.sql.SparkSession, (Int, Option[String])]
-    def withFlag[A](spark: org.apache.spark.sql.SparkSession,
-        needed: Boolean)(body: => A): A =
-      if (!needed) body
-      else {
-        state.synchronized {
-          state.get(spark) match {
-            case None =>
-              state(spark) = (1, spark.conf.getOption(key))
-              spark.conf.set(key, "true")
-            case Some((depth, saved)) => state(spark) = (depth + 1, saved)
-          }
-        }
-        try body
-        finally state.synchronized {
-          val (depth, saved) = state(spark)
-          if (depth == 1) {
-            state.remove(spark)
-            saved match {
-              case Some(v) => spark.conf.set(key, v)
-              case None => spark.conf.unset(key)
-            }
-          } else state(spark) = (depth - 1, saved)
-        }
-      }
-  }
-
   /** Stage `df`'s data files, move them into the table root and return
     * their `add` actions (nothing is committed yet — the caller owns the
     * commit's action set and the publish). The write goes
@@ -2354,27 +2281,15 @@ object DeltaWriter {
       partitionBy: Seq[String],
       tags: Map[String, String] = Map.empty,
       dataChange: Boolean = true): Seq[AddFile] = {
-    val spark = df.sparkSession
     // ---- stage + move the data files (uuid suffix: two writers racing
     // for the same version must not share — or sweep — a staging dir)
     val staging = new File(table,
       s".stage-$version-${java.util.UUID.randomUUID()}")
     if (staging.exists()) delete(staging)
-    // id-mapped staging (schema fields tagged parquet.field.id) needs
-    // the parquet field-id WRITE flag; ParquetFileFormat.prepareWrite
-    // copies it from the SESSION conf, so a writer option can't carry
-    // it — but this write is EAGER, so scope it through the
-    // ref-counted [[FieldIdWriteGuard]] (a plain save/restore races:
-    // two concurrent id-mapped writes on one session could have one
-    // thread's finally-restore clear the flag mid-write for the other)
-    val needsFieldIds =
-      df.schema.fields.exists(_.metadata.contains("parquet.field.id"))
-    FieldIdWriteGuard.withFlag(spark, needsFieldIds) {
-      val w0 = df.write.format(classOf[StatsParquetFormat].getName)
-        .mode(SaveMode.Overwrite)
-      (if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0)
-        .save(staging.getAbsolutePath)
-    }
+    val w0 = df.write.format(classOf[StatsParquetFormat].getName)
+      .mode(SaveMode.Overwrite)
+    (if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0)
+      .save(staging.getAbsolutePath)
     val moved = collectParquet(staging).map { f =>
       val rel = staging.toPath.relativize(f.toPath).toString
       val stats = StatsParquetFormat.takeSidecar(f)

@@ -598,8 +598,9 @@ object Dml {
         // the full rewrite, which seeds the tags the incremental loop
         // converges on. A deletion vector on a LOOSE (untagged) file
         // also falls back to the full rewrite: the incremental verb
-        // refuses DV'd loose files, while the full pass absorbs the
-        // vectors (ADVICE r15).
+        // would absorb only the loose files' vectors and leave those on
+        // tight files, while the full pass absorbs every vector and
+        // releases the vector files.
         val snap = DeltaReader.snapshot(spark, location)
         val propCols = snap.configuration
           .get("graft.autoOptimize.zOrderCols")

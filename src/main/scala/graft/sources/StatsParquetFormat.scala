@@ -40,6 +40,13 @@ class StatsParquetFormat extends ParquetFileFormat {
       options: Map[String, String],
       dataSchema: StructType): OutputWriterFactory = {
     val inner = super.prepareWrite(sparkSession, job, options, dataSchema)
+    // an id-mapped table's fields carry parquet field ids: the write
+    // tasks read the id flag from the job conf, where super just copied
+    // the session's value, so this one write sets it without touching
+    // the session
+    if (dataSchema.exists(_.metadata.contains("parquet.field.id")))
+      job.getConfiguration.setBoolean(
+        SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, true)
     val zone = sparkSession.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)
     new StatsParquetFormat.Factory(inner, zone)
   }

@@ -729,6 +729,25 @@ class DeltaWriterSpec extends AnyFunSuite {
       .forall(_.tags.get("optimized").contains("zorder")))
     assert(DeltaWriter.optimizeZOrderIncremental(spark, path,
       "l_partkey", "l_suppkey", targetFiles = 4) == after.version)
+
+    // a loose file carrying a deletion vector: the pass reads it through
+    // the vector — rows exact, the vector absorbed, tight files untouched
+    DeltaWriter.append(batch.withColumn("l_linenumber",
+      col("l_linenumber") + 100), path)
+    DeltaWriter.deleteWithVectors(spark, path,
+      col("l_linenumber") > 100 && col("l_partkey") % 3 === 0)
+    val pre = DeltaReader.snapshot(spark, path)
+    val tight2 = pre.files.filter(_.tags.get("optimized").contains("zorder"))
+    val dvLoose = pre.files.filterNot(tight2.contains)
+    assert(dvLoose.nonEmpty && dvLoose.forall(_.deletionVector.nonEmpty))
+    val rowsPre = multiset(DeltaReader.load(spark, path))
+    DeltaWriter.optimizeZOrderIncremental(spark, path,
+      "l_partkey", "l_suppkey", targetFiles = 4)
+    val post = DeltaReader.snapshot(spark, path)
+    assert(multiset(DeltaReader.load(spark, path)) == rowsPre)
+    assert(tight2.toSet.subsetOf(post.files.toSet))
+    assert(post.files.filterNot(tight2.contains)
+      .forall(a => a.deletionVector.isEmpty && !dvLoose.contains(a)))
   }
 
   test("optimizeZOrderIncremental on a partitioned table: per-dir detection, partition values restored") {
@@ -1218,10 +1237,9 @@ class DeltaWriterSpec extends AnyFunSuite {
     val key = "spark.sql.parquet.fieldId.write.enabled"
     val before = spark.conf.getOption(key)
     // several rounds of two OVERLAPPING id-mapped appends on the same
-    // session — under a plain save/restore one thread's finally could
-    // clear the session flag mid-write for the other, staging files
-    // WITHOUT field ids that an id-mapped reader then can't resolve;
-    // the ref-counted guard makes the last exit restore instead
+    // session — the field-id write flag rides each write job's conf, so
+    // neither write can clear it for the other and the session's value
+    // never changes
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
@@ -1235,7 +1253,7 @@ class DeltaWriterSpec extends AnyFunSuite {
         Await.result(fa, Duration.Inf); Await.result(fb, Duration.Inf)
       }
     } finally pool.shutdown()
-    assert(spark.conf.getOption(key) == before) // last exit restored
+    assert(spark.conf.getOption(key) == before) // session untouched
     // every data file in BOTH tables resolves by field id (the q190
     // wrong-named id-tagged probe, per file)
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
@@ -1568,6 +1586,43 @@ class DeltaWriterSpec extends AnyFunSuite {
       : Map[org.apache.spark.sql.Row, Int] =
     df.collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.size }
 
+  /** Every window `(from, to]` of `path`'s change feed up to the
+    * current version, replayed over the rows at `from` (insert-side
+    * +1, delete-side −1, applied in commit order), yields exactly the
+    * rows at `to`, as multisets of `cols`. */
+  private def assertFeedReplays(path: String, cols: Seq[String]): Unit = {
+    val top = DeltaReader.snapshot(spark, path).version
+    def stateAt(v: Long): Map[org.apache.spark.sql.Row, Int] =
+      if (v < 0L) Map.empty
+      else multiset(DeltaReader.loadAt(spark, path, v).select(cols.map(col): _*))
+    val k = cols.size
+    for (from <- -1L to top; to <- (from + 1) to top) {
+      val feed = DeltaReader.loadChangeFeed(spark, path, from, to)
+      val events = feed.select((cols :+ "_change_type" :+ "_commit_version")
+        .map(col): _*).collect()
+        .sortBy(_.getLong(k + 1)) // replay applies commits in order
+      // commit versions stay inside the window
+      assert(events.forall { r =>
+        val v = r.getLong(k + 1); v > from && v <= to
+      }, s"window ($from,$to] leaked a commit version")
+      // replay: pre + insert-side − delete-side == post, as multisets
+      // (delta's update spellings fold as their halves)
+      val replayed = events.foldLeft(stateAt(from)) { (m, r) =>
+        val row = org.apache.spark.sql.Row.fromSeq(r.toSeq.take(k))
+        val deltaN = r.getString(k) match {
+          case "insert" | "update_postimage" => 1
+          case "delete" | "update_preimage" => -1
+          case other => fail(s"unknown _change_type: $other")
+        }
+        val n = m.getOrElse(row, 0) + deltaN
+        assert(n >= 0, s"window ($from,$to] retracted a row it never " +
+          s"had: $row")
+        if (n == 0) m - row else m.updated(row, n)
+      }
+      assert(replayed == stateAt(to), s"window ($from,$to] replay diverged")
+    }
+  }
+
   test("loadChangeFeed: replaying any window over the pre-snapshot reproduces the post-snapshot") {
     val path = tmpTable("nation_cdf_replay")
     val nation = Tables.t(spark, d, "nation")
@@ -1583,39 +1638,8 @@ class DeltaWriterSpec extends AnyFunSuite {
       Map("n_name" -> lit("UPDATED"))) // v4 CoW update
     DeltaWriter.compact(spark, path) // v5 layout-only
     DeltaWriter.append(nation.filter(col("n_nationkey") === 7), path) // v6 dup row
-    val top = DeltaReader.snapshot(spark, path).version
-    assert(top == 6L)
-
-    def stateAt(v: Long): Map[org.apache.spark.sql.Row, Int] =
-      if (v < 0L) Map.empty
-      else multiset(DeltaReader.loadAt(spark, path, v)
-        .select("n_nationkey", "n_regionkey", "n_name"))
-    for (from <- -1L to top; to <- (from + 1) to top) {
-      val feed = DeltaReader.loadChangeFeed(spark, path, from, to)
-      val events = feed.select(
-        col("n_nationkey"), col("n_regionkey"), col("n_name"),
-        col("_change_type"), col("_commit_version")).collect()
-        .sortBy(_.getLong(4)) // replay applies commits in order
-      // commit versions stay inside the window
-      assert(events.forall { r =>
-        val v = r.getLong(4); v > from && v <= to
-      }, s"window ($from,$to] leaked a commit version")
-      // replay: pre + insert-side − delete-side == post, as multisets
-      // (delta's update spellings fold as their halves)
-      val replayed = events.foldLeft(stateAt(from)) { (m, r) =>
-        val row = org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2))
-        val deltaN = r.getString(3) match {
-          case "insert" | "update_postimage" => 1
-          case "delete" | "update_preimage" => -1
-          case other => fail(s"unknown _change_type: $other")
-        }
-        val n = m.getOrElse(row, 0) + deltaN
-        assert(n >= 0, s"window ($from,$to] retracted a row it never " +
-          s"had: $row")
-        if (n == 0) m - row else m.updated(row, n)
-      }
-      assert(replayed == stateAt(to), s"window ($from,$to] replay diverged")
-    }
+    assert(DeltaReader.snapshot(spark, path).version == 6L)
+    assertFeedReplays(path, Seq("n_nationkey", "n_regionkey", "n_name"))
 
     // the UPDATE commit's window alone emits delta's own update images
     // for EXACTLY the matched row — no survivor churn at all (the cdc
@@ -1630,6 +1654,31 @@ class DeltaWriterSpec extends AnyFunSuite {
     assert(upd.forall(r =>
       r.getAs[Number]("n_nationkey").longValue == 2L &&
         r.getAs[Long]("_commit_version") == 4L))
+
+    // column-mapped, partitioned inputs whose partition values carry
+    // '+', '%' and a space: an append, a DV delete, a RESTORE across
+    // that vector (newly-alive rows of files whose logged paths are
+    // percent-encoded) and a compact
+    for (mode <- Seq("name", "id")) {
+      val p = tmpTable(s"cdf_replay_specials_$mode")
+      val rows = spark.range(0, 60).select(col("id"), (col("id") % 7).as("v"),
+        element_at(array(lit("a+b"), lit("c%d"), lit("e f")),
+          (col("id") % 3 + 1).cast("int")).as("p"))
+      val cols = Seq("id", "v", "p")
+      DeltaWriter.append(rows.filter(col("id") < 30), p, Seq("p"),
+        columnMapping = mode) // v0
+      DeltaWriter.append(rows.filter(col("id") >= 30), p, Seq("p")) // v1
+      DeltaWriter.deleteWithVectors(spark, p, col("id") % 4 === 0) // v2
+      DeltaWriter.restore(spark, p, 1L) // v3
+      DeltaWriter.compact(spark, p) // v4
+      assert(DeltaReader.snapshot(spark, p).version == 4L)
+      assertFeedReplays(p, cols)
+      // the append-only prefix: loadChanges is exactly the appended rows
+      assert(multiset(DeltaReader.loadChanges(spark, p, -1L, 1L)
+        .select(cols.map(col): _*)) == multiset(rows))
+      assert(multiset(DeltaReader.loadChanges(spark, p, 0L, 1L)
+        .select(cols.map(col): _*)) == multiset(rows.filter(col("id") >= 30)))
+    }
   }
 
   test("loadChangeFeed: DV windows are minimal, layout windows are empty, restore re-inserts") {

@@ -285,9 +285,8 @@ class DmlSpec extends AnyFunSuite {
     assert(ctx.sql("SELECT count(*) AS n FROM dml_z3").head().getLong(0)
       == li.count())
 
-    // a deletion vector on a LOOSE file: the incremental verb would
-    // refuse — routing must fall back to the FULL rewrite, which
-    // absorbs the vector (ADVICE r15)
+    // a deletion vector on a LOOSE file: routing falls back to the FULL
+    // rewrite, which absorbs every vector, the tight files' included
     DeltaWriter.append(
       li.filter(col("l_orderkey") % 2 === 0).limit(500).coalesce(1), path)
     val loosePre = DeltaReader.snapshot(spark, path).files

@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions.col
+
+import graft.sources.{DeltaReader, DeltaWriter}
 
 /** Structural plan assertions — the SCALE.md/PLANS.md claims as tests, so
   * a regression that un-pushes a filter, de-broadcasts a dim, or splits a
@@ -126,6 +129,51 @@ class PlanAuditSpec extends AnyFunSuite {
     // count node-detail headers "(n) Scan parquet" — the tree section
     // repeats each node name
     assert("""\(\d+\) Scan parquet""".r.findAllIn(p).size == 1)
+  }
+
+  private def tmpTable(name: String): String = {
+    val f = new java.io.File(sys.props("java.io.tmpdir"), s"graft_plan_$name")
+    def del(x: java.io.File): Unit = {
+      if (x.isDirectory) Option(x.listFiles()).getOrElse(Array.empty).foreach(del)
+      x.delete()
+    }
+    del(f)
+    f.getAbsolutePath
+  }
+
+  private def scanNodes(df: org.apache.spark.sql.DataFrame): Int =
+    """\(\d+\) Scan parquet""".r
+      .findAllIn(df.queryExecution.explainString(FormattedMode)).size
+
+  test("loadChanges: a window over 5 partition tuples is ONE file scan") {
+    val path = tmpTable("changes_tuples")
+    val orders = Tables.t(spark, d, "orders")
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
+    DeltaWriter.append(orders, path, Seq("o_orderpriority"))
+    assert(DeltaReader.snapshot(spark, path).files
+      .map(_.partitionValues).distinct.size == 5)
+    assert(scanNodes(DeltaReader.loadChanges(spark, path, -1L, 0L)) == 1)
+  }
+
+  test("loadChangeFeed: three DV-grown files in one commit scan once per change type") {
+    val path = tmpTable("feed_dv_grown")
+    val nation = Tables.t(spark, d, "nation")
+      .select(col("n_nationkey"), col("n_name"))
+    Seq(0 -> 8, 8 -> 16, 16 -> 25).foreach { case (lo, hi) => // v0..v2
+      DeltaWriter.append(nation.filter(col("n_nationkey") >= lo &&
+        col("n_nationkey") < hi).coalesce(1), path)
+    }
+    DeltaWriter.deleteWithVectors(spark, path, col("n_nationkey") % 4 === 0)
+    DeltaWriter.deleteWithVectors(spark, path, col("n_nationkey") % 4 === 1)
+    val files = DeltaReader.snapshot(spark, path).files
+    assert(files.size == 3 && files.forall(_.deletionVector.nonEmpty))
+    // a changed vector yields a newly-dead (delete) and a newly-alive
+    // (insert, empty here) unit per file: one scan for each change type,
+    // whatever the number of files
+    val feed = DeltaReader.loadChangeFeed(spark, path, 3L, 4L)
+    assert(scanNodes(feed) == 2)
+    assert(feed.collect().map(_.getAs[Number]("n_nationkey").longValue)
+      .sorted.toSeq == (1L until 25L by 4L))
   }
 
   test("q92: the rates dim joins without a shuffle of the corpus") {
